@@ -58,12 +58,6 @@ class TermWeight:
         norm = self.cache[np.asarray(norm_bytes).astype(np.int64) & 0xFF]
         return ((self.weight_value * freq) / (freq + norm)).astype(np.float32)
 
-    def max_score(self, max_tf: np.ndarray, min_norm_byte: np.ndarray) -> np.ndarray:
-        """Rank-safe per-block score upper bound for block-max WAND:
-        score is monotone up in tf and down in norm, so (max_tf,
-        min_norm_byte) bounds every posting in the block."""
-        return self.score(max_tf, min_norm_byte)
-
 
 def make_term_weight(
     term: str,

@@ -176,16 +176,15 @@ def decode_posting_list(blob: bytes) -> Tuple[np.ndarray, np.ndarray]:
 # term: FOR-packed (doc deltas from base_doc, tfs, norm bytes).
 # ---------------------------------------------------------------------------
 
-# has_pos header flag values (byte 8 of every blob):
+# has_pos header flag (byte 8 of every blob):
 #   0 = block has no positions
-#   1 = positions inline, FOR section appended after norms (old format)
-#   2 = positions external, in the block row's separate `pblob` column
-# The split (2) is the Lucene .doc/.pos file separation restated as
-# parquet COLUMNS (codecs/lucene90/Lucene90PostingsFormat.java doc/pos
-# files): term/boolean/WAND paths select (term, blob) only, so column
-# pruning keeps position bytes out of the scan, the Arrow transfer and
-# the Python decode on every non-positional query.
-POS_NONE, POS_INLINE, POS_SPLIT = 0, 1, 2
+#   2 = positions in the block row's separate `pblob` column
+# The split is the Lucene .doc/.pos file separation restated as parquet
+# COLUMNS (codecs/lucene90/Lucene90PostingsFormat.java doc/pos files):
+# term/boolean/WAND paths select (term, blob) only, so column pruning
+# keeps position bytes out of the scan, the Arrow transfer and the
+# Python decode on every non-positional query.
+POS_NONE, POS_SPLIT = 0, 2
 
 
 def _encode_pos_deltas(tfs: np.ndarray, positions: np.ndarray) -> bytes:
@@ -213,8 +212,8 @@ def _decode_pos_deltas(d: np.ndarray, tfs_i: np.ndarray) -> np.ndarray:
 
 
 def decode_pos_blob(pblob: bytes, tfs_i: np.ndarray) -> np.ndarray:
-    """Positions from a split-format position column value (`pblob`),
-    given the block's decoded tf array."""
+    """Positions from a position column value (`pblob`), given the
+    block's decoded tf array."""
     pd_, _ = for_decode(pblob, 0)
     return _decode_pos_deltas(pd_.astype(np.int64), tfs_i)
 
@@ -224,20 +223,15 @@ def encode_block(
     tfs: np.ndarray,
     norm_bytes: np.ndarray,
     positions: np.ndarray | None = None,
-    split_pos: bool = False,
-):
-    """positions: flat concatenation of each posting's sorted positions
-    (len == sum(tfs)); stored delta-encoded within each posting.
+) -> Tuple[bytes, bytes | None]:
+    """Encode one block; returns (blob, pblob).
 
-    split_pos=False -> bytes (positions inline, old format).
-    split_pos=True  -> (blob, pblob) with positions in pblob (None when
-    the block has no positions)."""
+    positions: flat concatenation of each posting's sorted positions
+    (len == sum(tfs)), stored delta-encoded within each posting in
+    pblob; pblob is None when the block has no positions."""
     base = int(doc_ids[0])
     deltas = np.diff(np.asarray(doc_ids, dtype=np.int64), prepend=base).astype(np.uint64)
-    if positions is None:
-        hp = POS_NONE
-    else:
-        hp = POS_SPLIT if split_pos else POS_INLINE
+    hp = POS_NONE if positions is None else POS_SPLIT
     out = (
         struct.pack("<qB", base, hp)
         + for_encode(deltas)
@@ -245,11 +239,8 @@ def encode_block(
         + for_encode(np.asarray(norm_bytes, dtype=np.uint64))
     )
     if positions is None:
-        return (out, None) if split_pos else out
-    sec = _encode_pos_deltas(tfs, positions)
-    if split_pos:
-        return out, sec
-    return out + sec
+        return out, None
+    return out, _encode_pos_deltas(tfs, positions)
 
 
 def decode_block(blob: bytes) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -268,34 +259,16 @@ def decode_block_positions(
     blob: bytes, pblob: bytes | None = None
 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Like decode_block but also returns the flat positions array
-    (empty if the block was written without positions). Split-format
-    blocks (has_pos == POS_SPLIT) carry positions in the separate
-    `pblob` column value, which the caller must pass."""
-    (base, has_pos) = struct.unpack_from("<qB", blob, 0)
-    off = 9
-    deltas, used = for_decode(blob, off)
-    off += used
-    tfs, used = for_decode(blob, off)
-    off += used
-    norms, used = for_decode(blob, off)
-    off += used
-    doc_ids = base + np.cumsum(deltas.astype(np.int64))
-    tfs_i = tfs.astype(np.int64)
-    if has_pos == POS_NONE:
-        return doc_ids, tfs_i, norms.astype(np.int64), np.array([], dtype=np.int64)
-    if has_pos == POS_SPLIT:
-        if pblob is None:
-            raise ValueError(
-                "split-format block: positions live in the pblob column, "
-                "which the caller did not select/pass"
-            )
-        pd_, _ = for_decode(pblob, 0)
-    else:  # POS_INLINE
-        pd_, used = for_decode(blob, off)
-    d = pd_.astype(np.int64)
-    # invert the per-posting delta encoding: cumsum within posting spans
-    # (vectorized segmented cumsum — see _decode_pos_deltas)
-    return doc_ids, tfs_i, norms.astype(np.int64), _decode_pos_deltas(d, tfs_i)
+    (empty if the block was written without positions). Positions live
+    in the block's `pblob` column value, which the caller must pass."""
+    doc_ids, tfs_i, norms = decode_block(blob)
+    if blob[8] == POS_NONE:
+        return doc_ids, tfs_i, norms, np.array([], dtype=np.int64)
+    if pblob is None:
+        raise ValueError(
+            "block positions live in the pblob column, which the caller "
+            "did not select/pass")
+    return doc_ids, tfs_i, norms, decode_pos_blob(pblob, tfs_i)
 
 
 def _bit_width_u64(v: np.ndarray) -> np.ndarray:
@@ -470,7 +443,7 @@ def split_blocks_batch(
     term_last: np.ndarray,
     positions: np.ndarray | None = None,
     block_size: int = BLOCK_SIZE,
-    split_pos: bool = False,
+    split_pos: bool = True,
 ) -> dict:
     """Vectorized split_blocks over MANY terms at once.
 
@@ -480,20 +453,24 @@ def split_blocks_batch(
     posting's sorted positions in run order (len == run_tf.sum()).
 
     Returns a dict of per-block numpy columns {term_idx, block_ord, n,
-    min_doc, max_doc, max_tf, sum_tf, min_norm, imp_tf, imp_norm, blob}
-    whose blobs are bit-identical to the per-term
-    split_blocks/encode_block path (the property suite asserts this).
+    min_doc, max_doc, max_tf, sum_tf, min_norm, imp_tf, imp_norm, blob,
+    pblob} whose blobs are bit-identical to the per-term
+    split_blocks/encode_block path (the property suite asserts this);
+    pblob holds each block's positions (None without positions).
     min_norm is the per-block min of run_nb — equal to split_blocks'
     nb[argmin(lengths)] because every caller passes norm_bytes ==
     lengths. imp_tf/imp_norm are the per-block competitive impact
     frontiers (block_impacts).
+
+    split_pos accepts only True: positions always go to pblob. The
+    keyword stays because perfbench's codec kernel bench passes it.
     """
+    if not split_pos:
+        raise ValueError("split_pos must be True: positions always go to pblob")
     nruns = len(run_doc)
     if nruns == 0:
-        keys = ["term_idx", "block_ord", "n", "min_doc", "max_doc",
-                "max_tf", "sum_tf", "min_norm", "imp_tf", "imp_norm", "blob"]
-        if split_pos:
-            keys.append("pblob")
+        keys = ["term_idx", "block_ord", "n", "min_doc", "max_doc", "max_tf",
+                "sum_tf", "min_norm", "imp_tf", "imp_norm", "blob", "pblob"]
         return {k: np.array([], dtype=object if k in ("blob", "pblob",
                                                       "imp_tf", "imp_norm")
                              else np.int64)
@@ -517,8 +494,9 @@ def split_blocks_batch(
     s_doc = for_encode_batch(delta.astype(np.uint64), blk_n)
     s_tf = for_encode_batch(np.asarray(run_tf, dtype=np.uint64), blk_n)
     s_nb = for_encode_batch(np.asarray(run_nb, dtype=np.uint64), blk_n)
-    has_pos = positions is not None
-    if has_pos:
+    nblocks = len(blk_start)
+    pblobs = np.empty(nblocks, dtype=object)  # None: no positions
+    if positions is not None:
         pos_off = np.zeros(nruns + 1, dtype=np.int64)
         np.cumsum(run_tf, out=pos_off[1:])
         P = np.asarray(positions, dtype=np.int64)
@@ -530,47 +508,13 @@ def split_blocks_batch(
             run_pos_start = run_pos_start[run_pos_start < len(P)]
             pd_[run_pos_start] = P[run_pos_start]
         pos_counts = pos_off[blk_end] - pos_off[blk_start]
-        s_pos = for_encode_batch(pd_.astype(np.uint64), pos_counts)
-    nblocks = len(blk_start)
+        pblobs = for_encode_batch(pd_.astype(np.uint64), pos_counts)
+    hp = POS_NONE if positions is None else POS_SPLIT
     blobs = np.empty(nblocks, dtype=object)
-    pblobs = np.empty(nblocks, dtype=object) if split_pos else None
-    if not has_pos:
-        hp = POS_NONE
-    elif split_pos:
-        hp = POS_SPLIT
-    else:
-        hp = POS_INLINE
-    if has_pos and split_pos:
-        for i in range(nblocks):
-            blobs[i] = struct.pack("<qB", int(base[i]), hp) \
-                + s_doc[i] + s_tf[i] + s_nb[i]
-            pblobs[i] = s_pos[i]
-    elif has_pos:
-        for i in range(nblocks):
-            blobs[i] = struct.pack("<qB", int(base[i]), hp) \
-                + s_doc[i] + s_tf[i] + s_nb[i] + s_pos[i]
-    else:
-        if split_pos:
-            pblobs[:] = None
-        for i in range(nblocks):
-            blobs[i] = struct.pack("<qB", int(base[i]), hp) \
-                + s_doc[i] + s_tf[i] + s_nb[i]
+    for i in range(nblocks):
+        blobs[i] = struct.pack("<qB", int(base[i]), hp) \
+            + s_doc[i] + s_tf[i] + s_nb[i]
     imp_tf, imp_nb = block_impacts(run_tf, run_nb, blk_start, blk_end)
-    if split_pos:
-        return {
-            "term_idx": term_of_run[blk_start],
-            "block_ord": local[blk_start] // block_size,
-            "n": blk_n,
-            "min_doc": base,
-            "max_doc": run_doc[blk_end - 1],
-            "max_tf": np.maximum.reduceat(np.asarray(run_tf, dtype=np.int64), blk_start),
-            "sum_tf": np.add.reduceat(np.asarray(run_tf, dtype=np.int64), blk_start),
-            "min_norm": np.minimum.reduceat(np.asarray(run_nb, dtype=np.int64), blk_start),
-            "imp_tf": imp_tf,
-            "imp_norm": imp_nb,
-            "blob": blobs,
-            "pblob": pblobs,
-        }
     return {
         "term_idx": term_of_run[blk_start],
         "block_ord": local[blk_start] // block_size,
@@ -583,6 +527,7 @@ def split_blocks_batch(
         "imp_tf": imp_tf,
         "imp_norm": imp_nb,
         "blob": blobs,
+        "pblob": pblobs,
     }
 
 
@@ -593,14 +538,13 @@ def split_blocks(
     lengths: np.ndarray,
     positions: np.ndarray | None = None,
     block_size: int = BLOCK_SIZE,
-    split_pos: bool = False,
 ) -> List[dict]:
     """Split one term's sorted postings into block rows with WAND metadata.
 
     positions: flat concat of each posting's sorted positions (len ==
-    sum(tfs)), or None to omit positions from the blocks. split_pos
-    adds a `pblob` entry holding the position section (None if no
-    positions) and keeps `blob` position-free.
+    sum(tfs)), or None to omit positions from the blocks. Each row's
+    `pblob` holds the block's positions (None without positions); `blob`
+    stays position-free.
     """
     out = []
     n = len(doc_ids)
@@ -613,7 +557,8 @@ def split_blocks(
             p = positions[pos_offsets[lo] : pos_offsets[hi]]
         itf, inb = block_impacts(
             np.asarray(f), np.asarray(nb), np.array([0]), np.array([hi - lo]))
-        row = {
+        blob, pblob = encode_block(d, f, nb, p)
+        out.append({
             "block_ord": lo // block_size,
             "n": hi - lo,
             "min_doc": int(d[0]),
@@ -623,10 +568,7 @@ def split_blocks(
             "min_norm": int(nb[int(np.argmin(ln))]),
             "imp_tf": itf[0],
             "imp_norm": inb[0],
-        }
-        if split_pos:
-            row["blob"], row["pblob"] = encode_block(d, f, nb, p, split_pos=True)
-        else:
-            row["blob"] = encode_block(d, f, nb, p)
-        out.append(row)
+            "blob": blob,
+            "pblob": pblob,
+        })
     return out

@@ -2665,18 +2665,23 @@ def _gate_corpus(spark, sf_dir: str):
 
 
 def _build_gate_index(spark, sf_dir: str, tag: str, **build_kwargs) -> str:
-    """Build-or-reuse a /tmp gate index over `documents`. Key includes a
-    build-format version tag (code changes invalidate) and the data
-    fingerprint."""
+    """Build-or-reuse a /tmp gate index over `documents`. Key includes
+    the build options tag and the data fingerprint; an index whose
+    segments are in another segment format (IndexFormatError) or whose
+    doc count is off is rebuilt."""
     from .indexing.builder import build_index
-    from .indexing.manifest import ManifestStore
+    from .indexing.manifest import IndexFormatError, ManifestStore
 
     key = _hl.md5(
         f"{sf_dir}|{tag}|{_gate_fingerprint(sf_dir)}".encode()
     ).hexdigest()[:10]
     idx = f"/tmp/lss_gate_index_{key}"
     n = load(spark, sf_dir, "documents").count()
-    if ManifestStore(idx).load().total_docs != n:
+    try:
+        reusable = ManifestStore(idx).load().total_docs == n
+    except IndexFormatError:
+        reusable = False
+    if not reusable:
         import shutil
 
         shutil.rmtree(idx, ignore_errors=True)

@@ -82,10 +82,9 @@ def _block_best_expr(avgdl: float, norms_mode: str):
     ('s', 'tf', 'dl') where s = BM25 tf-saturation (k1=1.2, b=0.75,
     the defaults; dl from the norm under `norms_mode`) maximized over
     the block's REALIZED competitive-impact frontier, and (tf, dl) is
-    the frontier pair achieving it. Falls back to the decoupled
-    (max_tf, min_norm) bound for pre-impact blocks. The (tf, dl) pair
-    is stored — not the saturation value — so a query can re-evaluate
-    the bound under its own avgdl/similarity params."""
+    the frontier pair achieving it. The (tf, dl) pair is stored — not
+    the saturation value — so a query can re-evaluate the bound under
+    its own avgdl/similarity params."""
     from ..smallfloat import LENGTH_TABLE
 
     if norms_mode == "byte":
@@ -105,17 +104,13 @@ def _block_best_expr(avgdl: float, norms_mode: str):
         return f"(CAST({tfcol} AS DOUBLE) / ({tfcol} + {nv(normcol)}))"
 
     return (
-        "CASE WHEN imp_tf IS NOT NULL AND size(imp_tf) > 0 THEN "
         "aggregate(arrays_zip(imp_tf, imp_norm), "
         "named_struct('s', CAST(-1.0 AS DOUBLE), 'tf', CAST(0 AS BIGINT), "
         "'dl', CAST(0.0 AS DOUBLE)), "
         f"(acc, p) -> CASE WHEN {sat('p.imp_tf', 'p.imp_norm')} > acc.s "
         f"THEN named_struct('s', {sat('p.imp_tf', 'p.imp_norm')}, "
         "'tf', CAST(p.imp_tf AS BIGINT), "
-        f"'dl', CAST({dl('p.imp_norm')} AS DOUBLE)) ELSE acc END) "
-        f"ELSE named_struct('s', {sat('max_tf', 'min_norm')}, "
-        "'tf', CAST(max_tf AS BIGINT), "
-        f"'dl', CAST({dl('min_norm')} AS DOUBLE)) END"
+        f"'dl', CAST({dl('p.imp_norm')} AS DOUBLE)) ELSE acc END)"
     )
 
 
@@ -125,19 +120,20 @@ N_UB_QUANTILES = 17  # order statistics kept per term (0/16 .. 16/16)
 def compute_term_stats(blocks, avgdl: Optional[float] = None,
                        norms_mode: Optional[str] = None):
     """Per-term stats from block metadata: (df, ttf) for scoring plus
-    the WAND bound inputs — decoupled global (gmax_tf, gmin_norm) for
-    old-format compatibility AND the per-term GLOBAL competitive-impact
-    table (gimp_norm/gimp_tf, norm-ascending): for each norm value seen
-    in any block frontier, the max tf realized at-or-above it is
+    the WAND bound input — the per-term GLOBAL competitive-impact table
+    (gimp_norm/gimp_tf, norm-ascending): for each norm value seen in
+    any block frontier, the max tf realized at-or-above it is
     Pareto-reduced so the query-time slack bound
     max over pairs of score(tf, norm) equals the max over ALL blocks'
     impact bounds (CompetitiveImpactAccumulator.java:30 merged across
     the whole term, persisted so pruned searches need no metadata job).
     Pure metadata SQL — blob bytes never leave disk (column pruning).
 
-    When (avgdl, norms_mode) are given, additionally persists the
-    cost-gate sketch: gnblocks = the term's block count and
-    (gq_tf, gq_dl) = N_UB_QUANTILES equally-spaced order statistics of
+    Every segment writes the same columns. gnblocks = the term's block
+    count; (gq_tf, gq_dl) is the cost-gate sketch, written when
+    (avgdl, norms_mode) are given and typed nulls otherwise
+    (multi-field and zero-doc segments): N_UB_QUANTILES equally-spaced
+    order statistics of
     the per-block frontier upper bound, stored as the REALIZED (tf, dl)
     pair at each quantile so queries re-evaluate the bound under their
     own parameters. This is the driver-side input that lets the planner
@@ -148,14 +144,9 @@ def compute_term_stats(blocks, avgdl: Optional[float] = None,
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    aggs = [
+    stats = blocks.groupBy("term").agg(
         F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf"),
-        F.max("max_tf").alias("gmax_tf"), F.min("min_norm").alias("gmin_norm"),
-        F.count(F.lit(1)).alias("gnblocks"),
-    ]
-    stats = blocks.groupBy("term").agg(*aggs)
-    if "imp_tf" not in blocks.columns:
-        return stats
+        F.count(F.lit(1)).alias("gnblocks"))
     ex = blocks.select(
         "term", F.explode_outer(F.arrays_zip("imp_norm", "imp_tf")).alias("p")
     ).where(F.col("p").isNotNull()).select(
@@ -176,7 +167,9 @@ def compute_term_stats(blocks, avgdl: Optional[float] = None,
     )
     out = stats.join(gimp, "term", "left")
     if avgdl is None or norms_mode is None or avgdl <= 0:
-        return out
+        return out.select(
+            "*", F.lit(None).cast("array<bigint>").alias("gq_tf"),
+            F.lit(None).cast("array<double>").alias("gq_dl"))
     # cost-gate sketch: equally-spaced order statistics of per-block
     # frontier UB, canonical ordering = BM25 defaults at this segment's
     # avgdl. Window + groupBy share the hash partitioning on `term`
@@ -208,59 +201,6 @@ def compute_term_stats(blocks, avgdl: Optional[float] = None,
 CHUNK_BITS = 13  # 8192-doc chunks: the unit of mega-term splitting
 BLOCK = 128
 FLUSH_TOKENS = 4_000_000  # per-chamber RAM-budget analog (IndexWriterConfig 16MB)
-
-
-def _pack_partition(batches: Iterator[pd.DataFrame], with_positions: bool) -> Iterator[pd.DataFrame]:
-    """Aggregate raw (term, doc_id, norm[, pos]) token rows — sorted by
-    (term, doc_id[, pos]) within the partition — into per-(term, doc)
-    postings, then into FOR-128 block rows.
-
-    Fully vectorized: the partition's Arrow batches are concatenated
-    once, run boundaries come from one numpy diff pass, and the only
-    block encoding is batched across ALL terms (split_blocks_batch).
-    Memory = the partition's token rows (~tens of MB when
-    shuffle partitions are sized to the corpus — the same invariant any
-    sort-based flush has; raise spark.sql.shuffle.partitions to shrink).
-    """
-    pdfs = [p for p in batches if len(p)]
-    if not pdfs:
-        return
-    pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-    n = len(pdf)
-    terms = pdf["term"].to_numpy()
-    docs = pdf["doc_id"].to_numpy(dtype=np.int64)
-    norms = pdf["norm"].to_numpy(dtype=np.int64)
-    pos = pdf["pos"].to_numpy(dtype=np.int64) if with_positions else None
-
-    term_change = np.empty(n, dtype=bool)
-    term_change[0] = True
-    term_change[1:] = terms[1:] != terms[:-1]
-    doc_change = np.empty(n, dtype=bool)
-    doc_change[0] = True
-    doc_change[1:] = docs[1:] != docs[:-1]
-    run_start = np.flatnonzero(term_change | doc_change)  # one run = one posting
-    run_end = np.append(run_start[1:], n)
-    run_tf = (run_end - run_start).astype(np.int64)
-    run_doc = docs[run_start]
-    run_norm = norms[run_start]
-
-    is_term_head = term_change[run_start]
-    term_first = np.flatnonzero(is_term_head)      # run index of each term's first posting
-    term_last = np.append(term_first[1:], len(run_start))
-
-    res = split_blocks_batch(run_doc, run_tf, run_norm, term_first, term_last,
-                             positions=pos, split_pos=True)
-    nblocks = len(res["n"])
-    if not nblocks:
-        return
-    term_names = terms[run_start[term_first]][res["term_idx"]]
-    cols = {"term": term_names,
-            **{k: res[k] for k in ("n", "min_doc", "max_doc", "max_tf",
-                                   "sum_tf", "min_norm", "imp_tf",
-                                   "imp_norm", "blob", "pblob")}}
-    # chunk the output so downstream Arrow batches stay bounded
-    for lo in range(0, nblocks, 65536):
-        yield pd.DataFrame({k: v[lo:lo + 65536] for k, v in cols.items()})
 
 
 def _make_invert_fn(analyzer: str, norms: str, with_positions: bool,
@@ -419,7 +359,7 @@ def _make_invert_fn(analyzer: str, norms: str, with_positions: bool,
                 term_last = np.append(term_first[1:], len(run_start))
                 res = split_blocks_batch(run_doc, run_tf, run_nb,
                                          term_first, term_last,
-                                         positions=Ps, split_pos=True)
+                                         positions=Ps)
                 if len(res["n"]):
                     term_names = np.asarray(uniques, dtype=object)[
                         Ts[run_start[term_first]]][res["term_idx"]]
@@ -735,6 +675,7 @@ def build_index(
                     size_bytes=counters["size_bytes"],
                     source_batch=batch_id,
                     field_stats=counters.get("field_stats"),
+                    format_version=manifest_mod.FORMAT_VERSION,
                 )
             )
             manifest = mstore.commit(

@@ -6,7 +6,9 @@ cross-checks terms, postings, norms, stored fields and deletions
 against the segment metadata. Same contract here, as Spark jobs over
 the index relations:
 
-  manifest       generation file readable, counters match data
+  manifest       generation file readable, counters match data; every
+                 segment in the current format (ManifestStore.load
+                 raises IndexFormatError otherwise)
   doc ranges     segment doc_id ranges disjoint; ids within
                  [doc_base, next_doc_id)
   doc meta       doc_count / sum_dl match manifest; no duplicate ids
@@ -26,7 +28,7 @@ from typing import Iterator, List
 import numpy as np
 import pandas as pd
 
-from ..codec import decode_block, decode_block_positions
+from ..codec import POS_NONE, POS_SPLIT, decode_block, decode_block_positions
 from .deletes import delete_generations, deleted_docs_df
 from .manifest import ManifestStore, doc_meta_path, postings_path
 
@@ -117,17 +119,14 @@ def check_index(spark, index_dir: str, decode_blocks: bool = True,
             errors.append(f"{s.name}: {mism} terms with stats/postings mismatch")
 
         if decode_blocks:
-            has_pblob = "pblob" in blocks.columns
 
             def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 n_bad = 0
                 n_seen = 0
                 for pdf in batches:
-                    pbs = (pdf["pblob"] if "pblob" in pdf.columns
-                           else [None] * len(pdf))
                     for nrow, lo, hi, mn, blob, pb in zip(
                         pdf["n"], pdf["min_doc"], pdf["max_doc"],
-                        pdf["min_norm"], pdf["blob"], pbs,
+                        pdf["min_norm"], pdf["blob"], pdf["pblob"],
                     ):
                         n_seen += 1
                         d, f, nb = decode_block(bytes(blob))
@@ -140,30 +139,24 @@ def check_index(spark, index_dir: str, decode_blocks: bool = True,
                                 and bool(np.all(f >= 1))
                             ))
                         )
-                        # split-format consistency: flag 2 (positions
-                        # external) requires a pblob whose decoded
-                        # occurrence count equals sum(tf); flags 0/1
-                        # must not carry one (CheckIndex's term/postings
-                        # cross-check extended to the .pos analog)
+                        # position-column consistency: flag POS_SPLIT
+                        # requires a pblob whose decoded occurrence count
+                        # equals sum(tf); POS_NONE must not carry one
+                        # (CheckIndex's term/postings cross-check
+                        # extended to the .pos analog)
                         hp = bytes(blob)[8]
-                        if hp == 2:
-                            if pb is None:
-                                ok = False
-                            else:
-                                _, _, _, pos = decode_block_positions(
-                                    bytes(blob), bytes(pb))
-                                ok = ok and len(pos) == int(f.sum())
-                        elif pb is not None:
-                            ok = False
+                        if hp == POS_SPLIT and pb is not None:
+                            _, _, _, pos = decode_block_positions(
+                                bytes(blob), bytes(pb))
+                            ok = ok and len(pos) == int(f.sum())
+                        else:
+                            ok = ok and hp == POS_NONE and pb is None
                         if not ok:
                             n_bad += 1
                 yield pd.DataFrame({"n_seen": [n_seen], "n_bad": [n_bad]})
 
-            vcols = ["n", "min_doc", "max_doc", "min_norm", "blob"]
-            if has_pblob:
-                vcols.append("pblob")
             res = (
-                blocks.select(*vcols)
+                blocks.select("n", "min_doc", "max_doc", "min_norm", "blob", "pblob")
                 .mapInPandas(verify, "n_seen long, n_bad long")
                 .agg(F.sum("n_seen").alias("s"), F.sum("n_bad").alias("b"))
                 .collect()[0]

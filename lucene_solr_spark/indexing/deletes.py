@@ -70,7 +70,8 @@ def _next_gen_path(index_dir: str) -> str:
     return os.path.join(_delete_dir(index_dir), f"gen_{n:06d}.parquet")
 
 
-def _commit_tombstones(spark, index_dir: str, doc_ids_df, kind: str, detail) -> int:
+def _commit_tombstones(spark, index_dir: str, doc_ids_df, kind: str,
+                       detail=None) -> int:
     """Write one tombstone generation (minus already-deleted) + manifest
     lineage. Returns the number of newly deleted docs."""
     existing = deleted_docs_df(spark, index_dir)
@@ -139,7 +140,7 @@ def delete_by_keys(spark, index_dir: str, keys_df) -> int:
         return 0
     meta = spark.read.parquet(*[doc_meta_path(d) for d in seg_dirs])
     matched = meta.join(F.broadcast(keys_df.select("repo", "path")), ["repo", "path"]).select("doc_id")
-    return _commit_tombstones(spark, index_dir, matched, "key", int(keys_df.count()))
+    return _commit_tombstones(spark, index_dir, matched, "key")
 
 
 def update_documents(spark, index_dir: str, df, analyzer: str = "standard",

@@ -5,9 +5,9 @@ The Spark analog of Lucene's segments_N generation files
 per-partition lineage / counters the north rule requires for resume.
 
 Layout under <index_dir>/:
-  segments/<seg_name>/{inverted.parquet/kind={blk,doc}, term_stats.parquet}
-  (merged segments use the legacy split layout postings.parquet +
-  doc_meta.parquet; postings_path/doc_meta_path resolve either)
+  segments/<seg_name>/inverted.parquet/kind=blk   postings blocks
+  segments/<seg_name>/inverted.parquet/kind=doc   doc metadata
+  segments/<seg_name>/term_stats.parquet          per-term stats
   manifest/segments_<N>.json    immutable generation files
   manifest/current              text file holding the live generation N
 
@@ -19,6 +19,12 @@ production target is an Iceberg/metastore atomic swap):
 A crash between any steps leaves the previous generation live; stale
 segment dirs are garbage, never corruption. Rebuilding a batch is
 idempotent: segment names are deterministic functions of the batch id.
+
+Every segment records the format it was written in (format_version,
+the SegmentInfo.getVersion analog). A reader supports exactly one
+format: load() refuses an index holding any segment of another format
+(IndexFormatTooOldException), so no read path carries fallbacks for
+formats the writers no longer produce.
 """
 
 from __future__ import annotations
@@ -37,6 +43,16 @@ from typing import Dict, List, Optional
 # load-mutate-commit critical section; the heavy Spark work runs
 # outside it. Process-wide by index path.
 _COMMIT_LOCKS: Dict[str, threading.Lock] = {}
+
+# The one segment format this engine writes and reads: split position
+# column (pblob), per-block competitive impacts and the per-term impact
+# table in term_stats. Manifests written before the stamp existed load
+# every segment as format 0.
+FORMAT_VERSION = 1
+
+
+class IndexFormatError(ValueError):
+    """A live segment was written in a format this engine does not read."""
 _COMMIT_LOCKS_GUARD = threading.Lock()
 
 
@@ -61,6 +77,7 @@ class SegmentInfo:
     # multi-field builds: {field: [docCount, sumTotalTermFreq]} — the
     # FieldInfos/CollectionStatistics analog (per-field BM25 stats)
     field_stats: Optional[Dict[str, List[int]]] = None
+    format_version: int = 0
 
 
 @dataclass
@@ -83,7 +100,7 @@ class Manifest:
     # norm encoding of the index ('byte' = Lucene intToByte4 quantized,
     # 'exact' = raw field length). Recorded so merges can decode
     # min_norm -> doc length when recomputing the per-term block-UB
-    # quantile sketch (cost-gate inputs). None on pre-sketch manifests.
+    # quantile sketch (cost-gate inputs). None until the first build.
     norms: Optional[str] = None
 
     @property
@@ -130,14 +147,17 @@ class ManifestStore:
         with open(os.path.join(self.mdir, f"segments_{gen}.json")) as f:
             raw = json.load(f)
         segments = [SegmentInfo(**s) for s in raw["segments"]]
-        # pre-next_doc_id manifests: doc_base + doc_count is the best
-        # available bound (exact unless a purging merge already ran)
-        fallback_hwm = max((s.doc_base + s.doc_count for s in segments), default=0)
+        stale = [s for s in segments if s.format_version != FORMAT_VERSION]
+        if stale:
+            raise IndexFormatError(
+                f"{self.index_dir}: segment(s) "
+                + ", ".join(f"{s.name} (format {s.format_version})" for s in stale)
+                + f" not in segment format {FORMAT_VERSION}; rebuild the index")
         return Manifest(
             generation=raw["generation"],
             segments=segments,
             lineage=raw.get("lineage", []),
-            next_doc_id=int(raw.get("next_doc_id", fallback_hwm)),
+            next_doc_id=int(raw["next_doc_id"]),
             index_sort=raw.get("index_sort"),
             norms=raw.get("norms"),
         )
@@ -174,12 +194,8 @@ class ManifestStore:
 
 
 def postings_path(seg_dir: str) -> str:
-    """Postings blocks location — single-write layout (kind=blk) or the
-    legacy/merge layout (postings.parquet)."""
-    p = os.path.join(seg_dir, "inverted.parquet", "kind=blk")
-    return p if os.path.isdir(p) else os.path.join(seg_dir, "postings.parquet")
+    return os.path.join(seg_dir, "inverted.parquet", "kind=blk")
 
 
 def doc_meta_path(seg_dir: str) -> str:
-    p = os.path.join(seg_dir, "inverted.parquet", "kind=doc")
-    return p if os.path.isdir(p) else os.path.join(seg_dir, "doc_meta.parquet")
+    return os.path.join(seg_dir, "inverted.parquet", "kind=doc")

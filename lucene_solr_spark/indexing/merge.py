@@ -27,9 +27,10 @@ from typing import Iterator, List, Optional
 import numpy as np
 import pandas as pd
 
-from ..codec import BLOCK_SIZE, decode_block_positions, split_blocks_batch
-from .builder import POSTINGS_SCHEMA, _pack_partition, compute_term_stats
-from .manifest import Manifest, ManifestStore, SegmentInfo, doc_meta_path, postings_path
+from ..codec import BLOCK_SIZE, POS_SPLIT, decode_block_positions, split_blocks_batch
+from .builder import POSTINGS_SCHEMA, compute_term_stats
+from .manifest import (FORMAT_VERSION, Manifest, ManifestStore, SegmentInfo,
+                       doc_meta_path, postings_path)
 
 # TieredMergePolicy.java:96-101 defaults
 MAX_MERGE_AT_ONCE = 10
@@ -188,11 +189,7 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
     out_dir = store.segment_dir(name)
     in_dirs = [store.segment_dir(s.name) for s in inputs]
 
-    # mergeSchema: inputs may straddle the inline-positions -> split
-    # pblob-column format change (an index appended across versions);
-    # the union schema keeps pblob, null-filled for old segments
-    blocks = (spark.read.option("mergeSchema", "true")
-              .parquet(*[postings_path(d) for d in in_dirs]))
+    blocks = spark.read.parquet(*[postings_path(d) for d in in_dirs])
     has_positions = _segment_has_positions(spark, in_dirs[0])
     from .deletes import deleted_docs_df, delete_generations
 
@@ -205,11 +202,8 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
     def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             cols = {"term": [], "doc_id": [], "norm": [], "tf": [], "pos_blob": []}
-            pbs = (pdf["pblob"] if "pblob" in pdf.columns
-                   else pd.Series([None] * len(pdf)))
-            for term, blob, pb in zip(pdf["term"], pdf["blob"], pbs):
-                d, f, nb, pos = decode_block_positions(
-                    bytes(blob), None if pb is None else bytes(pb))
+            for term, blob, pb in zip(pdf["term"], pdf["blob"], pdf["pblob"]):
+                d, f, nb, pos = decode_block_positions(bytes(blob), pb)
                 cols["term"].append(np.full(len(d), term, dtype=object))
                 cols["doc_id"].append(d)
                 cols["norm"].append(nb)
@@ -233,7 +227,7 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
     schema = "term string, doc_id long, norm int, tf long"
     if has_positions:
         schema += ", positions array<int>"
-    postings = blocks.mapInPandas(unpack, schema=schema)
+    postings = blocks.select("term", "blob", "pblob").mapInPandas(unpack, schema=schema)
     if deletes is not None:
         # physical purge: tombstoned docs drop out of the rewrite
         # (SegmentMerger skips liveDocs=false rows)
@@ -250,20 +244,19 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
         lambda it: _repack_aggregated(it, has_positions), schema=POSTINGS_SCHEMA
     )
     os.makedirs(out_dir, exist_ok=True)
-    repacked.write.mode("overwrite").parquet(os.path.join(out_dir, "postings.parquet"))
+    repacked.write.mode("overwrite").parquet(postings_path(out_dir))
 
-    new_blocks = spark.read.parquet(os.path.join(out_dir, "postings.parquet"))
+    new_blocks = spark.read.parquet(postings_path(out_dir))
     # cost-gate quantile sketch inputs: canonical avgdl from the input
     # segments' persisted counters (deleted docs' lengths are still in
     # sum_dl — canonical ORDERING tolerance, query-time bounds are
     # re-evaluated under the live avgdl); norms mode from the manifest
-    # (None on pre-norms-field manifests -> sketch skipped, legacy OK).
     in_docs = sum(s.doc_count for s in inputs)
     in_dl = sum(s.sum_dl for s in inputs)
     norms_mode = store.load().norms
     is_multifield = any(s.field_stats for s in inputs)
     avgdl_m = (float(in_dl) / in_docs
-               if in_docs and norms_mode and not is_multifield else None)
+               if in_docs and not is_multifield else None)
     compute_term_stats(
         new_blocks, avgdl=avgdl_m,
         norms_mode=None if is_multifield else norms_mode,
@@ -273,8 +266,8 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
     meta = spark.read.parquet(*[doc_meta_path(d) for d in in_dirs])
     if deletes is not None:
         meta = meta.join(deletes, "doc_id", "left_anti")
-    meta.write.mode("overwrite").parquet(os.path.join(out_dir, "doc_meta.parquet"))
-    meta_out = spark.read.parquet(os.path.join(out_dir, "doc_meta.parquet"))
+    meta.write.mode("overwrite").parquet(doc_meta_path(out_dir))
+    meta_out = spark.read.parquet(doc_meta_path(out_dir))
     # multi-field indexes: recompute per-field (docCount, sum_dl) over
     # the LIVE docs — purged docs drop out of the field stats here,
     # exactly when Lucene's FieldInfos stats shed deletions
@@ -305,6 +298,7 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
         size_bytes=size_bytes,
         source_batch=f"merge:{'+'.join(s.source_batch for s in inputs)}",
         field_stats=merged_field_stats,
+        format_version=FORMAT_VERSION,
     )
 
 
@@ -339,7 +333,7 @@ def _repack_aggregated(batches: Iterator[pd.DataFrame], with_positions: bool) ->
             pdf["doc_id"].to_numpy(dtype=np.int64),
             pdf["tf"].to_numpy(dtype=np.int64),
             pdf["norm"].to_numpy(dtype=np.int64),
-            term_first, term_last, positions=P, split_pos=True)
+            term_first, term_last, positions=P)
         nblocks = len(res["n"])
         if not nblocks:
             return
@@ -386,8 +380,7 @@ def _segment_has_positions(spark, seg_dir: str) -> bool:
     row = spark.read.parquet(postings_path(seg_dir)).select("blob").head(1)
     if not row:
         return False
-    # 1 = inline positions (old format), 2 = split pblob column
-    return bytes(row[0]["blob"])[8] in (1, 2)
+    return bytes(row[0]["blob"])[8] == POS_SPLIT
 
 
 def maybe_merge(spark, index_dir: str, max_rounds: int = 100) -> Manifest:

@@ -29,12 +29,12 @@ Two scoring precisions:
 Pruning (block metadata = the skip-list/WAND analog, SURVEY §4):
   term / OR-of-terms top-k takes a batch block-max WAND path
   (search(..., prune=True), Broder et al. 2003; Ding & Suel 2011):
-  per-block upper bounds from (max_tf, min_norm), a phase-A threshold
-  from each term's best blocks, then phase-B decodes only blocks with
-  UB + sum(other terms' max UB) >= threshold. Docs whose blocks were
-  pruned can surface only with partial sums provably below the true
-  k-th score, so the emitted top-k is exactly the exhaustive one —
-  shadow-verified in tests/test_wand.py.
+  per-block upper bounds from each block's competitive impact frontier,
+  a running threshold from the blocks decoded so far, and a descent
+  that stops at the first block with UB + slack < threshold. Docs whose
+  blocks were pruned can surface only with partial sums provably below
+  the true k-th score, so the emitted top-k is exactly the exhaustive
+  one — shadow-verified in tests/test_wand.py.
 """
 
 from __future__ import annotations
@@ -47,24 +47,6 @@ import pandas as pd
 
 from .. import bm25
 from ..codec import decode_block, decode_block_positions
-
-
-def _pos_cols(df) -> list:
-    """Column list for a positions-consuming decode over a blocks frame:
-    split-format segments carry positions in `pblob`; pre-split frames
-    have no such column (positions inline in blob)."""
-    return ["term", "blob", "pblob"] if "pblob" in df.columns else ["term", "blob"]
-
-
-def _zip_blocks_pos(pdf: pd.DataFrame):
-    """Iterate (term, blob, pblob_bytes_or_None) over a decode batch,
-    tolerating both block formats."""
-    if "pblob" in pdf.columns:
-        for term, blob, pb in zip(pdf["term"], pdf["blob"], pdf["pblob"]):
-            yield term, blob, (None if pb is None else bytes(pb))
-    else:
-        for term, blob in zip(pdf["term"], pdf["blob"]):
-            yield term, blob, None
 from ..fields import FIELD_SEP, split_term_key, term_key
 from ..smallfloat import LENGTH_TABLE
 from ..indexing.deletes import delete_generations, deleted_docs_df
@@ -103,15 +85,10 @@ class IndexReader:
         self.doc_count = self.manifest.total_docs
         self.sum_dl = self.manifest.sum_dl
         segs = [self.store.segment_dir(s.name) for s in self.manifest.segments]
-        # mergeSchema: segments may straddle the inline-positions ->
-        # split-pblob format change (index appended across versions);
-        # old segments read pblob as null
-        self.blocks = (spark.read.option("mergeSchema", "true")
-                       .parquet(*[postings_path(d) for d in segs]))
-        # mergeSchema: stats straddle format generations too (impact
-        # tables, cost-gate quantile sketch) — old segments null-fill
-        self.stats = (spark.read.option("mergeSchema", "true")
-                      .parquet(*[f"{d}/term_stats.parquet" for d in segs]))
+        # one segment format (manifest load refuses any other), so every
+        # segment shares one schema and no read needs a schema merge
+        self.blocks = spark.read.parquet(*[postings_path(d) for d in segs])
+        self.stats = spark.read.parquet(*[f"{d}/term_stats.parquet" for d in segs])
         self.doc_meta = spark.read.parquet(*[doc_meta_path(d) for d in segs])
         # liveDocs: tombstones filter matches at collect time; stats
         # intentionally still count deleted docs (Lucene semantics —
@@ -223,40 +200,15 @@ class IndexReader:
         cached = getattr(self, "_stats_rows_cache", None)
         if cached is not None and cached[0] == terms:
             return cached[1]
-        aggs = [F.sum("df").alias("df"), F.sum("ttf").alias("ttf")]
-        if "gmax_tf" in self.stats.columns:
-            aggs += [
-                F.max("gmax_tf").alias("mt"),
-                F.min("gmin_norm").alias("mn"),
-                # Mixed-generation guard inputs: a term present in BOTH an
-                # old segment (null gmax_tf — allowMissingColumns
-                # null-fill) and a new one would get a max/min computed
-                # from the new segments only, silently UNDERESTIMATING the
-                # true bound and letting WAND prune blocks holding true
-                # top-k docs. F.max/F.min skip nulls, so row count vs
-                # non-null count per term detects the split.
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count("gmax_tf").alias("n_mt"),
-                F.count("gmin_norm").alias("n_mn"),
-            ]
-            if "gimp_tf" in self.stats.columns:
-                # per-segment global impact tables: collected per term
-                # (a handful of rows — one per segment) and merged on
-                # the driver; the count guard detects segments written
-                # before the impact columns existed (null arrays)
-                aggs += [
-                    F.collect_list(F.struct("gimp_norm", "gimp_tf")).alias("gimps"),
-                    F.count("gimp_tf").alias("n_gi"),
-                ]
-            if "gq_tf" in self.stats.columns:
-                # cost-gate quantile sketch, per segment: (block count,
-                # UB order-statistic (tf, dl) pairs). Merged driver-side
-                # by term_cost_stats; count guard as above.
-                aggs += [
-                    F.collect_list(
-                        F.struct("gnblocks", "gq_tf", "gq_dl")).alias("gqs"),
-                    F.count("gq_tf").alias("n_gq"),
-                ]
+        aggs = [
+            F.sum("df").alias("df"), F.sum("ttf").alias("ttf"),
+            # per-segment global impact tables: collected per term (a
+            # handful of rows — one per segment), merged on the driver
+            F.collect_list(F.struct("gimp_norm", "gimp_tf")).alias("gimps"),
+            # cost-gate quantile sketch, per segment: (block count, UB
+            # order-statistic (tf, dl) pairs); merged by term_cost_stats
+            F.collect_list(F.struct("gnblocks", "gq_tf", "gq_dl")).alias("gqs"),
+        ]
         rows = (
             self.stats.where(F.col("term").isin(list(terms)))
             .groupBy("term").agg(*aggs).collect()
@@ -273,46 +225,27 @@ class IndexReader:
         return {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows
                 if r["term"] in set(terms)}
 
-    def term_wand_stats(
-        self, terms: List[str]
-    ) -> Optional[Dict[str, Tuple[int, int, Optional[Tuple[list, list]]]]]:
-        """Per-term GLOBAL (max_tf, min_norm, impact_table) — the
-        persisted block-max table inputs for WAND slack bounds (written
-        into term_stats at build/merge time, so the pruned search needs
-        no extra metadata job). impact_table is (norms, tfs) — the
-        merged per-term competitive-impact frontier
-        (CompetitiveImpactAccumulator.java:30) — or None when any
-        segment predates the impact columns (decoupled fallback stays
-        valid, just looser). None overall for indexes built before the
-        block-max columns existed. Served from the same collect as
-        term_stats (shared cache)."""
-        if not terms or "gmax_tf" not in self.stats.columns:
-            return None
+    def term_wand_stats(self, terms: List[str]) -> Dict[str, Tuple[list, list]]:
+        """Per-term GLOBAL competitive-impact table (norms, tfs) — the
+        per-segment tables persisted in term_stats
+        (CompetitiveImpactAccumulator.java:30), merged per norm value by
+        max tf — the WAND slack bound input, so the pruned search needs
+        no extra metadata job. Terms without postings are absent.
+        Served from the same collect as term_stats (shared cache)."""
+        if not terms:
+            return {}
         want = set(terms)
-        rows = [r for r in self._term_stats_rows(tuple(sorted(set(terms))))
-                if r["term"] in want]
-        if any(r["n_rows"] != r["n_mt"] or r["n_rows"] != r["n_mn"] for r in rows):
-            return None  # at least one segment predates the block-max columns
         out = {}
-        for r in rows:
-            if r["mt"] is None or r["mn"] is None:
-                return None  # mixed old/new segments: fall back
-            imp = None
-            if "n_gi" in r.asDict() and r["n_gi"] == r["n_rows"]:
-                # merge segment impact tables: per norm value, max tf
-                acc: Dict[int, int] = {}
-                for seg in r["gimps"]:
-                    nbs, tfs = seg["gimp_norm"], seg["gimp_tf"]
-                    if nbs is None or tfs is None:
-                        acc = None
-                        break
-                    for nb, tf in zip(nbs, tfs):
-                        if acc.get(nb, -1) < tf:
-                            acc[nb] = tf
-                if acc:
-                    ks = sorted(acc)
-                    imp = (ks, [acc[nb] for nb in ks])
-            out[r["term"]] = (int(r["mt"]), int(r["mn"]), imp)
+        for r in self._term_stats_rows(tuple(sorted(want))):
+            if r["term"] not in want:
+                continue
+            acc: Dict[int, int] = {}
+            for seg in r["gimps"]:
+                for nb, tf in zip(seg["gimp_norm"], seg["gimp_tf"]):
+                    if acc.get(nb, -1) < tf:
+                        acc[nb] = tf
+            ks = sorted(acc)
+            out[r["term"]] = (ks, [acc[nb] for nb in ks])
         return out
 
     def term_cost_stats(
@@ -325,19 +258,17 @@ class IndexReader:
         point i. Merged across segments driver-side (each segment's
         points carry weight nblocks_seg / npoints_seg — an empirical
         mixture, exact when every block is a point). None when any
-        live segment predates the sketch columns (builder.py
-        compute_term_stats) — callers fall back to un-gated behavior.
-        Served from the same single collect as term_stats."""
-        if not terms or "gq_tf" not in self.stats.columns:
+        live segment holding a term wrote no sketch (multi-field and
+        zero-doc segments, builder.py compute_term_stats) — callers
+        fall back to un-gated behavior. Served from the same single
+        collect as term_stats."""
+        if not terms:
             return None
         want = set(terms)
         rows = [r for r in self._term_stats_rows(tuple(sorted(set(terms))))
                 if r["term"] in want]
         out: Dict[str, Tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         for r in rows:
-            d = r.asDict()
-            if "n_gq" not in d or d["n_gq"] != d["n_rows"]:
-                return None  # at least one segment lacks the sketch
             tfs, dls, wts = [], [], []
             for seg in r["gqs"]:
                 nb, qtf, qdl = seg["gnblocks"], seg["gq_tf"], seg["gq_dl"]
@@ -654,7 +585,7 @@ class Searcher:
             for pdf in batches:
                 rows_ch, rows_ti, rows_d, rows_tf, rows_nb, rows_p = (
                     [], [], [], [], [], [])
-                for term, blob, pb in _zip_blocks_pos(pdf):
+                for term, blob, pb in zip(pdf["term"], pdf["blob"], pdf["pblob"]):
                     doc_ids, tfs, norms, pos = decode_block_positions(
                         bytes(blob), pb)
                     if len(doc_ids) == 0:
@@ -705,7 +636,7 @@ class Searcher:
             blocks_src = self.reader.blocks.where(F.col("term").isin(terms))
         occ = (
             blocks_src
-            .select(*_pos_cols(blocks_src))
+            .select("term", "blob", "pblob")
             .mapInPandas(
                 decode_pos,
                 "chunk long, tidx int, docs array<long>, tfs array<int>, "
@@ -828,7 +759,7 @@ class Searcher:
         def decode_pos(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 cols_doc, cols_term, cols_nb, cols_pos = [], [], [], []
-                for term, blob, pb in _zip_blocks_pos(pdf):
+                for term, blob, pb in zip(pdf["term"], pdf["blob"], pdf["pblob"]):
                     doc_ids, tfs, norms, pos = decode_block_positions(
                         bytes(blob), pb)
                     cols_doc.append(np.repeat(doc_ids, tfs))
@@ -847,7 +778,7 @@ class Searcher:
 
         return (
             self.reader.blocks.where(F.col("term").isin(sorted(set(term_keys))))
-            .select(*_pos_cols(self.reader.blocks))
+            .select("term", "blob", "pblob")
             .mapInPandas(decode_pos, "doc_id long, term string, norm int, pos long")
         )
 
@@ -875,7 +806,7 @@ class Searcher:
         def decode_pos(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 cols_doc, cols_term, cols_nb, cols_parr = [], [], [], []
-                for term, blob, pb in _zip_blocks_pos(pdf):
+                for term, blob, pb in zip(pdf["term"], pdf["blob"], pdf["pblob"]):
                     doc_ids, tfs, norms, pos = decode_block_positions(
                         bytes(blob), pb)
                     if len(doc_ids) == 0:
@@ -898,7 +829,7 @@ class Searcher:
 
         return (
             self.reader.blocks.where(F.col("term").isin(sorted(set(term_keys))))
-            .select(*_pos_cols(self.reader.blocks))
+            .select("term", "blob", "pblob")
             .mapInPandas(decode_pos,
                          "doc_id long, term string, norm int, parr array<long>")
         )
@@ -1203,7 +1134,7 @@ class Searcher:
         token passages, passage score = sum of matched terms' idf,
         best passage per doc, top-k docs. Same plan shape as the live
         path: one aggregation + one window."""
-        from pyspark.sql import Window, functions as F
+        from pyspark.sql import functions as F
 
         from .. import similarities as sims
 
@@ -1228,7 +1159,7 @@ class Searcher:
             win = info["window"]
             for pdf in batches:
                 out_doc, out_pass, out_w = [], [], []
-                for term, blob, pb in _zip_blocks_pos(pdf):
+                for term, blob, pb in zip(pdf["term"], pdf["blob"], pdf["pblob"]):
                     doc_ids, tfs, norms, pos = decode_block_positions(
                         bytes(blob), pb)
                     if len(doc_ids) == 0:
@@ -1250,7 +1181,7 @@ class Searcher:
 
         src = self.reader.blocks.where(F.col("term").isin(live))
         occ = self.reader.live(
-            src.select(*_pos_cols(src)).mapInPandas(
+            src.select("term", "blob", "pblob").mapInPandas(
                 decode_passages, "doc_id long, passage long, w double"))
         scored = occ.groupBy("doc_id", "passage").agg(F.sum("w").alias("score"))
         # best passage per doc WITHOUT a second (window) shuffle:
@@ -1422,16 +1353,13 @@ class Searcher:
 
         MAX_CHUNKS_PER_BLOCK = 4096  # cap the sequence explosion
 
-        # pblob rides along when present: the phrase path decodes
-        # positions from the pruned frame (downstream selects prune it
-        # back out for non-positional consumers, so blob-only paths
-        # still scan doc sections alone)
-        base_cols = ["term", "n", "min_doc", "max_doc", "max_tf", "sum_tf",
-                     "min_norm", "blob"]
-        if "pblob" in self.reader.blocks.columns:
-            base_cols.append("pblob")
+        # pblob rides along: the phrase path decodes positions from the
+        # pruned frame (downstream selects prune it back out for
+        # non-positional consumers, so blob-only paths still scan doc
+        # sections alone)
         blocks = self.reader.blocks.where(F.col("term").isin(all_terms)).select(
-            *base_cols
+            "term", "n", "min_doc", "max_doc", "max_tf", "sum_tf", "min_norm",
+            "blob", "pblob"
         )
         span_chunks = (
             F.shiftright("max_doc", CHUNK_BITS) - F.shiftright("min_doc", CHUNK_BITS) + 1
@@ -1636,6 +1564,9 @@ class Searcher:
     WAND_PREFETCH_EXACT_CAP = 2_000_000
     WAND_PREFETCH_TOPN = 131_072
     WAND_PREFETCH_BUCKET_DOCS = 65_536
+    # tombstones broadcast into the WAND partitions at most; above it
+    # the pruned search defers to the exhaustive plan (same ranks)
+    WAND_MAX_TOMBSTONES = 2_000_000
 
     def _aligned_bucket_ubs(self, terms: List[str], by_term: dict,
                             winfo: dict, ub_wv: dict):
@@ -1672,23 +1603,14 @@ class Searcher:
         norms_mode = self.reader.norms
         info = {"by_term": by_term, "winfo": winfo, "ub_wv": ub_wv}
 
-        meta_cols = ["term", "max_tf", "min_norm", "min_doc", "max_doc"]
-        has_imp = "imp_tf" in self.reader.blocks.columns
-        if has_imp:
-            meta_cols += ["imp_tf", "imp_norm"]
-
         def bucket_ubs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 if not len(pdf):
                     continue
                 t_arr = pdf["term"].to_numpy()
-                ub = _block_ubs(
-                    t_arr,
-                    pdf["max_tf"].to_numpy(dtype=np.float64),
-                    pdf["min_norm"].to_numpy(dtype=np.int64),
-                    pdf["imp_tf"].to_numpy() if has_imp else None,
-                    pdf["imp_norm"].to_numpy() if has_imp else None,
-                    info, precision, norms_mode)
+                ub = _block_ubs(t_arr, pdf["imp_tf"].to_numpy(),
+                                pdf["imp_norm"].to_numpy(), info, precision,
+                                norms_mode)
                 lo = pdf["min_doc"].to_numpy(dtype=np.int64) // width
                 hi = pdf["max_doc"].to_numpy(dtype=np.int64) // width
                 span = hi - lo + 1
@@ -1714,7 +1636,7 @@ class Searcher:
 
         rows = (
             self.reader.blocks.where(F.col("term").isin(sorted(terms)))
-            .select(*meta_cols)
+            .select("term", "min_doc", "max_doc", "imp_tf", "imp_norm")
             .mapInPandas(bucket_ubs, "term string, bucket long, ub double")
             .groupBy("term", "bucket").agg(F.max("ub").alias("ub"))
             .toPandas()
@@ -1766,23 +1688,14 @@ class Searcher:
         return winfo, ub_wv, slack
 
     def _term_global_ub(self, term: str, winfo: dict, wv_total: float,
-                        gstats: Tuple[int, int, Optional[Tuple[list, list]]]
-                        ) -> float:
-        """Upper bound on a term's total per-doc contribution.
-
-        With a persisted impact table (gstats[2]): max over the term's
-        merged competitive (tf, norm) frontier of score(tf, norm) — the
-        exact max over all blocks' impact bounds, i.e. the tightest
-        slack the persisted metadata supports (Lucene's
-        MaxScoreCache.computeMaxScore over merged impacts,
-        search/similarities/BM25Similarity + Impacts API).
-
-        Fallback (old segments): decoupled (gmax_tf, gmin_norm) — BM25
-        is increasing in tf and decreasing in doc length, so
-        UB(gmax_tf, nv(gmin_norm)) dominates every block's UB (it pairs
-        the best tf with the best norm, possibly from different
-        blocks — valid, just looser)."""
-        gmax_tf, gmin_norm, imp = gstats[0], gstats[1], gstats[2]
+                        imp: Tuple[list, list]) -> float:
+        """Upper bound on a term's total per-doc contribution: max over
+        the term's merged competitive (norm, tf) frontier `imp`
+        (term_wand_stats) of score(tf, norm) — the exact max over all
+        blocks' impact bounds, i.e. the tightest slack the persisted
+        metadata supports (Lucene's MaxScoreCache.computeMaxScore over
+        merged impacts, search/similarities/BM25Similarity + Impacts
+        API)."""
         w = winfo[next(k for k in winfo if k.startswith(term + "\x00"))]
 
         def nv_of(norm: int) -> float:
@@ -1793,85 +1706,8 @@ class Searcher:
             avgdl = w["avgdl32"] if self.precision == "float32" else w["avgdl"]
             return 1.2 * (0.25 + 0.75 * float(norm) / avgdl)
 
-        if imp is not None:
-            nbs, tfs = imp
-            return max(
-                wv_total * tf / (tf + nv_of(nb)) for nb, tf in zip(nbs, tfs)
-            )
-        nv = nv_of(gmin_norm)
-        return wv_total * gmax_tf / (gmax_tf + nv)
-
-    def _global_max_ubs(self, terms_with_boost: List[Tuple[str, float]]) -> Dict[str, float]:
-        """Per-term GLOBAL max block upper bound — ONE tiny metadata
-        aggregation (term, max_tf, min_norm only; Catalyst prunes the
-        blob column from the parquet scan, so postings bytes never
-        leave disk). This is the block-max table of Ding & Suel 2011:
-        slack built from max-UBs is far tighter than the weight-value
-        (tf -> infinity) bound, because real blocks saturate at the
-        observed max_tf / min_norm, not at the asymptote."""
-        from pyspark.sql import functions as F
-
-        rows = (
-            self._block_upper_bounds(terms_with_boost)
-            .groupBy("term").agg(F.max("ub").alias("mx"))
-            .collect()
-        )
-        return {r["term"]: float(r["mx"]) for r in rows}
-
-    def _block_upper_bounds(self, terms_with_boost: List[Tuple[str, float]]):
-        """Block metadata + per-block upper-bound score UB.
-
-        UB(block) = sum_of_clause_weights(term) * max_tf /
-        (max_tf + norm_value(min_norm)): BM25 is increasing in tf and
-        decreasing in doc length, so the block's (max_tf, min_norm) pair
-        bounds every doc's TOTAL contribution from this term across all
-        clauses (weights pre-summed per term — one dim row per
-        (term, norm-byte), so the join emits exactly one row per block;
-        per-clause dim rows used to duplicate blocks and double scores).
-        The norm lookup is a broadcast join against a tiny (term x 256)
-        dim table — no UDF, no driver collect of block rows."""
-        from pyspark.sql import functions as F
-
-        clause_terms = [(i, t, b) for i, (t, b) in enumerate(terms_with_boost)]
-        winfo, ub_wv, _ = self._per_clause_params(clause_terms)
-        spark = self.reader.spark
-        POSTCOLS = ["term", "n", "min_doc", "max_doc", "max_tf", "sum_tf", "min_norm", "blob"]
-        blocks = self.reader.blocks.where(
-            F.col("term").isin(sorted(ub_wv))
-        ).select(*POSTCOLS)
-        if self.reader.norms == "byte":
-            rows = []
-            any_key = {t: next(k for k in winfo if k.startswith(t + "\x00")) for t in ub_wv}
-            for term, wv in ub_wv.items():
-                w = winfo[any_key[term]]
-                for nb in range(256):
-                    if self.precision == "float32":
-                        nv = float(w["cache"][nb])
-                    else:
-                        nv = 1.2 * (0.25 + 0.75 * float(LENGTH_TABLE[nb]) / w["avgdl"])
-                    rows.append((term, nb, float(wv), nv))
-            dim = spark.createDataFrame(rows, "term string, nb int, wv double, nv double")
-            joined = blocks.join(
-                F.broadcast(dim),
-                (blocks["term"] == dim["term"]) & (blocks["min_norm"] == dim["nb"]),
-            ).drop(dim["term"])
-            ub = (F.col("wv") * F.col("max_tf")) / (F.col("max_tf") + F.col("nv"))
-            return joined.withColumn("ub", ub)
-        # exact-norm mode: nv from min_norm (a length) inline; one branch
-        # per distinct term so each block appears exactly once
-        parts = []
-        for term, wv in ub_wv.items():
-            w = winfo[next(k for k in winfo if k.startswith(term + "\x00"))]
-            avgdl = w["avgdl32"] if self.precision == "float32" else w["avgdl"]
-            b = blocks.where(F.col("term") == term)
-            nv = F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("min_norm") / F.lit(avgdl))
-            parts.append(b.withColumn("wv", F.lit(float(wv))).withColumn(
-                "ub", (F.lit(float(wv)) * F.col("max_tf")) / (F.col("max_tf") + nv)
-            ))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        nbs, tfs = imp
+        return max(wv_total * tf / (tf + nv_of(nb)) for nb, tf in zip(nbs, tfs))
 
     def _prefetch_rare_partials(self, rare_terms: List[str], by_term: dict,
                                 winfo: dict, del_arr, k: int):
@@ -1983,14 +1819,13 @@ class Searcher:
         """Rank-safe block-max top-k for a term / OR-of-terms query in
         ONE Spark job (single mapInPandas stage + one hash agg +
         TakeOrdered — the same shape as the exhaustive plan, minus the
-        pruned decode work; the previous 3-wave driver-orchestrated
-        version survives as _search_pruned_or_multiwave for the
-        deletes-aware fallback and shadow verification).
+        pruned decode work).
 
         Per partition (the WAND-heap unit; Ding & Suel 2011 block-max
         bounds, skip-list analog Lucene50SkipWriter.java:46):
-          1. compute every local block's UB from (max_tf, min_norm)
-             metadata, vectorized — weights/caches ride a broadcast;
+          1. compute every local block's UB from its impact frontier
+             (imp_tf, imp_norm), vectorized — weights/caches ride a
+             broadcast;
           2. decode blocks in UB-descending order until >= ~4k postings
              are seen; theta := k-th best per-doc PARTIAL sum so far.
              Any k distinct docs' partial sums lower-bound the true
@@ -2011,16 +1846,17 @@ class Searcher:
         bit-identical to the exhaustive path.
 
         Multi-term slack: slack(t) = sum of the OTHER terms' GLOBAL max
-        block UB (one metadata-only pre-agg, Ding & Suel block-max
-        bound) — the former sum-of-weight-values bound is the tf->inf
-        asymptote and pruned almost nothing on OR queries.
+        block UB (the persisted impact tables, term_wand_stats — Ding &
+        Suel block-max bound) — the sum-of-weight-values bound is the
+        tf->inf asymptote and prunes almost nothing on OR queries.
 
         Deletes: tombstones are broadcast into the partition and
         filtered BEFORE theta computation (liveDocs applied per leaf,
         like Weight.scorerSupplier under LRUQueryCache's liveDocs), so
-        incremental indexes keep the one-job plan; the multiwave path
-        survives only as the shadow oracle and the fallback for
-        pathologically large tombstone sets."""
+        incremental indexes keep the one-job plan. Returns None when
+        the index holds more than WAND_MAX_TOMBSTONES tombstones (the
+        broadcast would not fit the driver); the caller then runs the
+        exhaustive plan, which returns the same ranks."""
         from pyspark.sql import functions as F
 
         del_arr = None
@@ -2028,10 +1864,11 @@ class Searcher:
             # theta must lower-bound the k-th LIVE score: ship the
             # tombstone set to the partitions (sorted for searchsorted).
             # Un-merged tombstone sets are small by construction (merge
-            # purges them); cap the broadcast defensively.
-            del_rows = self.reader.deletes.select("doc_id").collect()
-            if len(del_rows) > 2_000_000:
-                return self._search_pruned_or_multiwave(terms_with_boost, k)
+            # purges them); the limit bounds the collect itself.
+            cap = self.WAND_MAX_TOMBSTONES
+            del_rows = self.reader.deletes.select("doc_id").limit(cap + 1).collect()
+            if len(del_rows) > cap:
+                return None
             del_arr = np.sort(np.array([r["doc_id"] for r in del_rows],
                                        dtype=np.int64))
 
@@ -2042,18 +1879,15 @@ class Searcher:
         rare_set: set = set()
         if len(ub_wv) > 1:
             # tighten: replace the weight-value (tf->inf) slack with a
-            # global block-max slack. Preferred source: the per-term
-            # (gmax_tf, gmin_norm) persisted in term_stats (free — the
-            # same tiny filtered scan term stats already take); fallback
-            # for old indexes: one metadata-only agg over the blocks
+            # global block-max slack from the impact tables persisted in
+            # term_stats (free — the same tiny filtered scan term stats
+            # already take); a term without postings contributes nothing
             gws = self.reader.term_wand_stats(sorted(ub_wv))
-            if gws is not None and all(t in gws for t in ub_wv):
-                gmax = {
-                    t: self._term_global_ub(t, winfo, ub_wv[t], gws[t])
-                    for t in ub_wv
-                }
-            else:
-                gmax = self._global_max_ubs(terms_with_boost)
+            gmax = {
+                t: self._term_global_ub(t, winfo, ub_wv[t], gws[t])
+                if t in gws else 0.0
+                for t in ub_wv
+            }
             total = sum(gmax.values())
             slack = {t: total - gmax.get(t, 0.0) for t in ub_wv}
         by_term: Dict[str, List[Tuple[int, float]]] = {}
@@ -2163,18 +1997,13 @@ class Searcher:
                 return
             pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
             terms = pdf["term"].to_numpy()
-            max_tf = pdf["max_tf"].to_numpy(dtype=np.float64)
-            min_norm = pdf["min_norm"].to_numpy(dtype=np.int64)
             n_post = pdf["n"].to_numpy(dtype=np.int64)
             blobs = pdf["blob"].to_numpy()
-            imp_tf_col = (pdf["imp_tf"].to_numpy()
-                          if "imp_tf" in pdf.columns else None)
-            imp_nb_col = (pdf["imp_norm"].to_numpy()
-                          if "imp_norm" in pdf.columns else None)
 
-            # per-block UBs (impact frontier when present) + slack
-            ub = _block_ubs(terms, max_tf, min_norm, imp_tf_col,
-                            imp_nb_col, info, precision, norms_mode)
+            # per-block UBs (impact frontier) + slack
+            ub = _block_ubs(terms, pdf["imp_tf"].to_numpy(),
+                            pdf["imp_norm"].to_numpy(), info, precision,
+                            norms_mode)
             slack_arr = np.empty(len(pdf), dtype=np.float64)
             for t in pd.unique(terms):
                 slack_arr[terms == t] = info["slack"][t]
@@ -2364,9 +2193,7 @@ class Searcher:
                     }
                 )
 
-        wand_cols = ["term", "n", "max_tf", "min_norm", "blob"]
-        if "imp_tf" in self.reader.blocks.columns:
-            wand_cols += ["imp_tf", "imp_norm"]
+        wand_cols = ["term", "n", "blob", "imp_tf", "imp_norm"]
         if rare_set or aligned_tbl:
             wand_cols += ["min_doc", "max_doc"]
         cand = (
@@ -2416,76 +2243,6 @@ class Searcher:
             }
         )
 
-    def _search_pruned_or_multiwave(self, terms_with_boost: List[Tuple[str, float]],
-                                    k: int) -> "pd.DataFrame":
-        """Driver-orchestrated two-phase WAND (the original path, kept
-        for the deletes-aware case and as the shadow oracle).
-
-        Phase A: decode each term's top ceil(2k/128)+1 blocks by UB ->
-        partial scores -> threshold = k-th best partial total (a LOWER
-        bound of the true k-th score, so pruning with it is safe).
-        Phase B: keep only blocks with
-            UB + sum(other terms' global max UB) >= threshold - margin
-        and rescore. Docs whose some-term blocks were pruned surface
-        with partial totals, but the pruning condition proves their
-        TRUE total < threshold <= true k-th score, so the top-k rows
-        are exactly the exhaustive ones (shadow-verified in
-        tests/test_wand.py)."""
-        from pyspark.sql import functions as F
-        from pyspark.sql import Window
-
-        ubdf = self._block_upper_bounds(terms_with_boost).persist()
-        try:
-            n_probe = (2 * k + 127) // 128 + 1
-            w = Window.partitionBy("term").orderBy(F.desc("ub"), F.asc("min_doc"))
-            probe = (
-                ubdf.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") <= n_probe)
-                .drop("rn")
-            )
-            clause_terms = [(i, t, b) for i, (t, b) in enumerate(terms_with_boost)]
-            pa = self.reader.live(self._score_terms(clause_terms, blocks_df=probe))
-            pa_top = (
-                pa.groupBy("doc_id").agg(F.sum("score").alias("score"))
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
-            )
-            if len(pa_top) < k:
-                theta = -float("inf")  # not enough candidates: no pruning
-            else:
-                theta = float(pa_top[-1]["score"])
-            maxubs = {
-                r["term"]: float(r["mx"])
-                for r in ubdf.groupBy("term").agg(F.max("ub").alias("mx")).collect()
-            }
-            slack = {
-                t: sum(v for t2, v in maxubs.items() if t2 != t)
-                for t, _ in terms_with_boost
-            }
-            slack_expr = F.lit(0.0)
-            for t, s in slack.items():
-                slack_expr = F.when(F.col("term") == t, F.lit(s)).otherwise(slack_expr)
-            kept = ubdf.where(
-                F.col("ub") + slack_expr >= F.lit(theta - self.WAND_MARGIN)
-            )
-            pb = self.reader.live(self._score_terms(clause_terms, blocks_df=kept))
-            agg = pb.groupBy("doc_id").agg(F.sum("score").alias("score"))
-            if self.precision == "float32":
-                agg = agg.select("doc_id", F.col("score").cast("float").cast("double").alias("score"))
-            rows = agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-            return pd.DataFrame(
-                {
-                    "rank": range(1, len(rows) + 1),
-                    "doc_id": [r["doc_id"] for r in rows],
-                    "score": np.array([r["score"] for r in rows], dtype=np.float32)
-                    if self.precision == "float32"
-                    else [r["score"] for r in rows],
-                }
-            )
-        finally:
-            ubdf.unpersist()
-
     # -- access-path cost model (WAND vs exhaustive, Lucene's
     # IndexOrDocValuesQuery.java:52 / BooleanWeight.java:317 analog) ----------
     # Decoded-postings throughput of the pruned partition kernel (python
@@ -2519,17 +2276,15 @@ class Searcher:
         (rare prefetch, aligned slack — mirroring _search_pruned_or's
         gates), and compare modeled wall costs. Returns a dict with
         'use_wand' plus the estimates (kept on self.last_plan for bench
-        and test introspection). Missing sketch (old index) =>
-        use_wand=True (the legacy always-prune-when-asked behavior)."""
+        and test introspection). Missing sketch (multi-field / no-sketch
+        segments, or a term without postings) => use_wand=True (always
+        prune when asked)."""
         clause_terms = [(i, t, b) for i, (t, b) in enumerate(terms_with_boost)]
         winfo, ub_wv, _ = self._per_clause_params(clause_terms)
-        legacy = {"use_wand": True, "reason": "no-cost-stats"}
         cost = self.reader.term_cost_stats(sorted(ub_wv))
         if cost is None or any(t not in cost for t in ub_wv):
-            return legacy
+            return {"use_wand": True, "reason": "no-cost-stats"}
         gws = self.reader.term_wand_stats(sorted(ub_wv))
-        if gws is None or any(t not in gws for t in ub_wv):
-            return legacy
         gmax = {t: self._term_global_ub(t, winfo, ub_wv[t], gws[t])
                 for t in ub_wv}
         anykey = {t: next(kk for kk in winfo if kk.startswith(t + "\x00"))
@@ -2636,7 +2391,9 @@ class Searcher:
         pruning pays (Lucene's BooleanWeight.java:317 scorer-vs-
         BulkScorer and IndexOrDocValuesQuery.java:52 access-path
         choice); either choice returns the identical rank-safe top-k.
-        The decision and its estimates land on self.last_plan."""
+        The decision and its estimates land on self.last_plan; an index
+        with more than WAND_MAX_TOMBSTONES tombstones runs the
+        exhaustive plan (last_plan reason "tombstone-cap")."""
         from pyspark.sql import functions as F
 
         self.last_plan = None
@@ -2644,14 +2401,16 @@ class Searcher:
         if prune and after is None:
             terms = self._as_or_terms(q)
             if terms is not None:
+                use_wand = True
                 if prune == "auto":
-                    plan = self.plan_pruned_or(terms, k)
-                    self.last_plan = plan
-                    if plan["use_wand"]:
-                        return self._search_pruned_or(terms, k)
-                    # fall through: exhaustive plan chosen by cost
-                else:
-                    return self._search_pruned_or(terms, k)
+                    self.last_plan = self.plan_pruned_or(terms, k)
+                    use_wand = self.last_plan["use_wand"]
+                if use_wand:
+                    top = self._search_pruned_or(terms, k)
+                    if top is not None:
+                        return top
+                    self.last_plan = {"use_wand": False, "reason": "tombstone-cap"}
+                # fall through: exhaustive plan
 
         q = rewrite(q, dictionary_terms=None)
         q = self._expand_multiterm(q)
@@ -2782,65 +2541,39 @@ def _norm32(lengths: np.ndarray, avgdl32: float) -> np.ndarray:
     ).astype(np.float32)
 
 
-def _block_ubs(terms: np.ndarray, max_tf: np.ndarray, min_norm: np.ndarray,
-               imp_tf_col, imp_nb_col, info: dict, precision: str,
+def _block_ubs(terms: np.ndarray, imp_tf_col: np.ndarray,
+               imp_nb_col: np.ndarray, info: dict, precision: str,
                norms_mode: str) -> np.ndarray:
-    """Vectorized per-block upper-bound scores, grouped by term.
-
-    UB source, per block: the competitive impact frontier (max over
-    REALIZED (tf, norm) pairs — exact block bound,
-    CompetitiveImpactAccumulator.java:30) when present; decoupled
-    (max_tf, min_norm) for old-format blocks (valid, but pairs a tf and
-    a norm no document realizes — measured <1% prunable vs 94-99% with
-    impacts on the bench corpus). Shared by the WAND partition kernel
-    and the aligned block-max metadata job so both see identical
-    bounds."""
+    """Vectorized per-block upper-bound scores, grouped by term: the
+    max over each block's competitive impact frontier — REALIZED
+    (tf, norm) pairs, an exact block bound
+    (CompetitiveImpactAccumulator.java:30). Shared by the WAND
+    partition kernel and the aligned block-max metadata job so both
+    see identical bounds."""
     ub = np.empty(len(terms), dtype=np.float64)
     for t in pd.unique(terms):
-        m = terms == t
+        idx = np.flatnonzero(terms == t)
         wv_t = info["ub_wv"][t]
         w = info["winfo"][f"{t}\x00{info['by_term'][t][0][1]}"]
-        if norms_mode == "byte":
-            if precision == "float32":
-                cache = np.asarray(w["cache"], dtype=np.float64)
-                nv = cache[min_norm[m] & 0xFF]
-            else:
-                nv = 1.2 * (0.25 + 0.75 * LENGTH_TABLE[
-                    min_norm[m] & 0xFF].astype(np.float64) / w["avgdl"])
-        else:
-            avgdl = w["avgdl32"] if precision == "float32" else w["avgdl"]
-            nv = 1.2 * (0.25 + 0.75 * min_norm[m].astype(np.float64) / avgdl)
-        ub[m] = wv_t * max_tf[m] / (max_tf[m] + nv)
-        if imp_tf_col is None:
-            continue
-        idx = np.flatnonzero(m)
         lists_tf = imp_tf_col[idx]
-        lists_nb = imp_nb_col[idx]
-        good = np.fromiter(
-            (x is not None and not isinstance(x, float) and len(x) > 0
-             for x in lists_tf),
-            dtype=bool, count=len(idx))
-        gi = np.flatnonzero(good)
-        if not len(gi):
-            continue
-        lens = np.fromiter((len(lists_tf[j]) for j in gi),
-                           dtype=np.int64, count=len(gi))
-        ftf = np.concatenate(
-            [np.asarray(lists_tf[j], dtype=np.float64) for j in gi])
+        lens = np.fromiter((len(x) for x in lists_tf), dtype=np.int64,
+                           count=len(idx))
+        ftf = np.concatenate([np.asarray(x, dtype=np.float64) for x in lists_tf])
         fnb = np.concatenate(
-            [np.asarray(lists_nb[j], dtype=np.int64) for j in gi])
+            [np.asarray(x, dtype=np.int64) for x in imp_nb_col[idx]])
         if norms_mode == "byte":
             if precision == "float32":
-                fnv = cache[fnb & 0xFF]
+                fnv = np.asarray(w["cache"], dtype=np.float64)[fnb & 0xFF]
             else:
                 fnv = 1.2 * (0.25 + 0.75 * LENGTH_TABLE[
                     fnb & 0xFF].astype(np.float64) / w["avgdl"])
         else:
+            avgdl = w["avgdl32"] if precision == "float32" else w["avgdl"]
             fnv = 1.2 * (0.25 + 0.75 * fnb.astype(np.float64) / avgdl)
         pair_sc = wv_t * ftf / (ftf + fnv)
-        offs = np.zeros(len(gi), dtype=np.int64)
+        offs = np.zeros(len(idx), dtype=np.int64)
         np.cumsum(lens[:-1], out=offs[1:])
-        ub[idx[gi]] = np.maximum.reduceat(pair_sc, offs)
+        ub[idx] = np.maximum.reduceat(pair_sc, offs)
     return ub
 
 

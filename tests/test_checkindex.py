@@ -51,3 +51,41 @@ def test_check_after_delete_and_merge(spark, tiny_corpus_pdf, tmp_path):
     force_merge(spark, idx, max_segments=1)
     rep = check_index(spark, idx)
     assert rep["clean"] and rep["segments"] == 1
+
+
+def test_unstamped_segment_refused(spark, tiny_corpus_pdf, tmp_path):
+    """A segment without the format stamp (written before segments
+    recorded their format) makes every entry point refuse the index with
+    one IndexFormatError naming the segment, before anything is read or
+    written."""
+    from lucene_solr_spark.indexing.builder import build_index
+    from lucene_solr_spark.indexing.deletes import delete_by_terms
+    from lucene_solr_spark.indexing.manifest import IndexFormatError, ManifestStore
+    from lucene_solr_spark.indexing.merge import force_merge
+    from lucene_solr_spark.search.executor import IndexReader
+    from lucene_solr_spark.sql import register_index_views
+
+    idx = str(tmp_path / "old")
+    build_index(spark, idx, [("b0", spark.createDataFrame(tiny_corpus_pdf))])
+    store = ManifestStore(idx)
+    gen = store.current_generation()
+    path = os.path.join(store.mdir, f"segments_{gen}.json")
+    raw = json.load(open(path))
+    del raw["segments"][0]["format_version"]
+    json.dump(raw, open(path, "w"))
+    before = sorted(os.listdir(idx)), sorted(os.listdir(os.path.join(idx, "segments")))
+
+    append = spark.createDataFrame(tiny_corpus_pdf.iloc[:10])
+    for refuse in (
+        lambda: IndexReader(spark, idx),
+        lambda: force_merge(spark, idx),
+        lambda: check_index(spark, idx, raise_on_error=False),
+        lambda: build_index(spark, idx, [("b1", append)]),
+        lambda: delete_by_terms(spark, idx, ["import"]),
+        lambda: register_index_views(spark, idx),
+    ):
+        with pytest.raises(IndexFormatError, match="seg_b0"):
+            refuse()
+    assert store.current_generation() == gen
+    assert (sorted(os.listdir(idx)),
+            sorted(os.listdir(os.path.join(idx, "segments")))) == before

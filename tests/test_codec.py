@@ -71,7 +71,8 @@ def test_block_round_trip_with_norms():
     doc_ids = np.cumsum(RNG.integers(1, 50, n))
     tfs = RNG.integers(1, 20, n)
     norms = RNG.integers(0, 256, n)
-    blob = encode_block(doc_ids, tfs, norms)
+    blob, pblob = encode_block(doc_ids, tfs, norms)
+    assert pblob is None
     d, f, nb = decode_block(blob)
     assert (d == doc_ids).all() and (f == tfs).all() and (nb == norms).all()
 
@@ -172,6 +173,7 @@ def test_split_blocks_batch_bit_identical():
                                 "max_tf", "sum_tf", "min_norm"):
                         assert res[key][k] == blk[key], key
                     assert bytes(res["blob"][k]) == blk["blob"]
+                    assert res["pblob"][k] == blk["pblob"]
                     k += 1
             assert k == len(res["n"])
 

@@ -186,6 +186,15 @@ def test_multifield_merge_preserves_field_stats(spark, mf_corpus, tmp_path):
     assert list(after["score"]) == list(before["score"])
 
 
+def test_term_stats_schema_matches_single_field(spark, mf_searcher, tiny_index):
+    """Multi-field segments write no cost sketch, as typed nulls: every
+    segment shares one term_stats schema, so readers never merge
+    schemas."""
+    from lucene_solr_spark.search.executor import IndexReader
+
+    assert mf_searcher.reader.stats.schema == IndexReader(spark, tiny_index).stats.schema
+
+
 def test_default_field_searcher(spark, mf_corpus, mf_searcher, tmp_path_factory):
     """Searcher(default_field=...) scopes unqualified query leaves —
     the QueryParser default-field argument. Explicit fields still win."""

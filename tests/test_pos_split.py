@@ -4,17 +4,13 @@ The block codec stores positions in a separate `pblob` parquet column
 (has_pos=2) so non-positional queries scan doc sections only — the
 Lucene .doc/.pos file separation (codecs/lucene90/
 Lucene90PostingsFormat.java) restated as parquet column pruning.
-These tests cover: split round-trips at the codec level, the scan-side
-column pruning claim, and mixed-generation indexes (an old
-inline-format segment unioned with split segments must answer
-positional queries identically)."""
+These tests cover: split round-trips at the codec level and the
+scan-side column pruning claim."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from lucene_solr_spark.codec import (
-    POS_INLINE,
     POS_SPLIT,
     decode_block,
     decode_block_positions,
@@ -35,36 +31,34 @@ def _random_block(n=300, maxdoc=10_000):
     return docs, tfs, nb, pos
 
 
-def test_split_round_trip_matches_inline():
+def test_split_round_trip():
     docs, tfs, nb, pos = _random_block()
-    inline = encode_block(docs, tfs, nb, pos)
-    blob, pblob = encode_block(docs, tfs, nb, pos, split_pos=True)
-    assert inline[8] == POS_INLINE and blob[8] == POS_SPLIT
-    a = decode_block_positions(inline)
-    b = decode_block_positions(blob, pblob)
-    for x, y in zip(a, b):
-        assert (x == y).all()
-    # doc-section decode identical for both formats and never needs pblob
-    for bb in (inline, blob):
-        d, f, n_ = decode_block(bb)
-        assert (d == a[0]).all() and (f == a[1]).all() and (n_ == a[2]).all()
+    blob, pblob = encode_block(docs, tfs, nb, pos)
+    assert blob[8] == POS_SPLIT
+    d, f, n_, p = decode_block_positions(blob, pblob)
+    assert (d == docs).all() and (f == tfs).all() and (n_ == nb).all()
+    assert (p == pos).all()
+    # the doc-section decode never needs pblob
+    d, f, n_ = decode_block(blob)
+    assert (d == docs).all() and (f == tfs).all() and (n_ == nb).all()
 
 
 def test_split_block_forgot_pblob_raises():
     docs, tfs, nb, pos = _random_block(64)
-    blob, _ = encode_block(docs, tfs, nb, pos, split_pos=True)
+    blob, _ = encode_block(docs, tfs, nb, pos)
     with pytest.raises(ValueError):
         decode_block_positions(blob)
 
 
 def test_split_blob_is_smaller():
     """The point of the split: the doc section a term/boolean/WAND scan
-    reads is a strict subset of the old inline blob."""
+    reads carries no position bytes — it equals the positions-free
+    encoding of the same postings apart from the flag byte."""
     docs, tfs, nb, pos = _random_block()
-    inline = encode_block(docs, tfs, nb, pos)
-    blob, pblob = encode_block(docs, tfs, nb, pos, split_pos=True)
-    assert len(blob) < len(inline)
-    assert len(blob) + len(pblob) == len(inline)
+    blob, pblob = encode_block(docs, tfs, nb, pos)
+    bare, no_pos = encode_block(docs, tfs, nb)
+    assert no_pos is None and len(pblob) > 0
+    assert blob[:8] == bare[:8] and blob[9:] == bare[9:]
 
 
 def test_batch_split_matches_per_term():
@@ -72,106 +66,37 @@ def test_batch_split_matches_per_term():
     term_first = np.array([0, 130])
     term_last = np.array([130, 260])
     res = split_blocks_batch(docs, tfs, nb, term_first, term_last,
-                             positions=pos, split_pos=True)
+                             positions=pos)
     off = np.concatenate([[0], np.cumsum(tfs)])
     i = 0
     for f_, l_ in [(0, 130), (130, 260)]:
         for lo in range(f_, l_, 128):
             hi = min(lo + 128, l_)
             eb, ep = encode_block(docs[lo:hi], tfs[lo:hi], nb[lo:hi],
-                                  pos[off[lo]:off[hi]], split_pos=True)
+                                  pos[off[lo]:off[hi]])
             assert res["blob"][i] == eb
             assert res["pblob"][i] == ep
             i += 1
     assert i == len(res["blob"])
 
 
-# -- end-to-end: new indexes are split; mixed generations still work ---------
+def test_split_blocks_batch_rejects_inline_positions():
+    docs, tfs, nb, pos = _random_block(10)
+    with pytest.raises(ValueError):
+        split_blocks_batch(docs, tfs, nb, np.array([0]), np.array([10]),
+                           positions=pos, split_pos=False)
 
 
-def _rewrite_segment_inline(spark, index_dir: str):
-    """Rewrite every segment's postings to the OLD inline format (drop
-    pblob, re-encode positions into blob) — manufactures a
-    previous-generation index for compatibility tests."""
-    import os
-    import shutil
-
-    from lucene_solr_spark.indexing.manifest import ManifestStore
-    from lucene_solr_spark.indexing.manifest import postings_path
-
-    store = ManifestStore(index_dir)
-    for seg in store.load().segments:
-        ppath = postings_path(store.segment_dir(seg.name))
-        pdf = spark.read.parquet(ppath).toPandas()
-        blobs = []
-        for blob, pblob in zip(pdf["blob"], pdf["pblob"]):
-            d, f, nb, pos = decode_block_positions(
-                bytes(blob), None if pblob is None else bytes(pblob))
-            blobs.append(encode_block(d, f, nb, pos if len(pos) else None))
-        pdf["blob"] = blobs
-        pdf = pdf.drop(columns=["pblob"])
-        out = spark.createDataFrame(pdf)
-        tmp = ppath + "__old"
-        out.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(ppath)
-        os.rename(tmp, ppath)
-
-
-@pytest.fixture(scope="module")
-def mixed_generation(spark, tiny_corpus_pdf, tmp_path_factory):
-    from lucene_solr_spark.indexing.builder import build_index
-    from lucene_solr_spark.search.executor import IndexReader, MultiReader, Searcher
-
-    base = tmp_path_factory.mktemp("pos_split")
-    old_dir = str(base / "old")
-    new_dir = str(base / "new")
-    all_dir = str(base / "all")
-    build_index(spark, old_dir,
-                [("b", spark.createDataFrame(tiny_corpus_pdf.iloc[:100]))])
-    build_index(spark, new_dir,
-                [("b", spark.createDataFrame(tiny_corpus_pdf.iloc[100:]))],
-                min_doc_base=100)
-    build_index(spark, all_dir, [("b", spark.createDataFrame(tiny_corpus_pdf))])
-    _rewrite_segment_inline(spark, old_dir)
-    old = IndexReader(spark, old_dir)
-    assert "pblob" not in old.blocks.columns  # truly old-format
-    multi = MultiReader([old, IndexReader(spark, new_dir)])
-    assert "pblob" in multi.blocks.columns  # union null-fills old rows
-    return Searcher(multi), Searcher(IndexReader(spark, all_dir))
-
-
-def _top(searcher, q, k=10):
-    from lucene_solr_spark.analysis import standard_analyze
-    from lucene_solr_spark.queryast import parse_query
-
-    an = lambda t: [w for w, _ in standard_analyze(t)]
-    res = searcher.search(parse_query(q, analyzer=an), k=k)
-    return [(int(d), round(float(s), 5))
-            for d, s in zip(res["doc_id"], res["score"])]
-
-
-def test_mixed_generation_phrase(mixed_generation):
-    mixed, single = mixed_generation
-    got = _top(mixed, '"public static"')
-    assert got, "phrase must match in the tiny corpus"
-    assert got == _top(single, '"public static"')
-
-
-def test_mixed_generation_term_and_bool(mixed_generation):
-    mixed, single = mixed_generation
-    for q in ["import", "import AND la", "import OR zeros"]:
-        assert _top(mixed, q) == _top(single, q)
-
-
-def test_scan_prunes_pblob_for_term_query(mixed_generation, spark):
+def test_scan_prunes_pblob_for_term_query(spark, tiny_index):
     """Plan-shape check on the pruning claim: a term query's physical
     plan must not read the pblob column; the phrase path must."""
-    mixed, _ = mixed_generation
     from lucene_solr_spark.queryast import parse_query
+    from lucene_solr_spark.search.executor import IndexReader, Searcher
 
-    term_plan = mixed._eval(parse_query("import"), 1.0)._jdf.queryExecution() \
+    s = Searcher(IndexReader(spark, tiny_index))
+    term_plan = s._eval(parse_query("import"), 1.0)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "pblob" not in term_plan
-    phrase_plan = mixed._eval(parse_query('"public static"'), 1.0)._jdf \
+    phrase_plan = s._eval(parse_query('"public static"'), 1.0)._jdf \
         .queryExecution().executedPlan().toString()
     assert "pblob" in phrase_plan

@@ -81,10 +81,10 @@ def test_block_roundtrip_with_positions(doc_ids, data):
         pos_parts.append(np.array(p, dtype=np.int64))
     positions = np.concatenate(pos_parts)
 
-    blob = encode_block(doc_ids, tfs, norms, positions)
+    blob, pblob = encode_block(doc_ids, tfs, norms, positions)
     d, f, nb = decode_block(blob)
     assert list(d) == list(doc_ids) and list(f) == list(tfs) and list(nb) == list(norms)
-    d2, f2, nb2, p2 = decode_block_positions(blob)
+    d2, f2, nb2, p2 = decode_block_positions(blob, pblob)
     assert list(p2) == list(positions)
 
 

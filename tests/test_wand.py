@@ -83,17 +83,30 @@ def test_same_term_multiple_boosts_pruned_rank_identical(searcher):
     _assert_same(pruned, exhaustive, "dup-boost")
 
 
-def test_multiwave_same_term_multiple_boosts(searcher):
-    """The deletes-aware multiwave fallback path, same dup-boost shape."""
+def test_tombstone_cap_same_term_multiple_boosts(spark, tiny_index, tmp_path,
+                                                monkeypatch):
+    """Above WAND_MAX_TOMBSTONES the pruned search must not broadcast the
+    tombstones: it runs the exhaustive plan (same dup-boost shape, cap
+    forced below the index's tombstone count)."""
+    import shutil
+
+    from lucene_solr_spark.indexing.deletes import delete_by_terms
+    from lucene_solr_spark.search.executor import IndexReader, Searcher
+
+    idx = str(tmp_path / "cap_idx")
+    shutil.copytree(tiny_index, idx)
+    assert delete_by_terms(spark, idx, ["ident007"]) >= 2, "fixture drift"
+    s = Searcher(IndexReader(spark, idx))
+    monkeypatch.setattr(Searcher, "WAND_MAX_TOMBSTONES", 1)
     q = BooleanQuery(clauses=(
         BooleanClause(Occur.SHOULD, TermQuery(term="class", boost=3.0)),
         BooleanClause(Occur.SHOULD, TermQuery(term="class", boost=0.25)),
         BooleanClause(Occur.SHOULD, TermQuery(term="ident042")),
     ))
-    terms = [("class", 3.0), ("class", 0.25), ("ident042", 1.0)]
-    exhaustive = searcher.search(q, k=10)
-    pruned = searcher._search_pruned_or_multiwave(terms, k=10)
-    _assert_same(pruned, exhaustive, "dup-boost-multiwave")
+    exhaustive = s.search(q, k=10)
+    pruned = s.search(q, k=10, prune=True)
+    assert s.last_plan == {"use_wand": False, "reason": "tombstone-cap"}
+    _assert_same(pruned, exhaustive, "dup-boost-tombstone-cap")
 
 
 def test_rare_prefetch_engages_and_rank_identical(searcher):
@@ -203,8 +216,8 @@ def test_impact_columns_persisted(spark, mid_index):
     # decoupled (max_tf, min_norm) extremes
     assert max(row["imp_tf"]) <= row["max_tf"]
     assert min(row["imp_norm"]) >= row["min_norm"]
-    gws = r.term_wand_stats(["import"])
-    assert gws is not None and gws["import"][2] is not None
+    norms, tfs = r.term_wand_stats(["import"])["import"]
+    assert len(norms) == len(tfs) >= 1
 
 
 def test_pruned_search_skips_blocks(spark, mid_index):
@@ -355,15 +368,16 @@ def test_auto_tiny_corpus_prefers_exhaustive(searcher):
 
 
 def test_auto_falls_back_to_wand_without_sketch(searcher, monkeypatch):
-    """Old-format indexes (no gq_tf sketch) keep the legacy behavior:
-    prune='auto' still runs the (rank-safe) pruned path."""
+    """Multi-field / no-sketch segments (null gq_tf sketch) give the
+    gate no cost inputs: prune='auto' still runs the (rank-safe) pruned
+    path."""
     monkeypatch.setattr(type(searcher.reader), "term_cost_stats",
                         lambda self, terms: None)
     q = TermQuery(term="import")
     exhaustive = searcher.search(q, k=10)
     auto = searcher.search(q, k=10, prune="auto")
     assert searcher.last_plan == {"use_wand": True, "reason": "no-cost-stats"}
-    _assert_same(auto, exhaustive, "auto-legacy")
+    _assert_same(auto, exhaustive, "auto-no-sketch")
 
 
 def test_mid_corpus_plan_estimates_sane(spark, mid_index):
