@@ -4046,7 +4046,7 @@ def ft_stemmed_term(spark, sf_dir):
     )
 
 
-_LIGHT_SUFFIXES = ("", "es", "en", "ation", "ene", "heter")
+_LIGHT_SUFFIXES = ("", "es", "en", "ation")
 # russian_light is omitted: the synthetic corpus is ASCII, so the
 # Cyrillic suffix rules never fire (it is covered by the 49,673-pair
 # vocabulary test in tests/test_stem.py instead)

@@ -52,7 +52,9 @@ def deleted_docs_df(spark, index_dir: str):
     gens = delete_generations(index_dir)
     if not gens:
         return spark.createDataFrame([], "doc_id long")
-    return spark.read.parquet(*gens).select("doc_id").distinct()
+    # pinned schema: the one column tombstones are written with, so the
+    # read infers nothing (an inference is a Spark job)
+    return spark.read.schema("doc_id long").parquet(*gens).select("doc_id").distinct()
 
 
 def live_filter(df, deletes_df):

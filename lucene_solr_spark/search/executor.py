@@ -5,12 +5,20 @@ partitions playing segment leaves:
 
   rewrite fixpoint           -> queryast.rewrite + Spark-side term-dict
                                 expansion (MultiTermQuery.java:94-116)
-  weight creation / stats    -> one small aggregate over per-segment
-                                term_stats, broadcast (TermQuery.java:65-66;
-                                the ExactStatsCache analog — stats are
-                                GLOBAL, never per-partition)
+  weight creation / stats    -> a driver-side pyarrow read of the query
+                                terms' rows of every segment's term_stats,
+                                summed, broadcast (TermQuery.java:65-66;
+                                the in-heap terms index and ExactStatsCache
+                                analogs — stats are GLOBAL, never
+                                per-partition, and cost no Spark job)
+  conjunction skip data      -> the MUST terms' block (min_doc, max_doc)
+                                read the same way; numpy keeps the blocks
+                                overlapping every MUST term's coverage
+                                (ConjunctionDISI.java:185)
   per-leaf scoring           -> block filter (term pushdown) -> Arrow
-                                decode+score UDF (vectorized numpy)
+                                decode+score UDF (vectorized numpy), the
+                                one Spark job of a query (plus the shuffle
+                                of an aggregating node)
   boolean composition        -> ONE hash aggregation per boolean node:
                                 conditional per-clause sums + match
                                 counters (Boolean2ScorerSupplier.java:92-113
@@ -39,7 +47,9 @@ Pruning (block metadata = the skip-list/WAND analog, SURVEY §4):
 
 from __future__ import annotations
 
+import logging
 import math
+import os
 from typing import Dict, Iterator, List, Optional, Tuple
 
 import numpy as np
@@ -49,6 +59,7 @@ from .. import bm25
 from ..codec import decode_block, decode_block_positions
 from ..fields import FIELD_SEP, split_term_key, term_key
 from ..smallfloat import LENGTH_TABLE
+from ..indexing.builder import POSTINGS_SCHEMA
 from ..indexing.deletes import delete_generations, deleted_docs_df
 from ..indexing.manifest import ManifestStore, doc_meta_path, postings_path
 from ..queryast import (
@@ -70,6 +81,40 @@ from ..queryast import (
 
 CHUNK_BITS = 13
 
+_log = logging.getLogger("lucene_solr_spark.search")
+
+
+def _data_files(root: str) -> List[str]:
+    """Data files of a Spark-written parquet directory; as in Spark,
+    names starting with '_' or '.' (_SUCCESS, checksums) are not data."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(os.path.join(root, f) for f in os.listdir(root)
+                  if not f.startswith(("_", ".")))
+
+
+def _footer_schema(roots: List[str], drop=()):
+    """Spark schema of the parquet files under roots: the first footer of
+    each root, unified, minus the columns in drop."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = from_arrow_schema(pa.unify_schemas(
+        [pq.read_schema(fs[0]) for fs in map(_data_files, roots) if fs]))
+    return StructType([f for f in schema.fields if f.name not in drop])
+
+
+def _read_term_rows(roots: List[str], columns: List[str], terms):
+    """The rows of the given terms in the parquet files under roots,
+    read on the driver with pyarrow (a term `isin` filter)."""
+    import pyarrow.dataset as ds
+
+    files = [f for r in roots for f in _data_files(r)]
+    return ds.dataset(files, format="parquet").to_table(
+        columns=columns, filter=ds.field("term").isin(list(terms)))
+
 
 class IndexReader:
     """Unified view over the live segments of an index."""
@@ -85,11 +130,19 @@ class IndexReader:
         self.doc_count = self.manifest.total_docs
         self.sum_dl = self.manifest.sum_dl
         segs = [self.store.segment_dir(s.name) for s in self.manifest.segments]
-        # one segment format (manifest load refuses any other), so every
-        # segment shares one schema and no read needs a schema merge
-        self.blocks = spark.read.parquet(*[postings_path(d) for d in segs])
-        self.stats = spark.read.parquet(*[f"{d}/term_stats.parquet" for d in segs])
-        self.doc_meta = spark.read.parquet(*[doc_meta_path(d) for d in segs])
+        self._block_dirs = [postings_path(d) for d in segs]
+        self._stats_dirs = [os.path.join(d, "term_stats.parquet") for d in segs]
+        doc_dirs = [doc_meta_path(d) for d in segs]
+        # pinned schemas, so no read infers one (an inference is a Spark
+        # job): blocks take the writers' POSTINGS_SCHEMA; term stats and
+        # doc meta (whose columns vary with fields and stored content)
+        # take one pyarrow footer read per segment. Doc meta drops the
+        # postings columns the builder's union write leaves null there.
+        self.blocks = spark.read.schema(POSTINGS_SCHEMA).parquet(*self._block_dirs)
+        self.stats = spark.read.schema(
+            _footer_schema(self._stats_dirs)).parquet(*self._stats_dirs)
+        self.doc_meta = spark.read.schema(_footer_schema(
+            doc_dirs, drop=self.blocks.columns)).parquet(*doc_dirs)
         # liveDocs: tombstones filter matches at collect time; stats
         # intentionally still count deleted docs (Lucene semantics —
         # "docFreq ignores deletions") until a merge purges them
@@ -164,7 +217,8 @@ class IndexReader:
             # head never leave disk (the scan-stops-early move; a bare
             # LIMIT would not work, Spark schedules splits by size)
             heads.append(
-                self.spark.read.parquet(doc_meta_path(d))
+                self.spark.read.schema(self.doc_meta.schema)
+                .parquet(doc_meta_path(d))
                 .where(F.col("doc_id") < s.doc_base + k)
                 .withColumn("_seg", F.lit(i))
             )
@@ -190,35 +244,39 @@ class IndexReader:
         return df.join(self.deletes, "doc_id", "left_anti")
 
     def _term_stats_rows(self, terms: Tuple[str, ...]) -> list:
-        """ONE filtered scan + collect serving BOTH term_stats and
-        term_wand_stats for the same term set: a pruned search needs
-        both, and the second lookup must not pay a second driver job
-        (each job is a fixed scheduler+scan wave). Single-entry cache —
-        the two calls of one search arrive back to back."""
-        from pyspark.sql import functions as F
+        """The query terms' entries of every live segment's term
+        dictionary (term_stats), read on the driver with pyarrow — the
+        in-heap terms index analog (BlockTreeTermsWriter.java:196), so
+        statistics cost no Spark job. One Row per term, the shape of a
+        groupBy("term") over self.stats: df and ttf summed across
+        segments, the per-segment impact tables (gimps) and cost
+        sketches (gqs) gathered for term_wand_stats / term_cost_stats to
+        merge. Serves term_stats, term_wand_stats and term_cost_stats;
+        single-entry cache, as one search asks for the same set twice."""
+        from pyspark.sql import Row
 
         cached = getattr(self, "_stats_rows_cache", None)
         if cached is not None and cached[0] == terms:
             return cached[1]
-        aggs = [
-            F.sum("df").alias("df"), F.sum("ttf").alias("ttf"),
-            # per-segment global impact tables: collected per term (a
-            # handful of rows — one per segment), merged on the driver
-            F.collect_list(F.struct("gimp_norm", "gimp_tf")).alias("gimps"),
-            # cost-gate quantile sketch, per segment: (block count, UB
-            # order-statistic (tf, dl) pairs); merged by term_cost_stats
-            F.collect_list(F.struct("gnblocks", "gq_tf", "gq_dl")).alias("gqs"),
-        ]
-        rows = (
-            self.stats.where(F.col("term").isin(list(terms)))
-            .groupBy("term").agg(*aggs).collect()
-        )
+        tbl = _read_term_rows(self._stats_dirs, [
+            "term", "df", "ttf", "gimp_norm", "gimp_tf", "gnblocks", "gq_tf",
+            "gq_dl"], terms)
+        acc: Dict[str, list] = {}
+        for r in tbl.to_pylist():
+            a = acc.setdefault(r["term"], [0, 0, [], []])
+            a[0] += r["df"]
+            a[1] += r["ttf"]
+            a[2].append(Row(gimp_norm=r["gimp_norm"], gimp_tf=r["gimp_tf"]))
+            a[3].append(Row(gnblocks=r["gnblocks"], gq_tf=r["gq_tf"],
+                            gq_dl=r["gq_dl"]))
+        rows = [Row(term=t, df=a[0], ttf=a[1], gimps=a[2], gqs=a[3])
+                for t, a in sorted(acc.items())]
         self._stats_rows_cache = (terms, rows)
         return rows
 
     def term_stats(self, terms: List[str]) -> Dict[str, Tuple[int, int]]:
-        """Global (df, ttf) per term — summed across segments, collected
-        to the driver (|terms| rows), broadcast into scoring UDFs."""
+        """Global (df, ttf) per term — summed across segments on the
+        driver, broadcast into scoring UDFs."""
         if not terms:
             return {}
         rows = self._term_stats_rows(tuple(sorted(set(terms))))
@@ -231,7 +289,7 @@ class IndexReader:
         (CompetitiveImpactAccumulator.java:30), merged per norm value by
         max tf — the WAND slack bound input, so the pruned search needs
         no extra metadata job. Terms without postings are absent.
-        Served from the same collect as term_stats (shared cache)."""
+        Served from the same driver read as term_stats (shared cache)."""
         if not terms:
             return {}
         want = set(terms)
@@ -260,8 +318,8 @@ class IndexReader:
         mixture, exact when every block is a point). None when any
         live segment holding a term wrote no sketch (multi-field and
         zero-doc segments, builder.py compute_term_stats) — callers
-        fall back to un-gated behavior. Served from the same single
-        collect as term_stats."""
+        fall back to un-gated behavior. Served from the same driver read
+        as term_stats."""
         if not terms:
             return None
         want = set(terms)
@@ -364,6 +422,8 @@ class MultiReader:
         self.blocks = _union_all([r.blocks for r in readers])
         self.stats = _union_all([r.stats for r in readers])
         self.doc_meta = _union_all([r.doc_meta for r in readers])
+        self._block_dirs = [d for r in readers for d in r._block_dirs]
+        self._stats_dirs = [d for r in readers for d in r._stats_dirs]
         self.has_deletes = any(r.has_deletes for r in readers)
         self.deletes = (
             _union_all([r.deletes for r in readers if r.has_deletes])
@@ -410,9 +470,13 @@ class Searcher:
         self.precision = precision
         self.default_field = default_field
         self.query_cache = query_cache
-        # access-path decision of the last search(prune="auto") call
-        # (plan_pruned_or output), for bench/test introspection
+        # the plan of the last search() call, for bench/test
+        # introspection: the WAND gate's decision (plan_pruned_or) for
+        # term / OR queries, else _exhaustive_plan's description
         self.last_plan = None
+        # (blocks kept, blocks total) of each skip-data prefilter run
+        # since the last search() began
+        self._skips: List[Tuple[int, int]] = []
 
     def _with_default_field(self, q: Query) -> Query:
         if self.default_field is None:
@@ -451,11 +515,14 @@ class Searcher:
 
     # -- leaf scoring: decode blocks -> (clause_id, doc_id, score) ----------
 
-    def _score_terms(self, clause_terms: List[Tuple[int, str, float]], blocks_df=None):
+    def _score_terms(self, clause_terms: List[Tuple[int, str, float]],
+                     keep: Optional[Dict[str, set]] = None):
         """clause_terms: (clause_id, term, boost). Returns DataFrame
         (clause_id int, doc_id long, score double). Scores are exact
         float32 values widened to double (float32 mode) or pure doubles
-        (float64 mode) — downstream sums happen in double either way."""
+        (float64 mode) — downstream sums happen in double either way.
+        keep: the conjunction prefilter's kept block keys per term
+        (_conjunction_blocks); other blocks are skipped undecoded."""
         from pyspark.sql import functions as F
 
         spark = self.reader.spark
@@ -471,14 +538,18 @@ class Searcher:
             {
                 "by_term": by_term,
                 "weights": {f"{t}\x00{b}": w for (t, b), w in weights.items()},
+                "keep": keep,
             }
         )
 
         def decode_score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             info = bc.value
+            kept = info["keep"]
             for pdf in batches:
                 out_cid, out_doc, out_score = [], [], []
-                for term, blob in zip(pdf["term"], pdf["blob"]):
+                for term, md, blob in zip(pdf["term"], pdf["min_doc"], pdf["blob"]):
+                    if kept is not None and md not in kept[term]:
+                        continue
                     doc_ids, tfs, norms = decode_block(bytes(blob))
                     for cid, boost in info["by_term"][term]:
                         w = info["weights"][f"{term}\x00{boost}"]
@@ -510,12 +581,11 @@ class Searcher:
                         }
                     )
 
-        src = blocks_df if blocks_df is not None else self.reader.blocks
         terms = list(by_term.keys())
-        # project to (term, blob) BEFORE the Arrow stage: the union
-        # segment layout carries doc-meta columns the decoder never
-        # reads (column pruning reaches the parquet scan)
-        filtered = src.where(F.col("term").isin(terms)).select("term", "blob")
+        # project BEFORE the Arrow stage: the decoder reads the block key
+        # and its doc section only (column pruning reaches the scan)
+        filtered = self.reader.blocks.where(F.col("term").isin(terms)).select(
+            "term", "min_doc", "blob")
         return filtered.mapInPandas(
             decode_score, schema="clause_id int, doc_id long, score double"
         )
@@ -564,9 +634,16 @@ class Searcher:
         slots_by_term: Dict[str, List[int]] = {}
         for i, t in enumerate(terms):
             slots_by_term.setdefault(t, []).append(i)
+        # a phrase match is a conjunction match: the exact skip-data
+        # prefilter applies, so only blocks overlapping every term's
+        # block coverage decode
+        distinct_terms = sorted(set(terms))
+        keep = (self._conjunction_blocks(distinct_terms, distinct_terms)[0]
+                if len(distinct_terms) >= 2 else None)
         bc = spark.sparkContext.broadcast(
             {"cache": cache, "wv": weight_value, "avgdl32": float(avgdl32),
-             "idf64": idf_sum64, "avgdl64": avgdl64, "boost": boost}
+             "idf64": idf_sum64, "avgdl64": avgdl64, "boost": boost,
+             "keep": keep}
         )
 
         nslots = len(terms)
@@ -582,10 +659,14 @@ class Searcher:
             # removes the 3M-small-python-object Arrow serialization
             # that dominated the former per-doc-array stage (+1.2s of
             # a 4.9s wall).
+            kept = bc.value["keep"]
             for pdf in batches:
                 rows_ch, rows_ti, rows_d, rows_tf, rows_nb, rows_p = (
                     [], [], [], [], [], [])
-                for term, blob, pb in zip(pdf["term"], pdf["blob"], pdf["pblob"]):
+                for term, md, blob, pb in zip(pdf["term"], pdf["min_doc"],
+                                              pdf["blob"], pdf["pblob"]):
+                    if kept is not None and md not in kept[term]:
+                        continue
                     doc_ids, tfs, norms, pos = decode_block_positions(
                         bytes(blob), pb)
                     if len(doc_ids) == 0:
@@ -620,23 +701,9 @@ class Searcher:
                         }
                     )
 
-        # a phrase match is a conjunction match: the exact chunk-
-        # intersection block prefilter (leapfrog analog) applies, so
-        # only blocks overlapping every term's chunk coverage decode.
-        # Engaged only when some term is SELECTIVE (df <= docCount/16):
-        # an unselective conjunction covers every chunk, so the filter
-        # would prune nothing and just pay its metadata-job waves
-        distinct_terms = sorted(set(terms))
-        min_df = min(stats.get(t, (0, 0))[0] for t in distinct_terms)
-        max_df = max(stats.get(t, (0, 0))[0] for t in distinct_terms)
-        if len(distinct_terms) >= 2 and min_df <= max(1, n // 16) \
-                and max_df >= 64 * 128:
-            blocks_src = self._conjunction_blocks(distinct_terms, distinct_terms)
-        else:
-            blocks_src = self.reader.blocks.where(F.col("term").isin(terms))
         occ = (
-            blocks_src
-            .select("term", "blob", "pblob")
+            self.reader.blocks.where(F.col("term").isin(terms))
+            .select("term", "min_doc", "blob", "pblob")
             .mapInPandas(
                 decode_pos,
                 "chunk long, tidx int, docs array<long>, tfs array<int>, "
@@ -1342,94 +1409,56 @@ class Searcher:
 
     def _conjunction_blocks(self, must_terms: List[str], all_terms: List[str]):
         """Leapfrog/skip-list analog (ConjunctionDISI.java:185,
-        MultiLevelSkipListWriter): EXACT block pre-filter for
-        conjunctions. A doc matching every MUST term lives in a chunk
-        (doc_id >> CHUNK_BITS) covered by at least one block of EVERY
-        MUST term, so only blocks overlapping those common chunks can
-        contribute anything to the result — for ANY clause (a retained
-        doc's posting block necessarily spans the doc's chunk).
-        Returns the pruned blocks frame for all query terms."""
-        from pyspark.sql import functions as F
-
-        MAX_CHUNKS_PER_BLOCK = 4096  # cap the sequence explosion
-
-        # pblob rides along: the phrase path decodes positions from the
-        # pruned frame (downstream selects prune it back out for
-        # non-positional consumers, so blob-only paths still scan doc
-        # sections alone)
-        blocks = self.reader.blocks.where(F.col("term").isin(all_terms)).select(
-            "term", "n", "min_doc", "max_doc", "max_tf", "sum_tf", "min_norm",
-            "blob", "pblob"
-        )
-        span_chunks = (
-            F.shiftright("max_doc", CHUNK_BITS) - F.shiftright("min_doc", CHUNK_BITS) + 1
-        )
-        narrow = blocks.where(span_chunks <= MAX_CHUNKS_PER_BLOCK)
-        wide = blocks.where(span_chunks > MAX_CHUNKS_PER_BLOCK)
-        # a term with any wide block has an (effectively) unbounded chunk
-        # set: drop it from the intersection — common stays a SUPERSET of
-        # the true common chunk set, so pruning remains exact.
-        # Chamber-built segments structurally CANNOT contain wide blocks
-        # (a block's doc span is bounded by its partition's contiguous
-        # range <= the segment's doc count), so when the manifest shows
-        # only unmerged segments under the span bound, skip the
-        # wide-term probe job entirely — the common case pays one job,
-        # not two.
-        # strict bound: a chunk-misaligned block spanning doc_count docs
-        # can touch floor((doc_count-1)/chunk)+2 chunks, so require
-        # doc_count <= (MAX-1) chunks' worth to make wide truly impossible
-        wide_impossible = all(
-            not s.name.startswith("seg_m_")
-            and s.doc_count <= ((MAX_CHUNKS_PER_BLOCK - 1) << CHUNK_BITS)
-            for s in self.reader.manifest.segments
-        )
-        if wide_impossible:
-            wide_terms = set()
+        MultiLevelSkipListWriter): EXACT block prefilter for
+        conjunctions, planned on the driver in numpy over the skip data
+        — each block's (term, min_doc, max_doc), read with pyarrow, blobs
+        never. A doc matching every MUST term lies inside one block of
+        each, so it lies in the common region: the intersection over
+        MUST terms of the union of that term's block intervals. A block
+        of ANY query term that misses the common region holds no doc of
+        the result, so it is never decoded.
+        Returns (keep, totals): keep[t] = the (term, min_doc) block keys
+        of t that overlap the common region, as a set of min_doc values;
+        totals[t] = t's block count."""
+        tbl = _read_term_rows(self.reader._block_dirs,
+                              ["term", "min_doc", "max_doc"], all_terms)
+        term = np.asarray(tbl.column("term").to_pylist(), dtype=object)
+        lo = tbl.column("min_doc").to_numpy()
+        hi = tbl.column("max_doc").to_numpy() + 1  # half-open [lo, hi)
+        # sweep over the MUST terms' interval unions: the common region
+        # is where all of them cover a doc
+        pos, step = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        for t in must_terms:
+            m = term == t
+            s, e = _interval_union(lo[m], hi[m])
+            pos += [s, e]
+            step += [np.ones(len(s), np.int64), -np.ones(len(e), np.int64)]
+        pos, step = np.concatenate(pos), np.concatenate(step)
+        order = np.argsort(pos, kind="stable")
+        edge, first = np.unique(pos[order], return_index=True)
+        if len(edge):
+            cover = np.cumsum(np.add.reduceat(step[order], first))
+            full = np.flatnonzero(cover[:-1] == len(must_terms))
         else:
-            wide_terms = {
-                r["term"] for r in wide.select("term").distinct().collect()
-            }
-        constrained = [t for t in must_terms if t not in wide_terms]
-        if not constrained:
-            return blocks
-        span = F.explode(
-            F.sequence(
-                F.shiftright("min_doc", CHUNK_BITS),
-                F.shiftright("max_doc", CHUNK_BITS),
-            )
-        ).alias("chunk")
-        must_spans = (
-            narrow.where(F.col("term").isin(constrained))
-            .select("term", span)
-            .distinct()
-        )
-        common = (
-            must_spans.groupBy("chunk")
-            .agg(F.count(F.lit(1)).alias("nt"))
-            .where(F.col("nt") == len(constrained))
-            .select("chunk")
-        )
-        # resolve surviving blocks as (term, min_doc) KEYS over metadata
-        # only, then broadcast-semi-join the data rows: the blob column
-        # never enters a shuffle (the old explode+dropDuplicates on the
-        # data rows shuffled every blob and cost more than it pruned)
-        kept_keys = (
-            narrow.select("term", "min_doc", span)
-            .join(F.broadcast(common), "chunk", "left_semi")
-            .select("term", "min_doc")
-            .distinct()
-        )
-        kept_narrow = narrow.join(
-            F.broadcast(kept_keys), ["term", "min_doc"], "left_semi"
-        )
-        return kept_narrow.unionByName(wide)
+            full = np.empty(0, np.int64)
+        c_lo, c_hi = edge[full], edge[full + 1]  # disjoint, ascending
+        # a block overlaps the region iff the last common range starting
+        # before its end reaches past its start
+        j = np.searchsorted(c_lo, hi, side="left") - 1
+        hit = (j >= 0) & (c_hi[np.maximum(j, 0)] > lo) if len(c_lo) else \
+            np.zeros(len(lo), dtype=bool)
+        keep = {t: set(lo[hit & (term == t)].tolist()) for t in all_terms}
+        totals = {t: int((term == t).sum()) for t in all_terms}
+        self._skips.append((sum(map(len, keep.values())), sum(totals.values())))
+        return keep, totals
 
     def _eval_boolean(self, q: BooleanQuery, boost: float):
         """One hash aggregation: per-clause conditional sums (fixed
         summation order across clause ids — bit-reproducible) + occur
         counters, then the MUST/SHOULD/MUST_NOT/FILTER predicate.
-        Conjunctions with >=2 MUST/FILTER term clauses first prune
-        postings blocks to the terms' common doc-chunk set (exact)."""
+        Conjunctions with >=2 MUST/FILTER term clauses skip every block
+        outside the MUST terms' common doc ranges (exact; planned on the
+        driver from the skip data, _conjunction_blocks)."""
         from pyspark.sql import functions as F
 
         parts = []
@@ -1463,28 +1492,15 @@ class Searcher:
                 t for cid, t, _ in flat_terms
                 if occur_by_cid[cid] in (Occur.MUST, Occur.FILTER)
             })
-            blocks_df = None
+            keep = None
             # prune only when every clause of the query is a flat term:
             # a non-term MUST sub-clause (e.g. phrase) isn't represented
-            # in the chunk intersection, and its matches would be
-            # truncated by the pruned SHOULD/NOT decodes. Also require a
-            # SELECTIVE must term (df <= docCount/16) — an unselective
-            # conjunction covers every chunk, so the prefilter would
-            # prune nothing and just pay its metadata-job waves
+            # in the common region, and its matches would be truncated
+            # by the pruned SHOULD/NOT decodes
             if len(must_terms) >= 2 and len(flat_terms) == len(q.clauses):
-                mstats = self.reader.term_stats(must_terms)
-                min_df = min(mstats.get(t, (0, 0))[0] for t in must_terms)
-                max_df = max(mstats.get(t, (0, 0))[0] for t in must_terms)
-                # benefit gate: pruning saves decode work on the BIG
-                # term's blocks; if that term has < ~64 blocks the whole
-                # exhaustive decode is cheaper than the prefilter's
-                # broadcast waves (128 postings/block)
-                if min_df <= max(1, self.reader.doc_count // 16) \
-                        and max_df >= 64 * 128:
-                    blocks_df = self._conjunction_blocks(
-                        must_terms, sorted({t for _, t, _ in flat_terms})
-                    )
-            parts.insert(0, self._score_terms(flat_terms, blocks_df=blocks_df))
+                keep = self._conjunction_blocks(
+                    must_terms, sorted({t for _, t, _ in flat_terms}))[0]
+            parts.insert(0, self._score_terms(flat_terms, keep=keep))
         u = parts[0]
         for p in parts[1:]:
             u = u.unionByName(p)
@@ -1496,47 +1512,30 @@ class Searcher:
         if n_must == 0 and n_filter == 0 and n_should_total > 0:
             mm = max(mm, 1)
 
-        aggs = []
-        score_cols = []
+        # SQL strings, not Column trees: each Column operator is a py4j
+        # round trip, and a 3-clause node built ~70 of them per query
+        aggs, score_cols, cond, should = [], [], ["true"], []
         for i in sorted(occur_by_cid):
             o = occur_by_cid[i]
-            matched = F.max(F.when(F.col("clause_id") == i, 1).otherwise(0)).alias(f"m{i}")
-            aggs.append(matched)
+            aggs.append(f"max(CASE WHEN clause_id = {i} THEN 1 ELSE 0 END) AS m{i}")
             if o in (Occur.MUST, Occur.SHOULD):
-                aggs.append(
-                    F.sum(F.when(F.col("clause_id") == i, F.col("score"))).alias(f"s{i}")
-                )
-                score_cols.append(f"s{i}")
-        g = u.groupBy("doc_id").agg(*aggs)
-
-        cond = F.lit(True)
-        must_cnt = None
-        should_cnt = None
-        for i in sorted(occur_by_cid):
-            o = occur_by_cid[i]
-            m = F.col(f"m{i}")
-            if o == Occur.MUST or o == Occur.FILTER:
-                cond = cond & (m == 1)
+                aggs.append(f"sum(CASE WHEN clause_id = {i} THEN score END) AS s{i}")
+                score_cols.append(f"coalesce(s{i}, 0D)")
+            if o in (Occur.MUST, Occur.FILTER):
+                cond.append(f"m{i} = 1")
             elif o == Occur.MUST_NOT:
-                cond = cond & (m == 0)
-            elif o == Occur.SHOULD:
-                should_cnt = m if should_cnt is None else (should_cnt + m)
-        if mm > 0 and should_cnt is not None:
-            cond = cond & (should_cnt >= mm)
-
-        if score_cols:
-            total = F.coalesce(F.col(score_cols[0]), F.lit(0.0))
-            for c in score_cols[1:]:
-                total = total + F.coalesce(F.col(c), F.lit(0.0))
-        else:
-            total = F.lit(0.0)
+                cond.append(f"m{i} = 0")
+            else:
+                should.append(f"m{i}")
+        if mm > 0 and should:
+            cond.append(f"{' + '.join(should)} >= {mm}")
+        # clause sums added left to right in clause order: a fixed
+        # summation order keeps scores bit-reproducible
+        total = " + ".join(score_cols) or "0D"
         if self.precision == "float32":
-            total = total.cast("float").cast("double")
-        out = g.where(cond).select("doc_id", total.alias("score"))
-        if q.boost != 1.0:
-            # boost was already propagated into leaf weights; nothing here
-            pass
-        return out
+            total = f"CAST(CAST({total} AS FLOAT) AS DOUBLE)"
+        g = u.groupBy("doc_id").agg(*[F.expr(a) for a in aggs])
+        return g.where(" AND ".join(cond)).selectExpr("doc_id", f"{total} AS score")
 
     # -- block-max WAND pruning (Ding & Suel 2011; Broder et al. 2003) -------
 
@@ -2271,8 +2270,8 @@ class Searcher:
         """Cost-based access-path choice for a term / OR-of-terms top-k:
         estimate the pruned (block-max WAND) plan's decode fraction from
         the PERSISTED per-term block-UB quantile sketch (term_stats
-        gq_tf/gq_dl — zero extra jobs; the stats ride the same collect
-        the weights need), simulate which pruning machinery would engage
+        gq_tf/gq_dl — zero jobs; the stats ride the same driver read the
+        weights need), simulate which pruning machinery would engage
         (rare prefetch, aligned slack — mirroring _search_pruned_or's
         gates), and compare modeled wall costs. Returns a dict with
         'use_wand' plus the estimates (kept on self.last_plan for bench
@@ -2393,11 +2392,13 @@ class Searcher:
         choice); either choice returns the identical rank-safe top-k.
         The decision and its estimates land on self.last_plan; an index
         with more than WAND_MAX_TOMBSTONES tombstones runs the
-        exhaustive plan (last_plan reason "tombstone-cap")."""
-        from pyspark.sql import functions as F
-
+        exhaustive plan (last_plan reason "tombstone-cap"). Every other
+        search describes its plan there too (_exhaustive_plan), and
+        each plan is logged at DEBUG on "lucene_solr_spark.search"."""
         self.last_plan = None
+        self._skips = []
         q = self._with_default_field(q)
+        top = None
         if prune and after is None:
             terms = self._as_or_terms(q)
             if terms is not None:
@@ -2407,10 +2408,45 @@ class Searcher:
                     use_wand = self.last_plan["use_wand"]
                 if use_wand:
                     top = self._search_pruned_or(terms, k)
-                    if top is not None:
-                        return top
-                    self.last_plan = {"use_wand": False, "reason": "tombstone-cap"}
-                # fall through: exhaustive plan
+                    if top is None:
+                        self.last_plan = {"use_wand": False,
+                                          "reason": "tombstone-cap"}
+        if top is None:
+            top = self._search_exhaustive(q, k, after)
+            if self.last_plan is None:
+                self.last_plan = self._exhaustive_plan(q, prune, after)
+        _log.debug("search plan: %s", self.last_plan)
+        return top
+
+    def _exhaustive_plan(self, q: Query, prune, after) -> dict:
+        """last_plan of a search that ran the exhaustive plan without a
+        WAND gate decision: the access path and why, the skip-data
+        prefilter's blocks kept out of blocks total, and the Spark jobs
+        expected under adaptive execution — one for the top-k, one more
+        for the shuffle of any aggregating node (boolean, phrase,
+        dismax, synonym, term set) and two for the tombstone anti-join
+        (its distinct and its broadcast); a multi-term query's
+        dictionary expansion adds one more."""
+        if self._skips:
+            path, reason = "skip-data", "conjunction"
+        elif self._as_or_terms(q) is None:
+            path, reason = "exhaustive", "no-prefilterable-conjunction"
+        else:
+            path = "exhaustive"
+            reason = "search-after" if prune and after is not None else "prune-off"
+        q = rewrite(q, None)
+        shuffle = not isinstance(q, (TermQuery, MatchAllDocsQuery,
+                                     MatchNoDocsQuery))
+        return {
+            "access_path": path, "reason": reason,
+            "blocks_kept": sum(k for k, _ in self._skips) if self._skips else None,
+            "blocks_total": sum(t for _, t in self._skips) if self._skips else None,
+            "expected_jobs": 1 + int(shuffle) + 2 * int(self.reader.has_deletes),
+        }
+
+    def _search_exhaustive(self, q: Query, k: int,
+                           after: Optional[Tuple[float, int]]) -> pd.DataFrame:
+        from pyspark.sql import functions as F
 
         q = rewrite(q, dictionary_terms=None)
         q = self._expand_multiterm(q)
@@ -2575,6 +2611,17 @@ def _block_ubs(terms: np.ndarray, imp_tf_col: np.ndarray,
         np.cumsum(lens[:-1], out=offs[1:])
         ub[idx] = np.maximum.reduceat(pair_sc, offs)
     return ub
+
+
+def _interval_union(lo: np.ndarray, hi: np.ndarray):
+    """Union of half-open intervals [lo, hi) as disjoint ascending
+    (starts, ends)."""
+    order = np.argsort(lo, kind="stable")
+    lo, hi = lo[order], hi[order]
+    reach = np.maximum.accumulate(hi)
+    first = np.flatnonzero(np.r_[True, lo[1:] > reach[:-1]]) if len(lo) else \
+        np.empty(0, np.int64)
+    return lo[first], np.r_[reach[first[1:] - 1], reach[-1:]]
 
 
 def _sparse_table(arr: np.ndarray) -> List[np.ndarray]:

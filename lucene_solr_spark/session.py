@@ -30,8 +30,12 @@ def _purge_stale_local_dirs(local_dir: str) -> None:
     RAM — measured 106 GB of stale spill from killed benchmark JVMs
     OOM-killing the next run on this 128 GB box. Spark names the dirs
     spark-<uuid> with a pid-less layout, so liveness is inferred from
-    mtime age + no open file handles (best effort: any dir not touched
-    for an hour can't belong to a live shuffle)."""
+    mtime age. The rule: a top-level dir is removed only when the
+    NEWEST mtime anywhere under it (the dir itself, every nested
+    blockmgr-*/ subdir and every shuffle/spill file) is more than an
+    hour old. A live session keeps writing nested files while its
+    top-level dir's own mtime stays at creation time, so that mtime
+    alone would condemn any session older than an hour."""
     import shutil
     import time as _t
 
@@ -42,12 +46,25 @@ def _purge_stale_local_dirs(local_dir: str) -> None:
         for name in os.listdir(local_dir):
             p = os.path.join(local_dir, name)
             try:
-                if os.path.isdir(p) and os.path.getmtime(p) < cutoff:
+                if os.path.isdir(p) and _newest_mtime(p) < cutoff:
                     shutil.rmtree(p, ignore_errors=True)
             except OSError:
                 continue
     except OSError:
         pass
+
+
+def _newest_mtime(root: str) -> float:
+    """Newest mtime of root and of every dir and file below it (entries
+    that vanish mid-walk are skipped)."""
+    newest = os.path.getmtime(root)
+    for d, _, files in os.walk(root):
+        for f in [d] + [os.path.join(d, x) for x in files]:
+            try:
+                newest = max(newest, os.path.getmtime(f))
+            except OSError:
+                continue
+    return newest
 
 
 def get_spark(app_name: str = "lucene_solr_spark", master: str | None = None,

@@ -25,6 +25,28 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """spark_jobs(fn) -> (fn(), number of Spark jobs fn ran): the jobs of
+    a fresh job group, read once the listener bus has delivered every
+    event."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4()}"
+        sc.setJobGroup(group, "count jobs")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def tiny_corpus_pdf():
     from lucene_solr_spark.corpus import gen_corpus_pdf
 

@@ -11,13 +11,18 @@ import sys
 
 import pytest
 
-ENV = dict(os.environ, SPARK_GRAFT_CPUS="4", SPARK_DRIVER_MEM="4g")
+# the checkout under test: the CLI subprocesses must import this tree's
+# package, whichever directory it was checked out to
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ENV = dict(os.environ, SPARK_GRAFT_CPUS="4", SPARK_DRIVER_MEM="4g",
+           PYTHONPATH=os.pathsep.join(
+               [ROOT] + [p for p in [os.environ.get("PYTHONPATH")] if p]))
 
 
 def run_cli(*argv):
     r = subprocess.run(
         [sys.executable, "-m", "lucene_solr_spark", *argv],
-        capture_output=True, text=True, cwd="/root/repo", env=ENV, timeout=600,
+        capture_output=True, text=True, cwd=ROOT, env=ENV, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     return json.loads(r.stdout.strip().splitlines()[-1])

@@ -56,27 +56,34 @@ def _and_query(*terms):
 
 
 def test_disjoint_terms_prune_to_empty_cheaply(chunked_searcher):
-    """markera (chunk 0) AND markerb (chunk 2): the common chunk set is
-    empty, so the pruned frame is empty BEFORE any decode."""
+    """markera (chunk 0) AND markerb (chunk 2): the MUST terms' block
+    ranges never meet, so the skip data keeps no block of either term
+    and nothing is decoded."""
     s = chunked_searcher
-    pruned = s._conjunction_blocks(["markera", "markerb"], ["markera", "markerb"])
-    assert pruned.count() == 0
+    keep, totals = s._conjunction_blocks(["markera", "markerb"],
+                                         ["markera", "markerb"])
+    assert totals["markera"] > 0 and totals["markerb"] > 0
+    assert sum(len(v) for v in keep.values()) == 0
     assert len(s.search(_and_query("markera", "markerb"), k=10)) == 0
+    # a MUST term without postings: nothing to intersect with
+    keep, totals = s._conjunction_blocks(["markera", "nosuchterm"],
+                                         ["markera", "nosuchterm"])
+    assert totals == {"markera": totals["markera"], "nosuchterm": 0}
+    assert sum(len(v) for v in keep.values()) == 0
 
 
 def test_pruning_reduces_blocks_for_localized_term(chunked_searcher):
-    """common AND markera: only blocks overlapping markera's chunk
+    """common AND markera: only blocks overlapping markera's doc range
     survive — far fewer than common's full block count."""
     from pyspark.sql import functions as F
 
     s = chunked_searcher
     total = s.reader.blocks.where(F.col("term") == "common").count()
-    pruned = (
-        s._conjunction_blocks(["common", "markera"], ["common", "markera"])
-        .where(F.col("term") == "common")
-        .count()
-    )
-    assert pruned < total
+    keep, totals = s._conjunction_blocks(["common", "markera"],
+                                         ["common", "markera"])
+    assert totals["common"] == total
+    assert 0 < len(keep["common"]) < total
+    assert len(keep["markera"]) == totals["markera"]
 
 
 @pytest.mark.parametrize("terms", [
@@ -106,3 +113,48 @@ def test_pruned_and_results_exact(chunked_searcher, terms, spark, chunked_index)
         key=lambda x: (-x[0], x[1]),
     )[:50]
     assert [d for _, d in expected] == list(res["doc_id"])
+
+
+def test_spark_jobs_per_query(spark, spark_jobs, chunked_index, chunked_searcher):
+    """Statistics and the conjunction's skip data are read on the
+    driver: opening a reader runs no job, a term query runs only its
+    scoring job, and AND, OR and phrase add at most their shuffle."""
+    from lucene_solr_spark.queryast import PhraseQuery
+    from lucene_solr_spark.search.executor import IndexReader, Searcher
+
+    _, n = spark_jobs(lambda: Searcher(IndexReader(spark, chunked_index)))
+    assert n == 0
+    s = chunked_searcher
+    _, n = spark_jobs(lambda: s.search(TermQuery(term="markera"), k=10))
+    assert n == 1
+    assert s.last_plan["expected_jobs"] == 1
+    or_q = BooleanQuery(clauses=tuple(
+        BooleanClause(Occur.SHOULD, TermQuery(term=t)) for t in ("markera", "markerb")))
+    for q in (_and_query("common", "markera"), or_q,
+              PhraseQuery(terms=("common", "markerc"))):
+        _, n = spark_jobs(lambda: s.search(q, k=10))
+        assert n <= 2, (q, n)
+        assert s.last_plan["expected_jobs"] == 2
+
+
+def test_every_query_explains_its_plan(chunked_searcher, caplog):
+    """AND and phrase report the skip-data prefilter's blocks kept out
+    of blocks total; every plan is logged at DEBUG."""
+    import logging
+
+    from lucene_solr_spark.queryast import PhraseQuery
+
+    s = chunked_searcher
+    with caplog.at_level(logging.DEBUG, logger="lucene_solr_spark.search"):
+        s.search(_and_query("common", "markera"), k=10)
+    plan = s.last_plan
+    assert plan["access_path"] == "skip-data" and plan["reason"] == "conjunction"
+    assert 0 < plan["blocks_kept"] < plan["blocks_total"]
+    assert any("search plan" in r.getMessage() for r in caplog.records)
+    s.search(PhraseQuery(terms=("common", "markerb")), k=10)
+    assert s.last_plan["access_path"] == "skip-data"
+    assert s.last_plan["blocks_kept"] < s.last_plan["blocks_total"]
+    s.search(TermQuery(term="common"), k=10)
+    assert s.last_plan == {"access_path": "exhaustive", "reason": "prune-off",
+                           "blocks_kept": None, "blocks_total": None,
+                           "expected_jobs": 1}
