@@ -5,8 +5,9 @@ The Spark-first restatement of the reference write path
 FreqProxTermsWriter flush -> Lucene50PostingsWriter blocks; SURVEY §3.3):
 
   DWPT (thread-private chamber)       == Spark partition: ONE fused
-      mapInPandas does analyze + invert + block packing per partition
-      (DocumentsWriter.java:101 — chambers never share state)
+      mapInPandas does analyze + invert + block packing + file writes
+      per partition (DocumentsWriter.java:101 — chambers never share
+      state)
   term hash pools                     == per-chamber python dict of
       per-term (docs, tfs, norms, positions) arrays
       (TermsHashPerField.java:30)
@@ -14,27 +15,44 @@ FreqProxTermsWriter flush -> Lucene50PostingsWriter blocks; SURVEY §3.3):
       every FLUSH_TOKENS buffered tokens
       (FlushByRamOrCountsPolicy.java:58, 16MB default)
   FOR-128 block write                 == numpy bit-packing (codec.py)
-  segment + segments_N commit         == parquet dirs + manifest commit
+  flush writes stats with postings    == the chamber computes its term
+      stats from its own block metadata (FreqProxTermsWriter.java:68-87,
+      BlockTreeTermsWriter.java:196) — nothing re-reads the postings
+  segment + segments_N commit         == parquet files + manifest commit
 
 Scale design (north rule) — NO token-level shuffle at all:
   assign_doc_ids range-partitions the corpus by the canonical
   (repo, path) order, so every partition owns a contiguous ascending
   doc_id range. Per-term posting lists from different chambers are
   therefore disjoint ordered doc ranges: each chamber emits FINAL
-  block rows, and the postings table is just their union. The only
-  data that crosses the wire is block rows (~tokens/128) and the
-  doc-meta rows. Chamber-boundary tail blocks (<128 postings) are
-  repacked by the tiered merge (merge.py), exactly like Lucene
-  consolidates small segments. Skew is a non-issue on the write path
-  (no shuffle key to skew); term_stats aggregates only block-level
-  metadata (two-level agg).
+  block rows, and the postings table is just their union. Chamber-
+  boundary tail blocks (<128 postings) are repacked by the tiered merge
+  (merge.py), exactly like Lucene consolidates small segments.
+
+One pass, one job: each chamber writes its partition's files itself
+with pyarrow (SegmentPartWriter):
+  inverted.parquet/kind=blk/part-<pid>.parquet   blocks, POSTINGS_SCHEMA,
+      term-sorted, in row groups of ROW_GROUP_ROWS (term min/max prune)
+  inverted.parquet/kind=doc/part-<pid>.parquet   doc metadata only
+  term_stats.parquet/part-<pid>.parquet          the partition's term
+      stats (term_stats_table over its block metadata)
+and returns one counters row; a task without rows writes no files (a
+scan pays a task per file). A partition is a sub-segment for
+statistics: term_stats holds one row per term per partition, and every
+reader sums them (df/ttf) or merges them (impact tables, cost sketches).
+Each file is written under a '.'-prefixed temp name and renamed into
+place, so a failed attempt's leftovers are never read, and a retried
+task's deterministic name replaces its earlier file. The merge's repack
+(merge.py) writes its blocks and term stats through the same writer.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import time
+import uuid
 from typing import Iterator, List, Optional, Tuple
 
 import numpy as np
@@ -52,150 +70,248 @@ POSTINGS_SCHEMA = (
     "blob binary, pblob binary"
 )
 
-# one UDF pass emits BOTH postings blocks and doc metadata (discriminated
-# union — avoids tokenizing the corpus twice)
-INVERT_SCHEMA = (
-    "kind string, "
-    + POSTINGS_SCHEMA + ", "
+DOC_SCHEMA = (
     "doc_id long, repo string, path string, commit string, lang string, "
     "length int, norm int, sha256 string"
 )
 
+TERM_STATS_SCHEMA = (
+    "term string, df long, ttf long, gnblocks long, gimp_norm array<int>, "
+    "gimp_tf array<int>, gq_tf array<bigint>, gq_dl array<double>"
+)
 
-def invert_schema(field_specs: Optional[List[FieldSpec]],
-                  store: bool = False) -> str:
-    """Chamber output schema; multi-field builds add one per-field
-    doc-length column (fdl_<name>) to the doc-meta rows — the FieldInfos
-    per-field stats ride these (docCount(field), sumTotalTermFreq(field));
-    store=True adds the stored-content column (the Lucene stored-fields
-    analog, codecs/lucene50/Lucene50StoredFieldsFormat.java:44-58 —
-    parquet's columnar compression replaces the chunked-LZ4 format)."""
-    out = INVERT_SCHEMA
+# rows per parquet row group of the blk and term-stats files: the rows
+# are term-sorted, so a term lookup (the driver's pyarrow isin read, a
+# Spark `term IN` scan) skips row groups on their term min/max. Smaller
+# groups prune finer but repeat each column chunk's dictionary and
+# headers: 4096-row groups made a 7,500-doc partition's files 2.5%
+# larger than 16384-row ones
+ROW_GROUP_ROWS = 16384
+
+
+def doc_schema(field_specs: Optional[List[FieldSpec]],
+               store: bool = False) -> str:
+    """Doc-meta schema; multi-field builds add one per-field doc-length
+    column (fdl_<name>) — the FieldInfos per-field stats ride these
+    (docCount(field), sumTotalTermFreq(field)); store=True adds the
+    stored-content column (the Lucene stored-fields analog,
+    codecs/lucene50/Lucene50StoredFieldsFormat.java:44-58 — parquet's
+    columnar compression replaces the chunked-LZ4 format)."""
+    out = DOC_SCHEMA
     if field_specs:
         out += ", " + ", ".join(f"{fdl_col(fs.name)} int" for fs in field_specs)
     if store:
         out += ", content string"
     return out
 
-def _block_best_expr(avgdl: float, norms_mode: str):
-    """SQL expression for a block's canonical impact summary: struct
-    ('s', 'tf', 'dl') where s = BM25 tf-saturation (k1=1.2, b=0.75,
-    the defaults; dl from the norm under `norms_mode`) maximized over
-    the block's REALIZED competitive-impact frontier, and (tf, dl) is
-    the frontier pair achieving it. The (tf, dl) pair is stored — not
-    the saturation value — so a query can re-evaluate the bound under
-    its own avgdl/similarity params."""
-    from ..smallfloat import LENGTH_TABLE
 
-    if norms_mode == "byte":
-        lt = "array(" + ",".join(
-            f"{float(v)}D" for v in LENGTH_TABLE.tolist()) + ")"
+def arrow_schema(ddl: str):
+    """The pyarrow schema of a flat Spark DDL string of this module."""
+    import pyarrow as pa
 
-        def dl(col: str) -> str:
-            return f"element_at({lt}, (({col} % 256) + 256) % 256 + 1)"
-    else:
-        def dl(col: str) -> str:
-            return f"CAST({col} AS DOUBLE)"
+    types = {"string": pa.string(), "int": pa.int32(), "long": pa.int64(),
+             "bigint": pa.int64(), "double": pa.float64(),
+             "binary": pa.binary(), "array<int>": pa.list_(pa.int32()),
+             "array<bigint>": pa.list_(pa.int64()),
+             "array<double>": pa.list_(pa.float64())}
+    return pa.schema([(c.split()[0], types[c.split()[1]])
+                      for c in ddl.split(",")])
 
-    def nv(col: str) -> str:
-        return f"(1.2D * (0.25D + 0.75D * {dl(col)} / {float(avgdl)}D))"
 
-    def sat(tfcol: str, normcol: str) -> str:
-        return f"(CAST({tfcol} AS DOUBLE) / ({tfcol} + {nv(normcol)}))"
+class _PartFile:
+    """One parquet file of a task, written under a '.'-prefixed temp
+    name (readers skip '.'-names, as Spark does) and renamed into place
+    by close(). Every write appends row groups of ROW_GROUP_ROWS."""
 
-    return (
-        "aggregate(arrays_zip(imp_tf, imp_norm), "
-        "named_struct('s', CAST(-1.0 AS DOUBLE), 'tf', CAST(0 AS BIGINT), "
-        "'dl', CAST(0.0 AS DOUBLE)), "
-        f"(acc, p) -> CASE WHEN {sat('p.imp_tf', 'p.imp_norm')} > acc.s "
-        f"THEN named_struct('s', {sat('p.imp_tf', 'p.imp_norm')}, "
-        "'tf', CAST(p.imp_tf AS BIGINT), "
-        f"'dl', CAST({dl('p.imp_norm')} AS DOUBLE)) ELSE acc END)"
-    )
+    def __init__(self, path: str, schema):
+        self.path = path
+        self.schema = schema
+        self.writer = None
+
+    def write(self, data) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        if self.writer is None:
+            d, name = os.path.split(self.path)
+            os.makedirs(d, exist_ok=True)
+            self.tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+            # min/max statistics on the scalar columns only: blobs and
+            # impact lists never prune anything
+            self.writer = pq.ParquetWriter(
+                self.tmp, self.schema, write_statistics=[
+                    f.name for f in self.schema if f.type.num_fields == 0
+                    and not pa.types.is_binary(f.type)])
+        if isinstance(data, pd.DataFrame):
+            data = pa.Table.from_pandas(data, schema=self.schema,
+                                        preserve_index=False)
+        self.writer.write_table(data, row_group_size=ROW_GROUP_ROWS)
+
+    def close(self, keep_empty: bool = False) -> int:
+        """Rename into place; returns the file's size in bytes. A file
+        that got no rows is written only when keep_empty."""
+        if self.writer is None:
+            if not keep_empty:
+                return 0
+            self.write(self.schema.empty_table())
+        self.writer.close()
+        os.replace(self.tmp, self.path)
+        return os.path.getsize(self.path)
+
+
+def _task_pid() -> int:
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    return ctx.partitionId() if ctx else 0
+
+
+class SegmentPartWriter:
+    """A task's blocks of one segment: its kind=blk part file and, on
+    close, its term-stats part file, computed from the same blocks'
+    metadata (the blobs are written once and never read back). Without
+    blocks it writes no files, unless keep_empty."""
+
+    META_COLS = ["term", "n", "sum_tf", "imp_tf", "imp_norm"]
+
+    def __init__(self, seg_dir: str, pid: int, keep_empty: bool = False):
+        self.name = f"part-{pid:05d}.parquet"
+        self.keep_empty = keep_empty
+        self.seg_dir = seg_dir
+        self.blk = _PartFile(
+            os.path.join(manifest_mod.postings_path(seg_dir), self.name),
+            arrow_schema(POSTINGS_SCHEMA))
+        self.meta: List[pd.DataFrame] = []
+
+    def add_blocks(self, blocks: pd.DataFrame) -> None:
+        """Append block rows (term-sorted within the call)."""
+        self.blk.write(blocks)
+        self.meta.append(blocks[self.META_COLS])
+
+    def close(self, avgdl: Optional[float],
+              norms_mode: Optional[str]) -> dict:
+        """Write the term stats; returns {blocks, bytes, stats_s}."""
+        t0 = time.perf_counter()
+        meta = (pd.concat(self.meta, ignore_index=True) if self.meta
+                else pd.DataFrame({c: [] for c in self.META_COLS}))
+        stats = term_stats_table(meta, avgdl, norms_mode)
+        stats_s = time.perf_counter() - t0
+        sf = _PartFile(os.path.join(self.seg_dir, "term_stats.parquet",
+                                    self.name),
+                       arrow_schema(TERM_STATS_SCHEMA))
+        if len(stats):
+            sf.write(stats)
+        return {"blocks": len(meta),
+                "bytes": (self.blk.close(self.keep_empty)
+                          + sf.close(self.keep_empty)),
+                "stats_s": stats_s}
 
 
 N_UB_QUANTILES = 17  # order statistics kept per term (0/16 .. 16/16)
 
 
-def compute_term_stats(blocks, avgdl: Optional[float] = None,
-                       norms_mode: Optional[str] = None):
-    """Per-term stats from block metadata: (df, ttf) for scoring plus
-    the WAND bound input — the per-term GLOBAL competitive-impact table
-    (gimp_norm/gimp_tf, norm-ascending): for each norm value seen in
-    any block frontier, the max tf realized at-or-above it is
-    Pareto-reduced so the query-time slack bound
-    max over pairs of score(tf, norm) equals the max over ALL blocks'
-    impact bounds (CompetitiveImpactAccumulator.java:30 merged across
-    the whole term, persisted so pruned searches need no metadata job).
-    Pure metadata SQL — blob bytes never leave disk (column pruning).
+def term_stats_table(blocks: pd.DataFrame, avgdl: Optional[float] = None,
+                     norms_mode: Optional[str] = None):
+    """Per-term stats of a set of blocks (columns term, n, sum_tf,
+    imp_tf, imp_norm), as a term-sorted pyarrow table in
+    TERM_STATS_SCHEMA:
 
-    Every segment writes the same columns. gnblocks = the term's block
-    count; (gq_tf, gq_dl) is the cost-gate sketch, written when
-    (avgdl, norms_mode) are given and typed nulls otherwise
-    (multi-field and zero-doc segments): N_UB_QUANTILES equally-spaced
-    order statistics of
-    the per-block frontier upper bound, stored as the REALIZED (tf, dl)
-    pair at each quantile so queries re-evaluate the bound under their
-    own parameters. This is the driver-side input that lets the planner
-    estimate a pruned search's decode fraction with zero query-time
-    metadata jobs (the access-path cost model of Lucene's
-    IndexOrDocValuesQuery.java:52 / BooleanWeight.java:317, applied to
-    WAND-vs-exhaustive plan choice)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+      df, ttf    sum(n), sum(sum_tf) — the scoring statistics;
+      gnblocks   the term's block count;
+      gimp_*     the per-term competitive-impact table
+                 (CompetitiveImpactAccumulator.java:30 merged across the
+                 blocks): every block frontier pair (norm, tf), max tf
+                 per norm, Pareto-reduced — a pair is kept only when its
+                 tf beats every pair at a smaller norm (shorter doc), so
+                 max over pairs of score(tf, norm) equals the max over
+                 all blocks' impact bounds. Norm-ascending;
+      gq_*       the cost-gate sketch: the blocks ranked by their best
+                 frontier pair's BM25 tf-saturation at (k1=1.2, b=0.75,
+                 avgdl) — ties by tf — and the REALIZED (tf, dl) pair of
+                 all blocks (<= N_UB_QUANTILES of them) or of ranks
+                 round(i * (cnt - 1) / (N_UB_QUANTILES - 1)),
+                 i = 0 .. N_UB_QUANTILES - 1, so queries re-evaluate the
+                 bound under their own parameters (the access-path cost
+                 model of IndexOrDocValuesQuery.java:52 /
+                 BooleanWeight.java:317, applied to the WAND-vs-exhaustive
+                 plan choice). Typed nulls when avgdl or norms_mode is
+                 missing (multi-field and zero-doc segments).
 
-    stats = blocks.groupBy("term").agg(
-        F.sum("n").alias("df"), F.sum("sum_tf").alias("ttf"),
-        F.count(F.lit(1)).alias("gnblocks"))
-    ex = blocks.select(
-        "term", F.explode_outer(F.arrays_zip("imp_norm", "imp_tf")).alias("p")
-    ).where(F.col("p").isNotNull()).select(
-        "term", F.col("p.imp_norm").alias("nb"), F.col("p.imp_tf").alias("tf"))
-    g = ex.groupBy("term", "nb").agg(F.max("tf").alias("tf"))
-    # Pareto reduction: keep (nb, tf) only when tf beats every pair at
-    # a smaller-or-equal norm (shorter doc) — dominated pairs can never
-    # be the max of the monotone score, so dropping them is exact
-    w = (Window.partitionBy("term").orderBy("nb")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    sky = g.withColumn("cmx", F.max("tf").over(w)).where(
-        F.col("cmx").isNull() | (F.col("tf") > F.col("cmx")))
-    gimp = (
-        sky.groupBy("term").agg(
-            F.sort_array(F.collect_list(F.struct("nb", "tf"))).alias("z"))
-        .select("term", F.col("z.nb").alias("gimp_norm"),
-                F.col("z.tf").alias("gimp_tf"))
-    )
-    out = stats.join(gimp, "term", "left")
+    Pure numpy over block metadata: blobs are never touched."""
+    import pyarrow as pa
+
+    schema = arrow_schema(TERM_STATS_SCHEMA)
+    codes, uniq = pd.factorize(
+        pd.Series(blocks["term"].to_numpy(), dtype=object), sort=True)
+    nt = len(uniq)
+    # blocks grouped by term (a stable sort keeps each term's doc order)
+    order = np.argsort(codes, kind="stable")
+    c = codes[order].astype(np.int64)
+    nblk = len(c)
+    head = np.flatnonzero(np.diff(c, prepend=-1))
+    cnt = np.diff(np.r_[head, nblk]).astype(np.int64)
+
+    def per_term_sum(col: str) -> np.ndarray:
+        return np.add.reduceat(blocks[col].to_numpy(dtype=np.int64)[order], head)
+
+    def lists(values: np.ndarray, counts: np.ndarray, typ):
+        offsets = np.zeros(nt + 1, dtype=np.int32)
+        np.cumsum(counts, out=offsets[1:])
+        return pa.ListArray.from_arrays(pa.array(offsets),
+                                        pa.array(values, type=typ))
+
+    # every block frontier pair (a block has at least one), in grouped
+    # block order
+    imp_tf = blocks["imp_tf"].to_numpy()[order]
+    imp_nb = blocks["imp_norm"].to_numpy()[order]
+    lens = np.fromiter(map(len, imp_tf), dtype=np.int64, count=nblk)
+    ptf = np.concatenate([np.zeros(0, dtype=np.int64), *imp_tf])
+    pnb = np.concatenate([np.zeros(0, dtype=np.int64), *imp_nb])
+    pterm = np.repeat(c, lens)
+
+    # Pareto table: max tf per (term, norm), then keep the pairs whose
+    # tf beats the running max of the term's smaller norms
+    o = np.lexsort((-ptf, pnb, pterm))
+    t, b, f = pterm[o], pnb[o], ptf[o]
+    first = (np.diff(t, prepend=-1) != 0) | (np.diff(b, prepend=0) != 0)
+    t, b, f = t[first], b[first], f[first]
+    key = t * (int(f.max(initial=0)) + 1) + f  # offset: no cross-term max
+    keep = key > np.r_[-1, np.maximum.accumulate(key)[:-1]]
+    gcount = np.bincount(t[keep], minlength=nt)
+    cols = [pa.array(np.asarray(uniq, dtype=object), type=pa.string()),
+            pa.array(per_term_sum("n")), pa.array(per_term_sum("sum_tf")),
+            pa.array(cnt), lists(b[keep], gcount, pa.int32()),
+            lists(f[keep], gcount, pa.int32())]
+
     if avgdl is None or norms_mode is None or avgdl <= 0:
-        return out.select(
-            "*", F.lit(None).cast("array<bigint>").alias("gq_tf"),
-            F.lit(None).cast("array<double>").alias("gq_dl"))
-    # cost-gate sketch: equally-spaced order statistics of per-block
-    # frontier UB, canonical ordering = BM25 defaults at this segment's
-    # avgdl. Window + groupBy share the hash partitioning on `term`
-    # (one exchange); metadata columns only, blobs never read.
-    nq = N_UB_QUANTILES
-    bl = blocks.select(
-        "term", F.expr(_block_best_expr(avgdl, norms_mode)).alias("bb"))
-    wq = Window.partitionBy("term").orderBy(
-        F.col("bb.s").asc(), F.col("bb.tf").asc())
-    ranked = bl.select(
-        "term", "bb", F.row_number().over(wq).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("term")).alias("cnt"))
-    qsel = ranked.where(
-        (F.col("cnt") <= nq) | F.expr(
-            f"array_contains(transform(sequence(0, {nq - 1}), "
-            f"i -> CAST(round(i * (cnt - 1) / {nq - 1}.0) AS INT) + 1), rn)"))
-    gq = (
-        qsel.groupBy("term").agg(
-            F.sort_array(F.collect_list(F.struct(
-                F.col("bb.s").alias("s"), F.col("rn").alias("rn"),
-                F.col("bb.tf").alias("tf"), F.col("bb.dl").alias("dl")
-            ))).alias("z"))
-        .select("term", F.expr("transform(z, x -> x.tf)").alias("gq_tf"),
-                F.expr("transform(z, x -> x.dl)").alias("gq_dl"))
-    )
-    return out.join(gq, "term", "left")
+        cols += [pa.nulls(nt, type=schema.field("gq_tf").type),
+                 pa.nulls(nt, type=schema.field("gq_dl").type)]
+        return pa.Table.from_arrays(cols, schema=schema)
+
+    # each block's best frontier pair: max saturation, first on ties
+    from ..smallfloat import LENGTH_TABLE
+
+    dl = (LENGTH_TABLE.astype(np.float64)[np.mod(pnb, 256)]
+          if norms_mode == "byte" else pnb.astype(np.float64))
+    s = ptf / (ptf + 1.2 * (0.25 + 0.75 * dl / float(avgdl)))
+    starts = np.cumsum(lens) - lens
+    smax = np.maximum.reduceat(s, starts)
+    arg = np.minimum.reduceat(
+        np.where(s == np.repeat(smax, lens), np.arange(len(s)), len(s)), starts)
+    bs, btf, bdl = s[arg], ptf[arg], dl[arg]
+    # rank each term's blocks by (saturation, tf); pick the order stats
+    # (c is sorted, so each term keeps its positions [head, head + cnt))
+    r = np.lexsort((btf, bs, c))
+    big = cnt > N_UB_QUANTILES
+    picks = np.floor(np.arange(N_UB_QUANTILES)[None, :]
+                     * (cnt[big, None] - 1) / (N_UB_QUANTILES - 1) + 0.5)
+    sel = np.repeat(~big, cnt)
+    sel[(head[big, None] + picks.astype(np.int64)).ravel()] = True
+    r = r[sel]
+    qcount = np.minimum(cnt, N_UB_QUANTILES)
+    cols += [lists(btf[r], qcount, pa.int64()),
+             lists(bdl[r], qcount, pa.float64())]
+    return pa.Table.from_arrays(cols, schema=schema)
 
 
 CHUNK_BITS = 13  # 8192-doc chunks: the unit of mega-term splitting
@@ -203,11 +319,23 @@ BLOCK = 128
 FLUSH_TOKENS = 4_000_000  # per-chamber RAM-budget analog (IndexWriterConfig 16MB)
 
 
-def _make_invert_fn(analyzer: str, norms: str, with_positions: bool,
+def counters_schema(field_specs: Optional[List[FieldSpec]]) -> str:
+    """The one row an invert task returns: its partition id, docs,
+    summed doc length, block count, bytes written, stats-kernel seconds
+    and, multi-field, each field's (sum of lengths, docs with a token)."""
+    out = ("pid int, docs long, sum_dl long, blocks long, bytes long, "
+           "stats_s double")
+    for fs in field_specs or ():
+        out += f", `dl_{fs.name}` long, `dc_{fs.name}` long"
+    return out
+
+
+def _make_invert_fn(seg_dir: str, analyzer: str, norms: str,
+                    with_positions: bool,
                     flush_tokens: int = FLUSH_TOKENS,
                     field_specs: Optional[List[FieldSpec]] = None,
                     store: bool = False):
-    """Per-partition fused analyze+invert ("DWPT chamber",
+    """Per-partition fused analyze+invert+write ("DWPT chamber",
     DocumentsWriterPerThread / TermsHashPerField.add:
     index/DefaultIndexingChain.java:763-869):
 
@@ -216,12 +344,18 @@ def _make_invert_fn(analyzer: str, norms: str, with_positions: bool,
     chamber can emit FINAL per-term block rows directly — per-term doc
     lists from different partitions are disjoint ordered ranges and
     concatenate trivially. This removes the token-level shuffle
-    entirely: nothing larger than block rows ever crosses the wire.
-    Tail blocks at chamber boundaries are shorter than 128; the tiered
-    merge (merge.py) repacks them, exactly like Lucene segment merges.
+    entirely. Tail blocks at chamber boundaries are shorter than 128;
+    the tiered merge (merge.py) repacks them, exactly like Lucene
+    segment merges.
+
+    The chamber writes its blk, doc and term-stats part files under
+    seg_dir itself and yields one counters row (counters_schema); its
+    term stats use the partition's own avgdl for the cost-gate sketch.
+    Called outside Spark (no TaskContext) it runs as partition 0.
 
     Memory: the chamber flushes whenever `flush_tokens` tokens are
-    buffered (flush-by-RAM analog, FlushByRamOrCountsPolicy.java:58).
+    buffered (flush-by-RAM analog, FlushByRamOrCountsPolicy.java:58);
+    each flush appends its term-sorted blocks to the blk file.
     """
     from ..analysis import analyze_field, vectorized_field_tokens
 
@@ -240,16 +374,16 @@ def _make_invert_fn(analyzer: str, norms: str, with_positions: bool,
     ascii_fast = os.environ.get("LSS_ASCII_FAST", "0") == "1"
     from ..smallfloat import int_to_byte4_np
 
-    all_cols = [c.strip().split()[0]
-                for c in invert_schema(field_specs, store).split(",")]
-
-    def pad(df: pd.DataFrame) -> pd.DataFrame:
-        for c in all_cols:
-            if c not in df.columns:
-                df[c] = None
-        return df[all_cols]
+    doc_arrow = arrow_schema(doc_schema(field_specs, store))
 
     def invert(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        pid = _task_pid()
+        blk_out = SegmentPartWriter(seg_dir, pid)
+        doc_out = _PartFile(os.path.join(manifest_mod.doc_meta_path(seg_dir),
+                                         blk_out.name), doc_arrow)
+        counters = {"docs": 0, "sum_dl": 0}
+        for fs in field_specs or ():
+            counters[f"dl_{fs.name}"] = counters[f"dc_{fs.name}"] = 0
         # vectorized token buffers: flat (term, doc, pos, norm) arrays
         vbufs: List[Tuple[np.ndarray, np.ndarray, Optional[np.ndarray], np.ndarray]] = []
         n_buffered = 0
@@ -298,21 +432,22 @@ def _make_invert_fn(analyzer: str, norms: str, with_positions: bool,
                     ))
             return lengths
 
-        def flush() -> pd.DataFrame:
+        def flush() -> None:
             """Group the buffered token arrays into per-(term, doc)
-            postings and FOR-128 block rows: factorize + ONE lexsort +
-            numpy run-length encoding + BATCH block encoding
+            postings and FOR-128 block rows and append them to the blk
+            file: sorted factorize + ONE code-first sort + numpy
+            run-length encoding + BATCH block encoding
             (codec.split_blocks_batch) — no per-term Python at all; the
-            whole flush is a handful of vectorized passes."""
+            whole flush is a handful of vectorized passes. The codes
+            follow term order, so the blocks come out term-sorted."""
             nonlocal vbufs, n_buffered, fb_dirty
-            out_df = None
             if vbufs:
                 T = np.concatenate([b[0] for b in vbufs])
                 D = np.concatenate([b[1] for b in vbufs])
                 P = (np.concatenate([b[2] for b in vbufs])
                      if with_positions else None)
                 NB = np.concatenate([b[3] for b in vbufs])
-                codes, uniques = pd.factorize(pd.Series(T), sort=False)
+                codes, uniques = pd.factorize(pd.Series(T), sort=True)
                 n0 = len(codes)
                 bits = n0.bit_length()
                 if fb_dirty:
@@ -363,17 +498,16 @@ def _make_invert_fn(analyzer: str, norms: str, with_positions: bool,
                 if len(res["n"]):
                     term_names = np.asarray(uniques, dtype=object)[
                         Ts[run_start[term_first]]][res["term_idx"]]
-                    out_df = pd.DataFrame({
-                        "kind": "blk", "term": term_names,
+                    blk_out.add_blocks(pd.DataFrame({
+                        "term": term_names,
                         **{k: res[k] for k in ("n", "min_doc", "max_doc",
                                                "max_tf", "sum_tf",
                                                "min_norm", "imp_tf",
                                                "imp_norm", "blob", "pblob")},
-                    })
+                    }))
             vbufs = []
             n_buffered = 0
             fb_dirty = False
-            return pad(out_df) if out_df is not None else None
 
         for pdf in batches:
             doc_ids_arr = pdf["doc_id"].to_numpy(dtype=np.int64)
@@ -396,7 +530,9 @@ def _make_invert_fn(analyzer: str, norms: str, with_positions: bool,
                         contents, fs.analyzer, fs.name + FIELD_SEP, doc_ids_arr)
                     doc_rows[fdl_col(fs.name)] = lengths
                     total_len += lengths
-                n_buffered += int(total_len.sum())
+                    counters[f"dl_{fs.name}"] += int(lengths.sum())
+                    # docCount(field) = docs with >=1 token in the field
+                    counters[f"dc_{fs.name}"] += int((lengths > 0).sum())
                 sha_src = field_texts[0]
                 for t in field_texts[1:]:
                     sha_src = sha_src + FIELD_SEP + t
@@ -415,47 +551,47 @@ def _make_invert_fn(analyzer: str, norms: str, with_positions: bool,
                         **doc_rows,
                     }
                 )
-                df_docs.insert(0, "kind", "doc")
-                yield pad(df_docs)
-                if n_buffered >= flush_tokens:
-                    out = flush()
-                    if out is not None:
-                        yield out
-                continue
-            # -- single-field path, fully vectorized tokenization ------
-            # (analysis.vectorized_field_tokens: no per-token and no
-            # per-doc Python in the hot path — the input_hint's
-            # "vectorized pandas/Arrow UDFs" contract; rare Unicode
-            # rows under "standard" take the per-doc parity fallback)
-            contents = pdf["content"].fillna("").astype(str)
-            lengths = invert_field_column(contents, analyzer, "", doc_ids_arr)
-            n_buffered += int(lengths.sum())
-
-            df_docs = pd.DataFrame(
-                {
-                    "doc_id": doc_ids_arr,
-                    "repo": pdf["repo"].to_numpy(),
-                    "path": pdf["path"].to_numpy(),
-                    "commit": pdf["commit"].to_numpy(),
-                    "lang": pdf["lang"].to_numpy(),
-                    "length": lengths,
-                    "norm": (int_to_byte4_np(lengths) if norms == "byte"
-                             else lengths).astype(np.int64),
-                    "sha256": [hashlib.sha256(t.encode()).hexdigest()
-                               for t in contents],
-                }
-            )
-            if store:
-                df_docs["content"] = contents.to_numpy(dtype=object)
-            df_docs.insert(0, "kind", "doc")
-            yield pad(df_docs)
+            else:
+                # -- single-field path, fully vectorized tokenization --
+                # (analysis.vectorized_field_tokens: no per-token and no
+                # per-doc Python in the hot path — the input_hint's
+                # "vectorized pandas/Arrow UDFs" contract; rare Unicode
+                # rows under "standard" take the per-doc parity fallback)
+                contents = pdf["content"].fillna("").astype(str)
+                total_len = invert_field_column(contents, analyzer, "",
+                                                doc_ids_arr)
+                df_docs = pd.DataFrame(
+                    {
+                        "doc_id": doc_ids_arr,
+                        "repo": pdf["repo"].to_numpy(),
+                        "path": pdf["path"].to_numpy(),
+                        "commit": pdf["commit"].to_numpy(),
+                        "lang": pdf["lang"].to_numpy(),
+                        "length": total_len,
+                        "norm": (int_to_byte4_np(total_len) if norms == "byte"
+                                 else total_len).astype(np.int64),
+                        "sha256": [hashlib.sha256(t.encode()).hexdigest()
+                                   for t in contents],
+                    }
+                )
+                if store:
+                    df_docs["content"] = contents.to_numpy(dtype=object)
+            doc_out.write(df_docs)
+            counters["docs"] += ndocs
+            counters["sum_dl"] += int(total_len.sum())
+            n_buffered += int(total_len.sum())
             if n_buffered >= flush_tokens:
-                out = flush()
-                if out is not None:
-                    yield out
-        out = flush()
-        if out is not None:
-            yield out
+                flush()
+        flush()
+        # the cost-gate sketch ranks blocks at the partition's avgdl;
+        # multi-field builds skip it (per-field avgdl differs, and the
+        # pruned OR path is single-field)
+        docs = counters["docs"]
+        avgdl = (counters["sum_dl"] / docs
+                 if docs and field_specs is None else None)
+        out = blk_out.close(avgdl, None if field_specs else norms)
+        out["bytes"] += doc_out.close()
+        yield pd.DataFrame([{"pid": pid, **counters, **out}])
 
     return invert
 
@@ -492,6 +628,7 @@ def build_segment(
     `analyzer` is ignored. All segments of one index must agree on the
     field layout.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     field_specs = normalize_fields(fields) if fields is not None else None
@@ -510,50 +647,23 @@ def build_segment(
     )
     phases["ids"] = round(time.time() - t0, 2)
 
-    inverted = with_ids.mapInPandas(
-        _make_invert_fn(analyzer, norms, positions, field_specs=field_specs,
-                        store=store),
-        schema=invert_schema(field_specs, store),
-    )
-
-    # ONE pass, ONE write: the chamber output lands partitioned by kind
-    # (blk/doc) — no persist, no second materialization of the corpus
-    os.makedirs(seg_dir, exist_ok=True)
-    inv_path = os.path.join(seg_dir, "inverted.parquet")
+    # ONE pass, ONE job: every chamber writes its partition's blk, doc
+    # and term-stats files and returns its counters row — no persist, no
+    # re-read of the postings
+    shutil.rmtree(seg_dir, ignore_errors=True)
     tp = time.time()
-    inverted.write.mode("overwrite").partitionBy("kind").parquet(inv_path)
+    rows = sorted(
+        (r.asDict() for r in with_ids.mapInPandas(
+            _make_invert_fn(seg_dir, analyzer, norms, positions,
+                            field_specs=field_specs, store=store),
+            schema=counters_schema(field_specs)).collect()),
+        key=lambda r: r["pid"])
     phases["invert_write"] = round(time.time() - tp, 2)
-
-    meta = spark.read.parquet(manifest_mod.doc_meta_path(seg_dir))
-    aggs = [F.count(F.lit(1)).alias("doc_count"), F.sum("length").alias("sum_dl")]
-    if field_specs:
-        for fs in field_specs:
-            c = fdl_col(fs.name)
-            aggs.append(F.sum(c).alias(f"dl_{fs.name}"))
-            # docCount(field) = docs with >=1 token in the field
-            aggs.append(
-                F.sum((F.col(c) > 0).cast("long")).alias(f"dc_{fs.name}")
-            )
-    counters_row = meta.agg(*aggs).collect()[0]
-
-    # two-level term stats: per-block metadata -> per-term (reads only
-    # the small metadata columns back from the written postings)
-    tp = time.time()
-    blocks = spark.read.parquet(manifest_mod.postings_path(seg_dir))
-    # per-term GLOBAL block-max + impact-table inputs — the WAND slack
-    # bound reads them straight from term_stats (no per-query metadata
-    # job; Ding & Suel 2011 block-max table, persisted). The cost-gate
-    # quantile sketch needs this segment's avgdl (canonical UB
-    # ordering); multi-field builds skip it (per-field avgdl differs —
-    # the pruned OR path is single-field).
-    avgdl_seg = None
-    if not field_specs and counters_row["doc_count"]:
-        avgdl_seg = float(counters_row["sum_dl"] or 0) / float(
-            counters_row["doc_count"])
-    term_stats = compute_term_stats(blocks, avgdl=avgdl_seg,
-                                    norms_mode=None if field_specs else norms)
-    term_stats.write.mode("overwrite").parquet(os.path.join(seg_dir, "term_stats.parquet"))
-    phases["stats"] = round(time.time() - tp, 2)
+    phases["stats"] = round(sum(r["stats_s"] for r in rows), 2)
+    doc_count = sum(r["docs"] for r in rows)
+    sum_dl = sum(r["sum_dl"] for r in rows)
+    meta = spark.read.schema(doc_schema(field_specs, store)).parquet(
+        manifest_mod.doc_meta_path(seg_dir))
 
     # per-row integrity: recompute sha with Spark's JVM-side sha2 over the
     # source and compare against the python-hashlib values in doc_meta
@@ -570,11 +680,14 @@ def build_segment(
         "repo", "path", F.sha2(sha_src_col, 256).alias("sha_jvm")
     )
     tp = time.time()
-    mismatches = (
-        meta.join(src_sha, ["repo", "path"], "inner")
-        .where(F.col("sha256") != F.col("sha_jvm"))
-        .count()
-    )
+    # counted by an observed metric over a no-op write: one scan job (plus
+    # the join's broadcast), no aggregate exchange
+    obs = Observation("sha_check")
+    (meta.join(src_sha, ["repo", "path"], "inner")
+     .where(F.col("sha256") != F.col("sha_jvm"))
+     .observe(obs, F.count(F.lit(1)).alias("mismatches"))
+     .write.format("noop").mode("overwrite").save())
+    mismatches = obs.get["mismatches"]
     phases["sha_check"] = round(time.time() - tp, 2)
     id_cache.unpersist()
     if mismatches:
@@ -586,17 +699,20 @@ def build_segment(
         for fn in fns
     )
     out = {
-        "doc_count": int(counters_row["doc_count"]),
-        "sum_dl": int(counters_row["sum_dl"] or 0),
+        "doc_count": doc_count,
+        "sum_dl": sum_dl,
         "size_bytes": size_bytes,
         "wall_s": time.time() - t0,
         "sha_mismatches": int(mismatches),
         "phases": phases,
+        "partitions": [
+            {"pid": r["pid"], "docs": r["docs"], "tokens": r["sum_dl"],
+             "blocks": r["blocks"], "bytes": r["bytes"]} for r in rows],
     }
     if field_specs:
         out["field_stats"] = {
-            fs.name: [int(counters_row[f"dc_{fs.name}"] or 0),
-                      int(counters_row[f"dl_{fs.name}"] or 0)]
+            fs.name: [sum(r[f"dc_{fs.name}"] for r in rows),
+                      sum(r[f"dl_{fs.name}"] for r in rows)]
             for fs in field_specs
         }
     return out
@@ -683,7 +799,8 @@ def build_index(
                 lineage_entry={
                     "kind": "build",
                     "batch": batch_id,
-                    **{k: counters[k] for k in ("doc_count", "sum_dl", "wall_s", "sha_mismatches")},
+                    **{k: counters[k] for k in ("doc_count", "sum_dl", "wall_s",
+                                                "sha_mismatches", "partitions")},
                 },
             )
         if fail_after_batch is not None and i + 1 >= fail_after_batch:

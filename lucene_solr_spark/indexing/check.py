@@ -16,6 +16,8 @@ the index relations:
                  max_tf >= 1); decoded block length == n; decoded docs
                  sorted, within [min_doc, max_doc]; min norm matches
   term stats     df == sum(block n), ttf == sum(block sum_tf) per term
+                 (term_stats rows summed first: one row per term per
+                 writing partition)
   tombstones     every tombstoned doc exists in some live segment
 
 Returns a report dict; raises CheckIndexFailure when `raise_on_error`.
@@ -105,7 +107,9 @@ def check_index(spark, index_dir: str, decode_blocks: bool = True,
             errors.append(f"{s.name}: {bad} blocks violate metadata invariants")
         n_blocks += blocks.count()
 
-        stats = spark.read.parquet(f"{seg_dirs[s.name]}/term_stats.parquet")
+        stats = spark.read.parquet(
+            f"{seg_dirs[s.name]}/term_stats.parquet").groupBy("term").agg(
+            F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
         derived = blocks.groupBy("term").agg(
             F.sum("n").alias("df2"), F.sum("sum_tf").alias("ttf2"))
         mism = (
@@ -113,10 +117,13 @@ def check_index(spark, index_dir: str, decode_blocks: bool = True,
             .where(
                 F.col("df").isNull() | F.col("df2").isNull()
                 | (F.col("df") != F.col("df2")) | (F.col("ttf") != F.col("ttf2"))
-            ).count()
+            ).select("term").limit(11).collect()
         )
         if mism:
-            errors.append(f"{s.name}: {mism} terms with stats/postings mismatch")
+            errors.append(
+                f"{s.name}: {'over 10' if len(mism) > 10 else len(mism)} terms "
+                "with stats/postings mismatch: "
+                + ", ".join(sorted(repr(r["term"]) for r in mism[:10])))
 
         if decode_blocks:
 

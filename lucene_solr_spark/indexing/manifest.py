@@ -5,15 +5,24 @@ The Spark analog of Lucene's segments_N generation files
 per-partition lineage / counters the north rule requires for resume.
 
 Layout under <index_dir>/:
-  segments/<seg_name>/inverted.parquet/kind=blk   postings blocks
-  segments/<seg_name>/inverted.parquet/kind=doc   doc metadata
-  segments/<seg_name>/term_stats.parquet          per-term stats
+  segments/<seg_name>/inverted.parquet/kind=blk/part-<pid>.parquet
+      postings blocks (POSTINGS_SCHEMA, term-sorted), one file per
+      writing task
+  segments/<seg_name>/inverted.parquet/kind=doc/part-<pid>.parquet
+      doc metadata
+  segments/<seg_name>/term_stats.parquet/part-<pid>.parquet
+      per-term stats of that task's blocks: one row per term per file,
+      so readers sum df/ttf across files
   manifest/segments_<N>.json    immutable generation files
   manifest/current              text file holding the live generation N
 
 Commit protocol (crash-safe on a posix fs; on object stores the
 production target is an Iceberg/metastore atomic swap):
-  1. segment data fully written (parquet _SUCCESS markers),
+  1. segment data fully written: every build task and merge repack
+     task renames each of its files from a '.'-prefixed temp name into
+     place before it returns, and no _SUCCESS marker is written (readers
+     skip '.'- and '_'-names; a merge's doc metadata is still one Spark
+     write),
   2. write segments_<N+1>.json via temp file + atomic rename,
   3. flip manifest/current via temp file + atomic rename.
 A crash between any steps leaves the previous generation live; stale

@@ -28,7 +28,7 @@ import numpy as np
 import pandas as pd
 
 from ..codec import BLOCK_SIZE, POS_SPLIT, decode_block_positions, split_blocks_batch
-from .builder import POSTINGS_SCHEMA, compute_term_stats
+from .builder import POSTINGS_SCHEMA, SegmentPartWriter, _task_pid
 from .manifest import (FORMAT_VERSION, Manifest, ManifestStore, SegmentInfo,
                        doc_meta_path, postings_path)
 
@@ -189,7 +189,8 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
     out_dir = store.segment_dir(name)
     in_dirs = [store.segment_dir(s.name) for s in inputs]
 
-    blocks = spark.read.parquet(*[postings_path(d) for d in in_dirs])
+    blocks = spark.read.schema(POSTINGS_SCHEMA).parquet(
+        *[postings_path(d) for d in in_dirs])
     has_positions = _segment_has_positions(spark, in_dirs[0])
     from .deletes import deleted_docs_df, delete_generations
 
@@ -240,28 +241,31 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
         .sortWithinPartitions("term", "doc_id")
         .drop("chunk")
     )
-    repacked = shuffled.mapInPandas(
-        lambda it: _repack_aggregated(it, has_positions), schema=POSTINGS_SCHEMA
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    repacked.write.mode("overwrite").parquet(postings_path(out_dir))
-
-    new_blocks = spark.read.parquet(postings_path(out_dir))
     # cost-gate quantile sketch inputs: canonical avgdl from the input
     # segments' persisted counters (deleted docs' lengths are still in
     # sum_dl — canonical ORDERING tolerance, query-time bounds are
     # re-evaluated under the live avgdl); norms mode from the manifest
     in_docs = sum(s.doc_count for s in inputs)
     in_dl = sum(s.sum_dl for s in inputs)
-    norms_mode = store.load().norms
     is_multifield = any(s.field_stats for s in inputs)
     avgdl_m = (float(in_dl) / in_docs
                if in_docs and not is_multifield else None)
-    compute_term_stats(
-        new_blocks, avgdl=avgdl_m,
-        norms_mode=None if is_multifield else norms_mode,
-    ).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "term_stats.parquet"))
+    norms_mode = None if is_multifield else store.load().norms
+
+    def repack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # the builder's writer: term-sorted blk and term-stats part files
+        out = SegmentPartWriter(out_dir, _task_pid())
+        for blk in _repack_aggregated(batches, has_positions):
+            out.add_blocks(blk)
+        yield pd.DataFrame([out.close(avgdl_m, norms_mode)])
+
+    shutil.rmtree(out_dir, ignore_errors=True)
+    rows = shuffled.mapInPandas(
+        repack, schema="blocks long, bytes long, stats_s double").collect()
+    if not any(r["blocks"] for r in rows):
+        # every input doc was purged: no task wrote a file, but readers
+        # need one of each kind
+        SegmentPartWriter(out_dir, 0, keep_empty=True).close(None, None)
 
     meta = spark.read.parquet(*[doc_meta_path(d) for d in in_dirs])
     if deletes is not None:

@@ -93,17 +93,15 @@ def _data_files(root: str) -> List[str]:
                   if not f.startswith(("_", ".")))
 
 
-def _footer_schema(roots: List[str], drop=()):
+def _footer_schema(roots: List[str]):
     """Spark schema of the parquet files under roots: the first footer of
-    each root, unified, minus the columns in drop."""
+    each root, unified."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import StructType
 
-    schema = from_arrow_schema(pa.unify_schemas(
+    return from_arrow_schema(pa.unify_schemas(
         [pq.read_schema(fs[0]) for fs in map(_data_files, roots) if fs]))
-    return StructType([f for f in schema.fields if f.name not in drop])
 
 
 def _read_term_rows(roots: List[str], columns: List[str], terms):
@@ -136,13 +134,12 @@ class IndexReader:
         # pinned schemas, so no read infers one (an inference is a Spark
         # job): blocks take the writers' POSTINGS_SCHEMA; term stats and
         # doc meta (whose columns vary with fields and stored content)
-        # take one pyarrow footer read per segment. Doc meta drops the
-        # postings columns the builder's union write leaves null there.
+        # take one pyarrow footer read per segment
         self.blocks = spark.read.schema(POSTINGS_SCHEMA).parquet(*self._block_dirs)
         self.stats = spark.read.schema(
             _footer_schema(self._stats_dirs)).parquet(*self._stats_dirs)
-        self.doc_meta = spark.read.schema(_footer_schema(
-            doc_dirs, drop=self.blocks.columns)).parquet(*doc_dirs)
+        self.doc_meta = spark.read.schema(
+            _footer_schema(doc_dirs)).parquet(*doc_dirs)
         # liveDocs: tombstones filter matches at collect time; stats
         # intentionally still count deleted docs (Lucene semantics —
         # "docFreq ignores deletions") until a merge purges them
@@ -317,7 +314,7 @@ class IndexReader:
         points carry weight nblocks_seg / npoints_seg — an empirical
         mixture, exact when every block is a point). None when any
         live segment holding a term wrote no sketch (multi-field and
-        zero-doc segments, builder.py compute_term_stats) — callers
+        zero-doc segments, builder.py term_stats_table) — callers
         fall back to un-gated behavior. Served from the same driver read
         as term_stats."""
         if not terms:

@@ -23,9 +23,12 @@ from .indexing.manifest import ManifestStore, doc_meta_path, postings_path
 
 def register_index_views(spark, index_dir: str, prefix: str = "idx") -> list:
     """Register the live index relations as temp views:
-    <prefix>_term_stats(term, df, ttf), <prefix>_doc_meta(doc_id, repo,
-    path, ...), <prefix>_postings(term, n, min_doc, max_doc, ... blob),
-    <prefix>_deletes(doc_id). Returns the view names."""
+    <prefix>_term_stats(term, df, ttf) with one row per term (the
+    segments' per-partition rows summed), <prefix>_doc_meta(doc_id,
+    repo, path, ...), <prefix>_postings(term, n, min_doc, max_doc, ...
+    blob), <prefix>_deletes(doc_id). Returns the view names."""
+    from pyspark.sql import functions as F
+
     store = ManifestStore(index_dir)
     manifest = store.load()
     segs = [store.segment_dir(s.name) for s in manifest.segments]
@@ -38,7 +41,8 @@ def register_index_views(spark, index_dir: str, prefix: str = "idx") -> list:
         views.append(name)
 
     reg(f"{prefix}_term_stats",
-        spark.read.parquet(*[f"{d}/term_stats.parquet" for d in segs]))
+        spark.read.parquet(*[f"{d}/term_stats.parquet" for d in segs])
+        .groupBy("term").agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf")))
     reg(f"{prefix}_doc_meta",
         spark.read.parquet(*[doc_meta_path(d) for d in segs]))
     reg(f"{prefix}_postings",

@@ -18,6 +18,39 @@ def test_clean_index_checks_out(spark, tiny_index):
     assert rep["docs"] == 200 and rep["blocks"] > 0
 
 
+def test_check_catches_stats_mismatch(spark, tiny_index, tmp_path):
+    """term_stats holds one row per term per writing partition: a clean
+    multi-partition segment checks out, and one partition's df raised by
+    1 is reported by term."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lucene_solr_spark.indexing.manifest import ManifestStore
+
+    idx = str(tmp_path / "stats")
+    shutil.copytree(tiny_index, idx)
+    store = ManifestStore(idx)
+    stats_dir = os.path.join(store.segment_dir(store.load().segments[0].name),
+                             "term_stats.parquet")
+    parts = sorted(f for f in os.listdir(stats_dir) if not f.startswith("."))
+    assert len(parts) > 1, "fixture drift: one writing partition"
+    assert check_index(spark, idx)["clean"]
+
+    path = os.path.join(stats_dir, parts[-1])
+    tbl = pq.read_table(path)
+    term = tbl.column("term")[0].as_py()
+    df = tbl.column("df").to_pylist()
+    df[0] += 1
+    pq.write_table(tbl.set_column(tbl.schema.get_field_index("df"), "df",
+                                  pa.array(df, type=pa.int64())), path)
+    rep = check_index(spark, idx, raise_on_error=False)
+    assert not rep["clean"]
+    assert any("1 terms with stats/postings mismatch" in e and repr(term) in e
+               for e in rep["errors"]), rep["errors"]
+
+
 def test_check_catches_manifest_corruption(spark, tiny_corpus_pdf, tmp_path):
     from lucene_solr_spark.indexing.builder import build_index
     from lucene_solr_spark.indexing.manifest import ManifestStore

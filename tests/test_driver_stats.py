@@ -67,8 +67,13 @@ def test_driver_stats_equal_spark_two_segments_with_tombstones(spark, spark_jobs
                                                               two_segment_index):
     from lucene_solr_spark.search.executor import IndexReader
 
+    from pyspark.sql import functions as F
+
     r = IndexReader(spark, two_segment_index)
     assert len(r.manifest.segments) == 2 and r.has_deletes
+    # each segment holds one stats row per term per writing partition
+    per_term = r.stats.where(F.col("term").isin(list(TERMS))).groupBy("term").count()
+    assert max(x["count"] for x in per_term.collect()) > len(r.manifest.segments)
     _assert_same(spark_jobs, r)
 
 

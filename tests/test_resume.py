@@ -119,3 +119,10 @@ def test_lineage_records_all_operations(spark, tiny_corpus_pdf, tmp_path):
     assert "merge" in kinds
     builds = [e for e in lineage if e["kind"] == "build"]
     assert all("doc_count" in e and "sha_mismatches" in e for e in builds)
+    # per-partition lineage: one counters row per writing task
+    for e in builds:
+        parts = e["partitions"]
+        assert parts and all(set(p) == {"pid", "docs", "tokens", "blocks", "bytes"}
+                             for p in parts)
+        assert sum(p["docs"] for p in parts) == e["doc_count"]
+        assert sum(p["tokens"] for p in parts) == e["sum_dl"]
