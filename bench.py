@@ -174,7 +174,7 @@ def main() -> None:
     shutil.rmtree(mf_dir, ignore_errors=True)
 
     # -- BM25 query latency over the segment index --------------------------
-    reader = IndexReader(spark, idx_dir, norms="byte")
+    reader = IndexReader(spark, idx_dir)
     searcher = Searcher(reader, precision="float32")
     bm25_queries = {
         "bm25_term": TermQuery(term="import"),

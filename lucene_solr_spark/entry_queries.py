@@ -2712,7 +2712,7 @@ def _segment_index_mf(spark, sf_dir: str) -> str:
 def _seg_searcher(spark, sf_dir):
     from .search.executor import IndexReader, Searcher
 
-    return Searcher(IndexReader(spark, _segment_index(spark, sf_dir), norms="exact"),
+    return Searcher(IndexReader(spark, _segment_index(spark, sf_dir)),
                     precision="float64")
 
 
@@ -2744,7 +2744,7 @@ def seg_sorted_head(spark, sf_dir):
     idx = _build_gate_index(spark, sf_dir, "sorted_v1",
                             analyzer="simple_stop",
                             index_sort=["lang", "path"])
-    r = IndexReader(spark, idx, norms="exact")
+    r = IndexReader(spark, idx)
     return r.sorted_head(10).select(
         "lang", F.col("path").cast("long").alias("doc_id"))
 
@@ -4614,7 +4614,7 @@ def _seg_searcher_mf(spark, sf_dir):
     from .search.executor import IndexReader, Searcher
 
     return Searcher(
-        IndexReader(spark, _segment_index_mf(spark, sf_dir), norms="exact"),
+        IndexReader(spark, _segment_index_mf(spark, sf_dir)),
         precision="float64",
     )
 

@@ -752,6 +752,12 @@ def build_index(
                     f"index_sort {list(index_sort)} conflicts with existing "
                     f"index sort {manifest.index_sort} (IndexWriterConfig "
                     "forbids changing the index sort of an existing index)")
+        if manifest.segments and manifest.norms != norms:
+            # readers score with the manifest's encoding: a segment of
+            # another encoding would silently mis-score
+            raise ValueError(
+                f"norms {norms!r} conflicts with existing index norms "
+                f"{manifest.norms!r}")
         effective_sort = (list(index_sort) if index_sort is not None
                           else manifest.index_sort)
     for i, (batch_id, df) in enumerate(corpus_batches):

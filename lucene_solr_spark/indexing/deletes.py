@@ -146,11 +146,14 @@ def delete_by_keys(spark, index_dir: str, keys_df) -> int:
 
 
 def update_documents(spark, index_dir: str, df, analyzer: str = "standard",
-                     norms: str = "byte", positions: bool = True) -> dict:
+                     positions: bool = True) -> dict:
     """updateDocument: delete-by-key then append as a new segment with
-    fresh docIDs (IndexWriter.updateDocuments:1298). Returns counters."""
+    fresh docIDs (IndexWriter.updateDocuments:1298), in the norm
+    encoding the index records (byte for a new index). Returns
+    counters."""
     from .builder import build_index
 
+    norms = ManifestStore(index_dir).load().norms or "byte"
     n_deleted = delete_by_keys(spark, index_dir, df.select("repo", "path"))
     # collision-proof batch id: millisecond wall-clock ids collide when
     # two updates land in the same ms (or the clock steps back), and a

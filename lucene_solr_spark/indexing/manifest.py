@@ -107,9 +107,11 @@ class Manifest:
     # order and sorted top-k can early-terminate (collectors.py).
     index_sort: Optional[List[str]] = None
     # norm encoding of the index ('byte' = Lucene intToByte4 quantized,
-    # 'exact' = raw field length). Recorded so merges can decode
-    # min_norm -> doc length when recomputing the per-term block-UB
-    # quantile sketch (cost-gate inputs). None until the first build.
+    # 'exact' = raw field length). Readers score with it (IndexReader
+    # takes no norms argument) and merges decode min_norm -> doc length
+    # with it when recomputing the per-term block-UB quantile sketch;
+    # build_index refuses a batch of another encoding. None until the
+    # first build.
     norms: Optional[str] = None
 
     @property
@@ -208,3 +210,23 @@ def postings_path(seg_dir: str) -> str:
 
 def doc_meta_path(seg_dir: str) -> str:
     return os.path.join(seg_dir, "inverted.parquet", "kind=doc")
+
+
+def _data_files(root: str) -> List[str]:
+    """Data files of a Spark-written parquet directory; as in Spark,
+    names starting with '_' or '.' (_SUCCESS, checksums) are not data."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(os.path.join(root, f) for f in os.listdir(root)
+                  if not f.startswith(("_", ".")))
+
+
+def _footer_schema(roots: List[str]):
+    """Spark schema of the parquet files under roots: the first footer of
+    each root, unified."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(pa.unify_schemas(
+        [pq.read_schema(fs[0]) for fs in map(_data_files, roots) if fs]))

@@ -30,7 +30,8 @@ import pandas as pd
 from ..codec import BLOCK_SIZE, POS_SPLIT, decode_block_positions, split_blocks_batch
 from .builder import POSTINGS_SCHEMA, SegmentPartWriter, _task_pid
 from .manifest import (FORMAT_VERSION, Manifest, ManifestStore, SegmentInfo,
-                       doc_meta_path, postings_path)
+                       _data_files, _footer_schema, doc_meta_path,
+                       postings_path)
 
 # TieredMergePolicy.java:96-101 defaults
 MAX_MERGE_AT_ONCE = 10
@@ -191,7 +192,7 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
 
     blocks = spark.read.schema(POSTINGS_SCHEMA).parquet(
         *[postings_path(d) for d in in_dirs])
-    has_positions = _segment_has_positions(spark, in_dirs[0])
+    has_positions = _segment_has_positions(in_dirs[0])
     from .deletes import deleted_docs_df, delete_generations
 
     deletes = (
@@ -267,11 +268,13 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
         # need one of each kind
         SegmentPartWriter(out_dir, 0, keep_empty=True).close(None, None)
 
-    meta = spark.read.parquet(*[doc_meta_path(d) for d in in_dirs])
+    # pinned schemas: neither read infers one (an inference is a job)
+    meta_dirs = [doc_meta_path(d) for d in in_dirs]
+    meta = spark.read.schema(_footer_schema(meta_dirs)).parquet(*meta_dirs)
     if deletes is not None:
         meta = meta.join(deletes, "doc_id", "left_anti")
     meta.write.mode("overwrite").parquet(doc_meta_path(out_dir))
-    meta_out = spark.read.parquet(doc_meta_path(out_dir))
+    meta_out = spark.read.schema(meta.schema).parquet(doc_meta_path(out_dir))
     # multi-field indexes: recompute per-field (docCount, sum_dl) over
     # the LIVE docs — purged docs drop out of the field stats here,
     # exactly when Lucene's FieldInfos stats shed deletions
@@ -380,11 +383,16 @@ def _repack_aggregated(batches: Iterator[pd.DataFrame], with_positions: bool) ->
             yield from encode(buf)
 
 
-def _segment_has_positions(spark, seg_dir: str) -> bool:
-    row = spark.read.parquet(postings_path(seg_dir)).select("blob").head(1)
-    if not row:
-        return False
-    return bytes(row[0]["blob"])[8] == POS_SPLIT
+def _segment_has_positions(seg_dir: str) -> bool:
+    """Whether the segment's blocks carry positions: the flag byte of its
+    first block, read with pyarrow on the driver (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    for f in _data_files(postings_path(seg_dir)):
+        for batch in pq.ParquetFile(f).iter_batches(batch_size=1, columns=["blob"]):
+            if batch.num_rows:
+                return batch.column(0)[0].as_py()[8] == POS_SPLIT
+    return False
 
 
 def maybe_merge(spark, index_dir: str, max_rounds: int = 100) -> Manifest:

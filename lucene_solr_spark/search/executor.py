@@ -28,11 +28,15 @@ partitions playing segment leaves:
                                 == TakeOrderedAndProject (per-partition
                                 heaps + driver merge; TopDocs.merge)
 
-Two scoring precisions:
+Every Python stage decodes blocks with one function (_decoded_blocks)
+and scores postings with one BM25 kernel (_bm25_scores), in one of two
+precisions:
   float32  — bit-parity with Lucene (BM25Similarity float math); per-term
              score float32, clause sums accumulate float64 -> cast float32.
   float64  — all-double arithmetic with a fixed operation order, used by
-             the SQL-checked query surface (bit-reproducible vs DuckDB).
+             the SQL-checked query surface (bit-reproducible vs DuckDB);
+             a byte norm is decoded to its SmallFloat length first, as
+             the span and similarity expressions do (_dl_col).
 
 Pruning (block metadata = the skip-list/WAND analog, SURVEY §4):
   term / OR-of-terms top-k takes a batch block-max WAND path
@@ -50,6 +54,7 @@ from __future__ import annotations
 import logging
 import math
 import os
+from itertools import repeat
 from typing import Dict, Iterator, List, Optional, Tuple
 
 import numpy as np
@@ -61,7 +66,8 @@ from ..fields import FIELD_SEP, split_term_key, term_key
 from ..smallfloat import LENGTH_TABLE
 from ..indexing.builder import POSTINGS_SCHEMA
 from ..indexing.deletes import delete_generations, deleted_docs_df
-from ..indexing.manifest import ManifestStore, doc_meta_path, postings_path
+from ..indexing.manifest import (ManifestStore, _data_files, _footer_schema,
+                                 doc_meta_path, postings_path)
 from ..queryast import (
     BooleanQuery,
     BooleanClause,
@@ -84,26 +90,6 @@ CHUNK_BITS = 13
 _log = logging.getLogger("lucene_solr_spark.search")
 
 
-def _data_files(root: str) -> List[str]:
-    """Data files of a Spark-written parquet directory; as in Spark,
-    names starting with '_' or '.' (_SUCCESS, checksums) are not data."""
-    if not os.path.isdir(root):
-        return []
-    return sorted(os.path.join(root, f) for f in os.listdir(root)
-                  if not f.startswith(("_", ".")))
-
-
-def _footer_schema(roots: List[str]):
-    """Spark schema of the parquet files under roots: the first footer of
-    each root, unified."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    return from_arrow_schema(pa.unify_schemas(
-        [pq.read_schema(fs[0]) for fs in map(_data_files, roots) if fs]))
-
-
 def _read_term_rows(roots: List[str], columns: List[str], terms):
     """The rows of the given terms in the parquet files under roots,
     read on the driver with pyarrow (a term `isin` filter)."""
@@ -115,16 +101,17 @@ def _read_term_rows(roots: List[str], columns: List[str], terms):
 
 
 class IndexReader:
-    """Unified view over the live segments of an index."""
+    """Unified view over the live segments of an index. The norm
+    encoding ('byte' or 'exact') is the one the manifest records."""
 
-    def __init__(self, spark, index_dir: str, norms: str = "byte"):
+    def __init__(self, spark, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        self.norms = norms
         self.store = ManifestStore(index_dir)
         self.manifest = self.store.load()
         if not self.manifest.segments:
             raise ValueError(f"no live segments in {index_dir}")
+        self.norms = self.manifest.norms
         self.doc_count = self.manifest.total_docs
         self.sum_dl = self.manifest.sum_dl
         segs = [self.store.segment_dir(s.name) for s in self.manifest.segments]
@@ -484,30 +471,41 @@ class Searcher:
 
     # -- weights ------------------------------------------------------------
 
-    def _weights(self, terms_with_boost: List[Tuple[str, float]]):
-        """Per-term scoring constants; float32 Lucene-style or float64.
-        Terms are term-dict KEYS (possibly field-prefixed); N and avgdl
-        come from the key's field stats (per-field CollectionStatistics)."""
+    def _weight(self, field: Optional[str], boost: float, idf: float,
+                idf32=None) -> dict:
+        """Scoring constants of one term, phrase or synonym, in the one
+        weight shape that every scoring stage (_bm25_scores) and WAND
+        bound reads: wv (the tf -> inf score asymptote) and avgdl, plus
+        the 256-entry norm cache (float32) or idf and boost (float64).
+        idf is the float64 idf; idf32 the float32 one when it is not
+        float32(idf) (a phrase sums its terms' float32 idfs). The
+        float32 constants follow BM25Similarity's operation order."""
+        n, sttf = self.reader.collection_stats(field)
+        if n <= 0:
+            n, sttf = 1, 1  # unknown field: no postings exist anyway
+        if self.precision == "float32":
+            idf32 = np.float32(idf) if idf32 is None else idf32
+            wv = np.float32(np.float32(idf32 * np.float32(boost))
+                            * (bm25.K1 + np.float32(1.0)))
+            avgdl = bm25.avg_field_length(sttf, n)
+            return {"wv": float(wv), "avgdl": float(avgdl),
+                    "cache": bm25.norm_cache(avgdl).tolist()}
+        return {"wv": idf * (bm25.K1 + 1.0) * boost, "avgdl": sttf / n,
+                "idf": idf, "boost": boost}
+
+    def _weights(self, terms_with_boost: List[Tuple[str, float]]) -> dict:
+        """{"term\\x00boost": weight} (_weight, plus the term's df) per
+        (term, boost). Terms are term-dict KEYS (possibly
+        field-prefixed); N and avgdl come from the key's field stats
+        (per-field CollectionStatistics)."""
         stats = self.reader.term_stats(sorted({t for t, _ in terms_with_boost}))
         out = {}
         for term, boost in terms_with_boost:
             fld, _ = split_term_key(term)
-            n, sttf = self.reader.collection_stats(fld)
-            if n <= 0:
-                n, sttf = 1, 1  # unknown field: no postings exist anyway
-            df, _ = stats.get(term, (0, 0))
-            if self.precision == "float32":
-                tw = bm25.make_term_weight(term, df, n, sttf, boost)
-                out[(term, boost)] = {
-                    "wv": float(tw.weight_value),
-                    "cache": tw.cache.tolist(),
-                    "avgdl32": float(bm25.avg_field_length(sttf, n)),
-                    "df": df,
-                }
-            else:
-                idf = math.log(1 + (n - df + 0.5) / (df + 0.5)) if df > 0 else 0.0
-                avgdl = sttf / n
-                out[(term, boost)] = {"idf": idf, "avgdl": avgdl, "df": df, "boost": boost}
+            df = stats.get(term, (0, 0))[0]
+            n = max(self.reader.collection_stats(fld)[0], 1)
+            out[f"{term}\x00{boost}"] = dict(
+                self._weight(fld, boost, _idf(df, n)), df=df)
         return out
 
     # -- leaf scoring: decode blocks -> (clause_id, doc_id, score) ----------
@@ -523,49 +521,29 @@ class Searcher:
         from pyspark.sql import functions as F
 
         spark = self.reader.spark
-        weights = self._weights([(t, b) for _, t, b in clause_terms])
         by_term: Dict[str, List[Tuple[int, float]]] = {}
         for cid, t, b in clause_terms:
             by_term.setdefault(t, []).append((cid, b))
         precision = self.precision
         norms_mode = self.reader.norms
-        k1 = 1.2
-        b_ = 0.75
         bc = spark.sparkContext.broadcast(
             {
                 "by_term": by_term,
-                "weights": {f"{t}\x00{b}": w for (t, b), w in weights.items()},
+                "weights": self._weights([(t, b) for _, t, b in clause_terms]),
                 "keep": keep,
             }
         )
 
         def decode_score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             info = bc.value
-            kept = info["keep"]
             for pdf in batches:
                 out_cid, out_doc, out_score = [], [], []
-                for term, md, blob in zip(pdf["term"], pdf["min_doc"], pdf["blob"]):
-                    if kept is not None and md not in kept[term]:
-                        continue
-                    doc_ids, tfs, norms = decode_block(bytes(blob))
+                for term, doc_ids, tfs, norms in _decoded_blocks(
+                        pdf, keep=info["keep"]):
                     for cid, boost in info["by_term"][term]:
-                        w = info["weights"][f"{term}\x00{boost}"]
-                        if precision == "float32":
-                            if norms_mode == "byte":
-                                cache = np.asarray(w["cache"], dtype=np.float32)
-                                nv = cache[norms & 0xFF]
-                            else:
-                                # exact lengths stored: float32 norm from dl
-                                nv = _norm32(norms, w["avgdl32"])
-                            freq = tfs.astype(np.float32)
-                            sc = (
-                                (np.float32(w["wv"]) * freq) / (freq + nv)
-                            ).astype(np.float32).astype(np.float64)
-                        else:
-                            dl = norms.astype(np.float64)
-                            freq = tfs.astype(np.float64)
-                            denom = freq + k1 * (1 - b_ + b_ * dl / w["avgdl"])
-                            sc = w["idf"] * (freq * (k1 + 1)) / denom * w["boost"]
+                        sc = _bm25_scores(tfs, norms,
+                                          info["weights"][f"{term}\x00{boost}"],
+                                          precision, norms_mode)
                         out_cid.append(np.full(len(doc_ids), cid, dtype=np.int32))
                         out_doc.append(doc_ids)
                         out_score.append(sc)
@@ -601,30 +579,18 @@ class Searcher:
 
         spark = self.reader.spark
         terms = [term_key(q.field, t) for t in q.terms]
-        n, sttf = self.reader.collection_stats(q.field)
+        n, _ = self.reader.collection_stats(q.field)
         if n <= 0:
             return spark.createDataFrame([], "clause_id int, doc_id long, score double")
         stats = self.reader.term_stats(terms)
         if any(stats.get(t, (0, 0))[0] == 0 for t in terms):
             return spark.createDataFrame([], "clause_id int, doc_id long, score double")
-        idf_sum32 = np.float32(
-            float(
-                np.sum(
-                    np.array(
-                        [float(bm25.idf(stats[t][0], n)) for t in terms], dtype=np.float64
-                    )
-                )
-            )
-        )
-        weight_value = float(np.float32(np.float32(idf_sum32 * np.float32(boost)) * (bm25.K1 + np.float32(1.0))))
-        avgdl32 = bm25.avg_field_length(sttf, n)
-        cache = bm25.norm_cache(avgdl32).tolist()
-        idf_sum64 = sum(
-            math.log(1 + (n - stats[t][0] + 0.5) / (stats[t][0] + 0.5)) for t in terms
-        )
-        avgdl64 = sttf / n
-        precision = self.precision
-        norms_mode = self.reader.norms
+        # idf = the terms' idfs summed (BM25Similarity idfExplain array);
+        # float32 sums the float32 idfs in double, then rounds once
+        idfs = [_idf(stats[t][0], n) for t in terms]
+        idf32 = np.float32(float(np.sum(np.array(
+            [float(np.float32(i)) for i in idfs], dtype=np.float64))))
+        weight = self._weight(q.field, boost, sum(idfs), idf32)
         # a phrase may repeat a term ("end to end"): each occurrence row
         # must be emitted once PER SLOT the term occupies, or the slot's
         # position join is empty and the phrase silently matches nothing
@@ -637,11 +603,7 @@ class Searcher:
         distinct_terms = sorted(set(terms))
         keep = (self._conjunction_blocks(distinct_terms, distinct_terms)[0]
                 if len(distinct_terms) >= 2 else None)
-        bc = spark.sparkContext.broadcast(
-            {"cache": cache, "wv": weight_value, "avgdl32": float(avgdl32),
-             "idf64": idf_sum64, "avgdl64": avgdl64, "boost": boost,
-             "keep": keep}
-        )
+        bc = spark.sparkContext.broadcast(keep)
 
         nslots = len(terms)
 
@@ -656,18 +618,11 @@ class Searcher:
             # removes the 3M-small-python-object Arrow serialization
             # that dominated the former per-doc-array stage (+1.2s of
             # a 4.9s wall).
-            kept = bc.value["keep"]
             for pdf in batches:
                 rows_ch, rows_ti, rows_d, rows_tf, rows_nb, rows_p = (
                     [], [], [], [], [], [])
-                for term, md, blob, pb in zip(pdf["term"], pdf["min_doc"],
-                                              pdf["blob"], pdf["pblob"]):
-                    if kept is not None and md not in kept[term]:
-                        continue
-                    doc_ids, tfs, norms, pos = decode_block_positions(
-                        bytes(blob), pb)
-                    if len(doc_ids) == 0:
-                        continue
+                for term, doc_ids, tfs, norms, pos in _decoded_blocks(
+                        pdf, positions=True, keep=bc.value):
                     tfs = tfs.astype(np.int32, copy=False)
                     chunks = doc_ids >> CHUNK_BITS
                     cut = np.flatnonzero(np.diff(chunks)) + 1
@@ -781,27 +736,22 @@ class Searcher:
         freq = occ.groupBy("chunk").applyInPandas(
             match_chunk, "doc_id long, tf long, norm int")
 
+        return self._score_freqs(freq, weight).select(
+            F.lit(cid).cast("int").alias("clause_id"), "doc_id", "score")
+
+    def _score_freqs(self, freq_df, weight: dict):
+        """BM25-score a (doc_id, tf, norm) frame with one weight
+        (_bm25_scores): the phrase and synonym scoring stage."""
+        precision, norms_mode = self.precision, self.reader.norms
+
         def score_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            info = bc.value
             for pdf in batches:
-                tf = pdf["tf"].to_numpy(dtype=np.int64)
-                nb = pdf["norm"].to_numpy(dtype=np.int64)
-                if precision == "float32":
-                    if norms_mode == "byte":
-                        cache_arr = np.asarray(info["cache"], dtype=np.float32)
-                        nv = cache_arr[nb & 0xFF]
-                    else:
-                        nv = _norm32(nb, info["avgdl32"])
-                    f32 = tf.astype(np.float32)
-                    sc = ((np.float32(info["wv"]) * f32) / (f32 + nv)).astype(np.float32).astype(np.float64)
-                else:
-                    dl = nb.astype(np.float64)
-                    denom = tf + 1.2 * (1 - 0.75 + 0.75 * dl / info["avgdl64"])
-                    sc = info["idf64"] * (tf * 2.2) / denom * info["boost"]
+                sc = _bm25_scores(pdf["tf"].to_numpy(dtype=np.int64),
+                                  pdf["norm"].to_numpy(dtype=np.int64),
+                                  weight, precision, norms_mode)
                 yield pd.DataFrame({"doc_id": pdf["doc_id"], "score": sc})
 
-        scored = freq.mapInPandas(score_rows, "doc_id long, score double")
-        return scored.select(F.lit(cid).cast("int").alias("clause_id"), "doc_id", "score")
+        return freq_df.mapInPandas(score_rows, "doc_id long, score double")
 
     # -- segment-native positions / similarities / spans ---------------------
     #
@@ -812,39 +762,6 @@ class Searcher:
     # (similarities.py, spanmatch.py) — wiring, not re-analysis.
     # Scoring here is float64 (the SQL-oracle precision); the float32
     # Lucene-bit-parity claim covers the BM25 term/boolean/phrase paths.
-
-    def _decode_positions_df(self, term_keys: List[str]):
-        """(doc_id, term, norm, pos) occurrence rows decoded from the
-        position-bearing blocks of the given term-dict keys. Positions
-        are presented 1-BASED (pos0 + 1), matching the live tokens
-        relation and the SQL oracles; blocks store 0-based positions."""
-        from pyspark.sql import functions as F
-
-        def decode_pos(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                cols_doc, cols_term, cols_nb, cols_pos = [], [], [], []
-                for term, blob, pb in zip(pdf["term"], pdf["blob"], pdf["pblob"]):
-                    doc_ids, tfs, norms, pos = decode_block_positions(
-                        bytes(blob), pb)
-                    cols_doc.append(np.repeat(doc_ids, tfs))
-                    cols_nb.append(np.repeat(norms, tfs))
-                    cols_term.append(np.full(len(pos), term, dtype=object))
-                    cols_pos.append(pos + 1)
-                if cols_doc:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.concatenate(cols_doc),
-                            "term": np.concatenate(cols_term),
-                            "norm": np.concatenate(cols_nb),
-                            "pos": np.concatenate(cols_pos),
-                        }
-                    )
-
-        return (
-            self.reader.blocks.where(F.col("term").isin(sorted(set(term_keys))))
-            .select("term", "blob", "pblob")
-            .mapInPandas(decode_pos, "doc_id long, term string, norm int, pos long")
-        )
 
     def _dl_col(self, norm_col):
         """Document length from the stored norm: exact mode stores the
@@ -864,30 +781,23 @@ class Searcher:
         per posting entry (df rows) instead of one per occurrence (ttf
         rows): the span/phrase gather shuffle shrinks ~avg_tf-fold and
         the downstream agg becomes first(ignorenulls) instead of ttf
-        singleton collect_list appends. Positions 1-based like
-        _decode_positions_df."""
+        singleton collect_list appends. Positions are presented 1-BASED
+        (pos0 + 1), matching the live tokens relation and the SQL
+        oracles; blocks store 0-based positions."""
 
         def decode_pos(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                cols_doc, cols_term, cols_nb, cols_parr = [], [], [], []
-                for term, blob, pb in zip(pdf["term"], pdf["blob"], pdf["pblob"]):
-                    doc_ids, tfs, norms, pos = decode_block_positions(
-                        bytes(blob), pb)
-                    if len(doc_ids) == 0:
-                        continue
-                    cols_doc.append(doc_ids)
-                    cols_nb.append(norms)
-                    cols_term.append(np.full(len(doc_ids), term, dtype=object))
-                    cols_parr.extend(np.split(pos + 1, np.cumsum(tfs)[:-1]))
-                if cols_doc:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.concatenate(cols_doc),
-                            "term": np.concatenate(cols_term),
-                            "norm": np.concatenate(cols_nb),
-                            "parr": pd.Series(cols_parr, dtype=object),
-                        }
-                    )
+                blocks = list(_decoded_blocks(pdf, positions=True))
+                if blocks:
+                    terms, docs, tfs, norms, pos = zip(*blocks)
+                    yield pd.DataFrame({
+                        "doc_id": np.concatenate(docs),
+                        "term": _repeat_terms(terms, docs),
+                        "norm": np.concatenate(norms),
+                        "parr": pd.Series([a for p, f in zip(pos, tfs) for a in
+                                           np.split(p + 1, np.cumsum(f)[:-1])],
+                                          dtype=object),
+                    })
 
         from pyspark.sql import functions as F
 
@@ -1042,11 +952,12 @@ class Searcher:
         if st is None:
             return self._empty_scored()
         idf, avgdl = st
-        occ = self._decode_positions_df([key]).where(F.col("pos") <= end)
-        freq = occ.groupBy("doc_id").agg(
-            F.count(F.lit(1)).cast("double").alias("tf"),
-            F.first("norm").alias("norm"),
-        ).withColumn("dl", self._dl_col(F.col("norm")))
+        # one row per (doc, term) holds all the doc's positions: count
+        # the early ones in place, no shuffle
+        freq = self._decode_positions_packed([key]).select(
+            "doc_id",
+            F.size(F.filter("parr", lambda p: p <= end)).cast("double").alias("tf"),
+            self._dl_col(F.col("norm")).alias("dl"))
         return self._score_span_freq(freq, idf, avgdl)
 
     def span_not(self, include: str, exclude: str, pre: int = 0,
@@ -1105,38 +1016,28 @@ class Searcher:
             g.select("doc_id", "dl", w.alias("tf")), idf_sum, avgdl)
 
     def _tf_dl_df(self, term_keys: List[str]):
-        """(doc_id, term, tf, dl) decoded from blocks — the per-doc
+        """(doc_id, term, tf, norm, dl) decoded from blocks — the per-doc
         statistics every SimilarityBase.score(freq, norm) consumes."""
         from pyspark.sql import functions as F
 
         def decode_tf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                docs, terms_o, tfs, nbs = [], [], [], []
-                for term, blob in zip(pdf["term"], pdf["blob"]):
-                    d, f, nb = decode_block(bytes(blob))
-                    docs.append(d)
-                    terms_o.append(np.full(len(d), term, dtype=object))
-                    tfs.append(f)
-                    nbs.append(nb)
-                if docs:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.concatenate(docs),
-                            "term": np.concatenate(terms_o),
-                            "tf": np.concatenate(tfs),
-                            "norm": np.concatenate(nbs),
-                        }
-                    )
+                blocks = list(_decoded_blocks(pdf))
+                if blocks:
+                    terms, docs, tfs, norms = zip(*blocks)
+                    yield pd.DataFrame({
+                        "doc_id": np.concatenate(docs),
+                        "term": _repeat_terms(terms, docs),
+                        "tf": np.concatenate(tfs),
+                        "norm": np.concatenate(norms),
+                    })
 
         df = (
             self.reader.blocks.where(F.col("term").isin(sorted(set(term_keys))))
             .select("term", "blob")
             .mapInPandas(decode_tf, "doc_id long, term string, tf long, norm int")
         )
-        return df.withColumn("dl", self._dl_col(F.col("norm"))).drop("norm")
-
-    SIMILARITIES = ("bm25", "classic", "lm_dirichlet", "lm_jelinek_mercer",
-                    "dfr_inl2", "dfi_chi2", "ib_spl", "axiomatic_f2exp")
+        return df.withColumn("dl", self._dl_col(F.col("norm")))
 
     def similarity_term_query(self, term: str, sim: str,
                               field: Optional[str] = None, **params):
@@ -1223,11 +1124,8 @@ class Searcher:
             win = info["window"]
             for pdf in batches:
                 out_doc, out_pass, out_w = [], [], []
-                for term, blob, pb in zip(pdf["term"], pdf["blob"], pdf["pblob"]):
-                    doc_ids, tfs, norms, pos = decode_block_positions(
-                        bytes(blob), pb)
-                    if len(doc_ids) == 0:
-                        continue
+                for term, doc_ids, tfs, _, pos in _decoded_blocks(
+                        pdf, positions=True):
                     widf = info["idf"].get(term, 0.0)
                     docs_exp = np.repeat(doc_ids, tfs)
                     pas = pos.astype(np.int64) // win  # 0-based positions
@@ -1335,74 +1233,16 @@ class Searcher:
         (SynonymQuery.java:47)."""
         from pyspark.sql import functions as F
 
-        spark = self.reader.spark
         keys = [term_key(q.field, t) for t in q.terms]
         stats = self.reader.term_stats(keys)
         df_blend = max((stats.get(t, (0, 0))[0] for t in keys), default=0)
-        n, sttf = self.reader.collection_stats(q.field)
+        n, _ = self.reader.collection_stats(q.field)
         if df_blend == 0 or n <= 0:
-            return spark.createDataFrame([], "doc_id long, score double")
-        precision = self.precision
-        norms_mode = self.reader.norms
-        if precision == "float32":
-            tw = bm25.make_term_weight("syn", df_blend, n, sttf, boost)
-            wv, cache = float(tw.weight_value), tw.cache.tolist()
-            idf64 = avgdl64 = 0.0
-        else:
-            wv, cache = 0.0, []
-            idf64 = math.log(1 + (n - df_blend + 0.5) / (df_blend + 0.5))
-            avgdl64 = sttf / n
-        avgdl32 = float(bm25.avg_field_length(sttf, n))
-
-        def decode_tf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                docs, tfs, nbs = [], [], []
-                for blob in pdf["blob"]:
-                    d, f, nb = decode_block(bytes(blob))
-                    docs.append(d)
-                    tfs.append(f)
-                    nbs.append(nb)
-                if docs:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.concatenate(docs),
-                            "tf": np.concatenate(tfs),
-                            "norm": np.concatenate(nbs),
-                        }
-                    )
-
-        per_doc = (
-            self.reader.blocks.where(F.col("term").isin(keys))
-            .select("term", "blob")
-            .mapInPandas(decode_tf, "doc_id long, tf long, norm int")
-            .groupBy("doc_id")
-            .agg(F.sum("tf").alias("tf"), F.first("norm").alias("norm"))
-        )
-        bc = self.reader.spark.sparkContext.broadcast(
-            {"wv": wv, "cache": cache, "avgdl32": avgdl32,
-             "idf64": idf64, "avgdl64": avgdl64, "boost": boost}
-        )
-
-        def score_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            info = bc.value
-            for pdf in batches:
-                tf = pdf["tf"].to_numpy(dtype=np.int64)
-                nb = pdf["norm"].to_numpy(dtype=np.int64)
-                if precision == "float32":
-                    if norms_mode == "byte":
-                        cache_arr = np.asarray(info["cache"], dtype=np.float32)
-                        nv = cache_arr[nb & 0xFF]
-                    else:
-                        nv = _norm32(nb, info["avgdl32"])
-                    freq = tf.astype(np.float32)
-                    sc = ((np.float32(info["wv"]) * freq) / (freq + nv)).astype(np.float32).astype(np.float64)
-                else:
-                    dl = nb.astype(np.float64)
-                    denom = tf + 1.2 * (1 - 0.75 + 0.75 * dl / info["avgdl64"])
-                    sc = info["idf64"] * (tf * 2.2) / denom * info["boost"]
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "score": sc})
-
-        return per_doc.mapInPandas(score_rows, "doc_id long, score double")
+            return self._empty_scored()
+        per_doc = self._tf_dl_df(keys).groupBy("doc_id").agg(
+            F.sum("tf").alias("tf"), F.first("norm").alias("norm"))
+        return self._score_freqs(
+            per_doc, self._weight(q.field, boost, _idf(df_blend, n)))
 
     def _conjunction_blocks(self, must_terms: List[str], all_terms: List[str]):
         """Leapfrog/skip-list analog (ConjunctionDISI.java:185,
@@ -1654,7 +1494,7 @@ class Searcher:
 
     def _per_clause_params(self, clause_terms: List[Tuple[int, str, float]]):
         """Shared WAND weight bookkeeping. Returns (winfo, ub_wv, slack):
-        winfo: per-(term, boost) scoring constants; ub_wv: per-term UB
+        winfo: per-(term, boost) weights (_weights); ub_wv: per-term UB
         weight = SUM of the term's clause weight values (a term repeated
         in several SHOULD clauses with different boosts contributes each
         clause's score to a doc's total, so the block bound must bound
@@ -1662,20 +1502,7 @@ class Searcher:
         slack[t]: sum of the OTHER terms' ub_wv — a driver-side bound on
         everything a doc can earn elsewhere (BM25's tf saturation keeps
         every per-clause score strictly below its weight value)."""
-        weights = self._weights([(t, b) for _, t, b in clause_terms])
-        winfo: Dict[str, dict] = {}
-        for (t, b), w in weights.items():
-            if self.precision == "float32":
-                winfo[f"{t}\x00{b}"] = {
-                    "wv": float(w["wv"]), "cache": w["cache"],
-                    "avgdl32": float(w["avgdl32"]), "df": w["df"],
-                }
-            else:
-                winfo[f"{t}\x00{b}"] = {
-                    "wv": w["idf"] * (bm25.K1 + 1.0) * w["boost"],
-                    "avgdl": w["avgdl"], "idf": w["idf"], "boost": w["boost"],
-                    "df": w["df"],
-                }
+        winfo = self._weights([(t, b) for _, t, b in clause_terms])
         ub_wv: Dict[str, float] = {}
         for _, t, b in clause_terms:
             ub_wv[t] = ub_wv.get(t, 0.0) + float(winfo[f"{t}\x00{b}"]["wv"])
@@ -1693,17 +1520,11 @@ class Searcher:
         merged impacts, search/similarities/BM25Similarity + Impacts
         API)."""
         w = winfo[next(k for k in winfo if k.startswith(term + "\x00"))]
-
-        def nv_of(norm: int) -> float:
-            if self.reader.norms == "byte":
-                if self.precision == "float32":
-                    return float(np.asarray(w["cache"], dtype=np.float64)[norm & 0xFF])
-                return 1.2 * (0.25 + 0.75 * float(LENGTH_TABLE[norm & 0xFF]) / w["avgdl"])
-            avgdl = w["avgdl32"] if self.precision == "float32" else w["avgdl"]
-            return 1.2 * (0.25 + 0.75 * float(norm) / avgdl)
-
         nbs, tfs = imp
-        return max(wv_total * tf / (tf + nv_of(nb)) for nb, tf in zip(nbs, tfs))
+        tf = np.asarray(tfs, dtype=np.float64)
+        nv = _impact_norms(np.asarray(nbs, dtype=np.int64), w, self.precision,
+                           self.reader.norms)
+        return float(np.max(wv_total * tf / (tf + nv)))
 
     def _prefetch_rare_partials(self, rare_terms: List[str], by_term: dict,
                                 winfo: dict, del_arr, k: int):
@@ -1729,31 +1550,16 @@ class Searcher:
 
         precision = self.precision
         norms_mode = self.reader.norms
-        info = {"by_term": by_term, "winfo": winfo}
 
         def decode_rare(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                if not len(pdf):
-                    continue
-                terms = pdf["term"].to_numpy()
-                blobs = pdf["blob"].to_numpy()
                 docs_out: List[np.ndarray] = []
                 sc_out: List[np.ndarray] = []
-                for i in range(len(pdf)):
-                    doc_ids, tfs, norms = decode_block(bytes(blobs[i]))
-                    if del_arr is not None and len(del_arr):
-                        p = np.minimum(np.searchsorted(del_arr, doc_ids),
-                                       len(del_arr) - 1)
-                        keep = del_arr[p] != doc_ids
-                        if not keep.all():
-                            doc_ids, tfs, norms = (
-                                doc_ids[keep], tfs[keep], norms[keep])
-                            if not len(doc_ids):
-                                continue
+                for term, doc_ids, tfs, norms in _decoded_blocks(pdf, dels=del_arr):
                     tot = np.zeros(len(doc_ids), dtype=np.float64)
-                    for _cid, sc in _wand_clause_scores(
-                            terms[i], tfs, norms, info, precision, norms_mode):
-                        tot += sc
+                    for _cid, boost in by_term[term]:
+                        tot += _bm25_scores(tfs, norms, winfo[f"{term}\x00{boost}"],
+                                            precision, norms_mode)
                     docs_out.append(doc_ids)
                     sc_out.append(tot)
                 if docs_out:
@@ -1907,10 +1713,8 @@ class Searcher:
             # k-th score, and the per-block bound dominates every doc's
             # true total. Scale: prefetch rows are capped; the broadcast
             # is O(sum of rare dfs) <= the cap.
-            df_of = {
-                t: winfo[f"{t}\x00{by_term[t][0][1]}"].get("df", 0)
-                for t in ub_wv
-            }
+            df_of = {t: winfo[f"{t}\x00{by_term[t][0][1]}"]["df"]
+                     for t in ub_wv}
             max_df = max(df_of.values()) if df_of else 0
             # rare = at least 2x smaller than the biggest clause term
             # (relative, so the optimization engages at every corpus
@@ -2087,22 +1891,16 @@ class Searcher:
             acc_total.add(len(pdf))
 
             def decode(idx: int) -> None:
+                # liveDocs per leaf: the broadcast tombstones drop out
                 acc_decoded.add(1)
-                doc_ids, tfs, norms = decode_block(bytes(blobs[idx]))
-                if dels is not None and len(dels):
-                    # liveDocs per leaf: searchsorted probe against the
-                    # broadcast (sorted) tombstone set
-                    p = np.minimum(np.searchsorted(dels, doc_ids), len(dels) - 1)
-                    keep = dels[p] != doc_ids
-                    if not keep.all():
-                        doc_ids, tfs, norms = doc_ids[keep], tfs[keep], norms[keep]
-                        if not len(doc_ids):
-                            return
-                for cid, sc in _wand_clause_scores(
-                        terms[idx], tfs, norms, info, precision, norms_mode):
-                    out_cid.append(np.full(len(doc_ids), cid, dtype=np.int32))
-                    out_doc.append(doc_ids)
-                    out_score.append(sc)
+                one = {"term": terms[idx:idx + 1], "blob": blobs[idx:idx + 1]}
+                for term, doc_ids, tfs, norms in _decoded_blocks(one, dels=dels):
+                    for cid, boost in info["by_term"][term]:
+                        out_cid.append(np.full(len(doc_ids), cid, dtype=np.int32))
+                        out_doc.append(doc_ids)
+                        out_score.append(_bm25_scores(
+                            tfs, norms, info["winfo"][f"{term}\x00{boost}"],
+                            precision, norms_mode))
 
             theta = float(info["theta0"])
             single_clause = (
@@ -2285,7 +2083,7 @@ class Searcher:
                 for t in ub_wv}
         anykey = {t: next(kk for kk in winfo if kk.startswith(t + "\x00"))
                   for t in ub_wv}
-        df_of = {t: winfo[anykey[t]].get("df", 0) for t in ub_wv}
+        df_of = {t: winfo[anykey[t]]["df"] for t in ub_wv}
         total_post = float(sum(df_of.values()))
         if total_post <= 0:
             return {"use_wand": True, "reason": "empty"}
@@ -2310,9 +2108,7 @@ class Searcher:
         upoints: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
         for t in ub_wv:
             qtf, qdl, qw = cost[t]
-            w = winfo[anykey[t]]
-            avgdl = float(w.get("avgdl") or w.get("avgdl32"))
-            nv = 1.2 * (0.25 + 0.75 * qdl / avgdl)
+            nv = 1.2 * (0.25 + 0.75 * qdl / winfo[anykey[t]]["avgdl"])
             u = float(ub_wv[t]) * qtf / (qtf + nv)
             order = np.argsort(u)
             upoints[t] = (u[order], qw[order])
@@ -2565,6 +2361,80 @@ def _re_escape(c: str) -> str:
     return re.escape(c)
 
 
+def _idf(df: int, n: int) -> float:
+    """float64 BM25 idf ln(1 + (N - df + 0.5)/(df + 0.5)); 0 for a term
+    without postings (its weight is then 0, as Lucene's)."""
+    return math.log(1 + (n - df + 0.5) / (df + 0.5)) if df > 0 else 0.0
+
+
+def _decoded_blocks(pdf, positions: bool = False, keep=None, dels=None):
+    """The one block decoder of the Python stages: yields (term, doc_ids,
+    tfs, norms[, pos]) per row of a batch of blocks (term, blob, plus
+    min_doc with keep, pblob with positions). keep: {term: set of
+    min_doc}, the conjunction prefilter's kept blocks — other rows are
+    skipped undecoded. dels: sorted tombstoned doc ids, dropped from
+    each block with their positions; a block left empty is skipped."""
+    mins = pdf["min_doc"] if keep is not None else repeat(None)
+    pblobs = pdf["pblob"] if positions else repeat(None)
+    for term, md, blob, pb in zip(pdf["term"], mins, pdf["blob"], pblobs):
+        if keep is not None and md not in keep[term]:
+            continue
+        if positions:
+            doc_ids, tfs, norms, pos = decode_block_positions(bytes(blob), pb)
+        else:
+            doc_ids, tfs, norms = decode_block(bytes(blob))
+        if dels is not None and len(dels):
+            p = np.minimum(np.searchsorted(dels, doc_ids), len(dels) - 1)
+            live = dels[p] != doc_ids
+            if not live.all():
+                if positions and len(pos):
+                    pos = pos[np.repeat(live, tfs)]
+                doc_ids, tfs, norms = doc_ids[live], tfs[live], norms[live]
+                if not len(doc_ids):
+                    continue
+        yield ((term, doc_ids, tfs, norms, pos) if positions
+               else (term, doc_ids, tfs, norms))
+
+
+def _repeat_terms(terms, docs) -> np.ndarray:
+    """Each block's term repeated once per decoded doc."""
+    return np.repeat(np.asarray(terms, dtype=object), [len(d) for d in docs])
+
+
+def _bm25_scores(tfs: np.ndarray, norms: np.ndarray, w: dict,
+                 precision: str, norms_mode: str) -> np.ndarray:
+    """The one BM25 kernel (weight w from Searcher._weight), as float64.
+    float32: weightValue * tf / (tf + cache[norm]) in float32 (or the
+    norm computed from an exact length, _norm32) — BM25Similarity's
+    bits. float64: idf * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl /
+    avgdl)) * boost, the SQL oracles' operation order, where dl is the
+    SmallFloat-decoded length of a byte norm (as _dl_col)."""
+    if precision == "float32":
+        if norms_mode == "byte":
+            nv = np.asarray(w["cache"], dtype=np.float32)[norms & 0xFF]
+        else:
+            nv = _norm32(norms, w["avgdl"])
+        freq = tfs.astype(np.float32)
+        return ((np.float32(w["wv"]) * freq) / (freq + nv)).astype(
+            np.float32).astype(np.float64)
+    dl = (LENGTH_TABLE[norms & 0xFF] if norms_mode == "byte" else norms
+          ).astype(np.float64)
+    freq = tfs.astype(np.float64)
+    denom = freq + 1.2 * (0.25 + 0.75 * dl / w["avgdl"])
+    return w["idf"] * (freq * 2.2) / denom * w["boost"]
+
+
+def _impact_norms(nbs: np.ndarray, w: dict, precision: str,
+                  norms_mode: str) -> np.ndarray:
+    """float64 length normalisation k1 * ((1 - b) + b * dl / avgdl) of
+    stored norms — the bound side of _bm25_scores (_block_ubs,
+    Searcher._term_global_ub)."""
+    if norms_mode == "byte" and precision == "float32":
+        return np.asarray(w["cache"], dtype=np.float64)[nbs & 0xFF]
+    dl = LENGTH_TABLE[nbs & 0xFF] if norms_mode == "byte" else nbs
+    return 1.2 * (0.25 + 0.75 * dl.astype(np.float64) / w["avgdl"])
+
+
 def _norm32(lengths: np.ndarray, avgdl32: float) -> np.ndarray:
     """float32 norm for exact (unquantized) doc lengths, same op order
     as BM25Similarity's cache fill: k1 * ((1-b) + (b*dl)/avgdl)."""
@@ -2594,15 +2464,7 @@ def _block_ubs(terms: np.ndarray, imp_tf_col: np.ndarray,
         ftf = np.concatenate([np.asarray(x, dtype=np.float64) for x in lists_tf])
         fnb = np.concatenate(
             [np.asarray(x, dtype=np.int64) for x in imp_nb_col[idx]])
-        if norms_mode == "byte":
-            if precision == "float32":
-                fnv = np.asarray(w["cache"], dtype=np.float64)[fnb & 0xFF]
-            else:
-                fnv = 1.2 * (0.25 + 0.75 * LENGTH_TABLE[
-                    fnb & 0xFF].astype(np.float64) / w["avgdl"])
-        else:
-            avgdl = w["avgdl32"] if precision == "float32" else w["avgdl"]
-            fnv = 1.2 * (0.25 + 0.75 * fnb.astype(np.float64) / avgdl)
+        fnv = _impact_norms(fnb, w, precision, norms_mode)
         pair_sc = wv_t * ftf / (ftf + fnv)
         offs = np.zeros(len(idx), dtype=np.int64)
         np.cumsum(lens[:-1], out=offs[1:])
@@ -2646,32 +2508,4 @@ def _range_max(st: List[np.ndarray], lo: np.ndarray, hi: np.ndarray) -> np.ndarr
         m = lev == j
         t = st[j]
         out[m] = np.maximum(t[lo[m]], t[hi[m] - (1 << int(j)) + 1])
-    return out
-
-
-def _wand_clause_scores(term: str, tfs: np.ndarray, norms: np.ndarray,
-                        info: dict, precision: str, norms_mode: str):
-    """Per-clause float32/float64 scores for a decoded block — identical
-    arithmetic to _score_terms.decode_score. Shared by the WAND
-    partition kernel and the rare-term prefetch so every path emits
-    bit-identical scores."""
-    out = []
-    for cid, boost in info["by_term"][term]:
-        w = info["winfo"][f"{term}\x00{boost}"]
-        if precision == "float32":
-            if norms_mode == "byte":
-                cache = np.asarray(w["cache"], dtype=np.float32)
-                nv = cache[norms & 0xFF]
-            else:
-                nv = _norm32(norms, w["avgdl32"])
-            freq = tfs.astype(np.float32)
-            sc = ((np.float32(w["wv"]) * freq) / (freq + nv)).astype(
-                np.float32).astype(np.float64)
-        else:
-            # identical op order to _score_terms.decode_score
-            dl = norms.astype(np.float64)
-            freq = tfs.astype(np.float64)
-            denom = freq + 1.2 * (1 - 0.75 + 0.75 * dl / w["avgdl"])
-            sc = w["idf"] * (freq * (1.2 + 1)) / denom * w["boost"]
-        out.append((cid, sc))
     return out

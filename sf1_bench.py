@@ -132,7 +132,7 @@ def main() -> None:
                           "docs_per_sec": round(docs / build_s, 1),
                           "cpus": CPUS}
 
-    reader = IndexReader(spark, idx_dir, norms="byte")
+    reader = IndexReader(spark, idx_dir)
     searcher = Searcher(reader, precision="float32")
     queries = {
         "bm25_term": TermQuery(term="import"),

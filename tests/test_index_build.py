@@ -19,7 +19,7 @@ def _analyzer(s):
 
 @pytest.fixture(scope="module")
 def searcher(spark, tiny_index):
-    return Searcher(IndexReader(spark, tiny_index, norms="byte"), precision="float32")
+    return Searcher(IndexReader(spark, tiny_index), precision="float32")
 
 
 def assert_rank_identical(spark_top: pd.DataFrame, oracle_top: pd.DataFrame, qstring=""):

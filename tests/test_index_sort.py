@@ -31,7 +31,7 @@ def test_sorted_head_single_segment(spark, tmp_path):
     idx = str(tmp_path / "ix")
     build_index(spark, idx, [("b1", df)], norms="exact",
                 index_sort=["lang", "path"])
-    r = IndexReader(spark, idx, norms="exact")
+    r = IndexReader(spark, idx)
     assert r.manifest.index_sort == ["lang", "path"]
     got = [(x["lang"], x["path"]) for x in r.sorted_head(5).collect()]
     want = [(x["lang"], x["path"]) for x in
@@ -49,7 +49,7 @@ def test_sorted_head_multi_segment_monotone_batches(spark, tmp_path):
     idx = str(tmp_path / "ix2")
     build_index(spark, idx, [("b1", b1), ("b2", b2)], norms="exact",
                 index_sort=["lang", "path"])
-    r = IndexReader(spark, idx, norms="exact")
+    r = IndexReader(spark, idx)
     assert len(r.manifest.segments) == 2
     got = [x["path"] for x in r.sorted_head(8).collect()]
     want = [x["path"] for x in r.doc_meta.orderBy("lang", "path").limit(8).collect()]
@@ -73,6 +73,6 @@ def test_sorted_head_requires_sort(spark, tmp_path):
     df = corpus_df(spark, rows_for(["go"], "r1"))
     idx = str(tmp_path / "ix4")
     build_index(spark, idx, [("b1", df)], norms="exact")
-    r = IndexReader(spark, idx, norms="exact")
+    r = IndexReader(spark, idx)
     with pytest.raises(ValueError, match="index_sort"):
         r.sorted_head(3)

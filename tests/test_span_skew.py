@@ -107,7 +107,7 @@ def test_segment_span_near_mega_term(spark, tmp_path):
     idx = str(tmp_path / "skew_idx")
     build_index(spark, idx, [("b0", corpus)], analyzer="simple",
                 norms="exact")
-    s = Searcher(IndexReader(spark, idx, norms="exact"), precision="float64")
+    s = Searcher(IndexReader(spark, idx), precision="float64")
     got = s.span_near(["x", "y", "z"], slop=5).toPandas()
     got["score"] = got["score"].round(6)
     got = got.sort_values(["score", "doc_id"],

@@ -301,7 +301,7 @@ def test_light_analyzer_index_build(spark, tmp_path_factory):
     build_index(spark, idx, [("b0", spark.createDataFrame(pdf))],
                 analyzer="german_light", norms="byte")
 
-    searcher = Searcher(IndexReader(spark, idx, norms="byte"),
+    searcher = Searcher(IndexReader(spark, idx),
                         precision="float32")
     # "haus" is the stem of Häuser/Hauses/Haus — every doc containing
     # any variant must match

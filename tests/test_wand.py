@@ -206,7 +206,7 @@ def test_impact_columns_persisted(spark, mid_index):
     analog) in their metadata."""
     from lucene_solr_spark.search.executor import IndexReader
 
-    r = IndexReader(spark, mid_index, norms="byte")
+    r = IndexReader(spark, mid_index)
     assert "imp_tf" in r.blocks.columns and "imp_norm" in r.blocks.columns
     assert "gimp_tf" in r.stats.columns and "gimp_norm" in r.stats.columns
     row = (r.blocks.where(r.blocks["term"] == "import")
@@ -226,7 +226,7 @@ def test_pruned_search_skips_blocks(spark, mid_index):
     impacts), while staying rank-identical to exhaustive."""
     from lucene_solr_spark.search.executor import IndexReader, Searcher
 
-    s = Searcher(IndexReader(spark, mid_index, norms="byte"),
+    s = Searcher(IndexReader(spark, mid_index),
                  precision="float32")
     q = TermQuery(term="import")
     exhaustive = s.search(q, k=10)
@@ -286,7 +286,7 @@ def test_aligned_slack_prunes_on_mid_corpus(spark, mid_index):
     stay rank-identical both ways."""
     from lucene_solr_spark.search.executor import IndexReader, Searcher
 
-    s = Searcher(IndexReader(spark, mid_index, norms="byte"),
+    s = Searcher(IndexReader(spark, mid_index),
                  precision="float32")
     q = BooleanQuery(clauses=(
         BooleanClause(Occur.SHOULD, TermQuery(term="import")),
@@ -386,7 +386,7 @@ def test_mid_corpus_plan_estimates_sane(spark, mid_index):
     flags must be booleans (plan introspection contract for bench)."""
     from lucene_solr_spark.search.executor import IndexReader, Searcher
 
-    s = Searcher(IndexReader(spark, mid_index, norms="byte"),
+    s = Searcher(IndexReader(spark, mid_index),
                  precision="float32")
     plan = s.plan_pruned_or([("import", 1.0)], 10)
     assert plan["reason"] == "cost-model"
