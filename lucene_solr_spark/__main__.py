@@ -162,7 +162,7 @@ def cmd_stats(args) -> dict:
         "docs": m.total_docs,
         "sum_dl": m.sum_dl,
         "segments": [
-            {"name": s.name, "docs": s.doc_count, "bytes": s.size_bytes}
+            {"name": s.name, "docs": s.doc_count, "deleted": s.n_deleted, "bytes": s.size_bytes}
             for s in m.segments
         ],
         "lineage_entries": len(m.lineage),

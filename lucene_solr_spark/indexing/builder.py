@@ -793,6 +793,7 @@ def build_index(
                     name=seg_name,
                     doc_base=doc_base,
                     doc_count=counters["doc_count"],
+                    doc_span=counters["doc_count"],
                     sum_dl=counters["sum_dl"],
                     size_bytes=counters["size_bytes"],
                     source_batch=batch_id,

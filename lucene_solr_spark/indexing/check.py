@@ -10,7 +10,7 @@ the index relations:
                  segment in the current format (ManifestStore.load
                  raises IndexFormatError otherwise)
   doc ranges     segment doc_id ranges disjoint; ids within
-                 [doc_base, next_doc_id)
+                 [doc_base, doc_base + doc_span) and below next_doc_id
   doc meta       doc_count / sum_dl match manifest; no duplicate ids
   postings       block invariants (n >= 1, min_doc <= max_doc,
                  max_tf >= 1); decoded block length == n; decoded docs
@@ -18,20 +18,22 @@ the index relations:
   term stats     df == sum(block n), ttf == sum(block sum_tf) per term
                  (term_stats rows summed first: one row per term per
                  writing partition)
-  tombstones     every tombstoned doc exists in some live segment
+  live docs      the live_<del_gen>.bin the manifest names exists, holds
+                 ceil(doc_span/8) bytes, popcount == n_deleted (driver)
 
 Returns a report dict; raises CheckIndexFailure when `raise_on_error`.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Iterator, List
 
 import numpy as np
 import pandas as pd
 
 from ..codec import POS_NONE, POS_SPLIT, decode_block, decode_block_positions
-from .deletes import delete_generations, deleted_docs_df
+from .deletes import live_path, popcount, read_bits
 from .manifest import ManifestStore, doc_meta_path, postings_path
 
 
@@ -50,11 +52,10 @@ def check_index(spark, index_dir: str, decode_blocks: bool = True,
                     "segments": len(manifest.segments)}
 
     # segment doc ranges: disjoint, under the high-water mark
-    spans = sorted((s.doc_base, s.doc_count, s.name) for s in manifest.segments)
-    for (b1, c1, n1), (b2, c2, n2) in zip(spans, spans[1:]):
-        # merged segments keep global ids: their span is [doc_base, ...)
-        # but never overlaps a later base only if data agrees — checked
-        # from doc_meta below; here check bases are distinct
+    spans = sorted((s.doc_base, s.name) for s in manifest.segments)
+    for (b1, n1), (b2, n2) in zip(spans, spans[1:]):
+        # spans may interleave (a merge of non-adjacent segments spans
+        # the ids between them); ids are checked disjoint below
         if b1 == b2:
             errors.append(f"segments {n1}/{n2} share doc_base {b1}")
 
@@ -76,6 +77,8 @@ def check_index(spark, index_dir: str, decode_blocks: bool = True,
             errors.append(f"{s.name}: duplicate doc_ids")
         if row["lo"] is not None and int(row["lo"]) < s.doc_base:
             errors.append(f"{s.name}: doc_id {row['lo']} below doc_base {s.doc_base}")
+        if row["hi"] is not None and int(row["hi"]) >= s.doc_base + s.doc_span:
+            errors.append(f"{s.name}: doc_id {row['hi']} outside doc_span {s.doc_span}")
         if row["hi"] is not None and int(row["hi"]) >= manifest.next_doc_id:
             errors.append(
                 f"{s.name}: doc_id {row['hi']} >= next_doc_id {manifest.next_doc_id}")
@@ -172,14 +175,19 @@ def check_index(spark, index_dir: str, decode_blocks: bool = True,
                 errors.append(f"{s.name}: {res['b']} blocks fail decode verification")
     report["blocks"] = n_blocks
 
-    # tombstones point at live docs
-    if delete_generations(index_dir) and manifest.segments:
-        dele = deleted_docs_df(spark, index_dir)
-        all_meta = spark.read.parquet(
-            *[doc_meta_path(d) for d in seg_dirs.values()]).select("doc_id")
-        orphans = dele.join(all_meta, "doc_id", "left_anti").count()
-        if orphans:
-            errors.append(f"{orphans} tombstones reference unknown doc_ids")
+    # live docs: the bitset the manifest names, its size and popcount
+    for s in manifest.segments:
+        name = f"live_{s.del_gen}.bin"
+        if s.del_gen and not os.path.exists(live_path(seg_dirs[s.name], s.del_gen)):
+            errors.append(f"{s.name}: missing {name}")
+            continue
+        bits = read_bits(store, s)
+        if len(bits) != (s.doc_span + 7) // 8:
+            errors.append(f"{s.name}: {name} holds {len(bits)} bytes, "
+                          f"doc_span {s.doc_span} needs {(s.doc_span + 7) // 8}")
+        elif popcount(bits) != s.n_deleted:
+            errors.append(f"{s.name}: {popcount(bits)} deleted docs in {name} "
+                          f"!= n_deleted {s.n_deleted}")
 
     report["errors"] = errors
     report["clean"] = not errors

@@ -13,6 +13,8 @@ Layout under <index_dir>/:
   segments/<seg_name>/term_stats.parquet/part-<pid>.parquet
       per-term stats of that task's blocks: one row per term per file,
       so readers sum df/ttf across files
+  segments/<seg_name>/live_<del_gen>.bin
+      deleted docs, packed bits of the del_gen the manifest names
   manifest/segments_<N>.json    immutable generation files
   manifest/current              text file holding the live generation N
 
@@ -21,8 +23,8 @@ production target is an Iceberg/metastore atomic swap):
   1. segment data fully written: every build task and merge repack
      task renames each of its files from a '.'-prefixed temp name into
      place before it returns, and no _SUCCESS marker is written (readers
-     skip '.'- and '_'-names; a merge's doc metadata is still one Spark
-     write),
+     skip '.'- and '_'-names); a delete renames its live-docs file into
+     place the same way,
   2. write segments_<N+1>.json via temp file + atomic rename,
   3. flip manifest/current via temp file + atomic rename.
 A crash between any steps leaves the previous generation live; stale
@@ -55,9 +57,10 @@ _COMMIT_LOCKS: Dict[str, threading.Lock] = {}
 
 # The one segment format this engine writes and reads: split position
 # column (pblob), per-block competitive impacts and the per-term impact
-# table in term_stats. Manifests written before the stamp existed load
-# every segment as format 0.
-FORMAT_VERSION = 1
+# table in term_stats, deletes as the per-segment live_<del_gen>.bin
+# bitset (format 1 kept index-global deletes/ tombstones). Manifests
+# written before the stamp existed load every segment as format 0.
+FORMAT_VERSION = 2
 
 
 class IndexFormatError(ValueError):
@@ -82,7 +85,12 @@ class SegmentInfo:
     sum_dl: int  # sum of post-stop field lengths (for global avgdl)
     size_bytes: int
     source_batch: str
+    # delCount / delGen: popcount and generation of live_<del_gen>.bin
     n_deleted: int = 0
+    del_gen: int = 0
+    # maxDoc analog: ids lie in [doc_base, doc_base + doc_span), which
+    # covers the gaps a merge's purged docs left
+    doc_span: int = 0
     # multi-field builds: {field: [docCount, sumTotalTermFreq]} — the
     # FieldInfos/CollectionStatistics analog (per-field BM25 stats)
     field_stats: Optional[Dict[str, List[int]]] = None
@@ -100,7 +108,7 @@ class Manifest:
     # allocation). total_docs is NOT safe as a doc_base after a purging
     # merge drops live counts below previously-assigned IDs — reusing an
     # ID of a live doc would sum scores across distinct docs and make
-    # tombstones delete the wrong doc. next_doc_id only ever grows.
+    # deletes hit the wrong doc. next_doc_id only ever grows.
     next_doc_id: int = 0
     # IndexWriterConfig.setIndexSort analog: docIDs were assigned in
     # this column order, so per-segment physical doc order == sort
@@ -128,11 +136,12 @@ class Manifest:
         }
 
 
-def _atomic_write(path: str, data: str) -> None:
+def _atomic_write(path: str, data) -> None:
+    """Write data (str or bytes) to path through a temp file and rename."""
     d = os.path.dirname(path)
     os.makedirs(d, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=d)
-    with os.fdopen(fd, "w") as f:
+    fd, tmp = tempfile.mkstemp(dir=d, prefix=".")
+    with os.fdopen(fd, "wb" if isinstance(data, bytes) else "w") as f:
         f.write(data)
         f.flush()
         os.fsync(f.fileno())
@@ -219,6 +228,16 @@ def _data_files(root: str) -> List[str]:
         return []
     return sorted(os.path.join(root, f) for f in os.listdir(root)
                   if not f.startswith(("_", ".")))
+
+
+def _read_term_rows(roots: List[str], columns: List[str], terms):
+    """The rows of the given terms in the parquet files under roots,
+    read on the driver with pyarrow (a term `isin` filter)."""
+    import pyarrow.dataset as ds
+
+    files = [f for r in roots for f in _data_files(r)]
+    return ds.dataset(files, format="parquet").to_table(
+        columns=columns, filter=ds.field("term").isin(list(terms)))
 
 
 def _footer_schema(roots: List[str]):

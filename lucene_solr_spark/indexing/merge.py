@@ -28,7 +28,7 @@ import numpy as np
 import pandas as pd
 
 from ..codec import BLOCK_SIZE, POS_SPLIT, decode_block_positions, split_blocks_batch
-from .builder import POSTINGS_SCHEMA, SegmentPartWriter, _task_pid
+from .builder import POSTINGS_SCHEMA, SegmentPartWriter, _PartFile, _task_pid
 from .manifest import (FORMAT_VERSION, Manifest, ManifestStore, SegmentInfo,
                        _data_files, _footer_schema, doc_meta_path,
                        postings_path)
@@ -48,17 +48,17 @@ def _floor_size(bytes_: int) -> int:
 
 
 def merge_score(candidate: List[SegmentInfo], hit_too_large: bool) -> float:
-    """TieredMergePolicy.score():566-610 — lower is better."""
-    tot_after = sum(s.size_bytes for s in candidate)
-    tot_after_floored = sum(_floor_size(s.size_bytes) for s in candidate)
+    """TieredMergePolicy.score():566-610 — lower is better. A segment's
+    bytes after the merge are pro-rated by its share of live docs, and
+    nonDelRatio² favours merges that reclaim deletes."""
+    after = [s.size_bytes * (1 - s.n_deleted / max(1, s.doc_count)) for s in candidate]
+    tot_after = sum(after)
     if hit_too_large:
         skew = 1.0 / min(MAX_MERGE_AT_ONCE, SEGS_PER_TIER)
     else:
-        skew = _floor_size(candidate[0].size_bytes) / tot_after_floored
-    score = skew * math.pow(tot_after, 0.05)
-    non_del_ratio = 1.0  # no deletes in v1; nonDelRatio² term kept for parity
-    score *= math.pow(non_del_ratio, 2)
-    return score
+        skew = _floor_size(after[0]) / sum(map(_floor_size, after))
+    non_del_ratio = tot_after / max(1, sum(s.size_bytes for s in candidate))
+    return skew * math.pow(tot_after, 0.05) * math.pow(non_del_ratio, 2)
 
 
 def find_merges(segments: List[SegmentInfo]) -> Optional[List[SegmentInfo]]:
@@ -117,26 +117,13 @@ def run_merge(spark, store: ManifestStore, manifest: Manifest,
     output dir name is deterministic, data writes are overwrite-by-name,
     and the manifest commit is the only visibility point — a crash at
     any moment leaves the old generation live (kill/resume test relies
-    on this)."""
+    on this). The swap commits onto the live manifest (_swap)."""
     t0 = time.time()
     merged_info = _merge_data(spark, store, inputs, num_partitions)
-    in_names = {s.name for s in inputs}
-    manifest.segments = [s for s in manifest.segments if s.name not in in_names]
-    manifest.segments.append(merged_info)
-    manifest.segments.sort(key=lambda s: s.doc_base)
-    manifest = store.commit(
-        manifest,
-        lineage_entry={
-            "kind": "merge",
-            "inputs": sorted(in_names),
-            "output": merged_info.name,
-            "wall_s": time.time() - t0,
-        },
-    )
-    # old segment dirs are now garbage; reclaim (safe post-commit)
-    for s in inputs:
-        shutil.rmtree(store.segment_dir(s.name), ignore_errors=True)
-    return manifest
+    out = _swap(store, inputs, merged_info, {"wall_s": time.time() - t0})
+    if out is None:
+        raise RuntimeError(f"merge inputs no longer live: {[s.name for s in inputs]}")
+    return out
 
 
 def run_merge_concurrent(spark, store: ManifestStore,
@@ -144,36 +131,45 @@ def run_merge_concurrent(spark, store: ManifestStore,
                          num_partitions: Optional[int] = None) -> Optional[Manifest]:
     """Background-thread merge (ConcurrentMergeScheduler's OneMerge):
     the heavy Spark work runs WITHOUT any lock against the inputs'
-    immutable segment dirs; the manifest swap takes the per-index
-    commit lock, RELOADS the live manifest (a batch build may have
-    committed meanwhile) and re-validates that every input is still
-    live — if another merge claimed one, the output is abandoned
-    (garbage, never corruption). Returns the committed manifest, or
-    None if abandoned."""
-    from .manifest import commit_lock
-
+    immutable segment dirs; the swap (_swap) re-validates the inputs
+    against the live manifest — if another merge claimed one, the output
+    is abandoned (garbage, never corruption). Returns the committed
+    manifest, or None if abandoned."""
     t0 = time.time()
     merged_info = _merge_data(spark, store, inputs, num_partitions)
-    in_names = {s.name for s in inputs}
+    return _swap(store, inputs, merged_info,
+                 {"concurrent": True, "wall_s": time.time() - t0})
+
+
+def _swap(store: ManifestStore, inputs: List[SegmentInfo], merged: SegmentInfo,
+          lineage: dict) -> Optional[Manifest]:
+    """The merge's commit, under the commit lock: RELOAD the live manifest
+    (a build or delete may have committed meanwhile), abandon the output
+    (None) unless every input is still live, carry deletes committed to
+    an input since the merge read it, swap; then reclaim the inputs."""
+    from .deletes import pack, read_bits, set_ids, write_bits
+    from .manifest import commit_lock
+
     with commit_lock(store.index_dir):
         manifest = store.load()
-        live = {s.name for s in manifest.segments}
-        if not in_names <= live:
-            shutil.rmtree(store.segment_dir(merged_info.name), ignore_errors=True)
+        live = {s.name: s for s in manifest.segments}
+        if not all(s.name in live for s in inputs):
+            shutil.rmtree(store.segment_dir(merged.name), ignore_errors=True)
             return None
+        # docIDs are global: a doc deleted since the merge read its input
+        # was live then, so the merge kept it under the same id
+        # (IndexWriter.commitMergedDeletesAndUpdates)
+        late = [set_ids(read_bits(store, live[s.name]) & ~read_bits(store, s), s.doc_base)
+                for s in inputs if live[s.name].del_gen != s.del_gen]
+        if late:
+            write_bits(store, merged, pack(np.concatenate(late), merged.doc_base, merged.doc_span))
+        in_names = {s.name for s in inputs}
         manifest.segments = [s for s in manifest.segments if s.name not in in_names]
-        manifest.segments.append(merged_info)
+        manifest.segments.append(merged)
         manifest.segments.sort(key=lambda s: s.doc_base)
-        manifest = store.commit(
-            manifest,
-            lineage_entry={
-                "kind": "merge",
-                "inputs": sorted(in_names),
-                "output": merged_info.name,
-                "concurrent": True,
-                "wall_s": time.time() - t0,
-            },
-        )
+        manifest = store.commit(manifest, lineage_entry={
+            "kind": "merge", "inputs": sorted(in_names), "output": merged.name,
+            **lineage})
     for s in inputs:
         shutil.rmtree(store.segment_dir(s.name), ignore_errors=True)
     return manifest
@@ -183,8 +179,14 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
                 num_partitions: Optional[int] = None) -> SegmentInfo:
     """The merge's data phase: read + purge + re-pack + write the merged
     segment dir. Touches NO manifest state — inputs are immutable once
-    committed, so this is safe off-thread."""
+    committed (a delete adds a live-docs generation beside the one the
+    inputs name), so this is safe off-thread."""
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ..fields import field_stats_from_meta_cols
+    from .deletes import dead_docs
+
     parts = num_partitions or spark.sparkContext.defaultParallelism
     name = merged_segment_name(inputs)
     out_dir = store.segment_dir(name)
@@ -193,27 +195,26 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
     blocks = spark.read.schema(POSTINGS_SCHEMA).parquet(
         *[postings_path(d) for d in in_dirs])
     has_positions = _segment_has_positions(in_dirs[0])
-    from .deletes import deleted_docs_df, delete_generations
-
-    deletes = (
-        deleted_docs_df(spark, store.index_dir)
-        if delete_generations(store.index_dir)
-        else None
-    )
+    # physical purge: deleted docs drop out of the rewrite
+    # (SegmentMerger skips liveDocs=false rows)
+    dead = dead_docs(store, inputs)
 
     def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             cols = {"term": [], "doc_id": [], "norm": [], "tf": [], "pos_blob": []}
             for term, blob, pb in zip(pdf["term"], pdf["blob"], pdf["pblob"]):
                 d, f, nb, pos = decode_block_positions(bytes(blob), pb)
-                cols["term"].append(np.full(len(d), term, dtype=object))
-                cols["doc_id"].append(d)
-                cols["norm"].append(nb)
-                cols["tf"].append(f)
+                keep = np.ones(len(d), bool) if dead is None else ~dead.probe(d)
+                if not keep.any():
+                    continue
+                cols["term"].append(np.full(int(keep.sum()), term, dtype=object))
+                cols["doc_id"].append(d[keep])
+                cols["norm"].append(nb[keep])
+                cols["tf"].append(f[keep])
                 if has_positions:
                     off = np.concatenate([[0], np.cumsum(f)])
                     cols["pos_blob"].append(
-                        [pos[off[i]:off[i + 1]].tolist() for i in range(len(d))]
+                        [pos[off[i]:off[i + 1]].tolist() for i in np.flatnonzero(keep)]
                     )
             if cols["doc_id"]:
                 out = {
@@ -230,10 +231,6 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
     if has_positions:
         schema += ", positions array<int>"
     postings = blocks.select("term", "blob", "pblob").mapInPandas(unpack, schema=schema)
-    if deletes is not None:
-        # physical purge: tombstoned docs drop out of the rewrite
-        # (SegmentMerger skips liveDocs=false rows)
-        postings = postings.join(deletes, "doc_id", "left_anti")
 
     # same chunk-salted shuffle + sorted pack as the builder
     shuffled = (
@@ -268,43 +265,53 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
         # need one of each kind
         SegmentPartWriter(out_dir, 0, keep_empty=True).close(None, None)
 
-    # pinned schemas: neither read infers one (an inference is a job)
+    # the doc metadata: one pass drops deleted docs, writes the task's part
+    # file as the builder's invert task does and returns the live counters
+    # (docs, then sum and nonzero count of length and each fdl column), so
+    # purged docs leave the field stats here, as Lucene's FieldInfos do
     meta_dirs = [doc_meta_path(d) for d in in_dirs]
     meta = spark.read.schema(_footer_schema(meta_dirs)).parquet(*meta_dirs)
-    if deletes is not None:
-        meta = meta.join(deletes, "doc_id", "left_anti")
-    meta.write.mode("overwrite").parquet(doc_meta_path(out_dir))
-    meta_out = spark.read.schema(meta.schema).parquet(doc_meta_path(out_dir))
-    # multi-field indexes: recompute per-field (docCount, sum_dl) over
-    # the LIVE docs — purged docs drop out of the field stats here,
-    # exactly when Lucene's FieldInfos stats shed deletions
-    from ..fields import field_stats_from_meta_cols
+    doc_arrow = to_arrow_schema(meta.schema)
+    field_names = field_stats_from_meta_cols(doc_arrow.names)
+    lens = ["length"] + [f"fdl_{fn}" for fn in field_names]
+    names = ["n"] + [f"sum_{c}" for c in lens] + [f"nz_{c}" for c in lens]
 
-    field_names = field_stats_from_meta_cols(meta_out.columns)
-    aggs = [F.count(F.lit(1)).alias("n"), F.sum("length").alias("dl")]
-    for fn in field_names:
-        aggs.append(F.sum(f"fdl_{fn}").alias(f"dl_{fn}"))
-        aggs.append(F.sum((F.col(f"fdl_{fn}") > 0).cast("long")).alias(f"dc_{fn}"))
-    live_row = meta_out.agg(*aggs).collect()[0]
-    merged_field_stats = (
-        {fn: [int(live_row[f"dc_{fn}"] or 0), int(live_row[f"dl_{fn}"] or 0)]
-         for fn in field_names}
-        if field_names else None
-    )
+    def write_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        out = _PartFile(os.path.join(doc_meta_path(out_dir),
+                                     f"part-{_task_pid():05d}.parquet"), doc_arrow)
+        c = np.zeros(len(names), np.int64)
+        for pdf in batches:
+            if dead is not None:
+                pdf = pdf[~dead.probe(pdf["doc_id"].to_numpy(np.int64))]
+            if len(pdf):
+                out.write(pdf)
+                v = pdf[lens].to_numpy(np.int64)
+                c += np.concatenate(([len(v)], v.sum(0), (v > 0).sum(0)))
+        out.close()
+        yield pd.DataFrame([c], columns=names)
+
+    rows = meta.mapInPandas(write_docs, ", ".join(f"`{n}` long" for n in names)).collect()
+    total = dict(zip(names, np.sum(rows, axis=0) if rows else np.zeros(len(names))))
+    if not total["n"]:
+        _PartFile(os.path.join(doc_meta_path(out_dir), "part-00000.parquet"),
+                  doc_arrow).close(keep_empty=True)
 
     size_bytes = sum(
         os.path.getsize(os.path.join(dp, fn))
         for dp, _, fns in os.walk(out_dir)
         for fn in fns
     )
+    doc_base = min(s.doc_base for s in inputs)
     return SegmentInfo(
         name=name,
-        doc_base=min(s.doc_base for s in inputs),
-        doc_count=int(live_row["n"]),
-        sum_dl=int(live_row["dl"] or 0),
+        doc_base=doc_base,
+        doc_count=int(total["n"]),
+        doc_span=max(s.doc_base + s.doc_span for s in inputs) - doc_base,
+        sum_dl=int(total["sum_length"]),
         size_bytes=size_bytes,
         source_batch=f"merge:{'+'.join(s.source_batch for s in inputs)}",
-        field_stats=merged_field_stats,
+        field_stats={fn: [int(total[f"nz_fdl_{fn}"]), int(total[f"sum_fdl_{fn}"])]
+                     for fn in field_names} or None,
         format_version=FORMAT_VERSION,
     )
 
@@ -398,38 +405,26 @@ def _segment_has_positions(seg_dir: str) -> bool:
 def maybe_merge(spark, index_dir: str, max_rounds: int = 100) -> Manifest:
     """Driver-side merge loop: apply the tiered policy until no merge is
     selected (ConcurrentMergeScheduler analog, run synchronously)."""
-    from .deletes import compact_tombstones, delete_generations
-
     store = ManifestStore(index_dir)
     manifest = store.load()
-    merged_any = False
     for _ in range(max_rounds):
         cand = find_merges(manifest.segments)
         if not cand:
             break
         manifest = run_merge(spark, store, manifest, cand)
-        merged_any = True
-    if merged_any and delete_generations(index_dir):
-        compact_tombstones(spark, index_dir)
     return manifest
 
 
 def force_merge(spark, index_dir: str, max_segments: int = 1) -> Manifest:
     """forceMerge analog: merge down to max_segments, then rewrite any
-    remaining segment that still carries tombstoned docs
-    (forceMergeDeletes semantics) and compact the tombstones."""
-    from .deletes import compact_tombstones, delete_generations, deleted_docs_df
-
+    remaining segment that still has deleted docs (forceMergeDeletes
+    semantics; the manifest's n_deleted says which)."""
     store = ManifestStore(index_dir)
     manifest = store.load()
     while len(manifest.segments) > max_segments:
         group = manifest.segments[: max(2, min(MAX_MERGE_AT_ONCE, len(manifest.segments)))]
         manifest = run_merge(spark, store, manifest, group)
-    if delete_generations(index_dir):
-        dele = deleted_docs_df(spark, index_dir)
-        for seg in list(manifest.segments):
-            seg_meta = spark.read.parquet(doc_meta_path(store.segment_dir(seg.name)))
-            if seg_meta.join(dele, "doc_id", "left_semi").limit(1).count():
-                manifest = run_merge(spark, store, manifest, [seg])
-        compact_tombstones(spark, index_dir)
+    for seg in list(manifest.segments):
+        if seg.n_deleted:
+            manifest = run_merge(spark, store, manifest, [seg])
     return manifest

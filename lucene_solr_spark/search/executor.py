@@ -65,8 +65,8 @@ from ..codec import decode_block, decode_block_positions
 from ..fields import FIELD_SEP, split_term_key, term_key
 from ..smallfloat import LENGTH_TABLE
 from ..indexing.builder import POSTINGS_SCHEMA
-from ..indexing.deletes import delete_generations, deleted_docs_df
-from ..indexing.manifest import (ManifestStore, _data_files, _footer_schema,
+from ..indexing.deletes import DeadDocs, dead_docs
+from ..indexing.manifest import (ManifestStore, _footer_schema, _read_term_rows,
                                  doc_meta_path, postings_path)
 from ..queryast import (
     BooleanQuery,
@@ -88,16 +88,6 @@ from ..queryast import (
 CHUNK_BITS = 13
 
 _log = logging.getLogger("lucene_solr_spark.search")
-
-
-def _read_term_rows(roots: List[str], columns: List[str], terms):
-    """The rows of the given terms in the parquet files under roots,
-    read on the driver with pyarrow (a term `isin` filter)."""
-    import pyarrow.dataset as ds
-
-    files = [f for r in roots for f in _data_files(r)]
-    return ds.dataset(files, format="parquet").to_table(
-        columns=columns, filter=ds.field("term").isin(list(terms)))
 
 
 class IndexReader:
@@ -127,11 +117,11 @@ class IndexReader:
             _footer_schema(self._stats_dirs)).parquet(*self._stats_dirs)
         self.doc_meta = spark.read.schema(
             _footer_schema(doc_dirs)).parquet(*doc_dirs)
-        # liveDocs: tombstones filter matches at collect time; stats
-        # intentionally still count deleted docs (Lucene semantics —
-        # "docFreq ignores deletions") until a merge purges them
-        self.has_deletes = bool(delete_generations(index_dir))
-        self.deletes = deleted_docs_df(spark, index_dir) if self.has_deletes else None
+        # liveDocs: the deleted-docs bitsets, read on the driver; every
+        # Python stage drops deleted docs as it decodes them. Stats still
+        # count them ("docFreq ignores deletions") until a merge purges
+        self.dead: Optional[DeadDocs] = dead_docs(self.store, self.manifest.segments)
+        self.has_deletes = self.dead is not None
         # identifies this index VIEW for the query cache (dir +
         # generation: a commit invalidates cached doc sets)
         self.cache_scope = f"{index_dir}@{self.manifest.generation}"
@@ -142,6 +132,19 @@ class IndexReader:
             for f, v in (s.field_stats or {}).items():
                 dc, dl = self.field_stats.get(f, (0, 0))
                 self.field_stats[f] = (dc + int(v[0]), dl + int(v[1]))
+
+    def drop_deleted(self, df):
+        """df without its deleted docs: a bitset probe in a mapInPandas
+        that fuses into df's scan (MatchAllDocs, highlight, sorted_head)."""
+        dead = self.dead
+        if dead is None:
+            return df
+
+        def drop(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                yield pdf[~dead.probe(pdf["doc_id"].to_numpy(np.int64))]
+
+        return df.mapInPandas(drop, df.schema)
 
     def collection_stats(self, field: Optional[str]) -> Tuple[int, int]:
         """(docCount, sumTotalTermFreq) for a field — the BM25 N/avgdl
@@ -163,15 +166,10 @@ class IndexReader:
         assigned docIDs in index_sort order, so each chamber-built
         segment's docID order IS its sort order.
 
-        The fast path is GUARDED, not assumed (the density/order
-        preconditions are checkable, so check them):
-          - deletes or merged segments (merge keeps global docIDs, so
-            purged deletes leave gaps and cross-batch docID order is
-            only the sort order if batches arrived monotone) -> full
-            TakeOrdered over doc_meta (always correct);
-          - otherwise one tiny count job verifies every segment head
-            yields min(k, doc_count) rows (docID density) and falls
-            back to the full sort on any shortfall."""
+        The fast path is GUARDED by the manifest: deletes, ids that are
+        not dense (doc_span != doc_count) or a merged segment (its
+        cross-batch docID order is the sort order only if batches arrived
+        monotone) -> full TakeOrdered over doc_meta (always correct)."""
         from functools import reduce
 
         from pyspark.sql import DataFrame, functions as F
@@ -180,52 +178,25 @@ class IndexReader:
         if not sort:
             raise ValueError("index has no index_sort (build with index_sort=[...])")
 
-        def full_sort():
-            return self.live(self.doc_meta).orderBy(
-                *[F.col(c) for c in sort], F.asc("doc_id")
-            ).limit(k)
-
         segs = self.manifest.segments
         if self.has_deletes or any(
-            s.name.startswith("seg_m_")
-            or str(s.source_batch).startswith("merge:")
+            s.doc_span != s.doc_count or str(s.source_batch).startswith("merge:")
             for s in segs
         ):
-            return full_sort()
-        heads = []
-        for i, s in enumerate(segs):
-            d = self.store.segment_dir(s.name)
-            # docIDs are dense in sort order within the segment, so the
-            # segment's first k docs are exactly ids < doc_base + k: a
-            # parquet-pushable range predicate — row groups past the
-            # head never leave disk (the scan-stops-early move; a bare
-            # LIMIT would not work, Spark schedules splits by size)
-            heads.append(
+            src = self.drop_deleted(self.doc_meta)
+        else:
+            # docIDs are dense in sort order within each segment, so its
+            # first k docs are exactly ids < doc_base + k: a
+            # parquet-pushable range predicate — row groups past the head
+            # never leave disk (the scan-stops-early move; a bare LIMIT
+            # would not work, Spark schedules splits by size)
+            src = reduce(DataFrame.unionByName, [
                 self.spark.read.schema(self.doc_meta.schema)
-                .parquet(doc_meta_path(d))
-                .where(F.col("doc_id") < s.doc_base + k)
-                .withColumn("_seg", F.lit(i))
-            )
-        merged = reduce(DataFrame.unionByName, heads)
-        # density check: each head must hold exactly min(k, doc_count)
-        # rows or the head predicate missed live docs — one job over
-        # the already-pruned head rows (<= k * n_segments of them)
-        got = {
-            r["_seg"]: r["cnt"]
-            for r in merged.groupBy("_seg").agg(F.count(F.lit(1)).alias("cnt")).collect()
-        }
-        for i, s in enumerate(segs):
-            if got.get(i, 0) != min(k, s.doc_count):
-                return full_sort()
-        return merged.drop("_seg").orderBy(
+                .parquet(doc_meta_path(self.store.segment_dir(s.name)))
+                .where(F.col("doc_id") < s.doc_base + k) for s in segs])
+        return src.orderBy(
             *[F.col(c) for c in sort], F.asc("doc_id")
         ).limit(k)
-
-    def live(self, df):
-        """Apply the liveDocs filter (anti-join on tombstones)."""
-        if not self.has_deletes:
-            return df
-        return df.join(self.deletes, "doc_id", "left_anti")
 
     def _term_stats_rows(self, terms: Tuple[str, ...]) -> list:
         """The query terms' entries of every live segment's term
@@ -391,9 +362,11 @@ class MultiReader:
         self.norms = readers[0].norms
         if any(r.norms != self.norms for r in readers):
             raise ValueError("shards disagree on norms encoding")
+        # each shard's id range, over the doc_span of merged segments
         spans = sorted(
-            (s.doc_base, s.doc_base + s.doc_count)
-            for r in readers for s in r.manifest.segments
+            (min(s.doc_base for s in r.manifest.segments),
+             max(s.doc_base + s.doc_span for s in r.manifest.segments))
+            for r in readers
         )
         for (a1, b1), (a2, b2) in zip(spans, spans[1:]):
             if b1 > a2:
@@ -408,11 +381,9 @@ class MultiReader:
         self.doc_meta = _union_all([r.doc_meta for r in readers])
         self._block_dirs = [d for r in readers for d in r._block_dirs]
         self._stats_dirs = [d for r in readers for d in r._stats_dirs]
-        self.has_deletes = any(r.has_deletes for r in readers)
-        self.deletes = (
-            _union_all([r.deletes for r in readers if r.has_deletes])
-            if self.has_deletes else None
-        )
+        dead = [p for r in readers if r.dead is not None for p in r.dead.parts]
+        self.dead = DeadDocs(dead) if dead else None
+        self.has_deletes = self.dead is not None
         self.field_stats: Dict[str, Tuple[int, int]] = {}
         for r in readers:
             for f, (dc, dl) in r.field_stats.items():
@@ -425,7 +396,7 @@ class MultiReader:
 
         self.manifest = _Segs()
 
-    live = IndexReader.live
+    drop_deleted = IndexReader.drop_deleted
     _term_stats_rows = IndexReader._term_stats_rows
     term_stats = IndexReader.term_stats
     term_wand_stats = IndexReader.term_wand_stats
@@ -531,6 +502,7 @@ class Searcher:
                 "by_term": by_term,
                 "weights": self._weights([(t, b) for _, t, b in clause_terms]),
                 "keep": keep,
+                "dels": self.reader.dead,
             }
         )
 
@@ -539,7 +511,7 @@ class Searcher:
             for pdf in batches:
                 out_cid, out_doc, out_score = [], [], []
                 for term, doc_ids, tfs, norms in _decoded_blocks(
-                        pdf, keep=info["keep"]):
+                        pdf, keep=info["keep"], dels=info["dels"]):
                     for cid, boost in info["by_term"][term]:
                         sc = _bm25_scores(tfs, norms,
                                           info["weights"][f"{term}\x00{boost}"],
@@ -604,6 +576,7 @@ class Searcher:
         keep = (self._conjunction_blocks(distinct_terms, distinct_terms)[0]
                 if len(distinct_terms) >= 2 else None)
         bc = spark.sparkContext.broadcast(keep)
+        dead = self.reader.dead
 
         nslots = len(terms)
 
@@ -622,7 +595,7 @@ class Searcher:
                 rows_ch, rows_ti, rows_d, rows_tf, rows_nb, rows_p = (
                     [], [], [], [], [], [])
                 for term, doc_ids, tfs, norms, pos in _decoded_blocks(
-                        pdf, positions=True, keep=bc.value):
+                        pdf, positions=True, keep=bc.value, dels=dead):
                     tfs = tfs.astype(np.int32, copy=False)
                     chunks = doc_ids >> CHUNK_BITS
                     cut = np.flatnonzero(np.diff(chunks)) + 1
@@ -784,10 +757,11 @@ class Searcher:
         singleton collect_list appends. Positions are presented 1-BASED
         (pos0 + 1), matching the live tokens relation and the SQL
         oracles; blocks store 0-based positions."""
+        dead = self.reader.dead
 
         def decode_pos(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                blocks = list(_decoded_blocks(pdf, positions=True))
+                blocks = list(_decoded_blocks(pdf, positions=True, dels=dead))
                 if blocks:
                     terms, docs, tfs, norms, pos = zip(*blocks)
                     yield pd.DataFrame({
@@ -867,12 +841,11 @@ class Searcher:
 
         from .. import similarities as sims
 
-        sc = freq_df.where(F.col("tf") > 0).select(
+        return freq_df.where(F.col("tf") > 0).select(
             "doc_id",
             sims.bm25_score(F.col("tf"), F.col("dl"), idf=idf_sum, avgdl=avgdl)
             .alias("score"),
         )
-        return self.reader.live(sc)
 
     def _empty_scored(self):
         return self.reader.spark.createDataFrame([], "doc_id long, score double")
@@ -1020,9 +993,11 @@ class Searcher:
         statistics every SimilarityBase.score(freq, norm) consumes."""
         from pyspark.sql import functions as F
 
+        dead = self.reader.dead
+
         def decode_tf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                blocks = list(_decoded_blocks(pdf))
+                blocks = list(_decoded_blocks(pdf, dels=dead))
                 if blocks:
                     terms, docs, tfs, norms = zip(*blocks)
                     yield pd.DataFrame({
@@ -1089,7 +1064,7 @@ class Searcher:
                                                avgdl=avgdl, **params)
         else:
             raise ValueError(f"unknown similarity: {sim}")
-        return self.reader.live(tfdl.select("doc_id", score.alias("score")))
+        return tfdl.select("doc_id", score.alias("score"))
 
     def passage_highlight(self, terms: List[str], window: int = 16,
                           k: int = 10, field: Optional[str] = None):
@@ -1112,7 +1087,8 @@ class Searcher:
                 [], "doc_id long, passage long, score double")
         idf_of = {t: float(sims.idf_bm25(stats[t][0], n)) for t in live}
         spark = self.reader.spark
-        bc = spark.sparkContext.broadcast({"idf": idf_of, "window": window})
+        bc = spark.sparkContext.broadcast({"idf": idf_of, "window": window,
+                                           "dels": self.reader.dead})
 
         def decode_passages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # map-side passage combine: per block, bucket positions by
@@ -1125,7 +1101,7 @@ class Searcher:
             for pdf in batches:
                 out_doc, out_pass, out_w = [], [], []
                 for term, doc_ids, tfs, _, pos in _decoded_blocks(
-                        pdf, positions=True):
+                        pdf, positions=True, dels=info["dels"]):
                     widf = info["idf"].get(term, 0.0)
                     docs_exp = np.repeat(doc_ids, tfs)
                     pas = pos.astype(np.int64) // win  # 0-based positions
@@ -1142,9 +1118,8 @@ class Searcher:
                     })
 
         src = self.reader.blocks.where(F.col("term").isin(live))
-        occ = self.reader.live(
-            src.select("term", "blob", "pblob").mapInPandas(
-                decode_passages, "doc_id long, passage long, w double"))
+        occ = src.select("term", "blob", "pblob").mapInPandas(
+            decode_passages, "doc_id long, passage long, w double")
         scored = occ.groupBy("doc_id", "passage").agg(F.sum("w").alias("score"))
         # best passage per doc WITHOUT a second (window) shuffle:
         # max_by struct ordered (score, -passage) == score desc,
@@ -1176,7 +1151,7 @@ class Searcher:
         pos = F.locate(term, low)  # 1-based, 0 = no match
         start = F.greatest(pos - window, F.lit(1))
         snippet = F.substring(low, start, F.lit(2 * window) + F.length(F.lit(term)))
-        return self.reader.live(
+        return self.reader.drop_deleted(
             dm.select("doc_id", pos.alias("pos"), snippet.alias("snippet"))
             .where(F.col("pos") > 0)
         )
@@ -1193,9 +1168,9 @@ class Searcher:
         if isinstance(q, MatchNoDocsQuery):
             return spark.createDataFrame([], "doc_id long, score double")
         if isinstance(q, MatchAllDocsQuery):
-            return self.reader.doc_meta.select(
+            return self.reader.drop_deleted(self.reader.doc_meta.select(
                 "doc_id", F.lit(float(np.float32(b)) if self.precision == "float32" else float(b)).alias("score")
-            )
+            ))
         if isinstance(q, TermQuery):
             df = self._score_terms([(0, term_key(q.field, q.term), b)])
             return df.select("doc_id", "score")
@@ -1400,9 +1375,6 @@ class Searcher:
     WAND_PREFETCH_EXACT_CAP = 2_000_000
     WAND_PREFETCH_TOPN = 131_072
     WAND_PREFETCH_BUCKET_DOCS = 65_536
-    # tombstones broadcast into the WAND partitions at most; above it
-    # the pruned search defers to the exhaustive plan (same ranks)
-    WAND_MAX_TOMBSTONES = 2_000_000
 
     def _aligned_bucket_ubs(self, terms: List[str], by_term: dict,
                             winfo: dict, ub_wv: dict):
@@ -1527,12 +1499,12 @@ class Searcher:
         return float(np.max(wv_total * tf / (tf + nv)))
 
     def _prefetch_rare_partials(self, rare_terms: List[str], by_term: dict,
-                                winfo: dict, del_arr, k: int):
+                                winfo: dict, k: int):
         """Decode the rare terms' postings in one tiny job and return
         (sorted doc ids, aligned exact clause-sum partials, theta0 =
         k-th best partial, bucket_table). The per-doc sums are EXACT
-        for the rare clauses (every rare block is decoded, tombstones
-        filtered), so theta0 is a valid global pruning threshold and
+        for the rare clauses (every rare block is decoded, deleted docs
+        dropped), so theta0 is a valid global pruning threshold and
         the per-doc values are valid per-block slack inputs.
 
         Scale guard: below WAND_PREFETCH_EXACT_CAP aggregated docs the
@@ -1550,12 +1522,13 @@ class Searcher:
 
         precision = self.precision
         norms_mode = self.reader.norms
+        dead = self.reader.dead
 
         def decode_rare(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
                 docs_out: List[np.ndarray] = []
                 sc_out: List[np.ndarray] = []
-                for term, doc_ids, tfs, norms in _decoded_blocks(pdf, dels=del_arr):
+                for term, doc_ids, tfs, norms in _decoded_blocks(pdf, dels=dead):
                     tot = np.zeros(len(doc_ids), dtype=np.float64)
                     for _cid, boost in by_term[term]:
                         tot += _bm25_scores(tfs, norms, winfo[f"{term}\x00{boost}"],
@@ -1652,27 +1625,10 @@ class Searcher:
         Suel block-max bound) — the sum-of-weight-values bound is the
         tf->inf asymptote and prunes almost nothing on OR queries.
 
-        Deletes: tombstones are broadcast into the partition and
-        filtered BEFORE theta computation (liveDocs applied per leaf,
-        like Weight.scorerSupplier under LRUQueryCache's liveDocs), so
-        incremental indexes keep the one-job plan. Returns None when
-        the index holds more than WAND_MAX_TOMBSTONES tombstones (the
-        broadcast would not fit the driver); the caller then runs the
-        exhaustive plan, which returns the same ranks."""
+        Deletes: the reader's bitsets ride the broadcast and each decoded
+        block drops its deleted docs BEFORE theta computation (liveDocs
+        per leaf), so theta lower-bounds the k-th LIVE score."""
         from pyspark.sql import functions as F
-
-        del_arr = None
-        if self.reader.has_deletes:
-            # theta must lower-bound the k-th LIVE score: ship the
-            # tombstone set to the partitions (sorted for searchsorted).
-            # Un-merged tombstone sets are small by construction (merge
-            # purges them); the limit bounds the collect itself.
-            cap = self.WAND_MAX_TOMBSTONES
-            del_rows = self.reader.deletes.select("doc_id").limit(cap + 1).collect()
-            if len(del_rows) > cap:
-                return None
-            del_arr = np.sort(np.array([r["doc_id"] for r in del_rows],
-                                       dtype=np.int64))
 
         clause_terms = [(i, t, b) for i, (t, b) in enumerate(terms_with_boost)]
         winfo, ub_wv, slack = self._per_clause_params(clause_terms)
@@ -1739,7 +1695,7 @@ class Searcher:
                 cand_rare = set()
             if cand_rare and cand_rare != set(ub_wv):
                 pre = self._prefetch_rare_partials(
-                    sorted(cand_rare), by_term, winfo, del_arr, k)
+                    sorted(cand_rare), by_term, winfo, k)
                 if pre is not None:
                     rare_docs, rare_partials, theta0, rare_bucket = pre
                     rare_set = cand_rare
@@ -1778,7 +1734,7 @@ class Searcher:
             dtype=np.int32)
         bc = spark.sparkContext.broadcast(
             {"by_term": by_term, "winfo": winfo, "ub_wv": ub_wv,
-             "slack": slack, "k": k, "deletes": del_arr,
+             "slack": slack, "k": k, "deletes": self.reader.dead,
              "rare_set": rare_set, "rare_docs": rare_docs,
              "rare_partials": rare_partials, "theta0": theta0,
              "rare_cids": rare_cids, "rare_bucket": rare_bucket,
@@ -1891,7 +1847,7 @@ class Searcher:
             acc_total.add(len(pdf))
 
             def decode(idx: int) -> None:
-                # liveDocs per leaf: the broadcast tombstones drop out
+                # liveDocs per leaf: the broadcast bitsets drop deleted docs
                 acc_decoded.add(1)
                 one = {"term": terms[idx:idx + 1], "blob": blobs[idx:idx + 1]}
                 for term, doc_ids, tfs, norms in _decoded_blocks(one, dels=dels):
@@ -2183,11 +2139,9 @@ class Searcher:
         pruning pays (Lucene's BooleanWeight.java:317 scorer-vs-
         BulkScorer and IndexOrDocValuesQuery.java:52 access-path
         choice); either choice returns the identical rank-safe top-k.
-        The decision and its estimates land on self.last_plan; an index
-        with more than WAND_MAX_TOMBSTONES tombstones runs the
-        exhaustive plan (last_plan reason "tombstone-cap"). Every other
-        search describes its plan there too (_exhaustive_plan), and
-        each plan is logged at DEBUG on "lucene_solr_spark.search"."""
+        The decision and its estimates land on self.last_plan; every
+        other search describes its plan there too (_exhaustive_plan),
+        and each plan is logged at DEBUG on "lucene_solr_spark.search"."""
         self.last_plan = None
         self._skips = []
         q = self._with_default_field(q)
@@ -2201,9 +2155,6 @@ class Searcher:
                     use_wand = self.last_plan["use_wand"]
                 if use_wand:
                     top = self._search_pruned_or(terms, k)
-                    if top is None:
-                        self.last_plan = {"use_wand": False,
-                                          "reason": "tombstone-cap"}
         if top is None:
             top = self._search_exhaustive(q, k, after)
             if self.last_plan is None:
@@ -2215,11 +2166,11 @@ class Searcher:
         """last_plan of a search that ran the exhaustive plan without a
         WAND gate decision: the access path and why, the skip-data
         prefilter's blocks kept out of blocks total, and the Spark jobs
-        expected under adaptive execution — one for the top-k, one more
-        for the shuffle of any aggregating node (boolean, phrase,
-        dismax, synonym, term set) and two for the tombstone anti-join
-        (its distinct and its broadcast); a multi-term query's
-        dictionary expansion adds one more."""
+        expected under adaptive execution — one for the top-k and one
+        more for the shuffle of any aggregating node (boolean, phrase,
+        dismax, synonym, term set); deletes add none (each decode drops
+        its deleted docs); a multi-term query's dictionary expansion
+        adds one more."""
         if self._skips:
             path, reason = "skip-data", "conjunction"
         elif self._as_or_terms(q) is None:
@@ -2234,7 +2185,7 @@ class Searcher:
             "access_path": path, "reason": reason,
             "blocks_kept": sum(k for k, _ in self._skips) if self._skips else None,
             "blocks_total": sum(t for _, t in self._skips) if self._skips else None,
-            "expected_jobs": 1 + int(shuffle) + 2 * int(self.reader.has_deletes),
+            "expected_jobs": 1 + int(shuffle),
         }
 
     def _search_exhaustive(self, q: Query, k: int,
@@ -2244,7 +2195,7 @@ class Searcher:
         q = rewrite(q, dictionary_terms=None)
         q = self._expand_multiterm(q)
         q = rewrite(q, dictionary_terms=None)
-        scored = self.reader.live(self._eval(q, 1.0))
+        scored = self._eval(q, 1.0)
         if after is not None:
             s, d = after
             scored = scored.where(
@@ -2266,7 +2217,7 @@ class Searcher:
 
     def count(self, q: Query) -> int:
         q = self._expand_multiterm(rewrite(self._with_default_field(q), None))
-        return self.reader.live(self._eval(rewrite(q, None), 1.0)).count()
+        return self._eval(rewrite(q, None), 1.0).count()
 
     def suggest(self, prefix: str, n: int = 10):
         """Index-resident prefix suggester (AnalyzingSuggester.java:121
@@ -2372,8 +2323,9 @@ def _decoded_blocks(pdf, positions: bool = False, keep=None, dels=None):
     tfs, norms[, pos]) per row of a batch of blocks (term, blob, plus
     min_doc with keep, pblob with positions). keep: {term: set of
     min_doc}, the conjunction prefilter's kept blocks — other rows are
-    skipped undecoded. dels: sorted tombstoned doc ids, dropped from
-    each block with their positions; a block left empty is skipped."""
+    skipped undecoded. dels: the reader's DeadDocs; deleted docs drop
+    out of each block with their positions (one bitset gather per
+    block), and a block left empty is skipped."""
     mins = pdf["min_doc"] if keep is not None else repeat(None)
     pblobs = pdf["pblob"] if positions else repeat(None)
     for term, md, blob, pb in zip(pdf["term"], mins, pdf["blob"], pblobs):
@@ -2383,9 +2335,8 @@ def _decoded_blocks(pdf, positions: bool = False, keep=None, dels=None):
             doc_ids, tfs, norms, pos = decode_block_positions(bytes(blob), pb)
         else:
             doc_ids, tfs, norms = decode_block(bytes(blob))
-        if dels is not None and len(dels):
-            p = np.minimum(np.searchsorted(dels, doc_ids), len(dels) - 1)
-            live = dels[p] != doc_ids
+        if dels is not None:
+            live = ~dels.probe(doc_ids)
             if not live.all():
                 if positions and len(pos):
                     pos = pos[np.repeat(live, tfs)]

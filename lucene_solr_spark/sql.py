@@ -5,7 +5,7 @@ handler (solr/core/.../handler/sql/CalciteSolrDriver.java, JDBCStream
 solrj/.../io/stream/JDBCStream.java): Calcite plans SQL onto streaming
 expressions. The Spark-first analog needs no bridge at all — the
 index's relations (term dictionary + stats, document metadata,
-tombstones) ARE DataFrames; registering them as temp views makes the
+deleted doc ids) ARE DataFrames; registering them as temp views makes the
 whole Spark SQL dialect (joins, windows, CTEs) the query language,
 planned by Catalyst instead of Calcite, with predicate pushdown into
 the index parquet for free.
@@ -17,7 +17,9 @@ Usage:
 
 from __future__ import annotations
 
-from .indexing.deletes import delete_generations, deleted_docs_df
+import pandas as pd
+
+from .indexing.deletes import dead_docs
 from .indexing.manifest import ManifestStore, doc_meta_path, postings_path
 
 
@@ -47,6 +49,8 @@ def register_index_views(spark, index_dir: str, prefix: str = "idx") -> list:
         spark.read.parquet(*[doc_meta_path(d) for d in segs]))
     reg(f"{prefix}_postings",
         spark.read.parquet(*[postings_path(d) for d in segs]))
-    if delete_generations(index_dir):
-        reg(f"{prefix}_deletes", deleted_docs_df(spark, index_dir))
+    dead = dead_docs(store, manifest.segments)
+    if dead is not None:
+        reg(f"{prefix}_deletes",
+            spark.createDataFrame(pd.DataFrame({"doc_id": dead.ids()}), "doc_id long"))
     return views

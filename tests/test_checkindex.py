@@ -122,3 +122,48 @@ def test_unstamped_segment_refused(spark, tiny_corpus_pdf, tmp_path):
     assert store.current_generation() == gen
     assert (sorted(os.listdir(idx)),
             sorted(os.listdir(os.path.join(idx, "segments")))) == before
+
+
+def test_check_reports_live_docs_mismatch(spark, tiny_corpus_pdf, tmp_path):
+    """The live-docs check runs on the driver: a hand-edited n_deleted
+    no longer matches its bitset's popcount, and a missing live-docs
+    file is reported by name."""
+    from lucene_solr_spark.indexing import deletes
+    from lucene_solr_spark.indexing.builder import build_index
+    from lucene_solr_spark.indexing.manifest import ManifestStore
+
+    idx = str(tmp_path / "liv")
+    build_index(spark, idx, [("b0", spark.createDataFrame(tiny_corpus_pdf))])
+    n = deletes.delete_by_terms(spark, idx, ["ident007"])
+    assert n >= 2 and check_index(spark, idx)["clean"]
+    store = ManifestStore(idx)
+    path = os.path.join(store.mdir, f"segments_{store.current_generation()}.json")
+    raw = json.load(open(path))
+    raw["segments"][0]["n_deleted"] += 1
+    json.dump(raw, open(path, "w"))
+    rep = check_index(spark, idx, raise_on_error=False)
+    assert not rep["clean"]
+    assert any(f"{n} deleted docs in live_1.bin != n_deleted {n + 1}" in e
+               for e in rep["errors"]), rep["errors"]
+
+    os.remove(os.path.join(store.segment_dir("seg_b0"), "live_1.bin"))
+    rep = check_index(spark, idx, raise_on_error=False)
+    assert any("missing live_1.bin" in e for e in rep["errors"]), rep["errors"]
+
+
+def test_format_1_segment_refused(spark, tiny_corpus_pdf, tmp_path):
+    """A format-1 segment (its deletes were index-global tombstone files)
+    is refused on open."""
+    from lucene_solr_spark.indexing.builder import build_index
+    from lucene_solr_spark.indexing.manifest import IndexFormatError, ManifestStore
+    from lucene_solr_spark.search.executor import IndexReader
+
+    idx = str(tmp_path / "f1")
+    build_index(spark, idx, [("b0", spark.createDataFrame(tiny_corpus_pdf.iloc[:20]))])
+    store = ManifestStore(idx)
+    path = os.path.join(store.mdir, f"segments_{store.current_generation()}.json")
+    raw = json.load(open(path))
+    raw["segments"][0]["format_version"] = 1
+    json.dump(raw, open(path, "w"))
+    with pytest.raises(IndexFormatError, match=r"seg_b0 \(format 1\)"):
+        IndexReader(spark, idx)

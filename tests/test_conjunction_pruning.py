@@ -115,26 +115,36 @@ def test_pruned_and_results_exact(chunked_searcher, terms, spark, chunked_index)
     assert [d for _, d in expected] == list(res["doc_id"])
 
 
-def test_spark_jobs_per_query(spark, spark_jobs, chunked_index, chunked_searcher):
-    """Statistics and the conjunction's skip data are read on the
-    driver: opening a reader runs no job, a term query runs only its
-    scoring job, and AND, OR and phrase add at most their shuffle."""
+def test_spark_jobs_per_query(spark, spark_jobs, chunked_index, tmp_path):
+    """Statistics, the conjunction's skip data and the live-docs bitsets
+    are read on the driver: opening a reader runs no job, a term query
+    runs only its scoring job, and AND, OR and phrase add at most their
+    shuffle — on an index with deletes too, whose delete_by_terms runs
+    no job."""
+    import shutil
+
+    from lucene_solr_spark.indexing.deletes import delete_by_terms
     from lucene_solr_spark.queryast import PhraseQuery
     from lucene_solr_spark.search.executor import IndexReader, Searcher
 
-    _, n = spark_jobs(lambda: Searcher(IndexReader(spark, chunked_index)))
-    assert n == 0
-    s = chunked_searcher
-    _, n = spark_jobs(lambda: s.search(TermQuery(term="markera"), k=10))
-    assert n == 1
-    assert s.last_plan["expected_jobs"] == 1
+    with_deletes = str(tmp_path / "idx")
+    shutil.copytree(chunked_index, with_deletes)
+    n, jobs = spark_jobs(lambda: delete_by_terms(spark, with_deletes, ["w3", "w5"]))
+    assert n > 0 and jobs == 0
     or_q = BooleanQuery(clauses=tuple(
         BooleanClause(Occur.SHOULD, TermQuery(term=t)) for t in ("markera", "markerb")))
-    for q in (_and_query("common", "markera"), or_q,
-              PhraseQuery(terms=("common", "markerc"))):
-        _, n = spark_jobs(lambda: s.search(q, k=10))
-        assert n <= 2, (q, n)
-        assert s.last_plan["expected_jobs"] == 2
+    for idx in (chunked_index, with_deletes):
+        s, n = spark_jobs(lambda: Searcher(IndexReader(spark, idx)))
+        assert n == 0
+        assert s.reader.has_deletes == (idx == with_deletes)
+        _, n = spark_jobs(lambda: s.search(TermQuery(term="markera"), k=10))
+        assert n == 1
+        assert s.last_plan["expected_jobs"] == 1
+        for q in (_and_query("common", "markera"), or_q,
+                  PhraseQuery(terms=("common", "markerc"))):
+            _, n = spark_jobs(lambda: s.search(q, k=10))
+            assert n <= 2, (idx, q, n)
+            assert s.last_plan["expected_jobs"] == 2
 
 
 def test_every_query_explains_its_plan(chunked_searcher, caplog):

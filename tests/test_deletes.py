@@ -1,6 +1,6 @@
-"""Deletes/updates: tombstone semantics, liveDocs filtering, merge
-purge (reference: IndexWriter delete/update + PendingDeletes + .liv;
-stats ignore deletions until merge).
+"""Deletes/updates: per-segment live-docs bitsets, liveDocs filtering,
+merge purge (reference: IndexWriter delete/update + PendingDeletes +
+.liv; stats ignore deletions until merge).
 """
 
 from __future__ import annotations
@@ -50,7 +50,8 @@ def test_delete_by_term_filters_hits_keeps_stats(spark, fresh_index):
 
     # other queries exclude the tombstoned docs too
     res = s1.search(TermQuery(term="import"), k=200)
-    deleted = {r["doc_id"] for r in s1.reader.deletes.collect()}
+    deleted = set(s1.reader.dead.ids().tolist())
+    assert len(deleted) == n_del
     assert not (set(res["doc_id"]) & deleted)
 
 
@@ -91,7 +92,7 @@ def test_merge_purges_deletes(spark, fresh_index):
 
     force_merge(spark, fresh_index, max_segments=1)
     s2 = _searcher(spark, fresh_index)
-    # physically purged: docCount shrinks, tombstones compacted away
+    # physically purged: docCount shrinks, no segment keeps a delete
     assert s2.reader.doc_count == total - n_del
     assert not s2.reader.has_deletes
     assert s2.count(TermQuery(term="ident007")) == 0
@@ -111,3 +112,75 @@ def test_wand_respects_deletes(spark, fresh_index):
     b = s.search(q, k=10, prune=True)
     assert list(a["doc_id"]) == list(b["doc_id"])
     assert list(a["score"]) == list(b["score"])
+
+
+def test_delete_by_keys_jobs_and_count(spark, spark_jobs, fresh_index, tiny_corpus_pdf):
+    """delete_by_keys: a doc-meta scan semi-joined with the broadcast keys
+    whose tasks return packed bits — at most 2 Spark jobs; a key seen
+    again counts nothing new."""
+    from lucene_solr_spark.indexing import deletes
+
+    n = len(tiny_corpus_pdf)
+    # keys from both segments, and one key that matches no doc
+    keys = tiny_corpus_pdf.iloc[[0, 1, n - 1]][["repo", "path"]].copy()
+    keys.loc[len(keys)] = ["no-such-repo", "nowhere.py"]
+    got, jobs = spark_jobs(
+        lambda: deletes.delete_by_keys(spark, fresh_index, spark.createDataFrame(keys)))
+    assert got == 3 and jobs <= 2
+    again = spark.createDataFrame(tiny_corpus_pdf.iloc[[1, 2]][["repo", "path"]])
+    assert deletes.delete_by_keys(spark, fresh_index, again) == 1
+    dead = _searcher(spark, fresh_index).reader.dead.ids()
+    assert len(dead) == 4
+
+
+def test_merge_counts_live_docs_multifield(spark, tmp_path):
+    """The merge's doc-metadata pass writes only live docs and returns
+    the live counters: doc_count, sum_dl and per-field (docCount,
+    sumTotalTermFreq) equal the pre-merge doc metadata minus the deleted
+    docs."""
+    import pandas as pd
+
+    from lucene_solr_spark.indexing import deletes
+    from lucene_solr_spark.indexing.builder import build_index
+    from lucene_solr_spark.indexing.manifest import ManifestStore
+    from lucene_solr_spark.indexing.merge import force_merge
+
+    rows = [{"repo": "r", "path": f"p{i:03d}", "commit": "c",
+             "lang": ["Go", "Java", "Python"][i % 3],
+             "title": "merge index" if i % 4 else "",
+             "body": " ".join(["segment"] * (1 + i % 5) + ["norm"] * (i % 2))}
+            for i in range(60)]
+    pdf = pd.DataFrame(rows)
+    fields = [("title", "title", "standard"), ("body", "body", "standard"),
+              ("lang", "lang", "keyword")]
+    idx = str(tmp_path / "mf")
+    build_index(spark, idx, [("b0", spark.createDataFrame(pdf.iloc[:30])),
+                             ("b1", spark.createDataFrame(pdf.iloc[30:]))],
+                fields=fields)
+    assert deletes.delete_by_terms(spark, idx, ["Go"], field="lang") == 20
+    reader = _searcher(spark, idx).reader
+    meta = reader.doc_meta.toPandas()
+    live = meta[~meta["doc_id"].isin(reader.dead.ids())]
+
+    force_merge(spark, idx, max_segments=1)
+    seg = ManifestStore(idx).load().segments[0]
+    assert seg.doc_count == len(live) == 40
+    assert seg.sum_dl == int(live["length"].sum())
+    assert seg.field_stats == {
+        f: [int((live[f"fdl_{f}"] > 0).sum()), int(live[f"fdl_{f}"].sum())]
+        for f in ("title", "body", "lang")}
+    assert seg.n_deleted == 0 and seg.doc_span == 60
+
+
+def test_sql_deletes_view_from_bitsets(spark, fresh_index):
+    """<prefix>_deletes lists the deleted ids the segments' bitsets hold;
+    without deletes the view is not registered."""
+    from lucene_solr_spark.indexing import deletes
+    from lucene_solr_spark.sql import register_index_views
+
+    assert "dtest_deletes" not in register_index_views(spark, fresh_index, "dtest")
+    n = deletes.delete_by_terms(spark, fresh_index, ["ident007"])
+    assert "dtest_deletes" in register_index_views(spark, fresh_index, "dtest")
+    got = sorted(r["doc_id"] for r in spark.table("dtest_deletes").collect())
+    assert len(got) == n
+    assert got == _searcher(spark, fresh_index).reader.dead.ids().tolist()

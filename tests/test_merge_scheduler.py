@@ -7,6 +7,7 @@ each other (index/ConcurrentMergeScheduler.java:65-70 semantics).
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from lucene_solr_spark.queryast import TermQuery
 
@@ -97,3 +98,67 @@ def test_abandoned_merge_is_garbage_not_corruption(spark, tiny_corpus_pdf,
     assert m2 is None
     assert _top(spark, idx) == before
     assert store.load().total_docs == len(tiny_corpus_pdf)
+
+
+@pytest.mark.parametrize("concurrent", [False, True])
+def test_delete_during_merge_is_carried_over(spark, tiny_corpus_pdf, tmp_path,
+                                             monkeypatch, concurrent):
+    """A delete that commits while a merge's data phase runs (after the
+    merge read its inputs' live docs) lands in the merged segment: the
+    swap ORs it in under the commit lock instead of losing it, and the
+    delete's commit does not undo the swap."""
+    import lucene_solr_spark.indexing.merge as merge_mod
+    from lucene_solr_spark.indexing import deletes
+    from lucene_solr_spark.indexing.builder import build_index
+    from lucene_solr_spark.indexing.check import check_index
+    from lucene_solr_spark.indexing.manifest import ManifestStore
+    from lucene_solr_spark.search.executor import IndexReader, Searcher
+
+    idx = str(tmp_path / "idx")
+    build_index(spark, idx, _batches(spark, tiny_corpus_pdf, 2))
+    hit_docs = set(Searcher(IndexReader(spark, idx))
+                   .search(TermQuery(term="ident007"), k=500)["doc_id"])
+    assert len(hit_docs) >= 2, "fixture drift"
+
+    real = merge_mod._merge_data
+    racing = {}
+
+    def merge_data_then_delete(*args, **kwargs):
+        out = real(*args, **kwargs)
+        racing["n"] = deletes.delete_by_terms(spark, idx, ["ident007"])
+        return out
+
+    monkeypatch.setattr(merge_mod, "_merge_data", merge_data_then_delete)
+    store = ManifestStore(idx)
+    inputs = store.load().segments
+    if concurrent:
+        merge_mod.run_merge_concurrent(spark, store, inputs)
+    else:
+        merge_mod.run_merge(spark, store, store.load(), inputs)
+
+    assert racing["n"] == len(hit_docs)
+    m = store.load()
+    assert [s.name for s in m.segments] == [merge_mod.merged_segment_name(inputs)]
+    seg = m.segments[0]
+    assert seg.n_deleted == len(hit_docs) and seg.del_gen == 1
+    reader = IndexReader(spark, idx)
+    assert set(reader.dead.ids().tolist()) == hit_docs
+    assert Searcher(reader).count(TermQuery(term="ident007")) == 0
+    assert check_index(spark, idx)["clean"]
+
+
+def test_merge_score_weighs_deletes():
+    """TieredMergePolicy's nonDelRatio²: of two equal-sized candidates,
+    the one whose segments carry deletes scores lower (merges first);
+    without deletes the ratio is 1."""
+    from lucene_solr_spark.indexing.manifest import SegmentInfo
+    from lucene_solr_spark.indexing.merge import merge_score
+
+    def segs(n_deleted):
+        return [SegmentInfo(name=f"s{i}", doc_base=1000 * i, doc_count=1000,
+                            sum_dl=1, size_bytes=4_000_000, source_batch="b",
+                            n_deleted=n_deleted, doc_span=1000) for i in range(3)]
+
+    clean, dirty = merge_score(segs(0), False), merge_score(segs(500), False)
+    assert dirty < clean
+    assert clean == (1 / 3) * (3 * 4_000_000) ** 0.05

@@ -92,3 +92,28 @@ def test_overlapping_shards_rejected(spark, tiny_corpus_pdf, tmp_path):
     build_index(spark, b, [("b", spark.createDataFrame(tiny_corpus_pdf.iloc[50:90]))])
     with pytest.raises(ValueError, match="overlap"):
         MultiReader([IndexReader(spark, a), IndexReader(spark, b)])
+
+
+def test_overlap_after_purging_merge_rejected(spark, tiny_corpus_pdf, tmp_path):
+    """A purging merge leaves doc_count below the segment's id range
+    (doc_span): a shard whose doc_base lies inside that range overlaps
+    it, though doc_base + doc_count would say it does not."""
+    from lucene_solr_spark.indexing.builder import build_index
+    from lucene_solr_spark.indexing.deletes import delete_by_keys
+    from lucene_solr_spark.indexing.manifest import ManifestStore
+    from lucene_solr_spark.indexing.merge import force_merge
+    from lucene_solr_spark.search.executor import IndexReader, MultiReader
+
+    a = str(tmp_path / "a")
+    b = str(tmp_path / "b")
+    build_index(spark, a, [("b0", spark.createDataFrame(tiny_corpus_pdf.iloc[:50])),
+                           ("b1", spark.createDataFrame(tiny_corpus_pdf.iloc[50:90]))])
+    gone = tiny_corpus_pdf.iloc[:3][["repo", "path"]]
+    assert delete_by_keys(spark, a, spark.createDataFrame(gone)) == 3
+    force_merge(spark, a, max_segments=1)
+    seg = ManifestStore(a).load().segments[0]
+    assert (seg.doc_base, seg.doc_count, seg.doc_span) == (0, 87, 90)
+    build_index(spark, b, [("b", spark.createDataFrame(tiny_corpus_pdf.iloc[90:120]))],
+                min_doc_base=seg.doc_count)
+    with pytest.raises(ValueError, match="overlap"):
+        MultiReader([IndexReader(spark, a), IndexReader(spark, b)])

@@ -126,3 +126,50 @@ def test_lineage_records_all_operations(spark, tiny_corpus_pdf, tmp_path):
                              for p in parts)
         assert sum(p["docs"] for p in parts) == e["doc_count"]
         assert sum(p["tokens"] for p in parts) == e["sum_dl"]
+
+
+def test_delete_crash_before_commit_resumes(spark, tiny_corpus_pdf, tmp_path,
+                                            monkeypatch):
+    """A delete killed between writing its live-docs file and committing
+    the manifest publishes nothing: readers open only the file the
+    manifest names, so the orphan is never read (it is overwritten with
+    all bits set here, which would hide every doc if it were), and the
+    retried delete returns the full count."""
+    import glob
+    import os
+
+    from lucene_solr_spark.indexing import deletes
+    from lucene_solr_spark.indexing.builder import build_index
+    from lucene_solr_spark.indexing.check import check_index
+    from lucene_solr_spark.indexing.manifest import ManifestStore
+    from lucene_solr_spark.search.executor import IndexReader, Searcher
+
+    idx = str(tmp_path / "idx")
+    build_index(spark, idx, _batches(spark, tiny_corpus_pdf, 2))
+    store = ManifestStore(idx)
+    gen = store.current_generation()
+    n_hits = Searcher(IndexReader(spark, idx)).count(TermQuery(term="ident007"))
+    assert n_hits >= 2, "fixture drift"
+
+    def exploding_commit(self, m, lineage_entry=None):
+        raise RuntimeError("simulated crash before manifest commit")
+
+    real_commit = ManifestStore.commit
+    monkeypatch.setattr(ManifestStore, "commit", exploding_commit)
+    with pytest.raises(RuntimeError):
+        deletes.delete_by_terms(spark, idx, ["ident007"])
+    monkeypatch.setattr(ManifestStore, "commit", real_commit)
+
+    assert store.current_generation() == gen
+    orphans = glob.glob(os.path.join(idx, "segments", "*", "live_*.bin"))
+    assert orphans
+    for f in orphans:
+        with open(f, "r+b") as fh:
+            fh.write(b"\xff" * os.path.getsize(f))
+    reader = IndexReader(spark, idx)
+    assert not reader.has_deletes
+    assert Searcher(reader).count(TermQuery(term="ident007")) == n_hits
+
+    assert deletes.delete_by_terms(spark, idx, ["ident007"]) == n_hits
+    assert Searcher(IndexReader(spark, idx)).count(TermQuery(term="ident007")) == 0
+    assert check_index(spark, idx)["clean"]

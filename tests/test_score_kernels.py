@@ -21,6 +21,7 @@ import pytest
 
 from lucene_solr_spark import bm25
 from lucene_solr_spark.codec import split_blocks
+from lucene_solr_spark.indexing.deletes import DeadDocs, pack
 from lucene_solr_spark.queryast import (BooleanClause, BooleanQuery, Occur,
                                         PhraseQuery, SynonymQuery, TermQuery)
 from lucene_solr_spark.search.executor import (Searcher, _bm25_scores,
@@ -149,7 +150,9 @@ def test_decoded_blocks_drop_tombstoned_docs():
     pdf, want = _encoded_batch()
     # every doc of the first block, and every other doc of the last one
     dels = np.sort(np.concatenate([want[0][1], want[4][1][::2]]))
-    got = list(_decoded_blocks(pdf, positions=True, dels=dels))
+    span = int(max(w[1].max() for w in want)) + 1
+    got = list(_decoded_blocks(pdf, positions=True,
+                               dels=DeadDocs([(0, span, pack(dels, 0, span))])))
     assert [g[0] for g in got] == ["aa", "aa", "bb", "bb"]
     for g, (term, docs, tfs, norms, pos) in zip(got, want[1:]):
         live = ~np.isin(docs, dels)

@@ -83,21 +83,19 @@ def test_same_term_multiple_boosts_pruned_rank_identical(searcher):
     _assert_same(pruned, exhaustive, "dup-boost")
 
 
-def test_tombstone_cap_same_term_multiple_boosts(spark, tiny_index, tmp_path,
-                                                monkeypatch):
-    """Above WAND_MAX_TOMBSTONES the pruned search must not broadcast the
-    tombstones: it runs the exhaustive plan (same dup-boost shape, cap
-    forced below the index's tombstone count)."""
+def test_deletes_same_term_multiple_boosts(spark, tiny_index, tmp_path):
+    """On an index with deletes the pruned search (deleted docs dropped
+    in each decoded block) matches the exhaustive plan on the dup-boost
+    shape."""
     import shutil
 
     from lucene_solr_spark.indexing.deletes import delete_by_terms
     from lucene_solr_spark.search.executor import IndexReader, Searcher
 
-    idx = str(tmp_path / "cap_idx")
+    idx = str(tmp_path / "del_idx")
     shutil.copytree(tiny_index, idx)
     assert delete_by_terms(spark, idx, ["ident007"]) >= 2, "fixture drift"
     s = Searcher(IndexReader(spark, idx))
-    monkeypatch.setattr(Searcher, "WAND_MAX_TOMBSTONES", 1)
     q = BooleanQuery(clauses=(
         BooleanClause(Occur.SHOULD, TermQuery(term="class", boost=3.0)),
         BooleanClause(Occur.SHOULD, TermQuery(term="class", boost=0.25)),
@@ -105,8 +103,7 @@ def test_tombstone_cap_same_term_multiple_boosts(spark, tiny_index, tmp_path,
     ))
     exhaustive = s.search(q, k=10)
     pruned = s.search(q, k=10, prune=True)
-    assert s.last_plan == {"use_wand": False, "reason": "tombstone-cap"}
-    _assert_same(pruned, exhaustive, "dup-boost-tombstone-cap")
+    _assert_same(pruned, exhaustive, "dup-boost-deletes")
 
 
 def test_rare_prefetch_engages_and_rank_identical(searcher):
