@@ -1,8 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry`` runs the flagship top-k BM25 boolean query over the sf0.001
-``documents`` table through the engine's DataFrame-native fulltext
-surface (lucene_solr_spark/fulltext.py). ``queries``/``oracle_sql``
+``documents`` table through the engine's live fulltext surface
+(lucene_solr_spark/fulltext.py): its first call builds the temp
+segment index that every ft_* query then shares. ``queries``/``oracle_sql``
 expose the operator inventory (SURVEY.md §2) with DuckDB-checkable
 ANSI-SQL oracles (lucene_solr_spark/entry_queries.py).
 """

@@ -13,8 +13,9 @@ Sections:
     throughput metric.
   - bm25_*: top-k BM25 through the persisted segment index (float32
     Lucene-parity path, search/executor.py).
-  - ft_*: the Catalyst-native live fulltext path over the documents
-    table.
+  - ft_*: the live fulltext surface over the documents table (one
+    temp segment index, built by the first ft_* query, then the segment
+    executor in float64).
   - relational/datapipe headliners over the testdata tables.
 
 Scaling (N vs 4N cores) is measured by scaling_bench.py, which runs
@@ -239,11 +240,10 @@ def main() -> None:
     ]
     headliners += ["seg_span_near", "seg_lm_dirichlet", "seg_passage_highlight"]
     reg = entry_queries.queries()
-    # corpus stats are index-time state (ExactStatsCache): populate the
-    # cache once, untimed, so ft_* timings measure the query, not the
-    # one-time stats scan; same for the gate segment index the seg_*
-    # headliners read (building an index is the index_build metric, not
-    # a query cost)
+    # build the live index behind ft() and the gate segment index the
+    # seg_* headliners read once, untimed, so ft_* and seg_* timings
+    # measure the query (building an index is the index_build metric,
+    # not a query cost)
     entry_queries.ft(spark, SF_DIR).stats
     entry_queries._segment_index(spark, SF_DIR)
     for name in headliners:

@@ -71,7 +71,8 @@ def main() -> None:
     force_merge(spark, idx, max_segments=1)
     print("check:", check_index(spark, idx)["clean"])
 
-    # 4. live DataFrame-native surface over any table (no index build)
+    # 4. live surface over any table: builds one temp segment on first
+    #    use (no index to manage), answers with the caller's ids
     from lucene_solr_spark.fulltext import FulltextIndex
 
     live = FulltextIndex(

@@ -132,7 +132,13 @@ def standard_field_length(text: str) -> int:
     return len(standard_analyze(text))
 
 
-_SIMPLE_SPLIT_RE = re.compile(r"[^a-z0-9]+")
+# The simple chain, defined once for every engine that runs it: Python
+# (below), Catalyst (datapipe/) and the DuckDB oracles (entry_queries)
+SPLIT_PATTERN = "[^a-z0-9]+"
+# deterministic ordering for SQL IN-list reproducibility
+STOPWORDS: Tuple[str, ...] = tuple(sorted(ENGLISH_STOP_WORDS))
+
+_SIMPLE_SPLIT_RE = re.compile(SPLIT_PATTERN)
 # findall-form of the simple chain (identical token stream: the nonempty
 # runs the split produces) — used by the vectorized chamber path
 _SIMPLE_TOKEN_RE = re.compile(r"[a-z0-9]+")
@@ -354,235 +360,8 @@ def analyze_field(text: str, analyzer: str):
 
 _WS_TOKEN_RE = re.compile(r"\S+")
 
-# --- ASCII byte-level fast tokenizer -------------------------------------
-# For all-ASCII rows (the overwhelming case for source-code corpora) the
-# token stream is computed directly on the UTF-8 byte buffer of the Arrow
-# string column: byte-class lookup tables -> run flanks -> slice gather ->
-# Arrow dictionary-encode. Python string objects are created O(|batch
-# vocabulary|) instead of O(|token stream|) — duplicated tokens share one
-# object — which removes the allocator/page-fault pressure that caps
-# multi-core index-build throughput. Byte classes are built FROM the same
-# regexes the reference path uses, so parity holds by construction.
-
-_ascii_tables_cache: dict = {}
-_stop_arrow_cache: dict = {}
-
-
-def _ascii_tables():
-    if _ascii_tables_cache:
-        return _ascii_tables_cache
-    import numpy as np
-
-    W = np.zeros(256, np.bool_)        # \w
-    ISL = np.zeros(256, np.bool_)      # [^\W\d_]  (letter)
-    ISD = np.zeros(256, np.bool_)      # \d
-    NWS = np.zeros(256, np.bool_)      # \S
-    SIMPLE = np.zeros(256, np.bool_)   # [a-z0-9]
-    MIDL = np.zeros(256, np.bool_)     # ASCII subset of ['.’·]
-    MIDD = np.zeros(256, np.bool_)     # [.,;']
-    for c in range(128):
-        ch = chr(c)
-        W[c] = bool(re.match(r"\w", ch))
-        ISL[c] = bool(re.match(r"[^\W\d_]", ch))
-        ISD[c] = bool(re.match(r"\d", ch))
-        NWS[c] = bool(re.match(r"\S", ch))
-        SIMPLE[c] = bool(re.match(r"[a-z0-9]", ch))
-    for ch in "'.":
-        MIDL[ord(ch)] = True
-    for ch in ".,;'":
-        MIDD[ord(ch)] = True
-    _ascii_tables_cache.update(
-        W=W, ISL=ISL, ISD=ISD, NWS=NWS, SIMPLE=SIMPLE, MIDL=MIDL, MIDD=MIDD)
-    return _ascii_tables_cache
-
-
-# batches with more than this fraction of non-ASCII rows skip the byte
-# path entirely (the pandas path vectorizes them; per-doc fallback would
-# not) — ASCII-dominant batches send only the stragglers to fallback
-_ASCII_GATE_FRAC = 0.05
-
-
-def _ascii_fast_tokens(contents: "pd.Series", analyzer: str,
-                       with_positions: bool, prefix: str, light: bool):
-    """Byte-level tokenize an (almost-)all-ASCII batch.
-
-    Returns the vectorized_field_tokens tuple, or None when the batch
-    doesn't qualify (too many non-ASCII rows / no pyarrow).
-    """
-    import numpy as np
-    try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-    except ImportError:                                   # pragma: no cover
-        return None
-
-    ndocs = len(contents)
-    if ndocs == 0:
-        return None
-    arr = pa.array(contents, type=pa.string(), from_pandas=True)
-    if arr.null_count:
-        arr = pc.fill_null(arr, "")
-    # multi-byte codepoints make byte length exceed codepoint length
-    bad = pc.not_equal(pc.binary_length(arr), pc.utf8_length(arr))
-    nbad = int(pc.sum(bad).as_py() or 0)
-    if nbad > max(1, int(ndocs * _ASCII_GATE_FRAC)):
-        return None
-    fb: List[int] = []
-    if nbad:
-        badmask = bad.to_numpy(zero_copy_only=False)
-        fb = [int(i) for i in np.flatnonzero(badmask)]
-        arr = pc.if_else(bad, pa.scalar("", pa.string()), arr)
-    if analyzer != "whitespace":
-        arr = pc.ascii_lower(arr)
-    offs_buf = arr.buffers()[1]
-    data_buf = arr.buffers()[2]
-    offs = np.frombuffer(offs_buf, np.int32, count=ndocs + 1,
-                         offset=arr.offset * 4).astype(np.int64)
-    if offs[0] != 0:
-        return None  # sliced array — shouldn't happen on fresh batches
-    n = int(offs[-1])
-    data = (np.frombuffer(data_buf, np.uint8, count=n)
-            if data_buf is not None and n else np.empty(0, np.uint8))
-    tabs = _ascii_tables()
-
-    if n:
-        if analyzer in ("simple", "simple_stop", "porter"):
-            tok = tabs["SIMPLE"][data]
-        elif analyzer == "whitespace":
-            tok = tabs["NWS"][data]
-        else:  # standard | light stemmers: UAX#29-restricted word rule
-            isw = tabs["W"][data]
-            # mid chars (['.,;] between letters / digits) are rare:
-            # evaluate the join rule only at their positions instead of
-            # materializing 4 full-size neighbor arrays
-            midl = tabs["MIDL"][data]
-            midd = tabs["MIDD"][data]
-            cand = np.flatnonzero(midl | midd)
-            cand = cand[(cand > 0) & (cand < n - 1)]
-            tok = isw
-            if len(cand):
-                isl = tabs["ISL"]
-                isd = tabs["ISD"]
-                before = data[cand - 1]
-                after = data[cand + 1]
-                ok = ((midl[cand] & isl[before] & isl[after])
-                      | (midd[cand] & isd[before] & isd[after]))
-                join_pos = cand[ok]
-                if len(join_pos):
-                    # a mid char adjacent to a doc boundary has no
-                    # in-doc neighbor: can't join across documents
-                    bdry = offs[1:-1]
-                    bdry = bdry[(bdry > 0) & (bdry < n)]
-                    if len(bdry):
-                        drop = (np.isin(join_pos, bdry)
-                                | np.isin(join_pos + 1, bdry))
-                        join_pos = join_pos[~drop]
-                if len(join_pos):
-                    tok = isw.copy()
-                    tok[join_pos] = True
-        start = tok.copy()
-        start[1:] &= ~tok[:-1]
-        end = tok.copy()
-        end[:-1] &= ~tok[1:]
-        inner = offs[1:-1]
-        inner = inner[(inner > 0) & (inner < n)]
-        if len(inner):
-            # force a break between adjacent docs whose runs would merge
-            start[inner] |= tok[inner]
-            end[inner - 1] |= tok[inner - 1]
-        starts = np.flatnonzero(start).astype(np.int64)
-        ends = np.flatnonzero(end).astype(np.int64) + 1
-    else:
-        starts = ends = np.empty(0, np.int64)
-
-    ntok = len(starts)
-    if ntok == 0:
-        return (np.empty(0, dtype=object), np.empty(0, np.int64),
-                (np.empty(0, np.int64) if with_positions else None),
-                np.zeros(ndocs, np.int64), fb)
-    doc_of = (np.searchsorted(offs, starts, side="right") - 1).astype(np.int64)
-    counts = np.bincount(doc_of, minlength=ndocs)
-    tok_offs = np.cumsum(counts) - counts
-    pre_pos = np.arange(ntok, dtype=np.int64) - tok_offs[doc_of]
-
-    # gather token bytes into ONE contiguous buffer -> Arrow StringArray
-    # -> dictionary encode (C-level hash); distinct terms only become
-    # Python objects
-    lens_t = ends - starts
-    tot = int(lens_t.sum())
-    # int32 index math: byte offsets fit (Arrow string offsets are
-    # int32), halving the traffic of the biggest temporaries
-    base32 = (starts - (np.cumsum(lens_t) - lens_t)).astype(np.int32)
-    gather = np.arange(tot, dtype=np.int32)
-    gather += np.repeat(base32, lens_t)
-    values = data[gather]
-    toffs = np.empty(ntok + 1, np.int32)
-    toffs[0] = 0
-    np.cumsum(lens_t, out=toffs[1:])
-    tok_arr = pa.Array.from_buffers(
-        pa.string(), ntok,
-        [None, pa.py_buffer(toffs.tobytes()), pa.py_buffer(values.tobytes())])
-    denc = tok_arr.dictionary_encode()
-    codes = denc.indices.to_numpy().astype(np.int64)
-    vocab = denc.dictionary
-
-    nv = len(vocab)
-    vkeep = np.ones(nv, np.bool_)
-    if analyzer == "english":
-        # EnglishAnalyzer chain at VOCAB level: maxlen on the raw token,
-        # possessive strip, then stop + empty on the stripped form, then
-        # Porter stem (EnglishAnalyzer.java:110-119)
-        from .stem import porter_stem, strip_possessive
-
-        vkeep &= pc.binary_length(vocab).to_numpy() <= MAX_TOKEN_LENGTH
-        stripped = [strip_possessive(w) for w in vocab.to_pylist()]
-        vkeep &= np.fromiter(
-            (bool(s) and s not in ENGLISH_STOP_WORDS for s in stripped),
-            np.bool_, count=nv)
-        vwords = [porter_stem(s) if k else s
-                  for s, k in zip(stripped, vkeep)]
-    else:
-        if analyzer in ("standard", "simple_stop"):
-            stop_arr = _stop_arrow_cache.get("stop")
-            if stop_arr is None:
-                stop_arr = pa.array(sorted(ENGLISH_STOP_WORDS),
-                                    type=pa.string())
-                _stop_arrow_cache["stop"] = stop_arr
-            vkeep &= ~pc.is_in(vocab, value_set=stop_arr).to_numpy(
-                zero_copy_only=False)
-        if analyzer == "standard" or light:
-            vkeep &= pc.binary_length(vocab).to_numpy() <= MAX_TOKEN_LENGTH
-        vwords = vocab.to_pylist()
-        if analyzer == "porter" or light:
-            from .stem import LIGHT_STEMMERS, porter_stem
-
-            stem = (porter_stem if analyzer == "porter"
-                    else LIGHT_STEMMERS[analyzer])
-            vwords = [stem(w) for w in vwords]
-    if prefix:
-        vwords = [prefix + w for w in vwords]
-    vobj = np.array(vwords, dtype=object)
-
-    keep = vkeep[codes]
-    out_terms = vobj[codes[keep]]
-    kept_doc = doc_of[keep]
-    lengths = np.bincount(kept_doc, minlength=ndocs).astype(np.int64)
-    pos = None
-    if with_positions:
-        if analyzer in ("standard", "english") or light:
-            # pre-filter positions: stop/overlong leave gaps
-            pos = pre_pos[keep]
-        else:
-            # simple chains: positions compacted POST-filter
-            koffs = np.cumsum(lengths) - lengths
-            pos = (np.arange(len(kept_doc), dtype=np.int64)
-                   - koffs[kept_doc])
-    return out_terms, kept_doc, pos, lengths, fb
-
-
 def vectorized_field_tokens(contents: "pd.Series", analyzer: str,
-                            with_positions: bool, prefix: str = "",
-                            ascii_fast: bool = True):
+                            with_positions: bool, prefix: str = ""):
     """Tokenize a batch of field values under a named analyzer.
 
     Returns (flat_terms, doc_idx, positions, lengths, fallback):
@@ -624,11 +403,6 @@ def vectorized_field_tokens(contents: "pd.Series", analyzer: str,
             (np.empty(0, dtype=np.int64) if with_positions else None),
             np.zeros(ndocs, dtype=np.int64), list(range(ndocs)),
         )
-    if ascii_fast:
-        fast = _ascii_fast_tokens(contents, analyzer, with_positions,
-                                  prefix, light)
-        if fast is not None:
-            return fast
     if analyzer in ("standard", "english") or light:
         # docs whose lower() changes string length (rare Unicode) fall
         # back to the reference per-doc path for parity; the light

@@ -19,7 +19,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..fulltext import SPLIT_PATTERN
+from ..analysis import SPLIT_PATTERN
 
 SIMHASH_BITS = 60  # 15 hex chars of md5 -> fits a signed BIGINT
 

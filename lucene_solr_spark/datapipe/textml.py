@@ -28,7 +28,7 @@ from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..fulltext import SPLIT_PATTERN
+from ..analysis import SPLIT_PATTERN
 
 
 def doc_features(df: DataFrame, feature_terms: Sequence[str],

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..fulltext import SPLIT_PATTERN, STOPWORDS
+from ..analysis import SPLIT_PATTERN, STOPWORDS
 from .dedup import tokens_array
 
 # tiny per-language stopword sets for the n-gram/stopword-ratio

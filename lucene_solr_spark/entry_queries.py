@@ -1,7 +1,8 @@
 """Driver-contract query registry: name -> (spark_fn, oracle_sql).
 
 Each entry implements one operator from SURVEY.md §2 as an idiomatic
-Spark DataFrame plan (see fulltext.py for the fulltext surface) and an
+Spark DataFrame plan (the ft_* fulltext entries through fulltext.py's
+FulltextIndex, a live index over the segment engine) and an
 ANSI-SQL oracle that DuckDB runs over the same parquet tables. The
 driver compares row-count + schema + order-insensitive value hashes, so
 every computed column is aliased identically on both sides, floats are
@@ -21,7 +22,8 @@ from typing import Callable, Dict, Optional, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .fulltext import STOPWORDS, FulltextIndex
+from .analysis import STOPWORDS
+from .fulltext import FulltextIndex
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -55,22 +57,20 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-_FT_STATS_CACHE: dict = {}
+_FT_CACHE: Dict[tuple, FulltextIndex] = {}
 
 
-def ft(spark: SparkSession, sf_dir: str) -> FulltextIndex:
-    """Live fulltext index over `documents`. Corpus stats (docCount,
-    sumTotalTermFreq) are cached per dataset fingerprint — they cost a
-    full tokenize scan, are identical for every query, and the
-    fingerprint (file sizes+mtimes) invalidates on data change; this is
-    the ExactStatsCache being an actual cache."""
-    idx = FulltextIndex(load(spark, sf_dir, "documents"))
-    key = (sf_dir, _gate_fingerprint(sf_dir))
-    st = _FT_STATS_CACHE.get(key)
-    if st is None:
-        _FT_STATS_CACHE[key] = st = idx.stats
-    else:
-        idx._stats = st
+def ft(spark: SparkSession, sf_dir: str, stop: bool = True) -> FulltextIndex:
+    """Live fulltext index over `documents`, one per dataset fingerprint
+    (file sizes + mtimes) and stop flag: the ft_* entries share one
+    segment build, made by the first query, and changed data or a new
+    Spark session gets a fresh one."""
+    key = (sf_dir, _gate_fingerprint(sf_dir), stop)
+    idx = _FT_CACHE.get(key)
+    if idx is None or idx.df.sparkSession is not spark:
+        if idx is not None:
+            idx.close()
+        _FT_CACHE[key] = idx = FulltextIndex(load(spark, sf_dir, "documents"), stop=stop)
     return idx
 
 
@@ -121,8 +121,8 @@ stats AS (
            / (SELECT count(*) FROM documents) AS avgdl
 )"""
 
-# BM25 with df computed per term; mirrors fulltext.bm25_expr operation
-# order exactly: idf * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75*dl/avgdl))
+# BM25 with df computed per term; mirrors similarities.bm25_score's
+# operation order exactly: idf * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75*dl/avgdl))
 _SCORED_CTE = """
 dfs AS (
   SELECT term, count(*) AS df FROM post GROUP BY term
@@ -2626,9 +2626,10 @@ def set_intersect_except(spark, sf_dir):
 # cached in /tmp) a real persisted segment index over `documents` with
 # the SQL-replicable simple_stop analyzer + exact norms, query it
 # through search/executor.py in float64, and compare against the same
-# BM25 SQL the live path uses. This puts the codec, manifest, chamber
-# build and executor — not just the Catalyst surface — under the
-# DuckDB oracle.
+# BM25 SQL as the ft_* twins. This puts the codec, manifest, chamber
+# build and executor under the DuckDB oracle with the index paths
+# spelled out; the ft_* entries reach the same engine through
+# FulltextIndex.
 # ---------------------------------------------------------------------------
 
 import hashlib as _hl  # noqa: E402
@@ -2653,15 +2654,10 @@ def _gate_fingerprint(sf_dir: str) -> str:
 
 
 def _gate_corpus(spark, sf_dir: str):
-    docs = load(spark, sf_dir, "documents")
-    # (repo, path) order == doc_id order => engine doc_id == source doc_id
-    return docs.select(
-        F.lit("docs").alias("repo"),
-        F.format_string("%09d", F.col("doc_id")).alias("path"),
-        F.lit("c0").alias("commit"),
-        F.col("lang"),
-        F.col("text").alias("content"),
-    )
+    from .indexing.docids import keyed_corpus
+
+    # source doc_ids are 0..N-1, so engine doc_id == source doc_id
+    return keyed_corpus(load(spark, sf_dir, "documents"))
 
 
 def _build_gate_index(spark, sf_dir: str, tag: str, **build_kwargs) -> str:
@@ -2672,8 +2668,9 @@ def _build_gate_index(spark, sf_dir: str, tag: str, **build_kwargs) -> str:
     from .indexing.builder import build_index
     from .indexing.manifest import IndexFormatError, ManifestStore
 
+    # "ids-u64": paths are docids.id_key keys, not 9-digit ids
     key = _hl.md5(
-        f"{sf_dir}|{tag}|{_gate_fingerprint(sf_dir)}".encode()
+        f"{sf_dir}|{tag}|ids-u64|{_gate_fingerprint(sf_dir)}".encode()
     ).hexdigest()[:10]
     idx = f"/tmp/lss_gate_index_{key}"
     n = load(spark, sf_dir, "documents").count()
@@ -2739,6 +2736,7 @@ def seg_sorted_head(spark, sf_dir):
     ascend in (lang, path) order and sorted_head answers the sorted
     top-10 from pushed-down doc_id range predicates — parquet stats
     prune every row group past the head, no Sort over the table."""
+    from .indexing.docids import id_of_key
     from .search.executor import IndexReader
 
     idx = _build_gate_index(spark, sf_dir, "sorted_v1",
@@ -2746,7 +2744,7 @@ def seg_sorted_head(spark, sf_dir):
                             index_sort=["lang", "path"])
     r = IndexReader(spark, idx)
     return r.sorted_head(10).select(
-        "lang", F.col("path").cast("long").alias("doc_id"))
+        "lang", id_of_key(F.col("path")).alias("doc_id"))
 
 
 @register("seg_term_bm25", _ft_sql("""
@@ -3997,10 +3995,9 @@ def ft_stemmed_term(spark, sf_dir):
     from pyspark.sql.functions import pandas_udf
 
     from .stem import porter_stem
-    from . import fulltext as ftx
 
-    docs = load(spark, sf_dir, "documents")
-    toks = ftx.tokens(docs, stop=False)
+    idx = ft(spark, sf_dir, stop=False)
+    toks = idx.toks
     suf = F.array(*[F.lit(s) for s in _STEM_SUFFIXES])
     variants = toks.select(
         "doc_id",
@@ -4021,7 +4018,8 @@ def ft_stemmed_term(spark, sf_dir):
     )
     post = stemmed.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dl = stemmed.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    n_docs, total_toks = docs.count(), stemmed.count()
+    # stemming maps token to token: the counts are the index's own
+    n_docs, total_toks = idx.stats.doc_count, idx.stats.total_tokens
     avgdl = total_toks / n_docs
     qstem = porter_stem("tables")
     import math
@@ -4157,11 +4155,9 @@ def ft_light_stemmers(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql.functions import pandas_udf
 
-    from . import fulltext as ftx
     from .stem import LIGHT_STEMMERS
 
-    docs = load(spark, sf_dir, "documents")
-    toks = ftx.tokens(docs, stop=False)
+    toks = ft(spark, sf_dir, stop=False).toks
     suf = F.array(*[F.lit(s) for s in _LIGHT_SUFFIXES])
     vcounts = (
         toks.select(
@@ -4354,9 +4350,9 @@ def ft_fuzzy_scored(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # Spans, sloppy phrases, pluggable similarities and passage scoring over
-# the PERSISTED SEGMENT INDEX — the 100-TB scale path answers the same
-# queries as the live FulltextIndex, checked against the SAME DuckDB
-# oracles as the live twins (the SQL string is shared by reference).
+# the PERSISTED SEGMENT INDEX — the Searcher calls the ft_* twins make
+# through FulltextIndex, on the gate index, checked against the SAME
+# DuckDB oracles as the live twins (the SQL string is shared by reference).
 # Blocks already persist positions and norms; these run block decode +
 # the shared expressions (similarities.py / spanmatch.py).
 # ---------------------------------------------------------------------------
@@ -4790,28 +4786,16 @@ def ft_more_like_this(spark, sf_dir):
         .groupBy("term").agg(F.first("tf").alias("tf"))
         .collect()
     )
-    dfs = _ft_term_dfs(idx, [r["term"] for r in rows])
+    dfs = idx.searcher.reader.term_stats([r["term"] for r in rows])
     weighted = sorted(
-        ((r["tf"] * st.idf(dfs[r["term"]]), r["term"]) for r in rows),
+        ((r["tf"] * st.idf(dfs[r["term"]][0]), r["term"]) for r in rows),
         key=lambda x: (-x[0], x[1]),
     )
     terms = [t for _, t in weighted[:5]]
-    sc = idx.scored_postings(terms)
-    agg = (
-        sc.where(F.col("doc_id") != src_doc)
-        .groupBy("doc_id").agg(F.sum("score").alias("score"))
-    )
-    return (
-        agg.select("doc_id", F.round("score", 6).alias("score"))
-        .orderBy(F.desc(F.round("score", 6)), F.asc("doc_id"))
-        .limit(10)
-    )
-
-
-def _ft_term_dfs(idx, terms):
-    from .fulltext import term_dfs
-
-    return term_dfs(idx.post, terms)
+    # the source doc is at most one of the OR's top 11
+    return (ft(spark, sf_dir).boolean_or(terms, k=11)
+            .where(F.col("doc_id") != src_doc)
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(10))
 
 
 @register("func_ord_linear", """
@@ -5580,7 +5564,7 @@ def func_math_tail(spark, sf_dir):
 # Driver-gate ordering: the correctness driver hard-checks the FIRST 50
 # registry entries vs DuckDB. Promote ten persisted-segment-index entries
 # (the declared 100-TB scale path: codec decode, manifest, chamber build,
-# executor — not just the Catalyst live path) into that window, displacing
+# executor, on the explicitly built gate indexes) into that window, displacing
 # live-path rows whose plan shapes are already covered by a sibling in the
 # head (e.g. ft_term_facet ~ facet_field, join_left/semi/anti ~ join_inner).
 # Every entry stays registered — displaced rows are still verified by the

@@ -1,1022 +1,296 @@
-"""DataFrame-native fulltext query surface (the "live" search path).
+"""Live fulltext surface: query a corpus DataFrame as an index — the
+MemoryIndex analog (memory/MemoryIndex.java), one engine for live and
+disk data. FulltextIndex(df, text_col, id_col, stop) builds, on first
+use, one segment of df in a temp directory (analyzer simple_stop, or
+simple with stop=False; exact norms; stored content) and delegates to
+search/executor.py: its float64 Searcher (the SQL oracles' precision)
+and IndexReader. close() or garbage collection removes the directory.
 
-This is the engine's second query path, next to the segment-index path
-in ``search/executor.py``: instead of reading persisted postings
-segments, it derives postings from a corpus DataFrame on the fly with
-PURE Catalyst expressions (split / filter / posexplode / groupBy) — no
-Python UDFs anywhere — and scores BM25 in float64 with the exact same
-formula constants as ``bm25.py`` (k1=1.2, b=0.75, Lucene's idf:
-BM25Similarity.java:72-74).
-
-Reference lifecycle mapping (SURVEY §3.1):
-  weight creation / global stats -> one driver-side agg (docCount,
-      avgdl, per-term df), embedded as literals = Lucene's
-      TermQuery.createWeight + ExactStatsCache (stats are GLOBAL)
-  per-leaf scoring               -> whole-stage-codegen score column
-  boolean composition            -> ONE hash aggregation per node
-      (Boolean2ScorerSupplier occur buckets)
-  collector                      -> orderBy(score desc, doc_id asc)
-      .limit(k) == TakeOrderedAndProject (per-partition top-k heaps +
-      driver merge, TopDocs.merge analog)
-
-Every function here is replicated 1:1 by an ANSI-SQL oracle in
-``entry_queries.py`` (DuckDB), which is the driver's correctness gate.
-The float32 rank-identity path vs the pandas Lucene oracle lives in
-``search/executor.py`` and is covered by pytest.
-
-Scale notes (100 TB corpus):
-  - tokenization is a JVM split inside WholeStageCodegen: no Arrow
-    transfer, no Python workers; scales linearly with input splits.
-  - the tokens/postings frames are never materialized driver-side;
-    stats collection pulls back O(|query terms|) rows only.
-  - groupBy(doc_id, term) is a partial+final hash agg (map-side
-    combine), the same two-level pattern the segment builder uses.
-  - at real scale you persist the postings (indexing/builder.py) and
-    query those; this path is the MemoryIndex / fresh-segment analog
-    and shares scoring semantics bit-for-bit in float64.
+Doc ids: the build keys docs by the caller's id (docids.keyed_corpus),
+so an engine id is the rank of the caller's id. Results carry the
+caller's ids: engine ids as they are when those are the dense range
+[0, N), else mapped back through the doc metadata.
 """
 
 from __future__ import annotations
 
-import math
-from typing import Dict, List, Optional, Sequence, Tuple
+import shutil
+import tempfile
+import weakref
+from typing import NamedTuple, Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from .analysis import ENGLISH_STOP_WORDS
-
-K1 = 1.2
-B = 0.75
-
-# deterministic ordering for SQL IN-list reproducibility
-STOPWORDS: Tuple[str, ...] = tuple(sorted(ENGLISH_STOP_WORDS))
-
-SPLIT_PATTERN = "[^a-z0-9]+"
+from . import similarities as sims
+from .indexing.docids import id_of_key, keyed_corpus, keys_are_dense
+from .queryast import (BooleanClause, BooleanQuery, DisjunctionMaxQuery,
+                       MultiTermQuery, Occur, PhraseQuery, SynonymQuery,
+                       TermInSetQuery, TermQuery)
 
 
-def token_array(text_col: Column, stop: bool = True) -> Column:
-    """array<string> of analyzed terms: lowercase -> split -> drop empty
-    -> (optional) stop filter. Pure Catalyst higher-order functions.
+class CorpusStats(NamedTuple):
+    """Global collection statistics (docCount, sumTotalTermFreq)."""
 
-    Analyzer = the engine's "simple" chain (analysis.py:99-104); the
-    Lucene StandardAnalyzer-parity chain is the pandas-UDF path in
-    analysis.make_analyze_udf (used by the segment builder)."""
-    arr = F.filter(F.split(F.lower(text_col), SPLIT_PATTERN), lambda x: x != F.lit(""))
-    if stop:
-        arr = F.filter(arr, lambda x: ~x.isin(*STOPWORDS))
-    return arr
-
-
-def tokens(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-           stop: bool = True) -> DataFrame:
-    """(doc_id, term, pos): pos is 1-based over the POST-filter stream
-    (matches the SQL oracle's list_transform indexing)."""
-    # posexplode_outer + post-filter, not posexplode: an inner generate
-    # makes the optimizer infer `size(token_array(text)) > 0` and push
-    # it below the projection, inlining a SECOND full tokenize per row
-    # into the filter (InferFiltersFromGenerate); the outer generate
-    # keeps one tokenize and drops empty docs on the generated column
-    return (df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode_outer(token_array(F.col(text_col), stop))
-        .alias("pos0", "term"),
-    ).where(F.col("pos0").isNotNull())
-     .select("doc_id", "term", (F.col("pos0") + 1).alias("pos")))
-
-
-def doc_lengths(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                stop: bool = True) -> DataFrame:
-    """(doc_id, dl): BM25 field length = #tokens after the stop filter
-    (DefaultIndexingChain.java:816-829). Zero-token docs keep dl=0."""
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(token_array(F.col(text_col), stop)).alias("dl"),
-    )
-
-
-def postings(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-             stop: bool = True) -> DataFrame:
-    """(doc_id, term, tf) — the uncompressed postings relation.
-    partial+final hash agg; one shuffle on (doc_id, term)."""
-    return (
-        tokens(df, text_col, id_col, stop)
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-
-
-class CorpusStats:
-    """Global collection statistics — the ExactStatsCache analog
-    (solr/core/.../search/stats/ExactStatsCache.java): computed once,
-    cluster-exact, embedded into the plan as literals."""
-
-    def __init__(self, doc_count: int, total_tokens: int):
-        self.doc_count = doc_count
-        self.total_tokens = total_tokens
+    doc_count: int
+    total_tokens: int
 
     @property
     def avgdl(self) -> float:
         return self.total_tokens / self.doc_count if self.doc_count else 0.0
 
     def idf(self, df: int) -> float:
-        """ln(1 + (N - df + 0.5)/(df + 0.5)) — BM25Similarity.java:72-74."""
-        return math.log(1.0 + (self.doc_count - df + 0.5) / (df + 0.5))
+        return sims.idf_bm25(df, self.doc_count)
 
 
-def corpus_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                 stop: bool = True) -> CorpusStats:
-    row = (
-        doc_lengths(df, text_col, id_col, stop)
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tt"))
-        .collect()[0]
-    )
-    return CorpusStats(int(row["n"]), int(row["tt"] or 0))
-
-
-def term_dfs(post: DataFrame, terms: Sequence[str]) -> Dict[str, int]:
-    """df per query term: tiny driver-side collect (|terms| rows) —
-    weight-creation stats (TermQuery.java:65-66)."""
-    rows = (
-        post.where(F.col("term").isin(list(terms)))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .collect()
-    )
-    out = {t: 0 for t in terms}
-    out.update({r["term"]: int(r["df"]) for r in rows})
-    return out
-
-
-def term_ttfs(toks: DataFrame, terms: Sequence[str]) -> Dict[str, int]:
-    """totalTermFreq per query term (LM similarities need it); tiny
-    driver-side collect like term_dfs."""
-    rows = (
-        toks.where(F.col("term").isin(list(terms)))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("ttf"))
-        .collect()
-    )
-    out = {t: 0 for t in terms}
-    out.update({r["term"]: int(r["ttf"]) for r in rows})
-    return out
-
-
-def bm25_expr(tf: Column, dl: Column, idf: float, avgdl: float,
-              boost: float = 1.0) -> Column:
-    """float64 BM25 score column; all constants folded as literals so
-    the whole expression stays inside WholeStageCodegen."""
-    tf_d = tf.cast("double")
-    dl_d = dl.cast("double")
-    denom = tf_d + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * dl_d / F.lit(avgdl))
-    return F.lit(boost * idf) * (tf_d * F.lit(K1 + 1.0)) / denom
-
-
-class FulltextIndex:
-    """On-the-fly index over a corpus DataFrame: postings + doc lengths
-    + global stats, shared by all query operators below."""
-
-    def __init__(self, df: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", stop: bool = True):
-        self.df = df
-        self.text_col = text_col
-        self.id_col = id_col
-        self.stop = stop
-        self._stats: Optional[CorpusStats] = None
-
-    @property
-    def post(self) -> DataFrame:
-        return postings(self.df, self.text_col, self.id_col, self.stop)
-
-    @property
-    def dl(self) -> DataFrame:
-        return doc_lengths(self.df, self.text_col, self.id_col, self.stop)
-
-    @property
-    def toks(self) -> DataFrame:
-        return tokens(self.df, self.text_col, self.id_col, self.stop)
-
-    @property
-    def stats(self) -> CorpusStats:
-        if self._stats is None:
-            self._stats = corpus_stats(self.df, self.text_col, self.id_col, self.stop)
-        return self._stats
-
-    # ------------------------------------------------------------------
-    # scoring primitives
-    # ------------------------------------------------------------------
-
-    def scored_postings(self, terms: Sequence[str],
-                        boosts: Optional[Dict[str, float]] = None) -> DataFrame:
-        """(doc_id, term, score): per-term BM25 over the query terms in
-        ONE corpus scan: dl rides along the explode (no dl join), tf is
-        the (doc, term) hash agg, df is a window count per term, and
-        idf = ln(1 + (N - df + 0.5)/(df + 0.5)) is computed JVM-side —
-        the same IEEE double ops the SQL oracle runs. Only the global
-        (N, avgdl) literals come from the driver (stats pass)."""
-        from pyspark.sql import Window
-
-        st = self.stats
-        boosts = boosts or {}
-        # materialize the token array once, outer-explode from the
-        # column: size()+explode() of the raw expression plus the
-        # optimizer's inferred size()>0 filter cost THREE tokenize
-        # passes per row (no CSE across the generate boundary)
-        arr_df = self.df.select(
-            F.col(self.id_col).alias("doc_id"),
-            token_array(F.col(self.text_col), self.stop).alias("arr"),
-        )
-        base = (
-            arr_df.select(
-                "doc_id",
-                F.size("arr").alias("dl"),
-                F.explode_outer("arr").alias("term"),
-            )
-            .where(F.col("term").isin(list(terms)))
-        )
-        post = base.groupBy("doc_id", "term").agg(
-            F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl")
-        )
-        df_col = F.count(F.lit(1)).over(Window.partitionBy("term"))
-        idf = F.log(
-            F.lit(1.0)
-            + (F.lit(float(st.doc_count)) - df_col + F.lit(0.5)) / (df_col + F.lit(0.5))
-        )
-        boost_col: Column = F.lit(1.0)
-        for t, b in boosts.items():
-            boost_col = F.when(F.col("term") == t, F.lit(float(b))).otherwise(boost_col)
-        tf_d = F.col("tf").cast("double")
-        denom = tf_d + F.lit(K1) * (
-            F.lit(1.0 - B) + F.lit(B) * F.col("dl").cast("double") / F.lit(st.avgdl)
-        )
-        score = (boost_col * idf) * (tf_d * F.lit(K1 + 1.0)) / denom
-        return post.select("doc_id", "term", score.alias("score"))
-
-    # ------------------------------------------------------------------
-    # query operators (each mirrors a SURVEY §2.4/2.5 reference operator)
-    # ------------------------------------------------------------------
-
-    def term_query(self, term: str, k: int = 10) -> DataFrame:
-        """TermQuery + TopScoreDocCollector (TermQuery.java:41;
-        TopScoreDocCollector.java:50-87). Tie-break doc_id asc."""
-        sc = self.scored_postings([term]).select("doc_id", "score")
-        return _topk(sc, k)
-
-    def boolean_and(self, terms: Sequence[str], k: int = 10) -> DataFrame:
-        """Conjunction (ConjunctionDISI leapfrog -> count-intersection
-        hash agg: ONE shuffle for n terms; SURVEY §2.5)."""
-        sc = self.scored_postings(terms)
-        agg = sc.groupBy("doc_id").agg(
-            F.sum("score").alias("score"), F.count(F.lit(1)).alias("nm")
-        )
-        return _topk(agg.where(F.col("nm") == len(terms)).select("doc_id", "score"), k)
-
-    def boolean_or(self, terms: Sequence[str], k: int = 10,
-                   min_should_match: int = 1) -> DataFrame:
-        """Disjunction (DisjunctionSumScorer / MinShouldMatchSumScorer:
-        union + group-sum + match-count filter)."""
-        sc = self.scored_postings(terms)
-        agg = sc.groupBy("doc_id").agg(
-            F.sum("score").alias("score"), F.count(F.lit(1)).alias("nm")
-        )
-        return _topk(agg.where(F.col("nm") >= min_should_match).select("doc_id", "score"), k)
-
-    def ltr_rerank(self, terms: Sequence[str], k: int = 10,
-                   first_k: int = 100,
-                   weights: Sequence[float] = (0.6, 0.4, -0.002),
-                   bias: float = 0.1) -> DataFrame:
-        """Learning-to-rank re-ranking (contrib/ltr
-        LTRRescorer.java:60-131 rescore-the-top-k window +
-        model/LinearModel.java:80 dot-product scoring): a first-pass
-        BM25 disjunction retrieves `first_k` candidates; three features
-        are extracted for the CANDIDATES ONLY (first-pass BM25 sum,
-        matched-query-term count, document length — the
-        OriginalScoreFeature / SolrFeature / FieldLengthFeature
-        analogs); a fixed linear model re-scores and re-sorts.
-
-        Scale shape: the expensive retrieval is the normal top-k path;
-        feature extraction and model scoring touch first_k rows (the
-        candidate set broadcast into the dl join), exactly the
-        reference's rescore-window contract — model cost never scales
-        with corpus size."""
-        sc = self.scored_postings(terms)
-        agg = sc.groupBy("doc_id").agg(
-            F.sum("score").alias("f_bm25"),
-            F.count(F.lit(1)).alias("f_matched"),
-        )
-        cand = (
-            agg.orderBy(F.desc(F.round(F.col("f_bm25"), 6)), F.asc("doc_id"))
-            .limit(first_k)
-        )
-        dl = doc_lengths(self.df, self.text_col, self.id_col, self.stop)
-        feats = F.broadcast(cand).join(dl, "doc_id")
-        w0, w1, w2 = (float(w) for w in weights)
-        ltr = (F.lit(w0) * F.col("f_bm25")
-               + F.lit(w1) * F.col("f_matched")
-               + F.lit(w2) * F.col("dl") + F.lit(float(bias)))
-        return (
-            feats.select(
-                "doc_id",
-                F.round(ltr, 6).alias("ltr_score"),
-                F.round(F.col("f_bm25"), 6).alias("f_bm25"),
-                F.col("f_matched").cast("bigint").alias("f_matched"),
-                F.col("dl").cast("bigint").alias("f_dl"),
-            )
-            .orderBy(F.desc("ltr_score"), F.asc("doc_id"))
-            .limit(k)
-        )
-
-    def boolean_not(self, must: Sequence[str], must_not: Sequence[str],
-                    k: int = 10) -> DataFrame:
-        """MUST + MUST_NOT (ReqExclScorer -> left_anti join)."""
-        pos = self.scored_postings(must)
-        agg = pos.groupBy("doc_id").agg(
-            F.sum("score").alias("score"), F.count(F.lit(1)).alias("nm")
-        ).where(F.col("nm") == len(must))
-        excl = self.post.where(F.col("term").isin(list(must_not))).select("doc_id").distinct()
-        return _topk(agg.join(excl, "doc_id", "left_anti").select("doc_id", "score"), k)
-
-    def boolean_filter(self, scoring: Sequence[str], filter_terms: Sequence[str],
-                       k: int = 10) -> DataFrame:
-        """SHOULD + FILTER clause (Occur.FILTER: match w/o score ->
-        left_semi join; Boolean2ScorerSupplier.java:120-152)."""
-        sc = self.scored_postings(scoring)
-        agg = sc.groupBy("doc_id").agg(F.sum("score").alias("score"))
-        filt = self.post.where(F.col("term").isin(list(filter_terms))).select("doc_id").distinct()
-        return _topk(agg.join(filt, "doc_id", "left_semi").select("doc_id", "score"), k)
-
-    def dismax(self, terms: Sequence[str], tie_breaker: float = 0.1,
-               k: int = 10) -> DataFrame:
-        """DisjunctionMaxQuery: max + tb*(sum-max) (DisjunctionMaxQuery.java:47)."""
-        sc = self.scored_postings(terms)
-        agg = sc.groupBy("doc_id").agg(
-            F.max("score").alias("mx"), F.sum("score").alias("sm")
-        )
-        score = F.col("mx") + F.lit(tie_breaker) * (F.col("sm") - F.col("mx"))
-        return _topk(agg.select("doc_id", score.alias("score")), k)
-
-    def synonym_query(self, terms: Sequence[str], k: int = 10) -> DataFrame:
-        """SynonymQuery: summed tf per doc, blended df = max over terms
-        (SynonymQuery.java:47)."""
-        st = self.stats
-        dfs = term_dfs(self.post, terms)
-        df_blend = max(dfs.values(), default=0)
-        merged = (
-            self.post.where(F.col("term").isin(list(terms)))
-            .groupBy("doc_id").agg(F.sum("tf").alias("tf"))
-            .join(self.dl, "doc_id")
-        )
-        sc = merged.select(
-            "doc_id",
-            bm25_expr(F.col("tf"), F.col("dl"), st.idf(df_blend), st.avgdl).alias("score"),
-        )
-        return _topk(sc, k)
-
-    def term_in_set(self, terms: Sequence[str]) -> DataFrame:
-        """TermInSetQuery: constant-score any-of-N match
-        (TermInSetQuery.java:68). Returns matching doc_ids."""
-        return (
-            self.post.where(F.col("term").isin(list(terms)))
-            .select("doc_id").distinct()
-        )
-
-    def prefix_terms(self, prefix: str) -> DataFrame:
-        """PrefixQuery term expansion against the term dictionary
-        (PrefixQuery.java:31 + BlockTree intersect): distinct terms with
-        df, pushdown on the term column."""
-        return (
-            self.post.where(F.col("term").startswith(prefix))
-            .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        )
-
-    def wildcard_match(self, like_pattern: str) -> DataFrame:
-        """WildcardQuery via CONSTANT_SCORE rewrite -> doc set
-        (WildcardQuery.java:42; MultiTermQuery.java:68)."""
-        return (
-            self.post.where(F.col("term").like(like_pattern))
-            .select("doc_id").distinct()
-        )
-
-    def fuzzy_terms(self, term: str, max_edits: int = 1) -> DataFrame:
-        """FuzzyQuery expansion: Levenshtein <= n over the (small)
-        distinct-terms dictionary (FuzzyQuery.java:53)."""
-        dic = self.post.select("term").distinct()
-        return dic.where(
-            (F.length("term") >= len(term) - max_edits)
-            & (F.length("term") <= len(term) + max_edits)
-            & (F.levenshtein(F.col("term"), F.lit(term)) <= max_edits)
-        )
-
-    def term_range(self, lo: str, hi: str, k: int = 10) -> DataFrame:
-        """TermRangeQuery [lo, hi] -> constant-score doc set with match
-        count (TermRangeQuery.java:37)."""
-        return (
-            self.post.where(F.col("term").between(lo, hi))
-            .groupBy("doc_id").agg(F.count(F.lit(1)).alias("nterms"))
-        )
-
-    def phrase_query(self, terms: Sequence[str], k: int = 10) -> DataFrame:
-        """Exact phrase (slop=0, PhraseQuery.java:68): self-join of the
-        position stream on (doc_id, pos+i) — phrase tf = #occurrences,
-        scored like a term with idf = sum of per-term idfs
-        (BM25Similarity idfExplain sum)."""
-        st = self.stats
-        dfs = term_dfs(self.post, terms)
-        idf_sum = sum(st.idf(dfs[t]) for t in terms)
-        t0 = self.toks.where(F.col("term") == terms[0]).select("doc_id", "pos")
-        cur = t0
-        for i, t in enumerate(terms[1:], start=1):
-            ti = self.toks.where(F.col("term") == t).select(
-                F.col("doc_id").alias("d2"), (F.col("pos") - i).alias("p2")
-            )
-            cur = cur.join(
-                ti,
-                (cur["doc_id"] == ti["d2"]) & (cur["pos"] == ti["p2"]),
-                "inner",
-            ).select(cur["doc_id"], cur["pos"])
-        freq = cur.groupBy("doc_id").agg(F.count(F.lit(1)).alias("tf"))
-        sc = freq.join(self.dl, "doc_id").select(
-            "doc_id", bm25_expr(F.col("tf"), F.col("dl"), idf_sum, st.avgdl).alias("score")
-        )
-        return _topk(sc, k)
-
-    def total_hits(self, terms: Sequence[str], mode: str = "or") -> DataFrame:
-        """TotalHitCountCollector: match count without scoring."""
-        sc = self.post.where(F.col("term").isin(list(terms)))
-        g = sc.groupBy("doc_id").agg(F.count(F.lit(1)).alias("nm"))
-        if mode == "and":
-            g = g.where(F.col("nm") == len(terms))
-        return g.agg(F.count(F.lit(1)).alias("total_hits"))
-
-    def search_after(self, term: str, after_score: float, after_doc: int,
-                     k: int = 10) -> DataFrame:
-        """searchAfter paging cursor (IndexSearcher.java:419): strictly
-        after (score, doc_id) in (score desc, doc_id asc) order.
-        Cursor compares on the ROUNDED score so engine and oracle agree."""
-        sc = self.scored_postings([term]).select(
-            "doc_id", F.round(F.col("score"), 6).alias("score")
-        )
-        cond = (F.col("score") < after_score) | (
-            (F.col("score") == after_score) & (F.col("doc_id") > after_doc)
-        )
-        return (
-            sc.where(cond)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .select("doc_id", "score")
-        )
-
-    def _term_tf_dl(self, term: str) -> DataFrame:
-        """(doc_id, tf, dl) for one term — the per-doc statistics every
-        SimilarityBase.score(freq, norm) expression consumes."""
-        return self.post.where(F.col("term") == term).join(self.dl, "doc_id")
-
-    def _empty_scored(self) -> DataFrame:
-        return self.df.sparkSession.createDataFrame([], "doc_id long, score double")
-
-    def classic_term_query(self, term: str, k: int = 10) -> DataFrame:
-        """TermQuery under ClassicSimilarity (TF-IDF) — the pluggable-
-        Similarity point (SimilarityBase.score(freq, norm), SURVEY
-        §2.6/§2.12): same postings, different scoring expression
-        (shared with the segment path via similarities.py)."""
-        from . import similarities as sims
-
-        st = self.stats
-        dfs = term_dfs(self.post, [term])
-        idf = sims.classic_idf(dfs[term], st.doc_count)
-        sc = self._term_tf_dl(term).select(
-            "doc_id",
-            sims.classic_score(F.col("tf"), F.col("dl"), idf=idf).alias("score"))
-        return _topk(sc, k)
-
-    def lm_dirichlet_term_query(self, term: str, k: int = 10,
-                                mu: float = 2000.0) -> DataFrame:
-        """TermQuery under LMDirichletSimilarity (similarities/
-        LMDirichletSimilarity.java:60-68, default mu=2000); scoring
-        expression shared with the segment path (similarities.py)."""
-        from . import similarities as sims
-
-        st = self.stats
-        ttf = term_ttfs(self.toks, [term])[term]
-        if ttf == 0 or st.total_tokens == 0:
-            return self._empty_scored()
-        score = sims.lm_dirichlet_score(
-            F.col("tf"), F.col("dl"), ttf=ttf, total_tokens=st.total_tokens, mu=mu)
-        return _topk(self._term_tf_dl(term).select("doc_id", score.alias("score")), k)
-
-    def lm_jelinek_mercer_term_query(self, term: str, k: int = 10,
-                                     lam: float = 0.7) -> DataFrame:
-        """TermQuery under LMJelinekMercerSimilarity (similarities/
-        LMJelinekMercerSimilarity.java:55-60, lambda=0.7)."""
-        from . import similarities as sims
-
-        st = self.stats
-        ttf = term_ttfs(self.toks, [term])[term]
-        if ttf == 0 or st.total_tokens == 0:
-            return self._empty_scored()
-        score = sims.lm_jelinek_mercer_score(
-            F.col("tf"), F.col("dl"), ttf=ttf, total_tokens=st.total_tokens, lam=lam)
-        return _topk(self._term_tf_dl(term).select("doc_id", score.alias("score")), k)
-
-    def dfr_inl2_term_query(self, term: str, k: int = 10,
-                            c: float = 1.0) -> DataFrame:
-        """TermQuery under DFR I(n)L2 (similarities/DFRSimilarity.java:
-        BasicModelIn + AfterEffectL + NormalizationH2, c=1)."""
-        from . import similarities as sims
-
-        st = self.stats
-        dfs = term_dfs(self.post, [term])
-        if dfs[term] == 0:
-            return self._empty_scored()
-        score = sims.dfr_inl2_score(
-            F.col("tf"), F.col("dl"), df=dfs[term], doc_count=st.doc_count,
-            avgdl=st.avgdl, c=c)
-        return _topk(self._term_tf_dl(term).select("doc_id", score.alias("score")), k)
-
-    def dfi_term_query(self, term: str, k: int = 10) -> DataFrame:
-        """TermQuery under DFI chi-squared (similarities/
-        DFISimilarity.java:69-77 + IndependenceChiSquared); docs at or
-        below the independence expectation are dropped (documented
-        deviation — Lucene keeps them as 0-score hits, which never
-        reach a top-k over positive-score docs)."""
-        from . import similarities as sims
-
-        st = self.stats
-        ttf = term_ttfs(self.toks, [term])[term]
-        if ttf == 0:
-            return self._empty_scored()
-        score, keep = sims.dfi_chi2_score(
-            F.col("tf"), F.col("dl"), ttf=ttf, total_tokens=st.total_tokens)
-        sc = self._term_tf_dl(term).where(keep).select("doc_id", score.alias("score"))
-        return _topk(sc, k)
-
-    def ib_spl_term_query(self, term: str, k: int = 10,
-                          c: float = 1.0) -> DataFrame:
-        """TermQuery under IB SPL-D-H2 (similarities/IBSimilarity.java:
-        93-99 with DistributionSPL + LambdaDF + NormalizationH2):
-        natural-log score with the lambda==1 clamp, exactly as
-        DistributionSPL guards it (similarities.ib_spl_score)."""
-        from . import similarities as sims
-
-        st = self.stats
-        dfs = term_dfs(self.post, [term])
-        if dfs[term] == 0:
-            return self._empty_scored()
-        score = sims.ib_spl_score(
-            F.col("tf"), F.col("dl"), df=dfs[term], doc_count=st.doc_count,
-            avgdl=st.avgdl, c=c)
-        return _topk(self._term_tf_dl(term).select("doc_id", score.alias("score")), k)
-
-    def axiomatic_f2exp_term_query(self, term: str, k: int = 10,
-                                   s: float = 0.5,
-                                   k_param: float = 0.35) -> DataFrame:
-        """TermQuery under Axiomatic F2EXP (similarities/
-        AxiomaticF2EXP.java:52-74, s=0.5, k=0.35)."""
-        from . import similarities as sims
-
-        st = self.stats
-        dfs = term_dfs(self.post, [term])
-        if dfs[term] == 0:
-            return self._empty_scored()
-        score = sims.axiomatic_f2exp_score(
-            F.col("tf"), F.col("dl"), df=dfs[term], doc_count=st.doc_count,
-            avgdl=st.avgdl, s=s, k=k_param)
-        return _topk(self._term_tf_dl(term).select("doc_id", score.alias("score")), k)
-
-    def _gather_positions(self, terms: Sequence[str],
-                          shifts: Optional[Sequence[int]] = None) -> DataFrame:
-        """(doc_id, p0..p_{n-1}): each query slot's positions gathered
-        into a per-doc array in ONE shuffle (the exact-phrase matcher's
-        gather pattern). shifts: optional per-slot position offset
-        (slot-adjusted sloppy matching: q_i = p_i - i). A term repeated
-        in several slots lands in each slot's array."""
-        occ = self.toks.where(F.col("term").isin(sorted(set(terms))))
-        aggs = []
-        for i, t in enumerate(terms):
-            p = F.col("pos") - F.lit(int(shifts[i])) if shifts else F.col("pos")
-            aggs.append(
-                F.collect_list(F.when(F.col("term") == t, p)).alias(f"p{i}")
-            )
-        return occ.groupBy("doc_id").agg(*aggs)
-
-    def _score_gathered_freq(self, freq: DataFrame, idf_sum: float,
-                             k: int) -> DataFrame:
-        sc = freq.where(F.col("tf") > 0).join(self.dl, "doc_id").select(
-            "doc_id",
-            bm25_expr(F.col("tf"), F.col("dl"), idf_sum, self.stats.avgdl)
-            .alias("score"))
-        return _topk(sc, k)
-
-    def sloppy_phrase(self, t1: str, t2: str, slop: int = 2, k: int = 10) -> DataFrame:
-        """Two-term sloppy phrase (SloppyPhraseMatcher; weight
-        1/(distance+1), BM25Similarity.sloppyFreq:77-79): matches with
-        |p2 - p1 - 1| <= slop, phrase freq = sum of 1/(dist+1), scored
-        like a term with summed idf. Plan: per-doc position-array
-        gather + windowed spanmatch expression (one shuffle, no join
-        explosion) — |p2-p1-1| is the slot-adjusted width with
-        q2 = p2 - 1."""
-        from .spanmatch import near_weight
-
-        st = self.stats
-        dfs = term_dfs(self.post, [t1, t2])
-        idf_sum = st.idf(dfs[t1]) + st.idf(dfs[t2])
-        g = self._gather_positions([t1, t2], shifts=[0, 1])
-        w = near_weight([F.col("p0"), F.col("p1")], slop,
-                        ordered=False, width_offset=0)
-        return self._score_gathered_freq(
-            g.select("doc_id", w.alias("tf")), idf_sum, k)
-
-    def span_near(self, terms: Sequence[str], slop: int = 2, k: int = 10,
-                  ordered: bool = True) -> DataFrame:
-        """SpanNearQuery (spans/SpanNearQuery.java:42): n sub-spans in
-        document order (ordered=True) within `slop` total gap; every
-        position tuple p1 < ... < pn with (pn - p1 + 1 - n) <= slop
-        contributes weight 1/(dist+1) (tuple enumeration — a superset
-        of Lucene's minimal-interval iteration, documented deviation);
-        phrase freq = sum of weights, scored like a term with summed
-        idf. Plan: one position-array gather shuffle + the windowed
-        spanmatch expression (spanmatch.near_weight) — the former n-1
-        positional self-joins materialized every tuple as a shuffled
-        row and degraded super-linearly on repeated frequent terms."""
-        from .spanmatch import near_weight
-
-        st = self.stats
-        dfs = term_dfs(self.post, list(terms))
-        if any(dfs[t] == 0 for t in terms):
-            return self.df.sparkSession.createDataFrame([], "doc_id long, score double")
-        idf_sum = sum(st.idf(dfs[t]) for t in terms)
-        n = len(terms)
-        g = self._gather_positions(list(terms))
-        w = near_weight([F.col(f"p{i}") for i in range(n)], slop,
-                        ordered=ordered, width_offset=1 - n)
-        return self._score_gathered_freq(
-            g.select("doc_id", w.alias("tf")), idf_sum, k)
-
-    def span_or(self, terms: Sequence[str], k: int = 10) -> DataFrame:
-        """SpanOrQuery over SpanTermQuery sub-spans (spans/
-        SpanOrQuery.java:38): matches wherever ANY sub-span matches.
-        Single-term spans have width 0, so each occurrence contributes
-        slop factor 1 (SpanScorer freq accumulation) and the doc freq
-        is the summed tf across the terms; the span weight's stats are
-        built over ALL the enclosed terms (SpanWeight.buildSimWeight
-        collects every termContext), so idf = sum of per-term idfs.
-        One hash agg over the postings relation — no position join
-        needed because term spans never overlap themselves."""
-        st = self.stats
-        dfs = term_dfs(self.post, list(terms))
-        idf_sum = sum(st.idf(dfs[t]) for t in terms)
-        freq = (
-            self.post.where(F.col("term").isin(list(terms)))
-            .groupBy("doc_id")
-            .agg(F.sum("tf").cast("double").alias("tf"))
-        )
-        sc = freq.join(self.dl, "doc_id").select(
-            "doc_id",
-            bm25_expr(F.col("tf"), F.col("dl"), idf_sum, st.avgdl).alias("score"))
-        return _topk(sc, k)
-
-    def span_first(self, term: str, end: int, k: int = 10) -> DataFrame:
-        """SpanFirstQuery (spans/SpanFirstQuery.java:33) =
-        SpanPositionRangeQuery(0, end): keep spans that END at or
-        before `end`. With this engine's 1-based positions a term span
-        at pos p has Lucene end() == p, so it matches iff pos <= end.
-        freq = number of matching positions, scored BM25 with the
-        term's own idf (SpanTermQuery carries the term's stats)."""
-        st = self.stats
-        dfs = term_dfs(self.post, [term])
-        if dfs[term] == 0:
-            return self.df.sparkSession.createDataFrame([], "doc_id long, score double")
-        idf = st.idf(dfs[term])
-        freq = (
-            self.toks.where((F.col("term") == term) & (F.col("pos") <= end))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        )
-        sc = freq.join(self.dl, "doc_id").select(
-            "doc_id",
-            bm25_expr(F.col("tf"), F.col("dl"), idf, st.avgdl).alias("score"))
-        return _topk(sc, k)
-
-    def span_not(self, include: str, exclude: str, pre: int = 0,
-                 post: int = 0, k: int = 10) -> DataFrame:
-        """SpanNotQuery (spans/SpanNotQuery.java:44): spans of
-        `include` that have NO `exclude` span within `pre` positions
-        before or `post` positions after. For single-term spans an
-        include occurrence at p survives iff no exclude occurrence q
-        satisfies p - pre <= q <= p + post. Plan: positional left-anti
-        join on (doc_id, range predicate) — the exclusion analog of the
-        phrase position join; freq = surviving occurrences, BM25 with
-        the include term's idf (the exclusion does not contribute
-        stats, mirroring SpanNotWeight)."""
-        st = self.stats
-        dfs = term_dfs(self.post, [include])
-        if dfs[include] == 0:
-            return self.df.sparkSession.createDataFrame([], "doc_id long, score double")
-        idf = st.idf(dfs[include])
-        a = self.toks.where(F.col("term") == include).select("doc_id", "pos")
-        b = self.toks.where(F.col("term") == exclude).select(
-            F.col("doc_id").alias("d_"), F.col("pos").alias("q"))
-        survivors = a.join(
-            b,
-            (a["doc_id"] == b["d_"])
-            & (F.col("q") >= F.col("pos") - pre)
-            & (F.col("q") <= F.col("pos") + post),
-            "left_anti",
-        )
-        freq = survivors.groupBy("doc_id").agg(
-            F.count(F.lit(1)).cast("double").alias("tf"))
-        sc = freq.join(self.dl, "doc_id").select(
-            "doc_id",
-            bm25_expr(F.col("tf"), F.col("dl"), idf, st.avgdl).alias("score"))
-        return _topk(sc, k)
-
-    def span_containing(self, t1: str, t2: str, little: str,
-                        slop: int = 4, k: int = 10) -> DataFrame:
-        """SpanContainingQuery (spans/SpanContainingQuery.java:35): big
-        spans (ordered near(t1, t2) within slop) that CONTAIN at least
-        one `little` term span (s <= p <= e). Each surviving big span
-        keeps its near-span weight 1/(dist+1); freq = sum; idf = sum
-        over big AND little term stats (SpanContainQuery gathers both
-        sides' term contexts). Plan: one position-array gather shuffle
-        + the spanmatch containment expression (no pair-join rows)."""
-        from .spanmatch import containing_weight
-
-        st = self.stats
-        dfs = term_dfs(self.post, [t1, t2, little])
-        if any(dfs[t] == 0 for t in (t1, t2, little)):
-            return self.df.sparkSession.createDataFrame([], "doc_id long, score double")
-        idf_sum = st.idf(dfs[t1]) + st.idf(dfs[t2]) + st.idf(dfs[little])
-        g = self._gather_positions([t1, t2, little])
-        w = containing_weight(F.col("p0"), F.col("p1"), F.col("p2"), slop)
-        return self._score_gathered_freq(
-            g.select("doc_id", w.alias("tf")), idf_sum, k)
-
-    def span_within(self, little: str, t1: str, t2: str,
-                    slop: int = 4, k: int = 10) -> DataFrame:
-        """SpanWithinQuery (spans/SpanWithinQuery.java:35): `little`
-        term spans lying WITHIN some big span (ordered near(t1, t2)
-        within slop). freq = count of such little occurrences (term
-        spans weigh 1); idf = sum over both sides' stats. Plan: gather
-        + spanmatch within expression."""
-        from .spanmatch import within_count
-
-        st = self.stats
-        dfs = term_dfs(self.post, [t1, t2, little])
-        if any(dfs[t] == 0 for t in (t1, t2, little)):
-            return self.df.sparkSession.createDataFrame([], "doc_id long, score double")
-        idf_sum = st.idf(dfs[little]) + st.idf(dfs[t1]) + st.idf(dfs[t2])
-        g = self._gather_positions([little, t1, t2])
-        w = within_count(F.col("p0"), F.col("p1"), F.col("p2"), slop)
-        return self._score_gathered_freq(
-            g.select("doc_id", w.alias("tf")), idf_sum, k)
-
-    def payload_score_query(self, term: str, k: int = 10,
-                            func: str = "sum") -> DataFrame:
-        """PayloadScoreQuery analog (queries/payloads/
-        PayloadScoreQuery.java:48 with SumPayloadFunction /
-        AveragePayloadFunction / MaxPayloadFunction,
-        includeSpanScore=false): per-OCCURRENCE payload floats
-        aggregated into the doc score. Payloads here derive
-        deterministically from the position stream ((pos%5+1)/5 — the
-        testdata carries no DelimitedPayloadTokenFilter `term|float`
-        markup), which keeps the operator shape real: position-level
-        metadata flows through the same exploded occurrence relation
-        and one hash aggregation."""
-        occ = self.toks.where(F.col("term") == term)
-        pay = (((F.col("pos") % 5) + 1).cast("double") / F.lit(5.0))
-        agg = {"sum": F.sum, "avg": F.avg, "max": F.max}[func]
-        sc = (
-            occ.select("doc_id", pay.alias("p"))
-            .groupBy("doc_id").agg(agg(F.col("p")).alias("score"))
-        )
-        return _topk(sc, k)
-
-    def suggest(self, prefix: str, n: int = 10) -> DataFrame:
-        """Prefix suggester (AnalyzingSuggester.java:121 analog): top-N
-        dictionary terms by document frequency."""
-        return (
-            self.post.where(F.col("term").startswith(prefix))
-            .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(n)
-        )
-
-    def sloppy_phrase_multi(self, terms: Sequence[str], slop: int = 2,
-                            k: int = 10) -> DataFrame:
-        """n-term sloppy phrase (SloppyPhraseMatcher generalization of
-        the 2-term path): slot-adjusted positions q_i = p_i - i; a
-        tuple matches when max(q) - min(q) <= slop (out-of-order within
-        the slop window allowed, like Lucene's edit-distance slop);
-        weight 1/(w+1) per tuple, phrase freq = sum, scored as a term
-        with summed idf. Tuple semantics via the windowed spanmatch
-        expression (one gather shuffle, no join explosion). Repeated
-        terms land in each of their slots (each slot gathers its own
-        array), matching the enumeration the SQL oracle runs."""
-        from .spanmatch import near_weight
-
-        st = self.stats
-        dfs = term_dfs(self.post, list(terms))
-        if any(dfs[t] == 0 for t in terms):
-            return self.df.sparkSession.createDataFrame([], "doc_id long, score double")
-        idf_sum = sum(st.idf(dfs[t]) for t in terms)
-        n = len(terms)
-        g = self._gather_positions(list(terms), shifts=list(range(n)))
-        w = near_weight([F.col(f"p{i}") for i in range(n)], slop,
-                        ordered=False, width_offset=0)
-        return self._score_gathered_freq(
-            g.select("doc_id", w.alias("tf")), idf_sum, k)
-
-    def suggest_infix(self, fragment: str, n: int = 10) -> DataFrame:
-        """Infix suggester (suggest/.../analyzing/
-        AnalyzingInfixSuggester.java:106 analog): dictionary terms
-        CONTAINING the fragment anywhere, ranked by weight (document
-        frequency) desc — the index-backed infix lookup without the
-        sidecar suggest index (the term dictionary IS the lookup
-        relation; Catalyst pushes the LIKE into the scan)."""
-        return (
-            self.post.where(F.col("term").contains(fragment))
-            .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(n)
-        )
-
-    def passage_highlight(self, terms: Sequence[str], window: int = 16,
-                          k: int = 10) -> DataFrame:
-        """UnifiedHighlighter passage scoring (uhighlight/
-        UnifiedHighlighter.java:92, PassageScorer): split each doc into
-        fixed-width token passages, score a passage as the sum of the
-        matched terms' idf weights, return each matching doc's BEST
-        passage, top-k docs by that score. One aggregation + one window
-        — no per-doc work on the driver."""
-        from pyspark.sql import Window
-
-        st = self.stats
-        dfs = term_dfs(self.post, list(terms))
-        live = [t for t in terms if dfs[t] > 0]
-        if not live:
-            return self.df.sparkSession.createDataFrame(
-                [], "doc_id long, passage long, score double")
-        idf_col: Column = F.lit(0.0)
-        for t in live:
-            idf_col = F.when(F.col("term") == t, F.lit(st.idf(dfs[t]))).otherwise(idf_col)
-        occ = self.toks.where(F.col("term").isin(live)).select(
-            "doc_id",
-            F.floor((F.col("pos") - 1) / float(window)).cast("long").alias("passage"),
-            idf_col.alias("w"),
-        )
-        scored = occ.groupBy("doc_id", "passage").agg(F.sum("w").alias("score"))
-        rn = F.row_number().over(
-            Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("passage"))
-        )
-        best = scored.withColumn("rn", rn).where(F.col("rn") == 1).drop("rn")
-        return (
-            best.select("doc_id", "passage", F.round("score", 6).alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-
-    def feature_saturation_query(self, term: str, feature_col: str,
-                                 pivot: float, weight: float = 1.0,
-                                 k: int = 10) -> DataFrame:
-        """FeatureField.newSaturationQuery analog (document/
-        FeatureField.java): relevance = BM25(term) + weight * f/(f +
-        pivot) where f is a per-doc static feature (here a DataFrame
-        column — Spark's columnar layout IS the feature store, no
-        freq-encoded pseudo-terms needed). The saturation curve is the
-        BM25-compatible static boost (pagerank-style signals)."""
-        feats = self.df.select(
-            F.col(self.id_col).alias("doc_id"),
-            (F.lit(weight) * F.col(feature_col).cast("double")
-             / (F.col(feature_col).cast("double") + F.lit(pivot))).alias("fboost"),
-        )
-        sc = (
-            self.scored_postings([term]).select("doc_id", "score")
-            .join(feats, "doc_id")
-            .select("doc_id", (F.col("score") + F.col("fboost")).alias("score"))
-        )
-        return _topk(sc, k)
-
-    def spell_suggest(self, word: str, max_edits: int = 2, n: int = 5,
-                      min_df: int = 1) -> DataFrame:
-        """DirectSpellChecker analog (suggest/.../spell/
-        DirectSpellChecker.java:40): dictionary terms within edit
-        distance of the input, ranked (distance asc, df desc, term asc)
-        — the did-you-mean lookup straight off the term dictionary,
-        JVM-side levenshtein, length-window pre-filter pushed to the
-        scan."""
-        t = F.col("term")
-        cand = (
-            self.post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-            .where(
-                (F.length(t) >= len(word) - max_edits)
-                & (F.length(t) <= len(word) + max_edits)
-                & (F.col("df") >= min_df)
-                & (t != word)
-            )
-            .withColumn("dist", F.levenshtein(t, F.lit(word)))
-            .where(F.col("dist") <= max_edits)
-        )
-        return (
-            cand.select("term", "dist", "df")
-            .orderBy(F.asc("dist"), F.desc("df"), F.asc("term"))
-            .limit(n)
-        )
-
-    def highlight(self, term: str, window: int = 30) -> DataFrame:
-        """Highlighter-lite (UnifiedHighlighter.java:92 analog): a
-        snippet of +-window chars around the first occurrence, for
-        matching docs only. JVM locate/substring — map-only."""
-        low = F.lower(F.col(self.text_col))
-        pos = F.locate(term, low)  # 1-based, 0 = no match
-        start = F.greatest(pos - window, F.lit(1))
-        snippet = F.substring(low, start, F.lit(2 * window) + F.length(F.lit(term)))
-        return (
-            self.df.select(F.col(self.id_col).alias("doc_id"), pos.alias("pos"), snippet.alias("snippet"))
-            .where(F.col("pos") > 0)
-        )
-
-    def term_facet(self, n: int = 20) -> DataFrame:
-        """Field facet over the term dictionary: df + ttf per term,
-        top-N by df (FacetFieldProcessorByHashDV analog: hash agg)."""
-        return (
-            self.post.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("ttf"))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(n)
-        )
+def corpus_stats(idx: "FulltextIndex") -> CorpusStats:
+    """The live index's statistics, from its manifest (builds it on first use)."""
+    return CorpusStats(idx.reader.doc_count, idx.reader.sum_dl)
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
-    """TopScoreDocCollector ordering (score desc, doc_id asc —
-    HitQueue.java:76-81) on the ROUNDED score, so rank and the oracle's
-    rank agree bit-for-bit; Catalyst plans TakeOrderedAndProject."""
-    return (
-        scored.select("doc_id", F.round(F.col("score"), 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    """TopScoreDocCollector order (score desc, doc_id asc) on the score
+    rounded to 6 decimals, so ranks agree with the SQL oracles."""
+    return (scored.select("doc_id", F.round(F.col("score"), 6).alias("score"))
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
-def classic_tfidf_expr(tf: Column, dl: Column, idf: float,
-                       boost: float = 1.0) -> Column:
-    """ClassicSimilarity (TFIDFSimilarity.java): sqrt(tf) * idf^2 *
-    (1/sqrt(dl)); idf = 1 + ln((docCount+1)/(df+1))."""
-    return (
-        F.lit(boost) * F.sqrt(tf.cast("double")) * F.lit(idf * idf)
-        / F.sqrt(dl.cast("double"))
-    )
+def _bool(occur: Occur, terms, min_should_match: int = 0) -> BooleanQuery:
+    return BooleanQuery(clauses=tuple(BooleanClause(occur, TermQuery(term=t)) for t in terms),
+                        min_should_match=min_should_match)
 
 
-def significant_terms(idx: "FulltextIndex", query_term: str, n: int = 10,
-                      min_df: int = 2) -> DataFrame:
-    """significantTerms stream (SignificantTermsStream.java analog):
-    terms overrepresented in the docs matching `query_term` vs the
-    whole corpus. Score = (fg_df/fg_size) / (bg_df/bg_size) computed
-    in fixed double op order; the foreground doc set is a semi join.
-    """
-    st = idx.stats
-    fg_docs = idx.post.where(F.col("term") == query_term).select("doc_id")
-    fg_size = fg_docs.count()  # weight-creation style scalar
-    if fg_size == 0:
-        return idx.df.sparkSession.createDataFrame(
-            [], "term string, fg_df long, bg_df long, lift double")
-    fg = (
-        idx.post.join(fg_docs, "doc_id", "left_semi")
-        .groupBy("term").agg(F.count(F.lit(1)).alias("fg_df"))
-    )
-    bg = idx.post.groupBy("term").agg(F.count(F.lit(1)).alias("bg_df"))
-    joined = fg.join(bg, "term").where(
-        (F.col("fg_df") >= min_df) & (F.col("term") != query_term)
-    )
-    lift = (F.col("fg_df").cast("double") / F.lit(float(fg_size))) / (
-        F.col("bg_df").cast("double") / F.lit(float(st.doc_count))
-    )
-    return (
-        joined.select("term", "fg_df", "bg_df", F.round(lift, 6).alias("lift"))
-        .orderBy(F.desc(F.round(lift, 6)), F.asc("term"))
-        .limit(n)
-    )
+class FulltextIndex:
+    """A corpus DataFrame as a queryable index (see the module doc)."""
+
+    def __init__(self, df: DataFrame, text_col: str = "text",
+                 id_col: str = "doc_id", stop: bool = True):
+        self.df, self.text_col, self.id_col, self.stop = df, text_col, id_col, stop
+        self._searcher, self._dense, self._closed, self._cleanup = None, True, False, None
+
+    @property
+    def searcher(self):
+        """The float64 Searcher over the live segment, built on first use."""
+        if self._closed:
+            raise ValueError("FulltextIndex is closed")
+        if self._searcher is None:
+            self._build()
+        return self._searcher
+
+    @property
+    def reader(self):
+        return self.searcher.reader
+
+    def _build(self) -> None:
+        import pyarrow.dataset as ds
+
+        from .indexing.builder import build_index
+        from .indexing.manifest import doc_meta_path
+        from .search.executor import IndexReader, Searcher
+
+        spark = self.df.sparkSession
+        path = tempfile.mkdtemp(prefix="lss_live_")  # never spark-*: those are purged
+        self._cleanup = weakref.finalize(self, shutil.rmtree, path, True)
+        build_index(spark, path, [("live", keyed_corpus(self.df, self.text_col, self.id_col))],
+                    analyzer="simple_stop" if self.stop else "simple", norms="exact", store=True)
+        reader = IndexReader(spark, path)
+        self._dense = keys_are_dense(ds.dataset(
+            [ds.dataset(doc_meta_path(reader.store.segment_dir(s.name)))
+             for s in reader.manifest.segments]).to_table(columns=["path"]).column("path"))
+        self._searcher = Searcher(reader, precision="float64")
+
+    def close(self) -> None:
+        """Remove the temp index; any later use raises."""
+        self._closed, self._searcher = True, None
+        if self._cleanup is not None:
+            self._cleanup()
+
+    # -- relations ------------------------------------------------------------
+
+    def _caller(self, df: DataFrame) -> DataFrame:
+        """df with its engine doc ids replaced by the caller's ids."""
+        if self._dense:
+            return df
+        ids = self.reader.doc_meta.select(
+            F.col("doc_id").alias("_eid"), id_of_key(F.col("path")).alias("doc_id"))
+        return df.withColumnRenamed("doc_id", "_eid").join(ids, "_eid").select(*df.columns)
+
+    @property
+    def post(self) -> DataFrame:
+        """(doc_id, term, tf): the postings relation."""
+        return self._caller(self.reader.postings().drop("norm"))
+
+    @property
+    def toks(self) -> DataFrame:
+        """(doc_id, term, pos): one row per occurrence, positions 1-based."""
+        return self._caller(self.reader.postings(positions=True))
+
+    @property
+    def dl(self) -> DataFrame:
+        """(doc_id, dl): field length after the stop filter."""
+        return self._caller(self.reader.doc_meta.select("doc_id", F.col("length").alias("dl")))
+
+    @property
+    def stats(self) -> CorpusStats:
+        return corpus_stats(self)
+
+    # -- queries the Searcher answers ----------------------------------------
+
+    def _top(self, scored: DataFrame, k: int) -> DataFrame:
+        return _topk(self._caller(scored), k)
+
+    def _search(self, q, k: int) -> DataFrame:
+        return self._top(self.searcher.scored(q), k)
+
+    def _docs(self, q) -> DataFrame:
+        return self._caller(self.searcher.scored(q).select("doc_id"))
+
+    def term_query(self, term: str, k: int = 10):
+        return self._search(TermQuery(term=term), k)
+
+    def boolean_and(self, terms: Sequence[str], k: int = 10):
+        return self._search(_bool(Occur.MUST, terms), k)
+
+    def boolean_or(self, terms: Sequence[str], k: int = 10, min_should_match: int = 1):
+        return self._search(_bool(Occur.SHOULD, terms, min_should_match), k)
+
+    def boolean_not(self, must: Sequence[str], must_not: Sequence[str], k: int = 10):
+        return self._search(BooleanQuery(clauses=_bool(Occur.MUST, must).clauses
+                                         + _bool(Occur.MUST_NOT, must_not).clauses), k)
+
+    def boolean_filter(self, scoring: Sequence[str], filter_terms: Sequence[str], k: int = 10):
+        """SHOULD the scoring terms, FILTER on any of filter_terms."""
+        filt = (TermQuery(term=filter_terms[0]) if len(filter_terms) == 1
+                else TermInSetQuery(terms=tuple(filter_terms)))
+        return self._search(BooleanQuery(clauses=_bool(Occur.SHOULD, scoring).clauses + (
+            BooleanClause(Occur.FILTER, filt),), min_should_match=1), k)
+
+    def dismax(self, terms: Sequence[str], tie_breaker: float = 0.1, k: int = 10):
+        return self._search(DisjunctionMaxQuery(
+            disjuncts=tuple(TermQuery(term=t) for t in terms), tie_breaker=tie_breaker), k)
+
+    def synonym_query(self, terms: Sequence[str], k: int = 10):
+        return self._search(SynonymQuery(terms=tuple(terms)), k)
+
+    def phrase_query(self, terms: Sequence[str], k: int = 10):
+        return self._search(PhraseQuery(terms=tuple(terms)), k)
+
+    def term_in_set(self, terms: Sequence[str]):
+        return self._docs(TermInSetQuery(terms=tuple(terms)))
+
+    def wildcard_match(self, like_pattern: str):
+        """Docs holding a term that matches a SQL LIKE pattern."""
+        return self._docs(MultiTermQuery(
+            kind="wildcard", pattern=like_pattern.replace("%", "*").replace("_", "?")))
+
+    def _expand(self, **kw) -> list:
+        return self.reader.expand(MultiTermQuery(**kw), max_terms=2**31 - 1)
+
+    def prefix_terms(self, prefix: str):
+        terms = self._expand(kind="prefix", pattern=prefix)
+        dfs = self.reader.term_stats(terms)
+        return self.df.sparkSession.createDataFrame([(t, dfs[t][0]) for t in terms],
+                                                    "term string, df long")
+
+    def fuzzy_terms(self, term: str, max_edits: int = 1):
+        terms = self._expand(kind="fuzzy", pattern=term, max_edits=max_edits)
+        return self.df.sparkSession.createDataFrame([(t,) for t in terms], "term string")
+
+    # similarities: Searcher.similarity_term_query, top-k
+    def _similarity(self, term: str, sim: str, k: int, /, **params) -> DataFrame:
+        return self._top(self.searcher.similarity_term_query(term, sim, **params), k)
+    def classic_term_query(self, term: str, k: int = 10):
+        return self._similarity(term, "classic", k)
+    def lm_dirichlet_term_query(self, term: str, k: int = 10, mu: float = 2000.0):
+        return self._similarity(term, "lm_dirichlet", k, mu=mu)
+    def lm_jelinek_mercer_term_query(self, term: str, k: int = 10, lam: float = 0.7):
+        return self._similarity(term, "lm_jelinek_mercer", k, lam=lam)
+    def dfr_inl2_term_query(self, term: str, k: int = 10, c: float = 1.0):
+        return self._similarity(term, "dfr_inl2", k, c=c)
+    def dfi_term_query(self, term: str, k: int = 10):
+        return self._similarity(term, "dfi_chi2", k)
+    def ib_spl_term_query(self, term: str, k: int = 10, c: float = 1.0):
+        return self._similarity(term, "ib_spl", k, c=c)
+    def axiomatic_f2exp_term_query(self, term: str, k: int = 10, s: float = 0.5,
+                                   k_param: float = 0.35):
+        return self._similarity(term, "axiomatic_f2exp", k, s=s, k=k_param)
+
+    # positional queries: the Searcher's span and sloppy-phrase twins, top-k
+    def sloppy_phrase(self, t1: str, t2: str, slop: int = 2, k: int = 10):
+        return self._top(self.searcher.sloppy_phrase([t1, t2], slop), k)
+    def sloppy_phrase_multi(self, terms: Sequence[str], slop: int = 2, k: int = 10):
+        return self._top(self.searcher.sloppy_phrase(list(terms), slop), k)
+    def span_near(self, terms: Sequence[str], slop: int = 2, k: int = 10, ordered: bool = True):
+        return self._top(self.searcher.span_near(list(terms), slop, ordered), k)
+    def span_or(self, terms: Sequence[str], k: int = 10):
+        return self._top(self.searcher.span_or(list(terms)), k)
+    def span_first(self, term: str, end: int, k: int = 10):
+        return self._top(self.searcher.span_first(term, end), k)
+    def span_not(self, include: str, exclude: str, pre: int = 0, post: int = 0, k: int = 10):
+        return self._top(self.searcher.span_not(include, exclude, pre, post), k)
+    def span_containing(self, t1: str, t2: str, little: str, slop: int = 4, k: int = 10):
+        return self._top(self.searcher.span_containing(t1, t2, little, slop), k)
+    def span_within(self, little: str, t1: str, t2: str, slop: int = 4, k: int = 10):
+        return self._top(self.searcher.span_within(little, t1, t2, slop), k)
+
+    def passage_highlight(self, terms: Sequence[str], window: int = 16, k: int = 10):
+        top = self._caller(self.searcher.passage_highlight(list(terms), window, k))
+        return top if self._dense else top.orderBy(F.desc("score"), F.asc("doc_id"))
+
+    def highlight(self, term: str, window: int = 30):
+        return self._caller(self.searcher.highlight(term, window))
+
+    def suggest(self, prefix: str, n: int = 10):
+        return self.searcher.suggest(prefix, n)
+
+    def suggest_infix(self, fragment: str, n: int = 10):
+        return self.searcher.suggest_infix(fragment, n)
+
+    # -- operators without a Searcher twin -----------------------------------
+
+    def ltr_rerank(self, terms: Sequence[str], k: int = 10, first_k: int = 100,
+                   weights: Sequence[float] = (0.6, 0.4, -0.002), bias: float = 0.1):
+        top = self._caller(self.searcher.ltr_rerank(list(terms), k, first_k, weights, bias))
+        return top if self._dense else top.orderBy(F.desc("ltr_score"), F.asc("doc_id"))
+
+    def term_range(self, lo: str, hi: str, k: int = 10):
+        """(doc_id, nterms): docs holding terms in [lo, hi], and how many."""
+        return self._caller(self.reader.postings(F.col("term").between(lo, hi))).groupBy(
+            "doc_id").agg(F.count(F.lit(1)).alias("nterms"))
+
+    def total_hits(self, terms: Sequence[str], mode: str = "or"):
+        hits = self.searcher.count(_bool(Occur.MUST if mode == "and" else Occur.SHOULD, terms))
+        return self.df.sparkSession.createDataFrame([(hits,)], "total_hits long")
+
+    def search_after(self, term: str, after_score: float, after_doc: int, k: int = 10):
+        """The term query's hits strictly after the (rounded score, doc_id) cursor."""
+        sc, r = self._caller(self.searcher.scored(TermQuery(term=term))), F.round("score", 6)
+        return _topk(sc.where((r < after_score)
+                              | ((r == after_score) & (F.col("doc_id") > after_doc))), k)
+
+    def payload_score_query(self, term: str, k: int = 10, func: str = "sum"):
+        return self._top(self.searcher.payload_score(term, func), k)
+
+    def feature_saturation_query(self, term: str, feature_col: str, pivot: float,
+                                 weight: float = 1.0, k: int = 10):
+        """BM25(term) + weight * f / (f + pivot), f a column of df
+        (FeatureField.newSaturationQuery)."""
+        f = F.col(feature_col).cast("double")
+        feats = self.df.select(F.col(self.id_col).alias("doc_id"),
+                               (F.lit(weight) * f / (f + F.lit(pivot))).alias("fboost"))
+        sc = self._caller(self.searcher.scored(TermQuery(term=term))).join(feats, "doc_id")
+        return _topk(sc.select("doc_id", (F.col("score") + F.col("fboost")).alias("score")), k)
+
+    def spell_suggest(self, word: str, max_edits: int = 2, n: int = 5, min_df: int = 1):
+        return self.searcher.spell_suggest(word, max_edits, n, min_df)
+
+    def term_facet(self, n: int = 20):
+        """Top-n dictionary terms by df, with their ttf."""
+        return self.reader.term_dictionary().orderBy(F.desc("df"), F.asc("term")).limit(n)
 
 
-def explain_term(idx: "FulltextIndex", term: str, doc_id: int) -> DataFrame:
-    """Explanation tree analog (Weight.explain / CheckHits
-    recomputation): the BM25 factor breakdown for one (term, doc):
-    tf, dl, df, idf, norm denominator, final score — each a column so
-    the oracle recomputes every node."""
-    st = idx.stats
-    dfs = term_dfs(idx.post, [term])
-    idf = st.idf(dfs[term])
-    row = (
-        idx.post.where((F.col("term") == term) & (F.col("doc_id") == doc_id))
-        .join(idx.dl, "doc_id")
-    )
-    tf_d = F.col("tf").cast("double")
-    norm_part = F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl").cast("double") / F.lit(st.avgdl))
-    return row.select(
-        "doc_id",
-        F.col("tf").cast("long").alias("tf"),
-        F.col("dl").cast("long").alias("dl"),
-        F.lit(dfs[term]).cast("long").alias("df"),
-        F.round(F.lit(idf), 6).alias("idf"),
-        F.round(norm_part, 6).alias("norm_denom"),
-        F.round(F.lit(idf) * (tf_d * F.lit(K1 + 1.0)) / (tf_d + norm_part), 6).alias("score"),
-    )
+def significant_terms(idx: FulltextIndex, query_term: str, n: int = 10, min_df: int = 2):
+    return idx.searcher.significant_terms(query_term, n, min_df)
+
+
+def explain_term(idx: FulltextIndex, term: str, doc_id: int):
+    return idx._caller(idx.searcher.explain_term(term)).where(F.col("doc_id") == doc_id)

@@ -358,20 +358,6 @@ def _make_invert_fn(seg_dir: str, analyzer: str, norms: str,
     each flush appends its term-sorted blocks to the blk file.
     """
     from ..analysis import analyze_field, vectorized_field_tokens
-
-    # Tokenizer-path knob, resolved DRIVER-side at closure creation and
-    # shipped to workers in the closure. The byte-level ASCII tokenizer
-    # (analysis._ascii_fast_tokens) is ~2.6x faster per core than the
-    # regex path but trades instructions for memory traffic, so it
-    # inverts at high per-host concurrency: interleaved same-session
-    # A/B at local[32] on a 1.6M-doc corpus measured 31.8k docs/s
-    # (byte path) vs 67.1k docs/s (regex path) under a moderate host
-    # memory ceiling, while at 8-way the byte path wins ~1.3x
-    # end-to-end (BASELINE.md round 4). Default is therefore the
-    # bandwidth-lean regex path; set LSS_ASCII_FAST=1 on deployments
-    # with few cores per executor (4-8, the common cluster shape),
-    # where per-core bandwidth is plentiful and the byte path wins.
-    ascii_fast = os.environ.get("LSS_ASCII_FAST", "0") == "1"
     from ..smallfloat import int_to_byte4_np
 
     doc_arrow = arrow_schema(doc_schema(field_specs, store))
@@ -401,7 +387,7 @@ def _make_invert_fn(seg_dir: str, analyzer: str, norms: str,
             'standard'; non-vectorizable analyzers) run the per-doc
             analyze_field reference path — parity, not the hot path."""
             flat, kept_doc, kept_pos, lengths, fb = vectorized_field_tokens(
-                contents, fanalyzer, with_positions, prefix, ascii_fast)
+                contents, fanalyzer, with_positions, prefix)
             fb_rows: List[Tuple[int, dict]] = []
             for i in fb:
                 per_doc, length = analyze_field(contents.iloc[i], fanalyzer)
@@ -410,8 +396,8 @@ def _make_invert_fn(seg_dir: str, analyzer: str, norms: str,
             nb_doc = (int_to_byte4_np(lengths) if norms == "byte"
                       else lengths).astype(np.int64)
             if len(kept_doc):
-                # prefixing happened at the vocab level inside
-                # vectorized_field_tokens — flat already carries it
+                # vectorized_field_tokens applied the prefix: flat
+                # already carries it
                 vbufs.append((
                     flat,
                     doc_ids_arr[kept_doc],

@@ -177,3 +177,41 @@ def _assign_sorted(df, order_cols: List[str], base: int):
             )
 
     return df.mapInPandas(add_ids, schema=schema), df
+
+
+def id_key(ids):
+    """Order-preserving string key of a long id Column: id + 2**63 as
+    20 decimal digits, so keys sort as the ids do (negatives too)."""
+    from pyspark.sql import functions as F
+
+    return F.lpad((ids.cast("decimal(20,0)") + F.expr("9223372036854775808BD"))
+                  .cast("string"), 20, "0")
+
+
+def id_of_key(key):
+    """The long id an id_key string Column encodes."""
+    from pyspark.sql import functions as F
+
+    return (key.cast("decimal(20,0)") - F.expr("9223372036854775808BD")).cast("long")
+
+
+def keys_are_dense(keys) -> bool:
+    """Whether distinct id_key strings (a pyarrow array, one per doc)
+    encode exactly the ids 0..len(keys)-1."""
+    import pyarrow.compute as pc
+
+    lo, hi = (int(v.as_py()) - 2**63 for v in pc.min_max(keys).values())
+    return (lo, hi) == (0, len(keys) - 1)
+
+
+def keyed_corpus(df, text_col: str = "text", id_col: str = "doc_id"):
+    """The build_index corpus of an (id, text) frame. The id rides
+    `path` as id_key, so the build's (repo, path) doc order is the id
+    order and an engine doc id is the rank of the frame's id; `lang` is
+    kept when df has it (index sorts and keyword fields read it)."""
+    from pyspark.sql import functions as F
+
+    lang = F.col("lang") if "lang" in df.columns else F.lit("")
+    return df.select(F.lit("docs").alias("repo"), id_key(F.col(id_col)).alias("path"),
+                     F.lit("c0").alias("commit"), lang.alias("lang"),
+                     F.col(text_col).alias("content"))

@@ -295,6 +295,41 @@ class IndexReader:
                               np.concatenate(wts))
         return out
 
+    def postings(self, where=None, positions: bool = False):
+        """Decoded postings of the blocks whose term matches `where` (a
+        Column; None: all): (doc_id, term, tf, norm) per posting, or
+        (doc_id, term, pos) per occurrence with 1-based positions.
+        Deleted docs drop out."""
+        dead = self.dead
+
+        def rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                blocks = list(_decoded_blocks(pdf, positions=positions, dels=dead))
+                if not blocks:
+                    continue
+                terms, docs, tfs, norms = ([b[i] for b in blocks] for i in range(4))
+                doc, tf = np.concatenate(docs), np.concatenate(tfs)
+                term = _repeat_terms(terms, docs)
+                if positions:
+                    yield pd.DataFrame({
+                        "doc_id": np.repeat(doc, tf), "term": np.repeat(term, tf),
+                        "pos": np.concatenate([b[4] for b in blocks]) + 1})
+                else:
+                    yield pd.DataFrame({"doc_id": doc, "term": term, "tf": tf,
+                                        "norm": np.concatenate(norms)})
+
+        blocks = self.blocks if where is None else self.blocks.where(where)
+        return blocks.select("term", "blob", *(["pblob"] if positions else [])).mapInPandas(
+            rows, "doc_id long, term string, "
+            + ("pos int" if positions else "tf long, norm int"))
+
+    def term_dictionary(self):
+        """(term, df, ttf) of every term, summed over the part files."""
+        from pyspark.sql import functions as F
+
+        return self.stats.groupBy("term").agg(F.sum("df").alias("df"),
+                                              F.sum("ttf").alias("ttf"))
+
     def expand(self, q: MultiTermQuery, max_terms: int = 4096) -> List[str]:
         """Expand a multi-term query against the distinct-terms table
         with the predicate pushed into Spark (BlockTree intersect analog:
@@ -402,6 +437,8 @@ class MultiReader:
     term_wand_stats = IndexReader.term_wand_stats
     term_cost_stats = IndexReader.term_cost_stats
     collection_stats = IndexReader.collection_stats
+    postings = IndexReader.postings
+    term_dictionary = IndexReader.term_dictionary
     expand = IndexReader.expand
 
 
@@ -728,11 +765,10 @@ class Searcher:
 
     # -- segment-native positions / similarities / spans ---------------------
     #
-    # The scale-path (persisted FOR-128 segments) answers the SAME span,
-    # sloppy-phrase and pluggable-Similarity queries as the live
-    # FulltextIndex: blocks already store positions and norms, so these
-    # are decode + the shared scoring/matching expressions
-    # (similarities.py, spanmatch.py) — wiring, not re-analysis.
+    # Span, sloppy-phrase and pluggable-Similarity queries (the live
+    # FulltextIndex delegates to these too): blocks already store
+    # positions and norms, so these are decode + the shared
+    # scoring/matching expressions (similarities.py, spanmatch.py).
     # Scoring here is float64 (the SQL-oracle precision); the float32
     # Lucene-bit-parity claim covers the BM25 term/boolean/phrase paths.
 
@@ -755,8 +791,8 @@ class Searcher:
         rows): the span/phrase gather shuffle shrinks ~avg_tf-fold and
         the downstream agg becomes first(ignorenulls) instead of ttf
         singleton collect_list appends. Positions are presented 1-BASED
-        (pos0 + 1), matching the live tokens relation and the SQL
-        oracles; blocks store 0-based positions."""
+        (pos0 + 1), matching the SQL oracles; blocks store 0-based
+        positions."""
         dead = self.reader.dead
 
         def decode_pos(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -830,8 +866,8 @@ class Searcher:
             return None
         # Per SLOT, duplicates included — SpanWeight.buildSimWeight
         # collects every enclosed TermContext, so a repeated term
-        # contributes its idf once per occurrence in the query (matches
-        # the live twin in fulltext.py span_near/sloppy_phrase_multi).
+        # contributes its idf once per occurrence in the query, as the
+        # SQL oracles of span_near and the sloppy phrases sum it.
         idf_sum = sum(sims.idf_bm25(stats[t][0], n) for t in term_keys)
         return idf_sum, sttf / n
 
@@ -855,8 +891,7 @@ class Searcher:
         """SpanNearQuery over the segment index (spans/
         SpanNearQuery.java:42): decode positions -> per-doc array
         gather -> windowed tuple-weight expression (spanmatch) ->
-        BM25 with summed idf. Same semantics as FulltextIndex.span_near
-        and the same SQL oracle."""
+        BM25 with summed idf."""
         from pyspark.sql import functions as F
 
         from ..spanmatch import near_weight
@@ -877,9 +912,8 @@ class Searcher:
                       field: Optional[str] = None):
         """Sloppy phrase over the segment index (SloppyPhraseMatcher):
         slot-adjusted positions q_i = p_i - i, tuple weight 1/(w+1)
-        with w = max(q) - min(q) <= slop — the n-term generalization,
-        identical to FulltextIndex.sloppy_phrase_multi (and to the
-        2-term |p2-p1-1| form, which is its n=2 case)."""
+        with w = max(q) - min(q) <= slop — the n-term generalization
+        (the 2-term |p2-p1-1| form is its n=2 case)."""
         from pyspark.sql import functions as F
 
         from ..spanmatch import near_weight
@@ -993,26 +1027,8 @@ class Searcher:
         statistics every SimilarityBase.score(freq, norm) consumes."""
         from pyspark.sql import functions as F
 
-        dead = self.reader.dead
-
-        def decode_tf(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                blocks = list(_decoded_blocks(pdf, dels=dead))
-                if blocks:
-                    terms, docs, tfs, norms = zip(*blocks)
-                    yield pd.DataFrame({
-                        "doc_id": np.concatenate(docs),
-                        "term": _repeat_terms(terms, docs),
-                        "tf": np.concatenate(tfs),
-                        "norm": np.concatenate(norms),
-                    })
-
-        df = (
-            self.reader.blocks.where(F.col("term").isin(sorted(set(term_keys))))
-            .select("term", "blob")
-            .mapInPandas(decode_tf, "doc_id long, term string, tf long, norm int")
-        )
-        return df.withColumn("dl", self._dl_col(F.col("norm")))
+        return self.reader.postings(F.col("term").isin(sorted(set(term_keys)))).withColumn(
+            "dl", self._dl_col(F.col("norm")))
 
     def similarity_term_query(self, term: str, sim: str,
                               field: Optional[str] = None, **params):
@@ -1020,8 +1036,8 @@ class Searcher:
         index (the SimilarityBase.score(freq, norm) plug point,
         similarities/SimilarityBase.java:71): one block decode to
         (doc_id, tf, dl), then the shared scoring expression from
-        similarities.py — identical float64 math to the live path and
-        the SQL oracles. Collection stats come from the manifest +
+        similarities.py — identical float64 math to the SQL oracles.
+        Collection stats come from the manifest +
         term_stats (no corpus scan)."""
         from pyspark.sql import functions as F
 
@@ -1072,8 +1088,8 @@ class Searcher:
         (UnifiedHighlighter.java:92, PassageScorer): needs only the
         persisted positions + term stats — no stored text. Fixed-width
         token passages, passage score = sum of matched terms' idf,
-        best passage per doc, top-k docs. Same plan shape as the live
-        path: one aggregation + one window."""
+        best passage per doc, top-k docs: one aggregation per
+        (doc, passage), one per doc."""
         from pyspark.sql import functions as F
 
         from .. import similarities as sims
@@ -2188,14 +2204,18 @@ class Searcher:
             "expected_jobs": 1 + int(shuffle),
         }
 
+    def scored(self, q: Query):
+        """DataFrame (doc_id long, score double) of every doc q matches,
+        unranked: the plan that search() ranks and count() counts
+        (rewrite, dictionary expansion, rewrite, evaluation)."""
+        q = rewrite(self._with_default_field(q), None)
+        return self._eval(rewrite(self._expand_multiterm(q), None), 1.0)
+
     def _search_exhaustive(self, q: Query, k: int,
                            after: Optional[Tuple[float, int]]) -> pd.DataFrame:
         from pyspark.sql import functions as F
 
-        q = rewrite(q, dictionary_terms=None)
-        q = self._expand_multiterm(q)
-        q = rewrite(q, dictionary_terms=None)
-        scored = self._eval(q, 1.0)
+        scored = self.scored(q)
         if after is not None:
             s, d = after
             scored = scored.where(
@@ -2216,8 +2236,7 @@ class Searcher:
         )
 
     def count(self, q: Query) -> int:
-        q = self._expand_multiterm(rewrite(self._with_default_field(q), None))
-        return self._eval(rewrite(q, None), 1.0).count()
+        return self.scored(q).count()
 
     def suggest(self, prefix: str, n: int = 10):
         """Index-resident prefix suggester (AnalyzingSuggester.java:121
@@ -2247,6 +2266,116 @@ class Searcher:
             .groupBy("term").agg(F.sum("df").alias("df"))
             .orderBy(F.desc("df"), F.asc("term"))
             .limit(n)
+        )
+
+    def spell_suggest(self, word: str, max_edits: int = 2, n: int = 5,
+                      min_df: int = 1):
+        """DirectSpellChecker analog (suggest/.../spell/
+        DirectSpellChecker.java:40): dictionary terms within max_edits
+        of word, by (distance asc, df desc, term asc) — the did-you-mean
+        lookup straight off the term dictionary, with the length window
+        pushed below the levenshtein."""
+        from pyspark.sql import functions as F
+
+        t = F.col("term")
+        return (
+            self.reader.term_dictionary()
+            .where((F.length(t) >= len(word) - max_edits)
+                   & (F.length(t) <= len(word) + max_edits)
+                   & (F.col("df") >= min_df) & (t != word))
+            .withColumn("dist", F.levenshtein(t, F.lit(word)))
+            .where(F.col("dist") <= max_edits).select("term", "dist", "df")
+            .orderBy(F.asc("dist"), F.desc("df"), F.asc("term")).limit(n)
+        )
+
+    def significant_terms(self, term: str, n: int = 10, min_df: int = 2):
+        """significantTerms (SignificantTermsStream.java analog): the
+        terms of the docs holding `term`, by lift (fg_df / fg_size) /
+        (bg_df / N), fixed double op order; fg_size is term's df and
+        bg_df the dictionary's."""
+        from pyspark.sql import functions as F
+
+        fg_size = self.reader.term_stats([term]).get(term, (0, 0))[0]
+        if fg_size == 0:
+            return self.reader.spark.createDataFrame(
+                [], "term string, fg_df long, bg_df long, lift double")
+        fg_docs = self.reader.postings(F.col("term") == term).select("doc_id")
+        fg = (self.reader.postings().join(fg_docs, "doc_id", "left_semi")
+              .groupBy("term").agg(F.count(F.lit(1)).alias("fg_df")))
+        bg = self.reader.term_dictionary().select("term", F.col("df").alias("bg_df"))
+        lift = F.round(
+            (F.col("fg_df").cast("double") / F.lit(float(fg_size)))
+            / (F.col("bg_df").cast("double") / F.lit(float(self.reader.doc_count))), 6)
+        return (
+            fg.join(bg, "term")
+            .where((F.col("fg_df") >= min_df) & (F.col("term") != term))
+            .select("term", "fg_df", "bg_df", lift.alias("lift"))
+            .orderBy(F.desc("lift"), F.asc("term")).limit(n)
+        )
+
+    def explain_term(self, term: str):
+        """Explanation analog (Weight.explain / CheckHits recomputation):
+        the BM25 factors of `term` in every doc holding it — tf, dl, df,
+        idf, the length normalisation and the score, each a column
+        (float64, similarities.py; reals rounded to 6 decimals)."""
+        from pyspark.sql import functions as F
+
+        from .. import similarities as sims
+
+        n, sttf = self.reader.collection_stats(None)
+        df_ = self.reader.term_stats([term]).get(term, (0, 0))[0]
+        idf, avgdl = sims.idf_bm25(df_, n), sttf / max(n, 1)
+        tf, dl = F.col("tf"), F.col("dl")
+        return (self._tf_dl_df([term])
+                .select("doc_id", tf.cast("long").alias("tf"), dl.cast("long").alias("dl"),
+                        F.lit(df_).cast("long").alias("df"),
+                        F.round(F.lit(idf), 6).alias("idf"),
+                        F.round(sims.bm25_norm(dl, avgdl), 6).alias("norm_denom"),
+                        F.round(sims.bm25_score(tf, dl, idf=idf, avgdl=avgdl), 6)
+                        .alias("score")))
+
+    def payload_score(self, term: str, func: str = "sum"):
+        """PayloadScoreQuery analog (queries/payloads/
+        PayloadScoreQuery.java:48, Sum/Average/MaxPayloadFunction,
+        includeSpanScore=false): (doc_id, score), the doc's
+        per-occurrence payloads aggregated. A payload derives from the
+        position, (pos % 5 + 1) / 5 for 1-based pos: the indexed text
+        carries no `term|float` markup."""
+        from pyspark.sql import functions as F
+
+        pay = ((F.col("pos") % 5) + 1).cast("double") / F.lit(5.0)
+        agg = {"sum": F.sum, "avg": F.avg, "max": F.max}[func]
+        return (self.reader.postings(F.col("term") == term, positions=True)
+                .groupBy("doc_id").agg(agg(pay).alias("score")))
+
+    def ltr_rerank(self, terms: List[str], k: int = 10, first_k: int = 100,
+                   weights=(0.6, 0.4, -0.002), bias: float = 0.1):
+        """Learning-to-rank re-ranking (contrib/ltr LTRRescorer.java:
+        60-131 rescore window + LinearModel.java:80): the BM25
+        disjunction's top first_k, re-scored by a linear model over
+        three features extracted for those docs only — first-pass
+        score, matched query terms, doc length (OriginalScoreFeature /
+        SolrFeature / FieldLengthFeature). Model cost never scales with
+        the corpus."""
+        from pyspark.sql import functions as F
+
+        q = BooleanQuery(clauses=tuple(
+            BooleanClause(Occur.SHOULD, TermQuery(term=t)) for t in terms))
+        cand = (self.scored(q).select("doc_id", F.col("score").alias("f_bm25"))
+                .orderBy(F.desc(F.round("f_bm25", 6)), F.asc("doc_id")).limit(first_k))
+        matched = (self.reader.postings(F.col("term").isin(list(terms)))
+                   .groupBy("doc_id").agg(F.count(F.lit(1)).alias("f_matched")))
+        dl = self.reader.doc_meta.select("doc_id", F.col("length").alias("dl"))
+        w0, w1, w2 = (float(w) for w in weights)
+        ltr = (F.lit(w0) * F.col("f_bm25") + F.lit(w1) * F.col("f_matched")
+               + F.lit(w2) * F.col("dl") + F.lit(float(bias)))
+        return (
+            F.broadcast(cand).join(matched, "doc_id").join(dl, "doc_id")
+            .select("doc_id", F.round(ltr, 6).alias("ltr_score"),
+                    F.round("f_bm25", 6).alias("f_bm25"),
+                    F.col("f_matched").cast("bigint").alias("f_matched"),
+                    F.col("dl").cast("bigint").alias("f_dl"))
+            .orderBy(F.desc("ltr_score"), F.asc("doc_id")).limit(k)
         )
 
     def _expand_multiterm(self, q: Query) -> Query:

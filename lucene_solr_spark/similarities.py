@@ -1,17 +1,13 @@
 """Pluggable Similarity scoring expressions (SURVEY §2.6/§2.12).
 
 One module owns the per-(tf, dl) scoring math for every similarity
-family, shared by BOTH query paths:
-
-  - the live path (fulltext.py) applies these over its on-the-fly
-    (doc_id, tf) postings + (doc_id, dl) lengths relations;
-  - the segment path (search/executor.py) applies the IDENTICAL Column
-    expressions over block-decoded (doc_id, tf, dl) rows, so the two
-    paths (and the DuckDB oracles) agree bit-for-bit in float64.
+family: the segment executor (search/executor.py, which the live
+fulltext.py surface delegates to) applies these Column expressions over
+block-decoded (doc_id, tf, dl) rows, and they agree bit-for-bit in
+float64 with the DuckDB oracles.
 
 This is the SimilarityBase.score(freq, norm) plug point
-(similarities/SimilarityBase.java:71): the postings source differs,
-the scoring expression is one shared definition. Per-doc statistics
+(similarities/SimilarityBase.java:71). Per-doc statistics
 (tf, dl) arrive as Columns; collection statistics (N, avgdl, df, ttf)
 arrive as driver-side scalars folded into literals — the
 ExactStatsCache contract (stats are GLOBAL, never per-leaf).
@@ -42,14 +38,17 @@ def idf_bm25(df: int, doc_count: int) -> float:
     return math.log(1.0 + (doc_count - df + 0.5) / (df + 0.5))
 
 
+def bm25_norm(dl: Column, avgdl: float) -> Column:
+    """BM25 length normalisation k1 * ((1 - b) + b * dl / avgdl)."""
+    return F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * dl.cast("double") / F.lit(avgdl))
+
+
 def bm25_score(tf: Column, dl: Column, *, idf: float, avgdl: float,
                boost: float = 1.0) -> Column:
     """float64 BM25; constants folded as literals so the whole
     expression stays inside WholeStageCodegen."""
     tf_d = tf.cast("double")
-    dl_d = dl.cast("double")
-    denom = tf_d + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * dl_d / F.lit(avgdl))
-    return F.lit(boost * idf) * (tf_d * F.lit(K1 + 1.0)) / denom
+    return F.lit(boost * idf) * (tf_d * F.lit(K1 + 1.0)) / (tf_d + bm25_norm(dl, avgdl))
 
 
 def classic_score(tf: Column, dl: Column, *, idf: float,

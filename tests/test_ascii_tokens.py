@@ -1,15 +1,11 @@
-"""Parity of the ASCII byte-level fast tokenizer vs the pandas reference
-path of analysis.vectorized_field_tokens.
+"""Parity of analysis.vectorized_field_tokens, the batch tokenizer every
+build runs, with the per-doc analyze_field reference the oracle uses.
 
-The fast path (analysis._ascii_fast_tokens) computes the token stream on
-the Arrow string column's UTF-8 byte buffer; its byte-class tables are
-built from the SAME regexes the reference path uses, so the streams must
-be identical. Fallback semantics differ by design (the fast path sends
-every non-ASCII row to per-doc fallback; the pandas path only
-lower-length-change rows under 'standard'), so parity is checked on the
-MATERIALIZED per-doc (term, position) lists after resolving fallbacks
-through analyze_field — exactly how indexing/builder.py consumes the
-tuple.
+Checked on the MATERIALIZED per-doc (term, position) lists and field
+lengths after resolving the vectorized path's fallback rows through
+analyze_field — exactly how indexing/builder.py consumes the tuple —
+over hand-picked edge cases, a generated corpus (with a field-key
+prefix) and random ASCII soup.
 
 Reference chains: StandardAnalyzer (StandardTokenizerImpl.jflex:103-262),
 StopFilter.java:28 position-gap semantics.
@@ -19,7 +15,6 @@ import numpy as np
 import pandas as pd
 import pytest
 
-import lucene_solr_spark.analysis as A
 from lucene_solr_spark.analysis import analyze_field, vectorized_field_tokens
 from lucene_solr_spark.corpus import gen_corpus_pdf
 
@@ -70,72 +65,40 @@ def materialize(contents: pd.Series, analyzer: str, prefix: str = ""):
     return [sorted(d, key=lambda x: (x[1], x[0])) for d in docs], out_len
 
 
-def _both_paths(contents, analyzer, prefix=""):
-    fast = materialize(contents, analyzer, prefix)
-    orig = A._ascii_fast_tokens
-    A._ascii_fast_tokens = lambda *a, **k: None
-    try:
-        slow = materialize(contents, analyzer, prefix)
-    finally:
-        A._ascii_fast_tokens = orig
-    return fast, slow
+def assert_matches_reference(contents: pd.Series, analyzer: str, prefix: str = ""):
+    """The vectorized path equals the per-doc analyze_field inversion —
+    the ground truth the oracle uses — doc by doc."""
+    docs, lens = materialize(contents, analyzer, prefix)
+    for i, text in enumerate(contents):
+        per, length = analyze_field(text, analyzer)
+        want = sorted(
+            [(prefix + t, p) for t, plist in per.items() for p in plist],
+            key=lambda x: (x[1], x[0]))
+        assert docs[i] == want, (analyzer, i, text)
+        assert lens[i] == length, (analyzer, i, text)
+
+
+def _edge_cases() -> pd.Series:
+    return pd.Series(EDGE_CASES, dtype=object).fillna("").astype(str)
 
 
 @pytest.mark.parametrize("analyzer", ANALYZERS)
 def test_edge_case_parity(analyzer):
-    contents = pd.Series(EDGE_CASES, dtype=object).fillna("").astype(str)
-    (fd, fl), (sd, sl) = _both_paths(contents, analyzer)
-    assert fd == sd
-    assert fl == sl
+    assert_matches_reference(_edge_cases(), analyzer)
 
 
 @pytest.mark.parametrize("analyzer", ["standard", "simple_stop", "porter"])
 def test_corpus_parity_with_prefix(analyzer):
     contents = gen_corpus_pdf(500)["content"].fillna("").astype(str)
-    (fd, fl), (sd, sl) = _both_paths(contents, analyzer, prefix="f9:")
-    assert fd == sd
-    assert fl == sl
-
-
-def test_fast_path_taken_for_ascii_batch():
-    contents = pd.Series(["alpha beta", "gamma delta"] * 50)
-    got = A._ascii_fast_tokens(contents, "standard", True, "", False)
-    assert got is not None
-    flat, doc_idx, pos, lengths, fb = got
-    assert fb == []
-    assert list(lengths) == [2] * 100
-    # duplicated tokens share ONE Python object (dictionary encoding)
-    alphas = [t for t in flat if t == "alpha"]
-    assert all(t is alphas[0] for t in alphas)
-
-
-def test_gate_skips_non_ascii_heavy_batch():
-    contents = pd.Series(["日本語テキスト"] * 90 + ["ascii text"] * 10)
-    got = A._ascii_fast_tokens(contents, "standard", True, "", False)
-    assert got is None  # pandas path vectorizes these better per-row
+    assert_matches_reference(contents, analyzer, prefix="f9:")
 
 
 @pytest.mark.parametrize("analyzer", ["standard", "english", "porter"])
 def test_vectorized_matches_per_doc_reference(analyzer):
-    """Both vectorized paths must equal the per-doc analyze_field
-    inversion — the ground truth the oracle uses."""
-    contents = pd.Series(EDGE_CASES, dtype=object).fillna("").astype(str)
-    for disable_fast in (False, True):
-        if disable_fast:
-            orig = A._ascii_fast_tokens
-            A._ascii_fast_tokens = lambda *a, **k: None
-        try:
-            docs, lens = materialize(contents, analyzer)
-        finally:
-            if disable_fast:
-                A._ascii_fast_tokens = orig
-        for i, text in enumerate(contents):
-            per, length = analyze_field(text, analyzer)
-            want = sorted(
-                [(t, p) for t, plist in per.items() for p in plist],
-                key=lambda x: (x[1], x[0]))
-            assert docs[i] == want, (analyzer, disable_fast, i, text)
-            assert lens[i] == length, (analyzer, disable_fast, i, text)
+    """A doc's tokens do not depend on its batch: each edge case alone,
+    as a one-row batch, matches the reference too."""
+    for text in EDGE_CASES:
+        assert_matches_reference(pd.Series([text], dtype=object), analyzer)
 
 
 def test_random_ascii_fuzz_parity():
@@ -145,6 +108,4 @@ def test_random_ascii_fuzz_parity():
             for _ in range(300)]
     contents = pd.Series(rows, dtype=object)
     for analyzer in ("standard", "simple", "whitespace"):
-        (fd, fl), (sd, sl) = _both_paths(contents, analyzer)
-        assert fd == sd, analyzer
-        assert fl == sl, analyzer
+        assert_matches_reference(contents, analyzer)
