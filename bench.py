@@ -190,7 +190,7 @@ def main() -> None:
         )),
         "bm25_phrase": PhraseQuery(terms=("def", "class")),
     }
-    # For the WAND-vs-exhaustive comparison the pruned and exhaustive
+    # For the pruned-vs-exhaustive comparison the pruned and exhaustive
     # reps are INTERLEAVED within the same measurement window: this
     # host's speed drifts minute-to-minute, so timing all exhaustive
     # reps first and all pruned reps later lets drift masquerade as a
@@ -208,11 +208,10 @@ def main() -> None:
             searcher.search(q, k=10)
             reps.append(time.time() - t0)
             if name in wand_pairs:
-                # prune="auto": the cost gate picks WAND or exhaustive
-                # from the persisted block-UB sketch (rank-identical
-                # either way; tests/test_wand.py). The *_wand label
-                # times the CHOSEN plan — the engine never runs a
-                # pruned plan the model says can't pay.
+                # prune="auto" always plans the block-max keep-set from
+                # the skip data and decodes the kept blocks only
+                # (rank-identical to exhaustive; tests/test_wand.py), so
+                # the *_wand label times the pruned plan.
                 t0 = time.time()
                 searcher.search(q, k=10, prune="auto")
                 reps_w.append(time.time() - t0)

@@ -39,7 +39,7 @@ with pyarrow (SegmentPartWriter):
 and returns one counters row; a task without rows writes no files (a
 scan pays a task per file). A partition is a sub-segment for
 statistics: term_stats holds one row per term per partition, and every
-reader sums them (df/ttf) or merges them (impact tables, cost sketches).
+reader sums them (df/ttf).
 Each file is written under a '.'-prefixed temp name and renamed into
 place, so a failed attempt's leftovers are never read, and a retried
 task's deterministic name replaces its earlier file. The merge's repack
@@ -75,10 +75,7 @@ DOC_SCHEMA = (
     "length int, norm int, sha256 string"
 )
 
-TERM_STATS_SCHEMA = (
-    "term string, df long, ttf long, gnblocks long, gimp_norm array<int>, "
-    "gimp_tf array<int>, gq_tf array<bigint>, gq_dl array<double>"
-)
+TERM_STATS_SCHEMA = "term string, df long, ttf long"
 
 # rows per parquet row group of the blk and term-stats files: the rows
 # are term-sorted, so a term lookup (the driver's pyarrow isin read, a
@@ -172,7 +169,7 @@ class SegmentPartWriter:
     metadata (the blobs are written once and never read back). Without
     blocks it writes no files, unless keep_empty."""
 
-    META_COLS = ["term", "n", "sum_tf", "imp_tf", "imp_norm"]
+    META_COLS = ["term", "n", "sum_tf"]
 
     def __init__(self, seg_dir: str, pid: int, keep_empty: bool = False):
         self.name = f"part-{pid:05d}.parquet"
@@ -188,13 +185,12 @@ class SegmentPartWriter:
         self.blk.write(blocks)
         self.meta.append(blocks[self.META_COLS])
 
-    def close(self, avgdl: Optional[float],
-              norms_mode: Optional[str]) -> dict:
+    def close(self) -> dict:
         """Write the term stats; returns {blocks, bytes, stats_s}."""
         t0 = time.perf_counter()
         meta = (pd.concat(self.meta, ignore_index=True) if self.meta
                 else pd.DataFrame({c: [] for c in self.META_COLS}))
-        stats = term_stats_table(meta, avgdl, norms_mode)
+        stats = term_stats_table(meta)
         stats_s = time.perf_counter() - t0
         sf = _PartFile(os.path.join(self.seg_dir, "term_stats.parquet",
                                     self.name),
@@ -207,111 +203,26 @@ class SegmentPartWriter:
                 "stats_s": stats_s}
 
 
-N_UB_QUANTILES = 17  # order statistics kept per term (0/16 .. 16/16)
-
-
-def term_stats_table(blocks: pd.DataFrame, avgdl: Optional[float] = None,
-                     norms_mode: Optional[str] = None):
-    """Per-term stats of a set of blocks (columns term, n, sum_tf,
-    imp_tf, imp_norm), as a term-sorted pyarrow table in
-    TERM_STATS_SCHEMA:
-
-      df, ttf    sum(n), sum(sum_tf) — the scoring statistics;
-      gnblocks   the term's block count;
-      gimp_*     the per-term competitive-impact table
-                 (CompetitiveImpactAccumulator.java:30 merged across the
-                 blocks): every block frontier pair (norm, tf), max tf
-                 per norm, Pareto-reduced — a pair is kept only when its
-                 tf beats every pair at a smaller norm (shorter doc), so
-                 max over pairs of score(tf, norm) equals the max over
-                 all blocks' impact bounds. Norm-ascending;
-      gq_*       the cost-gate sketch: the blocks ranked by their best
-                 frontier pair's BM25 tf-saturation at (k1=1.2, b=0.75,
-                 avgdl) — ties by tf — and the REALIZED (tf, dl) pair of
-                 all blocks (<= N_UB_QUANTILES of them) or of ranks
-                 round(i * (cnt - 1) / (N_UB_QUANTILES - 1)),
-                 i = 0 .. N_UB_QUANTILES - 1, so queries re-evaluate the
-                 bound under their own parameters (the access-path cost
-                 model of IndexOrDocValuesQuery.java:52 /
-                 BooleanWeight.java:317, applied to the WAND-vs-exhaustive
-                 plan choice). Typed nulls when avgdl or norms_mode is
-                 missing (multi-field and zero-doc segments).
-
-    Pure numpy over block metadata: blobs are never touched."""
+def term_stats_table(blocks: pd.DataFrame):
+    """Per-term stats of a set of blocks (columns term, n, sum_tf), as a
+    term-sorted pyarrow table in TERM_STATS_SCHEMA: df = sum(n) and
+    ttf = sum(sum_tf), the scoring statistics. Pure numpy over block
+    metadata: blobs are never touched."""
     import pyarrow as pa
 
-    schema = arrow_schema(TERM_STATS_SCHEMA)
     codes, uniq = pd.factorize(
         pd.Series(blocks["term"].to_numpy(), dtype=object), sort=True)
-    nt = len(uniq)
-    # blocks grouped by term (a stable sort keeps each term's doc order)
+    # blocks grouped by term
     order = np.argsort(codes, kind="stable")
-    c = codes[order].astype(np.int64)
-    nblk = len(c)
-    head = np.flatnonzero(np.diff(c, prepend=-1))
-    cnt = np.diff(np.r_[head, nblk]).astype(np.int64)
+    head = np.flatnonzero(np.diff(codes[order], prepend=-1))
 
     def per_term_sum(col: str) -> np.ndarray:
         return np.add.reduceat(blocks[col].to_numpy(dtype=np.int64)[order], head)
 
-    def lists(values: np.ndarray, counts: np.ndarray, typ):
-        offsets = np.zeros(nt + 1, dtype=np.int32)
-        np.cumsum(counts, out=offsets[1:])
-        return pa.ListArray.from_arrays(pa.array(offsets),
-                                        pa.array(values, type=typ))
-
-    # every block frontier pair (a block has at least one), in grouped
-    # block order
-    imp_tf = blocks["imp_tf"].to_numpy()[order]
-    imp_nb = blocks["imp_norm"].to_numpy()[order]
-    lens = np.fromiter(map(len, imp_tf), dtype=np.int64, count=nblk)
-    ptf = np.concatenate([np.zeros(0, dtype=np.int64), *imp_tf])
-    pnb = np.concatenate([np.zeros(0, dtype=np.int64), *imp_nb])
-    pterm = np.repeat(c, lens)
-
-    # Pareto table: max tf per (term, norm), then keep the pairs whose
-    # tf beats the running max of the term's smaller norms
-    o = np.lexsort((-ptf, pnb, pterm))
-    t, b, f = pterm[o], pnb[o], ptf[o]
-    first = (np.diff(t, prepend=-1) != 0) | (np.diff(b, prepend=0) != 0)
-    t, b, f = t[first], b[first], f[first]
-    key = t * (int(f.max(initial=0)) + 1) + f  # offset: no cross-term max
-    keep = key > np.r_[-1, np.maximum.accumulate(key)[:-1]]
-    gcount = np.bincount(t[keep], minlength=nt)
-    cols = [pa.array(np.asarray(uniq, dtype=object), type=pa.string()),
-            pa.array(per_term_sum("n")), pa.array(per_term_sum("sum_tf")),
-            pa.array(cnt), lists(b[keep], gcount, pa.int32()),
-            lists(f[keep], gcount, pa.int32())]
-
-    if avgdl is None or norms_mode is None or avgdl <= 0:
-        cols += [pa.nulls(nt, type=schema.field("gq_tf").type),
-                 pa.nulls(nt, type=schema.field("gq_dl").type)]
-        return pa.Table.from_arrays(cols, schema=schema)
-
-    # each block's best frontier pair: max saturation, first on ties
-    from ..smallfloat import LENGTH_TABLE
-
-    dl = (LENGTH_TABLE.astype(np.float64)[np.mod(pnb, 256)]
-          if norms_mode == "byte" else pnb.astype(np.float64))
-    s = ptf / (ptf + 1.2 * (0.25 + 0.75 * dl / float(avgdl)))
-    starts = np.cumsum(lens) - lens
-    smax = np.maximum.reduceat(s, starts)
-    arg = np.minimum.reduceat(
-        np.where(s == np.repeat(smax, lens), np.arange(len(s)), len(s)), starts)
-    bs, btf, bdl = s[arg], ptf[arg], dl[arg]
-    # rank each term's blocks by (saturation, tf); pick the order stats
-    # (c is sorted, so each term keeps its positions [head, head + cnt))
-    r = np.lexsort((btf, bs, c))
-    big = cnt > N_UB_QUANTILES
-    picks = np.floor(np.arange(N_UB_QUANTILES)[None, :]
-                     * (cnt[big, None] - 1) / (N_UB_QUANTILES - 1) + 0.5)
-    sel = np.repeat(~big, cnt)
-    sel[(head[big, None] + picks.astype(np.int64)).ravel()] = True
-    r = r[sel]
-    qcount = np.minimum(cnt, N_UB_QUANTILES)
-    cols += [lists(btf[r], qcount, pa.int64()),
-             lists(bdl[r], qcount, pa.float64())]
-    return pa.Table.from_arrays(cols, schema=schema)
+    return pa.Table.from_arrays(
+        [pa.array(np.asarray(uniq, dtype=object), type=pa.string()),
+         pa.array(per_term_sum("n")), pa.array(per_term_sum("sum_tf"))],
+        schema=arrow_schema(TERM_STATS_SCHEMA))
 
 
 CHUNK_BITS = 13  # 8192-doc chunks: the unit of mega-term splitting
@@ -349,8 +260,7 @@ def _make_invert_fn(seg_dir: str, analyzer: str, norms: str,
     segment merges.
 
     The chamber writes its blk, doc and term-stats part files under
-    seg_dir itself and yields one counters row (counters_schema); its
-    term stats use the partition's own avgdl for the cost-gate sketch.
+    seg_dir itself and yields one counters row (counters_schema).
     Called outside Spark (no TaskContext) it runs as partition 0.
 
     Memory: the chamber flushes whenever `flush_tokens` tokens are
@@ -569,13 +479,7 @@ def _make_invert_fn(seg_dir: str, analyzer: str, norms: str,
             if n_buffered >= flush_tokens:
                 flush()
         flush()
-        # the cost-gate sketch ranks blocks at the partition's avgdl;
-        # multi-field builds skip it (per-field avgdl differs, and the
-        # pruned OR path is single-field)
-        docs = counters["docs"]
-        avgdl = (counters["sum_dl"] / docs
-                 if docs and field_specs is None else None)
-        out = blk_out.close(avgdl, None if field_specs else norms)
+        out = blk_out.close()
         out["bytes"] += doc_out.close()
         yield pd.DataFrame([{"pid": pid, **counters, **out}])
 

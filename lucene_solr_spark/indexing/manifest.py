@@ -56,10 +56,10 @@ from typing import Dict, List, Optional
 _COMMIT_LOCKS: Dict[str, threading.Lock] = {}
 
 # The one segment format this engine writes and reads: split position
-# column (pblob), per-block competitive impacts and the per-term impact
-# table in term_stats, deletes as the per-segment live_<del_gen>.bin
-# bitset (format 1 kept index-global deletes/ tombstones). Manifests
-# written before the stamp existed load every segment as format 0.
+# column (pblob), per-block competitive impacts, deletes as the
+# per-segment live_<del_gen>.bin bitset (format 1 kept index-global
+# deletes/ tombstones). Manifests written before the stamp existed load
+# every segment as format 0.
 FORMAT_VERSION = 2
 
 
@@ -116,10 +116,8 @@ class Manifest:
     index_sort: Optional[List[str]] = None
     # norm encoding of the index ('byte' = Lucene intToByte4 quantized,
     # 'exact' = raw field length). Readers score with it (IndexReader
-    # takes no norms argument) and merges decode min_norm -> doc length
-    # with it when recomputing the per-term block-UB quantile sketch;
-    # build_index refuses a batch of another encoding. None until the
-    # first build.
+    # takes no norms argument); build_index refuses a batch of another
+    # encoding. None until the first build.
     norms: Optional[str] = None
 
     @property

@@ -239,23 +239,12 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
         .sortWithinPartitions("term", "doc_id")
         .drop("chunk")
     )
-    # cost-gate quantile sketch inputs: canonical avgdl from the input
-    # segments' persisted counters (deleted docs' lengths are still in
-    # sum_dl — canonical ORDERING tolerance, query-time bounds are
-    # re-evaluated under the live avgdl); norms mode from the manifest
-    in_docs = sum(s.doc_count for s in inputs)
-    in_dl = sum(s.sum_dl for s in inputs)
-    is_multifield = any(s.field_stats for s in inputs)
-    avgdl_m = (float(in_dl) / in_docs
-               if in_docs and not is_multifield else None)
-    norms_mode = None if is_multifield else store.load().norms
-
     def repack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # the builder's writer: term-sorted blk and term-stats part files
         out = SegmentPartWriter(out_dir, _task_pid())
         for blk in _repack_aggregated(batches, has_positions):
             out.add_blocks(blk)
-        yield pd.DataFrame([out.close(avgdl_m, norms_mode)])
+        yield pd.DataFrame([out.close()])
 
     shutil.rmtree(out_dir, ignore_errors=True)
     rows = shuffled.mapInPandas(
@@ -263,7 +252,7 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
     if not any(r["blocks"] for r in rows):
         # every input doc was purged: no task wrote a file, but readers
         # need one of each kind
-        SegmentPartWriter(out_dir, 0, keep_empty=True).close(None, None)
+        SegmentPartWriter(out_dir, 0, keep_empty=True).close()
 
     # the doc metadata: one pass drops deleted docs, writes the task's part
     # file as the builder's invert task does and returns the live counters

@@ -39,14 +39,15 @@ precisions:
              the span and similarity expressions do (_dl_col).
 
 Pruning (block metadata = the skip-list/WAND analog, SURVEY §4):
-  term / OR-of-terms top-k takes a batch block-max WAND path
-  (search(..., prune=True), Broder et al. 2003; Ding & Suel 2011):
-  per-block upper bounds from each block's competitive impact frontier,
-  a running threshold from the blocks decoded so far, and a descent
-  that stops at the first block with UB + slack < threshold. Docs whose
-  blocks were pruned can surface only with partial sums provably below
-  the true k-th score, so the emitted top-k is exactly the exhaustive
-  one — shadow-verified in tests/test_wand.py.
+  term / OR-of-terms top-k (search(..., prune=True or "auto")) plans a
+  block-max keep-set on the driver from the skip data (Broder et al.
+  2003; Ding & Suel 2011; plan_pruned_or): per-block upper and lower
+  bounds from each block's competitive impact frontier, a threshold
+  theta from the k best lower bounds of one term, and a keep rule that
+  drops every block whose bound plus the other terms' best bounds over
+  its doc range stays below theta. The ordinary plan then decodes the
+  kept blocks only, so the top-k is exactly the exhaustive one
+  (checked in tests/test_wand.py) from the same Spark jobs.
 """
 
 from __future__ import annotations
@@ -61,7 +62,7 @@ import numpy as np
 import pandas as pd
 
 from .. import bm25
-from ..codec import decode_block, decode_block_positions
+from ..codec import IMPACT_CAP, decode_block, decode_block_positions
 from ..fields import FIELD_SEP, split_term_key, term_key
 from ..smallfloat import LENGTH_TABLE
 from ..indexing.builder import POSTINGS_SCHEMA
@@ -204,28 +205,23 @@ class IndexReader:
         in-heap terms index analog (BlockTreeTermsWriter.java:196), so
         statistics cost no Spark job. One Row per term, the shape of a
         groupBy("term") over self.stats: df and ttf summed across
-        segments, the per-segment impact tables (gimps) and cost
-        sketches (gqs) gathered for term_wand_stats / term_cost_stats to
-        merge. Serves term_stats, term_wand_stats and term_cost_stats;
-        single-entry cache, as one search asks for the same set twice."""
+        segments and their part files. Columns are selected by name, so
+        format-2 segments whose term stats carry more columns read the
+        same. Single-entry cache, as one search asks for the same set
+        twice."""
         from pyspark.sql import Row
 
         cached = getattr(self, "_stats_rows_cache", None)
         if cached is not None and cached[0] == terms:
             return cached[1]
-        tbl = _read_term_rows(self._stats_dirs, [
-            "term", "df", "ttf", "gimp_norm", "gimp_tf", "gnblocks", "gq_tf",
-            "gq_dl"], terms)
-        acc: Dict[str, list] = {}
-        for r in tbl.to_pylist():
-            a = acc.setdefault(r["term"], [0, 0, [], []])
-            a[0] += r["df"]
-            a[1] += r["ttf"]
-            a[2].append(Row(gimp_norm=r["gimp_norm"], gimp_tf=r["gimp_tf"]))
-            a[3].append(Row(gnblocks=r["gnblocks"], gq_tf=r["gq_tf"],
-                            gq_dl=r["gq_dl"]))
-        rows = [Row(term=t, df=a[0], ttf=a[1], gimps=a[2], gqs=a[3])
-                for t, a in sorted(acc.items())]
+        tbl = _read_term_rows(self._stats_dirs, ["term", "df", "ttf"], terms)
+        acc: Dict[str, List[int]] = {}
+        for t, df, ttf in zip(*(tbl.column(c).to_pylist()
+                                for c in ("term", "df", "ttf"))):
+            a = acc.setdefault(t, [0, 0])
+            a[0] += df
+            a[1] += ttf
+        rows = [Row(term=t, df=a[0], ttf=a[1]) for t, a in sorted(acc.items())]
         self._stats_rows_cache = (terms, rows)
         return rows
 
@@ -237,63 +233,6 @@ class IndexReader:
         rows = self._term_stats_rows(tuple(sorted(set(terms))))
         return {r["term"]: (int(r["df"]), int(r["ttf"])) for r in rows
                 if r["term"] in set(terms)}
-
-    def term_wand_stats(self, terms: List[str]) -> Dict[str, Tuple[list, list]]:
-        """Per-term GLOBAL competitive-impact table (norms, tfs) — the
-        per-segment tables persisted in term_stats
-        (CompetitiveImpactAccumulator.java:30), merged per norm value by
-        max tf — the WAND slack bound input, so the pruned search needs
-        no extra metadata job. Terms without postings are absent.
-        Served from the same driver read as term_stats (shared cache)."""
-        if not terms:
-            return {}
-        want = set(terms)
-        out = {}
-        for r in self._term_stats_rows(tuple(sorted(want))):
-            if r["term"] not in want:
-                continue
-            acc: Dict[int, int] = {}
-            for seg in r["gimps"]:
-                for nb, tf in zip(seg["gimp_norm"], seg["gimp_tf"]):
-                    if acc.get(nb, -1) < tf:
-                        acc[nb] = tf
-            ks = sorted(acc)
-            out[r["term"]] = (ks, [acc[nb] for nb in ks])
-        return out
-
-    def term_cost_stats(
-        self, terms: List[str]
-    ) -> Optional[Dict[str, Tuple[np.ndarray, np.ndarray, np.ndarray]]]:
-        """Per-term block-UB distribution for the access-path cost gate:
-        {term: (tf, dl, weight)} where (tf[i], dl[i]) are realized
-        frontier pairs at equally-spaced order statistics of the
-        per-block upper bound and weight[i] = blocks represented by
-        point i. Merged across segments driver-side (each segment's
-        points carry weight nblocks_seg / npoints_seg — an empirical
-        mixture, exact when every block is a point). None when any
-        live segment holding a term wrote no sketch (multi-field and
-        zero-doc segments, builder.py term_stats_table) — callers
-        fall back to un-gated behavior. Served from the same driver read
-        as term_stats."""
-        if not terms:
-            return None
-        want = set(terms)
-        rows = [r for r in self._term_stats_rows(tuple(sorted(set(terms))))
-                if r["term"] in want]
-        out: Dict[str, Tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        for r in rows:
-            tfs, dls, wts = [], [], []
-            for seg in r["gqs"]:
-                nb, qtf, qdl = seg["gnblocks"], seg["gq_tf"], seg["gq_dl"]
-                if qtf is None or qdl is None or not len(qtf):
-                    return None
-                w = float(nb) / len(qtf)
-                tfs.append(np.asarray(qtf, dtype=np.float64))
-                dls.append(np.asarray(qdl, dtype=np.float64))
-                wts.append(np.full(len(qtf), w, dtype=np.float64))
-            out[r["term"]] = (np.concatenate(tfs), np.concatenate(dls),
-                              np.concatenate(wts))
-        return out
 
     def postings(self, where=None, positions: bool = False):
         """Decoded postings of the blocks whose term matches `where` (a
@@ -434,8 +373,6 @@ class MultiReader:
     drop_deleted = IndexReader.drop_deleted
     _term_stats_rows = IndexReader._term_stats_rows
     term_stats = IndexReader.term_stats
-    term_wand_stats = IndexReader.term_wand_stats
-    term_cost_stats = IndexReader.term_cost_stats
     collection_stats = IndexReader.collection_stats
     postings = IndexReader.postings
     term_dictionary = IndexReader.term_dictionary
@@ -463,8 +400,8 @@ class Searcher:
         self.default_field = default_field
         self.query_cache = query_cache
         # the plan of the last search() call, for bench/test
-        # introspection: the WAND gate's decision (plan_pruned_or) for
-        # term / OR queries, else _exhaustive_plan's description
+        # introspection: plan_pruned_or's for a pruned term / OR query,
+        # else _exhaustive_plan's description
         self.last_plan = None
         # (blocks kept, blocks total) of each skip-data prefilter run
         # since the last search() began
@@ -482,9 +419,10 @@ class Searcher:
     def _weight(self, field: Optional[str], boost: float, idf: float,
                 idf32=None) -> dict:
         """Scoring constants of one term, phrase or synonym, in the one
-        weight shape that every scoring stage (_bm25_scores) and WAND
-        bound reads: wv (the tf -> inf score asymptote) and avgdl, plus
-        the 256-entry norm cache (float32) or idf and boost (float64).
+        weight shape that every scoring stage (_bm25_scores) and block
+        bound (_block_bounds) reads: wv (the tf -> inf score asymptote)
+        and avgdl, plus the 256-entry norm cache (float32) or idf and
+        boost (float64).
         idf is the float64 idf; idf32 the float32 one when it is not
         float32(idf) (a phrase sums its terms' float32 idfs). The
         float32 constants follow BM25Similarity's operation order."""
@@ -524,8 +462,9 @@ class Searcher:
         (clause_id int, doc_id long, score double). Scores are exact
         float32 values widened to double (float32 mode) or pure doubles
         (float64 mode) — downstream sums happen in double either way.
-        keep: the conjunction prefilter's kept block keys per term
-        (_conjunction_blocks); other blocks are skipped undecoded."""
+        keep: kept block keys per term, {term: min_doc values} (the
+        conjunction prefilter's, _conjunction_blocks, or the block-max
+        planner's, plan_pruned_or); other blocks are skipped undecoded."""
         from pyspark.sql import functions as F
 
         spark = self.reader.spark
@@ -1174,9 +1113,11 @@ class Searcher:
 
     # -- boolean composition --------------------------------------------------
 
-    def _eval(self, q: Query, boost: float):
+    def _eval(self, q: Query, boost: float, keep=None):
         """Returns DataFrame (doc_id long, score double) of matching docs.
-        Score is the float32-exact (widened) or float64 node score."""
+        Score is the float32-exact (widened) or float64 node score.
+        keep: a block keep-set for a term or boolean-of-terms q
+        (_score_terms)."""
         from pyspark.sql import functions as F
 
         spark = self.reader.spark
@@ -1188,7 +1129,7 @@ class Searcher:
                 "doc_id", F.lit(float(np.float32(b)) if self.precision == "float32" else float(b)).alias("score")
             ))
         if isinstance(q, TermQuery):
-            df = self._score_terms([(0, term_key(q.field, q.term), b)])
+            df = self._score_terms([(0, term_key(q.field, q.term), b)], keep=keep)
             return df.select("doc_id", "score")
         if isinstance(q, TermInSetQuery):
             const = float(np.float32(b)) if self.precision == "float32" else float(b)
@@ -1216,7 +1157,7 @@ class Searcher:
                 expr = expr.cast("float").cast("double")
             return agg.select("doc_id", expr.alias("score"))
         if isinstance(q, BooleanQuery):
-            return self._eval_boolean(q, b)
+            return self._eval_boolean(q, b, keep)
         raise TypeError(f"unsupported query node: {q!r}")
 
     def _eval_synonym(self, q: SynonymQuery, boost: float):
@@ -1280,13 +1221,14 @@ class Searcher:
         self._skips.append((sum(map(len, keep.values())), sum(totals.values())))
         return keep, totals
 
-    def _eval_boolean(self, q: BooleanQuery, boost: float):
+    def _eval_boolean(self, q: BooleanQuery, boost: float, keep=None):
         """One hash aggregation: per-clause conditional sums (fixed
         summation order across clause ids — bit-reproducible) + occur
         counters, then the MUST/SHOULD/MUST_NOT/FILTER predicate.
         Conjunctions with >=2 MUST/FILTER term clauses skip every block
         outside the MUST terms' common doc ranges (exact; planned on the
-        driver from the skip data, _conjunction_blocks)."""
+        driver from the skip data, _conjunction_blocks). keep: the term
+        clauses' keep-set, planned by the caller (plan_pruned_or)."""
         from pyspark.sql import functions as F
 
         parts = []
@@ -1320,12 +1262,11 @@ class Searcher:
                 t for cid, t, _ in flat_terms
                 if occur_by_cid[cid] in (Occur.MUST, Occur.FILTER)
             })
-            keep = None
             # prune only when every clause of the query is a flat term:
             # a non-term MUST sub-clause (e.g. phrase) isn't represented
             # in the common region, and its matches would be truncated
             # by the pruned SHOULD/NOT decodes
-            if len(must_terms) >= 2 and len(flat_terms) == len(q.clauses):
+            if keep is None and len(must_terms) >= 2 and len(flat_terms) == len(q.clauses):
                 keep = self._conjunction_blocks(
                     must_terms, sorted({t for _, t, _ in flat_terms}))[0]
             parts.insert(0, self._score_terms(flat_terms, keep=keep))
@@ -1365,765 +1306,100 @@ class Searcher:
         g = u.groupBy("doc_id").agg(*[F.expr(a) for a in aggs])
         return g.where(" AND ".join(cond)).selectExpr("doc_id", f"{total} AS score")
 
-    # -- block-max WAND pruning (Ding & Suel 2011; Broder et al. 2003) -------
+    # -- block-max pruning (Ding & Suel 2011; Broder et al. 2003) -----------
 
     WAND_MARGIN = 1e-4  # float32 rounding slack (CheckHits tolerance scale)
-    # rare-term prefetch engages only when the common clauses carry at
-    # least this many postings (see the gate in _search_pruned); tests
-    # set it to 0 on an instance to force the path on tiny fixtures
-    WAND_PREFETCH_MIN_COMMON_POSTINGS = 512_000
-    # doc-range-aligned block-max slack engages only when the common
-    # clauses carry at least this many postings (the extra metadata job
-    # wave must repay itself in skipped decode work); tests set it to 0
-    # on an instance to force the path on tiny fixtures
-    WAND_ALIGNED_MIN_COMMON_POSTINGS = 512_000
-    WAND_ALIGNED_BUCKETS = 8192      # doc-space granularity of the table
-    WAND_ALIGNED_SPAN_CAP = 256      # blocks spanning more buckets than
-    #                                  this become a global-floor row
-    #                                  (bounds the explode fan-out)
-    # rare-prefetch driver budget: below this many aggregated rare docs
-    # the exact per-doc partials are collected (full-fidelity fold +
-    # exact doc-range slack); above it the prefetch degrades to a
-    # BOUNDED summary (top-N partials + bucketed range-max table) so
-    # the driver cost stays O(N + maxdoc/bucket) at ANY corpus size
-    # instead of silently disabling pruning (tests shrink these on an
-    # instance to force the summary path on tiny fixtures)
-    WAND_PREFETCH_EXACT_CAP = 2_000_000
-    WAND_PREFETCH_TOPN = 131_072
-    WAND_PREFETCH_BUCKET_DOCS = 65_536
-
-    def _aligned_bucket_ubs(self, terms: List[str], by_term: dict,
-                            winfo: dict, ub_wv: dict):
-        """Per-term per-doc-range-bucket max block UB: the block-max
-        table of true Block-Max WAND (Ding & Suel 2011 §4; Lucene's
-        ImpactsEnum.advanceShallow exposes the same per-doc-range
-        impact bounds), doc-range aligned so two common terms prune
-        each other wherever their high-impact doc ranges don't
-        coincide.
-
-        ONE metadata-only job: scan the query terms' block metadata
-        (Catalyst prunes the postings blob from the parquet scan),
-        compute each block's exact impact UB with the SAME kernel the
-        WAND partition uses (_block_ubs), explode each block into the
-        doc-space buckets its [min_doc, max_doc] range overlaps, and
-        hash-aggregate max(ub) per (term, bucket). The collected table
-        is <= |terms| x WAND_ALIGNED_BUCKETS rows REGARDLESS of corpus
-        size (blocks spanning > WAND_ALIGNED_SPAN_CAP buckets fold into
-        a per-term global floor instead of exploding), so the driver
-        side stays O(terms x 8k) at any scale.
-
-        Returns (bucket_width, {term: np.ndarray[n_buckets]}) or None
-        when the index exposes no doc-space extent."""
-        from pyspark.sql import functions as F
-
-        doc_top = max((s.doc_base + s.doc_count
-                       for s in self.reader.manifest.segments), default=0)
-        if doc_top <= 0:
-            return None
-        nbk = self.WAND_ALIGNED_BUCKETS
-        width = max(1, -(-doc_top // nbk))
-        span_cap = self.WAND_ALIGNED_SPAN_CAP
-        precision = self.precision
-        norms_mode = self.reader.norms
-        info = {"by_term": by_term, "winfo": winfo, "ub_wv": ub_wv}
-
-        def bucket_ubs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                t_arr = pdf["term"].to_numpy()
-                ub = _block_ubs(t_arr, pdf["imp_tf"].to_numpy(),
-                                pdf["imp_norm"].to_numpy(), info, precision,
-                                norms_mode)
-                lo = pdf["min_doc"].to_numpy(dtype=np.int64) // width
-                hi = pdf["max_doc"].to_numpy(dtype=np.int64) // width
-                span = hi - lo + 1
-                wide = span > span_cap
-                parts = []
-                if wide.any():
-                    parts.append(pd.DataFrame({
-                        "term": t_arr[wide], "bucket": -1, "ub": ub[wide]}))
-                nr = np.flatnonzero(~wide)
-                if len(nr):
-                    reps = span[nr]
-                    starts = np.repeat(lo[nr], reps)
-                    # per-row ramp 0..span-1 without a Python loop
-                    ramp = np.arange(reps.sum(), dtype=np.int64) - np.repeat(
-                        np.concatenate(([0], np.cumsum(reps)[:-1])), reps)
-                    parts.append(pd.DataFrame({
-                        "term": np.repeat(t_arr[nr], reps),
-                        "bucket": starts + ramp,
-                        "ub": np.repeat(ub[nr], reps)}))
-                if parts:
-                    yield (pd.concat(parts, ignore_index=True)
-                           if len(parts) > 1 else parts[0])
-
-        rows = (
-            self.reader.blocks.where(F.col("term").isin(sorted(terms)))
-            .select("term", "min_doc", "max_doc", "imp_tf", "imp_norm")
-            .mapInPandas(bucket_ubs, "term string, bucket long, ub double")
-            .groupBy("term", "bucket").agg(F.max("ub").alias("ub"))
-            .toPandas()
-        )
-        out: Dict[str, np.ndarray] = {}
-        for t in terms:
-            out[t] = np.zeros(nbk, dtype=np.float64)
-        for t, grp in rows.groupby("term"):
-            b = grp["bucket"].to_numpy(dtype=np.int64)
-            u = grp["ub"].to_numpy(dtype=np.float64)
-            g = b < 0
-            if g.any():
-                out[t][:] = float(u[g].max())
-            fine = ~g
-            if fine.any():
-                bi = np.clip(b[fine], 0, nbk - 1)
-                np.maximum.at(out[t], bi, u[fine])
-        return width, out
-
-    def _per_clause_params(self, clause_terms: List[Tuple[int, str, float]]):
-        """Shared WAND weight bookkeeping. Returns (winfo, ub_wv, slack):
-        winfo: per-(term, boost) weights (_weights); ub_wv: per-term UB
-        weight = SUM of the term's clause weight values (a term repeated
-        in several SHOULD clauses with different boosts contributes each
-        clause's score to a doc's total, so the block bound must bound
-        the sum — the per-clause UB was the duplicate-boost bug);
-        slack[t]: sum of the OTHER terms' ub_wv — a driver-side bound on
-        everything a doc can earn elsewhere (BM25's tf saturation keeps
-        every per-clause score strictly below its weight value)."""
-        winfo = self._weights([(t, b) for _, t, b in clause_terms])
-        ub_wv: Dict[str, float] = {}
-        for _, t, b in clause_terms:
-            ub_wv[t] = ub_wv.get(t, 0.0) + float(winfo[f"{t}\x00{b}"]["wv"])
-        total_wv = sum(ub_wv.values())
-        slack = {t: total_wv - v for t, v in ub_wv.items()}
-        return winfo, ub_wv, slack
-
-    def _term_global_ub(self, term: str, winfo: dict, wv_total: float,
-                        imp: Tuple[list, list]) -> float:
-        """Upper bound on a term's total per-doc contribution: max over
-        the term's merged competitive (norm, tf) frontier `imp`
-        (term_wand_stats) of score(tf, norm) — the exact max over all
-        blocks' impact bounds, i.e. the tightest slack the persisted
-        metadata supports (Lucene's MaxScoreCache.computeMaxScore over
-        merged impacts, search/similarities/BM25Similarity + Impacts
-        API)."""
-        w = winfo[next(k for k in winfo if k.startswith(term + "\x00"))]
-        nbs, tfs = imp
-        tf = np.asarray(tfs, dtype=np.float64)
-        nv = _impact_norms(np.asarray(nbs, dtype=np.int64), w, self.precision,
-                           self.reader.norms)
-        return float(np.max(wv_total * tf / (tf + nv)))
-
-    def _prefetch_rare_partials(self, rare_terms: List[str], by_term: dict,
-                                winfo: dict, k: int):
-        """Decode the rare terms' postings in one tiny job and return
-        (sorted doc ids, aligned exact clause-sum partials, theta0 =
-        k-th best partial, bucket_table). The per-doc sums are EXACT
-        for the rare clauses (every rare block is decoded, deleted docs
-        dropped), so theta0 is a valid global pruning threshold and
-        the per-doc values are valid per-block slack inputs.
-
-        Scale guard: below WAND_PREFETCH_EXACT_CAP aggregated docs the
-        exact per-doc partials are collected (bucket_table = None and
-        the kernel uses exact doc-range slack). Above it the collect
-        degrades to a BOUNDED summary instead of disabling pruning:
-        (a) the top-N partials by value (TakeOrdered — contains the
-        true top-k, so theta0 stays exact, and the theta fold adds a
-        SUBSET of the true rare mass: theta only gets lower = rank-safe)
-        and (b) a bucketed range-max table over doc space for the
-        per-block slack (bucket max >= exact doc-range max = a valid
-        upper bound). Driver cost is then O(topN + maxdoc/bucket)
-        regardless of corpus size."""
-        from pyspark.sql import functions as F
-
-        precision = self.precision
-        norms_mode = self.reader.norms
-        dead = self.reader.dead
-
-        def decode_rare(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                docs_out: List[np.ndarray] = []
-                sc_out: List[np.ndarray] = []
-                for term, doc_ids, tfs, norms in _decoded_blocks(pdf, dels=dead):
-                    tot = np.zeros(len(doc_ids), dtype=np.float64)
-                    for _cid, boost in by_term[term]:
-                        tot += _bm25_scores(tfs, norms, winfo[f"{term}\x00{boost}"],
-                                            precision, norms_mode)
-                    docs_out.append(doc_ids)
-                    sc_out.append(tot)
-                if docs_out:
-                    yield pd.DataFrame({
-                        "doc_id": np.concatenate(docs_out),
-                        "partial": np.concatenate(sc_out),
-                    })
-
-        cap = self.WAND_PREFETCH_EXACT_CAP
-        agg = (
-            self.reader.blocks.where(F.col("term").isin(rare_terms))
-            .select("term", "blob")
-            .mapInPandas(decode_rare, "doc_id long, partial double")
-            .groupBy("doc_id").agg(F.sum("partial").alias("partial"))
-        )
-        # Arrow collect: at engaged scale this is O(100k) rows, and
-        # driver-side Row materialization was measurably the or-WAND
-        # bottleneck (~1 s at 200k rare postings); toPandas rides the
-        # same Arrow batches the executors already produce. Persisted
-        # up front so the summary path's two extra projections reuse
-        # the decoded+aggregated partials instead of re-decoding.
-        agg = agg.persist()
-        try:
-            pdf_rows = agg.limit(cap + 1).toPandas()
-            if not len(pdf_rows):
-                return np.empty(0, dtype=np.int64), np.empty(0), -np.inf, None
-            bucket = None
-            if len(pdf_rows) > cap:
-                # summary path: the aggregated rare-doc set is too big
-                # for a full-fidelity broadcast — collect two bounded
-                # projections of it instead
-                topn = max(self.WAND_PREFETCH_TOPN, 8 * k)
-                pdf_rows = (agg.orderBy(F.desc("partial"), F.asc("doc_id"))
-                            .limit(topn).toPandas())
-                w = self.WAND_PREFETCH_BUCKET_DOCS
-                b_pdf = (
-                    agg.groupBy(
-                        F.floor(F.col("doc_id") / w).cast("long").alias("b"))
-                    .agg(F.max("partial").alias("m"))
-                    .toPandas()
-                )
-                nb = int(b_pdf["b"].max()) + 1
-                arr = np.zeros(nb, dtype=np.float64)
-                arr[b_pdf["b"].to_numpy(dtype=np.int64)] = (
-                    b_pdf["m"].to_numpy(dtype=np.float64))
-                bucket = (w, arr)
-        finally:
-            agg.unpersist()
-        docs = pdf_rows["doc_id"].to_numpy(dtype=np.int64)
-        parts = pdf_rows["partial"].to_numpy(dtype=np.float64)
-        o = np.argsort(docs)
-        docs, parts = docs[o], parts[o]
-        theta0 = (float(np.partition(parts, -k)[-k])
-                  if len(parts) >= k else -np.inf)
-        return docs, parts, theta0, bucket
-
-    def _search_pruned_or(self, terms_with_boost: List[Tuple[str, float]],
-                          k: int) -> "pd.DataFrame":
-        """Rank-safe block-max top-k for a term / OR-of-terms query in
-        ONE Spark job (single mapInPandas stage + one hash agg +
-        TakeOrdered — the same shape as the exhaustive plan, minus the
-        pruned decode work).
-
-        Per partition (the WAND-heap unit; Ding & Suel 2011 block-max
-        bounds, skip-list analog Lucene50SkipWriter.java:46):
-          1. compute every local block's UB from its impact frontier
-             (imp_tf, imp_norm), vectorized — weights/caches ride a
-             broadcast;
-          2. decode blocks in UB-descending order until >= ~4k postings
-             are seen; theta := k-th best per-doc PARTIAL sum so far.
-             Any k distinct docs' partial sums lower-bound the true
-             global k-th score (each partial <= its doc's true total),
-             so theta is a valid pruning threshold no matter how the
-             doc's other postings are laid out across partitions;
-          3. prune every remaining block with UB + slack(term) <
-             theta - margin, where slack(term) = sum of the OTHER
-             terms' total weight values (driver-side bound — BM25's tf
-             saturation keeps each per-clause score strictly below its
-             weight value), decode the survivors.
-        A pruned block's docs may surface elsewhere with partial sums,
-        but the pruning condition proves their true totals stay below
-        theta <= true k-th score, so the final top-k is exactly the
-        exhaustive one (shadow-verified in tests/test_wand.py). Emitted
-        rows are per-clause and the final aggregation uses the same
-        ordered conditional-sum shape as _eval_boolean, so scores are
-        bit-identical to the exhaustive path.
-
-        Multi-term slack: slack(t) = sum of the OTHER terms' GLOBAL max
-        block UB (the persisted impact tables, term_wand_stats — Ding &
-        Suel block-max bound) — the sum-of-weight-values bound is the
-        tf->inf asymptote and prunes almost nothing on OR queries.
-
-        Deletes: the reader's bitsets ride the broadcast and each decoded
-        block drops its deleted docs BEFORE theta computation (liveDocs
-        per leaf), so theta lower-bounds the k-th LIVE score."""
-        from pyspark.sql import functions as F
-
-        clause_terms = [(i, t, b) for i, (t, b) in enumerate(terms_with_boost)]
-        winfo, ub_wv, slack = self._per_clause_params(clause_terms)
-        rare_docs = rare_partials = rare_bucket = None
-        theta0 = -np.inf
-        rare_set: set = set()
-        if len(ub_wv) > 1:
-            # tighten: replace the weight-value (tf->inf) slack with a
-            # global block-max slack from the impact tables persisted in
-            # term_stats (free — the same tiny filtered scan term stats
-            # already take); a term without postings contributes nothing
-            gws = self.reader.term_wand_stats(sorted(ub_wv))
-            gmax = {
-                t: self._term_global_ub(t, winfo, ub_wv[t], gws[t])
-                if t in gws else 0.0
-                for t in ub_wv
-            }
-            total = sum(gmax.values())
-            slack = {t: total - gmax.get(t, 0.0) for t in ub_wv}
-        by_term: Dict[str, List[Tuple[int, float]]] = {}
-        for cid, t, b in clause_terms:
-            by_term.setdefault(t, []).append((cid, b))
-        if len(ub_wv) > 1:
-            # Rare-term prefetch (impact-ordered refinement): with
-            # term-partitioned postings the per-partition probe theta can
-            # never exceed a high-idf rare term's score, so a common
-            # term's blocks survive slack = gmax(rare) + ... and nothing
-            # prunes on mixed-idf OR queries. Decode the rare (low-df)
-            # terms in ONE tiny job, collect their exact per-doc clause
-            # sums, and broadcast (sorted doc ids, partial sums, theta0 =
-            # k-th best partial). Common-term blocks then prune against
-            # theta0 with per-BLOCK slack = other COMMON terms' gmax +
-            # max rare partial inside the block's [min_doc, max_doc]
-            # doc range (searchsorted into the broadcast) — 0 for the
-            # vast majority of blocks, so the common term's postings
-            # are mostly skipped. Rank-safety: rare partials are exact
-            # (every rare block decoded), so theta0 lower-bounds the true
-            # k-th score, and the per-block bound dominates every doc's
-            # true total. Scale: prefetch rows are capped; the broadcast
-            # is O(sum of rare dfs) <= the cap.
-            df_of = {t: winfo[f"{t}\x00{by_term[t][0][1]}"]["df"]
-                     for t in ub_wv}
-            max_df = max(df_of.values()) if df_of else 0
-            # rare = at least 2x smaller than the biggest clause term
-            # (relative, so the optimization engages at every corpus
-            # size; 2x is what the bench runs were tuned with — the
-            # common-postings gate below is the real cost guard).
-            # No absolute postings budget: the prefetch job's
-            # decode is distributed (and bounded by the common decode
-            # it exists to skip), and its driver collect is bounded
-            # inside _prefetch_rare_partials — exact per-doc partials
-            # under WAND_PREFETCH_EXACT_CAP aggregated docs, a top-N +
-            # bucketed-range-max summary above it
-            cand_rare: set = set(
-                t for t in ub_wv if 0 < df_of[t] * 2 <= max_df)
-            # the prefetch costs one extra job wave (fixed scheduler +
-            # filtered-scan latency, ~0.5-1 s on a warm local session and
-            # comparable on a cluster); it repays only by SKIPPING decode
-            # of common-term blocks, so it must not engage unless the
-            # common terms carry enough postings for the skipped decode
-            # to outweigh a wave (decoding <2M postings is sub-second)
-            common_df = sum(df_of[t] for t in ub_wv if t not in cand_rare)
-            if common_df < self.WAND_PREFETCH_MIN_COMMON_POSTINGS:
-                cand_rare = set()
-            if cand_rare and cand_rare != set(ub_wv):
-                pre = self._prefetch_rare_partials(
-                    sorted(cand_rare), by_term, winfo, k)
-                if pre is not None:
-                    rare_docs, rare_partials, theta0, rare_bucket = pre
-                    rare_set = cand_rare
-                    # common-term slack now excludes the rare terms'
-                    # global UB (replaced per block by the doc-range
-                    # max); rare terms are always decoded (tiny)
-                    common = [t for t in ub_wv if t not in rare_set]
-                    cg = {t: gmax.get(t, ub_wv[t]) for t in common}
-                    ctot = sum(cg.values())
-                    slack = dict(slack)
-                    for t in common:
-                        slack[t] = ctot - cg[t]
-        aligned_width = 0
-        aligned_tbl = None
-        if len(ub_wv) > 1:
-            # doc-range-aligned slack for the COMMON terms: two similar-
-            # weight common terms barely prune each other under a global
-            # other-term bound (every block's key clears theta), but
-            # their high-impact doc ranges rarely coincide — the aligned
-            # bucket table turns that misalignment into pruning. One
-            # extra metadata-only wave, gated like the rare prefetch.
-            common_terms = sorted(t for t in ub_wv if t not in rare_set)
-            common_post = sum(df_of.get(t, 0) for t in common_terms)
-            if (len(common_terms) > 1
-                    and common_post >= self.WAND_ALIGNED_MIN_COMMON_POSTINGS):
-                al = self._aligned_bucket_ubs(
-                    common_terms, by_term, winfo, ub_wv)
-                if al is not None:
-                    aligned_width, aligned_tbl = al
-        precision = self.precision
-        norms_mode = self.reader.norms
-        margin = self.WAND_MARGIN
-        spark = self.reader.spark
-        rare_cids = np.array(
-            sorted(cid for t in rare_set for cid, _ in by_term[t]),
-            dtype=np.int32)
-        bc = spark.sparkContext.broadcast(
-            {"by_term": by_term, "winfo": winfo, "ub_wv": ub_wv,
-             "slack": slack, "k": k, "deletes": self.reader.dead,
-             "rare_set": rare_set, "rare_docs": rare_docs,
-             "rare_partials": rare_partials, "theta0": theta0,
-             "rare_cids": rare_cids, "rare_bucket": rare_bucket,
-             "aligned": aligned_tbl, "aligned_width": aligned_width}
-        )
-        # decode-fraction instrumentation (blocks decoded vs blocks seen)
-        # for the scale-curve evidence; accumulator updates ride task
-        # completion, zero cost on the data path
-        acc_total = spark.sparkContext.accumulator(0)
-        acc_decoded = spark.sparkContext.accumulator(0)
-
-        def wand_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            info = bc.value
-            pdfs = [p for p in batches if len(p)]
-            if not pdfs:
-                return
-            pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-            terms = pdf["term"].to_numpy()
-            n_post = pdf["n"].to_numpy(dtype=np.int64)
-            blobs = pdf["blob"].to_numpy()
-
-            # per-block UBs (impact frontier) + slack
-            ub = _block_ubs(terms, pdf["imp_tf"].to_numpy(),
-                            pdf["imp_norm"].to_numpy(), info, precision,
-                            norms_mode)
-            slack_arr = np.empty(len(pdf), dtype=np.float64)
-            for t in pd.unique(terms):
-                slack_arr[terms == t] = info["slack"][t]
-
-            aligned = info.get("aligned")
-            if aligned:
-                # doc-range-ALIGNED slack (true Block-Max WAND bound,
-                # Ding & Suel 2011 §4): for a block of term t spanning
-                # docs [lo, hi], what the OTHER common terms can add to
-                # any doc in it is bounded by the max UB of THEIR blocks
-                # overlapping [lo, hi] — looked up in the broadcast
-                # per-term bucket tables (driver metadata job) via a
-                # sparse-table range max. Far tighter than the global
-                # other-term gmax when terms' high-impact doc ranges
-                # don't coincide (the common case).
-                width = info["aligned_width"]
-                min_doc_a = pdf["min_doc"].to_numpy(dtype=np.int64)
-                max_doc_a = pdf["max_doc"].to_numpy(dtype=np.int64)
-                nbk = len(next(iter(aligned.values())))
-                lo_b = np.clip(min_doc_a // width, 0, nbk - 1)
-                hi_b = np.clip(max_doc_a // width, 0, nbk - 1)
-                M = {}
-                allsum = np.zeros(len(pdf), dtype=np.float64)
-                for u, arr in aligned.items():
-                    M[u] = _range_max(_sparse_table(arr), lo_b, hi_b)
-                    allsum += M[u]
-                for t in M:
-                    m = terms == t
-                    if m.any():
-                        slack_arr[m] = allsum[m] - M[t][m]
-
-            rset = info["rare_set"]
-            if rset:
-                # prefetch mode: rare-term blocks always decode (tiny);
-                # common-term slack = other COMMON gmax (already in
-                # slack_arr) + max exact rare partial within the block's
-                # doc range (searchsorted into the broadcast arrays)
-                rdocs, rparts = info["rare_docs"], info["rare_partials"]
-                min_doc = pdf["min_doc"].to_numpy(dtype=np.int64)
-                max_doc = pdf["max_doc"].to_numpy(dtype=np.int64)
-                is_rare = np.isin(terms, list(rset))
-                slack_arr[is_rare] = np.inf
-                com = np.flatnonzero(~is_rare)
-                rbt = info.get("rare_bucket")
-                if len(com) and rbt is not None:
-                    # summary mode: bucketed range-max table (bucket max
-                    # >= exact doc-range max, a valid upper bound); one
-                    # O(1)-per-block vectorized sparse-table query
-                    w, barr = rbt
-                    nb = len(barr)
-                    lo_b = np.clip(min_doc[com] // w, 0, nb - 1)
-                    hi_b = np.clip(max_doc[com] // w, 0, nb - 1)
-                    slack_arr[com] += _range_max(
-                        _sparse_table(barr), lo_b, hi_b)
-                elif len(com) and len(rdocs):
-                    lo = np.searchsorted(rdocs, min_doc[com], side="left")
-                    hi = np.searchsorted(rdocs, max_doc[com], side="right")
-                    add = np.zeros(len(com), dtype=np.float64)
-                    nz = np.flatnonzero(hi > lo)
-                    for jj in nz:
-                        add[jj] = rparts[lo[jj]:hi[jj]].max()
-                    slack_arr[com] += add
-
-            # Block-max WAND descent (Ding & Suel 2011, Lucene's
-            # ImpactsDISI.advanceShallow loop): walk blocks in
-            # (UB + slack)-descending order, refreshing theta (k-th best
-            # per-doc partial sum decoded so far, a valid global lower
-            # bound) as postings accumulate, and STOP the instant the
-            # next block's bound falls below theta — the order is
-            # monotone, so every remaining block is provably out too.
-            # This replaces the fixed-size probe + one-shot filter: with
-            # exact impact bounds the score distribution's top is razor
-            # thin, and a theta from one probe block pruned ~nothing
-            # while the true theta prunes 94-99% (measured, diag).
-            key = ub + slack_arr
-            order = np.argsort(-key, kind="stable")
-            kk = info["k"]
-
-            out_cid: List[np.ndarray] = []
-            out_doc: List[np.ndarray] = []
-            out_score: List[np.ndarray] = []
-
-            dels = info["deletes"]
-
-            acc_total.add(len(pdf))
-
-            def decode(idx: int) -> None:
-                # liveDocs per leaf: the broadcast bitsets drop deleted docs
-                acc_decoded.add(1)
-                one = {"term": terms[idx:idx + 1], "blob": blobs[idx:idx + 1]}
-                for term, doc_ids, tfs, norms in _decoded_blocks(one, dels=dels):
-                    for cid, boost in info["by_term"][term]:
-                        out_cid.append(np.full(len(doc_ids), cid, dtype=np.int32))
-                        out_doc.append(doc_ids)
-                        out_score.append(_bm25_scores(
-                            tfs, norms, info["winfo"][f"{term}\x00{boost}"],
-                            precision, norms_mode))
-
-            theta = float(info["theta0"])
-            single_clause = (
-                len(info["by_term"]) == 1
-                and len(next(iter(info["by_term"].values()))) == 1
-            )
-
-            rare_cids = info.get("rare_cids")
-            has_rare = rare_cids is not None and len(rare_cids) > 0
-
-            def refresh_theta() -> float:
-                # k-th best per-doc PARTIAL sum decoded so far; single
-                # clause: each doc appears in exactly one block, so the
-                # scores array IS the per-doc sums (no unique/bincount).
-                # With a rare prefetch, locally-decoded rare rows are
-                # EXCLUDED and replaced by the broadcast exact global
-                # rare partials (same clause sums, computed once on the
-                # driver) — folding the co-occurrence mass into theta
-                # without double counting; pure-rare docs are already
-                # covered by theta0 (the k-th best exact rare partial).
-                if not out_doc:
-                    return theta
-                if single_clause:
-                    sums = np.concatenate(out_score)
-                else:
-                    docs_all = np.concatenate(out_doc)
-                    sc_all = np.concatenate(out_score)
-                    if has_rare:
-                        cid_all = np.concatenate(out_cid)
-                        common = ~np.isin(cid_all, rare_cids)
-                        docs_all, sc_all = docs_all[common], sc_all[common]
-                        if not len(docs_all):
-                            return theta
-                    uniq, inv = np.unique(docs_all, return_inverse=True)
-                    sums = np.bincount(inv, weights=sc_all)
-                    if has_rare and len(info["rare_docs"]):
-                        rdocs = info["rare_docs"]
-                        p = np.minimum(np.searchsorted(rdocs, uniq),
-                                       len(rdocs) - 1)
-                        hit = rdocs[p] == uniq
-                        sums = sums + np.where(
-                            hit, info["rare_partials"][p], 0.0)
-                if len(sums) < kk:
-                    return theta
-                return max(theta, float(np.partition(sums, -kk)[-kk]))
-
-            # refresh cadence: a refresh recomputes per-doc sums over
-            # EVERYTHING decoded so far (O(R log R)), so refreshing on a
-            # fixed block count is quadratic when theta keeps improving
-            # by epsilon — measured 16 s on a 2M-doc mixed-df OR (~1.5k
-            # refreshes x ~400k-row unique/bincount) vs 0.7 s at 200k.
-            # Two triggers, both geometric in total cost:
-            #   - every `chunk` blocks while theta is improving, but
-            #     only until the decoded-posting count crosses
-            #     `next_rows`, which doubles on each such refresh — the
-            #     refresh series then sums to <= 2x one final-size
-            #     recompute no matter how long the descent runs;
-            #   - chunk itself doubles when a refresh stops improving
-            #     theta (the converged case stays O(log n) refreshes).
-            chunk = 4
-            since = 0
-            rows_decoded = 0
-            next_rows = 0
-            for idx in order:
-                if key[idx] < theta - margin:
-                    break  # sorted descending: all remaining blocks out
-                decode(idx)
-                rows_decoded += int(n_post[idx])
-                since += 1
-                if since >= chunk and rows_decoded >= next_rows:
-                    new_theta = refresh_theta()
-                    if new_theta <= theta + 1e-12:
-                        chunk = min(chunk * 2, 256)
-                    theta = new_theta
-                    since = 0
-                    next_rows = max(1024, rows_decoded * 2)
-
-            if out_doc:
-                yield pd.DataFrame(
-                    {
-                        "clause_id": np.concatenate(out_cid),
-                        "doc_id": np.concatenate(out_doc),
-                        "score": np.concatenate(out_score),
-                    }
-                )
-
-        wand_cols = ["term", "n", "blob", "imp_tf", "imp_norm"]
-        if rare_set or aligned_tbl:
-            wand_cols += ["min_doc", "max_doc"]
-        cand = (
-            self.reader.blocks.where(F.col("term").isin(sorted(ub_wv)))
-            .select(*wand_cols)
-            .mapInPandas(wand_partition, "clause_id int, doc_id long, score double")
-        )
-        # identical aggregation shape to _eval_boolean: per-clause
-        # conditional sums added in fixed clause order, then float cast.
-        # Single clause: every doc appears in exactly one block, so the
-        # groupBy would be an identity shuffle — go straight to the
-        # TakeOrdered (same shuffle-free plan as the exhaustive path).
-        cids = sorted({cid for cid, _, _ in clause_terms})
-        if len(cids) == 1:
-            scored = cand.select("doc_id", "score")
-        else:
-            aggs = [
-                F.sum(F.when(F.col("clause_id") == i, F.col("score"))).alias(f"s{i}")
-                for i in cids
-            ]
-            g = cand.groupBy("doc_id").agg(*aggs)
-            total = F.coalesce(F.col(f"s{cids[0]}"), F.lit(0.0))
-            for i in cids[1:]:
-                total = total + F.coalesce(F.col(f"s{i}"), F.lit(0.0))
-            if self.precision == "float32":
-                total = total.cast("float").cast("double")
-            scored = g.select("doc_id", total.alias("score"))
-        rows = (
-            scored.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-            .collect()
-        )
-        self.last_wand_stats = {
-            "blocks_total": int(acc_total.value),
-            "blocks_decoded": int(acc_decoded.value),
-            "rare_prefetch": bool(rare_set),
-            "rare_summary": rare_bucket is not None,
-            "aligned_slack": aligned_tbl is not None,
-        }
-        return pd.DataFrame(
-            {
-                "rank": range(1, len(rows) + 1),
-                "doc_id": [r["doc_id"] for r in rows],
-                "score": np.array([r["score"] for r in rows], dtype=np.float32)
-                if self.precision == "float32"
-                else [r["score"] for r in rows],
-            }
-        )
-
-    # -- access-path cost model (WAND vs exhaustive, Lucene's
-    # IndexOrDocValuesQuery.java:52 / BooleanWeight.java:317 analog) ----------
-    # Decoded-postings throughput of the pruned partition kernel (python
-    # block-at-a-time descent loop) vs the exhaustive vectorized
-    # decode+hash-agg plan, and the fixed cost of one extra job wave
-    # (scheduler + filtered scan on a warm session). Calibrated against
-    # the measured r4/sf1 walls: term-WAND sf1 decoded 8.5% of 1.9M
-    # postings in ~0.28s variable time; exhaustive paid ~0.95s for the
-    # full 1.9M; the OR rare-prefetch wave costs ~0.5s.
-    PLAN_LOOP_RATE = 550_000.0   # pruned decode, postings/sec
-    PLAN_VEC_RATE = 2_800_000.0  # exhaustive decode+agg, postings/sec
-    PLAN_WAVE_S = 0.45           # one extra job wave, seconds
-    # blocks the descent decodes while theta converges (probe + refresh
-    # lag), regardless of how prunable the tail is — measured ~70-660
-    # across the 200k/2M calibration queries; charged once per search
-    PLAN_OVERHEAD_BLOCKS = 500.0
-    # theta estimate = this weighted quantile of the best term's
-    # block-UB distribution: the true k-th doc score provably sits at
-    # or above the k-th best block UB (each block's frontier bound is
-    # REALIZED by a doc in it), and for k << 128 that is inside the
-    # top 1/16 order-statistic segment of the sketch
-    PLAN_THETA_QUANTILE = 1.0 - 1.0 / 16.0
 
     def plan_pruned_or(self, terms_with_boost: List[Tuple[str, float]],
                        k: int) -> dict:
-        """Cost-based access-path choice for a term / OR-of-terms top-k:
-        estimate the pruned (block-max WAND) plan's decode fraction from
-        the PERSISTED per-term block-UB quantile sketch (term_stats
-        gq_tf/gq_dl — zero jobs; the stats ride the same driver read the
-        weights need), simulate which pruning machinery would engage
-        (rare prefetch, aligned slack — mirroring _search_pruned_or's
-        gates), and compare modeled wall costs. Returns a dict with
-        'use_wand' plus the estimates (kept on self.last_plan for bench
-        and test introspection). Missing sketch (multi-field / no-sketch
-        segments, or a term without postings) => use_wand=True (always
-        prune when asked)."""
-        clause_terms = [(i, t, b) for i, (t, b) in enumerate(terms_with_boost)]
-        winfo, ub_wv, _ = self._per_clause_params(clause_terms)
-        cost = self.reader.term_cost_stats(sorted(ub_wv))
-        if cost is None or any(t not in cost for t in ub_wv):
-            return {"use_wand": True, "reason": "no-cost-stats"}
-        gws = self.reader.term_wand_stats(sorted(ub_wv))
-        gmax = {t: self._term_global_ub(t, winfo, ub_wv[t], gws[t])
-                for t in ub_wv}
-        anykey = {t: next(kk for kk in winfo if kk.startswith(t + "\x00"))
-                  for t in ub_wv}
-        df_of = {t: winfo[anykey[t]]["df"] for t in ub_wv}
-        total_post = float(sum(df_of.values()))
-        if total_post <= 0:
-            return {"use_wand": True, "reason": "empty"}
+        """Block-max keep-set of a term / OR-of-terms top-k, planned on
+        the driver in numpy over the skip data: the query terms' block
+        rows (term, min_doc, max_doc, imp_tf, imp_norm), read with
+        pyarrow as _conjunction_blocks reads them — blobs never, no
+        Spark job. Per block (_block_bounds):
+          UB  the max score over its impact frontier, a bound on every
+              doc of the block;
+          LB  the max over its realized frontier pairs, the score of
+              some doc of the block; a block spanning a deleted doc gives
+              none (that doc may be the one realizing it).
+        theta is the max over terms t of the k-th largest LB among t's
+        blocks: a term's blocks hold disjoint docs, so they hold k
+        distinct live docs, each scoring at least theta. Block b of term
+        t is kept iff UB(b) + the sum over the other terms u of the max
+        UB of u's blocks overlapping [min_doc(b), max_doc(b)] >= theta -
+        WAND_MARGIN. A doc of a dropped block scores below theta
+        wherever its other postings lie, so the top-k over the kept
+        blocks is the exhaustive one, scores included.
 
-        # mirror _search_pruned_or's machinery gates
-        rare: set = set()
-        prefetch = False
-        if len(ub_wv) > 1:
-            max_df = max(df_of.values())
-            cand = set(t for t in ub_wv if 0 < df_of[t] * 2 <= max_df)
-            common_df = sum(df_of[t] for t in ub_wv if t not in cand)
-            if common_df < self.WAND_PREFETCH_MIN_COMMON_POSTINGS:
-                cand = set()
-            if cand and cand != set(ub_wv):
-                rare, prefetch = cand, True
-        common = [t for t in ub_wv if t not in rare]
-        aligned = (len(common) > 1
-                   and sum(df_of[t] for t in common)
-                   >= self.WAND_ALIGNED_MIN_COMMON_POSTINGS)
-
-        # per-term block-UB points under the QUERY's weights/avgdl
-        upoints: Dict[str, Tuple[np.ndarray, np.ndarray]] = {}
-        for t in ub_wv:
-            qtf, qdl, qw = cost[t]
-            nv = 1.2 * (0.25 + 0.75 * qdl / winfo[anykey[t]]["avgdl"])
-            u = float(ub_wv[t]) * qtf / (qtf + nv)
-            order = np.argsort(u)
-            upoints[t] = (u[order], qw[order])
-
-        def _wquantile(u: np.ndarray, w: np.ndarray, q: float) -> float:
-            cw = np.cumsum(w)
-            if cw[-1] <= 0:
-                return float(u[-1]) if len(u) else 0.0
-            return float(u[np.searchsorted(cw, q * cw[-1], side="left")])
-
-        # theta estimate: top-segment order statistic of the strongest
-        # term's UB distribution (see PLAN_THETA_QUANTILE). The k-th
-        # best doc score can't be below the k-th best block UB (each
-        # block bound is realized), and k << blocks places it in the
-        # top sketch segment.
-        theta = max(_wquantile(u, w, self.PLAN_THETA_QUANTILE)
-                    for u, w in upoints.values())
-        ctot = sum(gmax[t] for t in common)
-        decoded = float(sum(df_of[t] for t in rare))
-        frac_by_term = {}
-        for t in common:
-            slack_t = ctot - gmax[t]
-            u, qw = upoints[t]
-            wsum = qw.sum()
-            frac = float(qw[u >= theta - slack_t].sum() / wsum) if wsum else 1.0
-            frac_by_term[t] = frac
-            decoded += df_of[t] * frac
-        decoded += self.PLAN_OVERHEAD_BLOCKS * 128.0
-        decoded = min(decoded, total_post)
-        waves = (1 if prefetch else 0) + (1 if aligned else 0)
-        cost_wand = decoded / self.PLAN_LOOP_RATE + waves * self.PLAN_WAVE_S
-        cost_exh = total_post / self.PLAN_VEC_RATE
+        Returns last_plan's keys plus "keep": {term: the kept blocks'
+        min_doc values}, the keep-set _score_terms reads."""
+        wv: Dict[str, float] = {}
+        w: Dict[str, dict] = {}
+        weights = self._weights(terms_with_boost)
+        for t, b in terms_with_boost:
+            # a term in several clauses adds each clause's score to a
+            # doc: bound the sum (the norm constants are the same)
+            w[t] = weights[f"{t}\x00{b}"]
+            wv[t] = wv.get(t, 0.0) + float(w[t]["wv"])
+        tbl = _read_term_rows(self.reader._block_dirs, [
+            "term", "min_doc", "max_doc", "imp_tf", "imp_norm"], sorted(wv))
+        term = np.asarray(tbl.column("term").to_pylist(), dtype=object)
+        lo = tbl.column("min_doc").to_numpy()
+        hi = tbl.column("max_doc").to_numpy()
+        theta = -np.inf
+        ub = np.zeros(len(term))
+        if len(term) and min(wv.values()) >= 0:  # bounds assume scores >= 0
+            ub, lb = _block_bounds(
+                term, tbl.column("imp_tf").combine_chunks(),
+                tbl.column("imp_norm").combine_chunks(), wv, w,
+                self.precision, self.reader.norms)
+            if self.reader.dead is not None:
+                ids = self.reader.dead.ids()
+                lb[np.searchsorted(ids, lo) < np.searchsorted(ids, hi, "right")] = -np.inf
+            for t in wv:
+                lt = lb[term == t]
+                if len(lt) >= k > 0:
+                    theta = max(theta, float(np.partition(lt, -k)[-k]))
+        # the other terms' best UB over each block's doc range: u's
+        # blocks in min_doc order, the candidates start where the running
+        # max of max_doc reaches min_doc(b) (segment spans may
+        # interleave) and end before the first min_doc past max_doc(b)
+        bound = ub.copy()
+        for u in wv:
+            mu = term == u
+            order = np.argsort(lo[mu], kind="stable")
+            ulo, uub = lo[mu][order], ub[mu][order]
+            a = np.searchsorted(np.maximum.accumulate(hi[mu][order]), lo[~mu])
+            e = np.searchsorted(ulo, hi[~mu], "right")
+            hit = a < e
+            add = np.zeros(len(a))
+            if hit.any():
+                add[hit] = _range_max(_sparse_table(uub), a[hit], e[hit] - 1)
+            bound[~mu] += add
+        kept = bound >= theta - self.WAND_MARGIN
         return {
-            "use_wand": bool(cost_wand < cost_exh),
-            "reason": "cost-model",
-            "est_decoded_postings": int(decoded),
-            "total_postings": int(total_post),
-            "est_decode_fraction": round(decoded / total_post, 4),
-            "frac_by_term": {t: round(f, 4) for t, f in frac_by_term.items()},
-            "prefetch": prefetch, "aligned": aligned,
-            "cost_wand_s": round(cost_wand, 4),
-            "cost_exhaustive_s": round(cost_exh, 4),
+            "access_path": "skip-data", "reason": "block-max",
+            "blocks_kept": int(kept.sum()), "blocks_total": len(term),
+            "theta": float(theta) if np.isfinite(theta) else None,
+            "expected_jobs": 1 + int(len(terms_with_boost) > 1),
+            "keep": {t: set(lo[kept & (term == t)].tolist()) for t in wv},
         }
+
+    def _search_pruned_or(self, terms_with_boost: List[Tuple[str, float]],
+                          k: int) -> pd.DataFrame:
+        """Term / OR-of-terms top-k over the block-max keep-set
+        (plan_pruned_or): the exhaustive plan of the same query — the
+        same Spark jobs, the same summation order, so the same scores —
+        with every dropped block skipped undecoded."""
+        plan = self.plan_pruned_or(terms_with_boost, k)
+        keep = plan.pop("keep")
+        self.last_plan = plan
+        self.last_wand_stats = {"blocks_total": plan["blocks_total"],
+                                "blocks_decoded": plan["blocks_kept"]}
+        leaves = [TermQuery(term=t, boost=b) for t, b in terms_with_boost]
+        q = leaves[0] if len(leaves) == 1 else BooleanQuery(clauses=tuple(
+            BooleanClause(Occur.SHOULD, leaf) for leaf in leaves))
+        return self._top_k(self._eval(q, 1.0, keep), k)
 
     def _as_or_terms(self, q: Query) -> Optional[List[Tuple[str, float]]]:
         """Terms of a pure term/OR-of-terms scoring query, else None."""
@@ -2146,47 +1422,34 @@ class Searcher:
                prune=False) -> pd.DataFrame:
         """Top-k: score desc, docID asc (HitQueue.java:76-81). `after`:
         (score, doc_id) cursor for searchAfter paging
-        (IndexSearcher.java:419). `prune=True`: block-max WAND pruning
-        for term / OR-of-terms queries (rank-identical; falls back to
-        exhaustive for other shapes or when paging). `prune="auto"`:
-        cost-based access-path choice — the planner estimates the
-        pruned plan's decode fraction from persisted per-term block-UB
-        quantile sketches and runs WAND only when the model says
-        pruning pays (Lucene's BooleanWeight.java:317 scorer-vs-
-        BulkScorer and IndexOrDocValuesQuery.java:52 access-path
-        choice); either choice returns the identical rank-safe top-k.
-        The decision and its estimates land on self.last_plan; every
-        other search describes its plan there too (_exhaustive_plan),
-        and each plan is logged at DEBUG on "lucene_solr_spark.search"."""
+        (IndexSearcher.java:419). `prune=True` or "auto": a term /
+        OR-of-terms query plans a block-max keep-set on the driver
+        (plan_pruned_or) and decodes only the kept blocks, with the
+        exhaustive top-k as result (other shapes and paging run
+        exhaustive; prune=False is the exhaustive reference). The plan
+        and its reason land on self.last_plan (_exhaustive_plan when
+        nothing is pruned) and are logged at DEBUG on
+        "lucene_solr_spark.search"."""
         self.last_plan = None
         self._skips = []
         q = self._with_default_field(q)
-        top = None
-        if prune and after is None:
-            terms = self._as_or_terms(q)
-            if terms is not None:
-                use_wand = True
-                if prune == "auto":
-                    self.last_plan = self.plan_pruned_or(terms, k)
-                    use_wand = self.last_plan["use_wand"]
-                if use_wand:
-                    top = self._search_pruned_or(terms, k)
-        if top is None:
+        terms = self._as_or_terms(q) if prune and after is None else None
+        if terms is not None:
+            top = self._search_pruned_or(terms, k)
+        else:
             top = self._search_exhaustive(q, k, after)
-            if self.last_plan is None:
-                self.last_plan = self._exhaustive_plan(q, prune, after)
+            self.last_plan = self._exhaustive_plan(q, prune, after)
         _log.debug("search plan: %s", self.last_plan)
         return top
 
     def _exhaustive_plan(self, q: Query, prune, after) -> dict:
-        """last_plan of a search that ran the exhaustive plan without a
-        WAND gate decision: the access path and why, the skip-data
-        prefilter's blocks kept out of blocks total, and the Spark jobs
-        expected under adaptive execution — one for the top-k and one
-        more for the shuffle of any aggregating node (boolean, phrase,
-        dismax, synonym, term set); deletes add none (each decode drops
-        its deleted docs); a multi-term query's dictionary expansion
-        adds one more."""
+        """last_plan of a search that ran the exhaustive plan: the
+        access path and why, the skip-data prefilter's blocks kept out
+        of blocks total, and the Spark jobs expected under adaptive
+        execution — one for the top-k and one more for the shuffle of
+        any aggregating node (boolean, phrase, dismax, synonym, term
+        set); deletes add none (each decode drops its deleted docs); a
+        multi-term query's dictionary expansion adds one more."""
         if self._skips:
             path, reason = "skip-data", "conjunction"
         elif self._as_or_terms(q) is None:
@@ -2222,6 +1485,13 @@ class Searcher:
                 (F.col("score") < float(s))
                 | ((F.col("score") == float(s)) & (F.col("doc_id") > int(d)))
             )
+        return self._top_k(scored, k)
+
+    def _top_k(self, scored, k: int) -> pd.DataFrame:
+        """The k best rows of a (doc_id, score) frame as (rank, doc_id,
+        score): one TakeOrdered (per-partition heaps + driver merge)."""
+        from pyspark.sql import functions as F
+
         rows = (
             scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
         )
@@ -2507,8 +1777,7 @@ def _bm25_scores(tfs: np.ndarray, norms: np.ndarray, w: dict,
 def _impact_norms(nbs: np.ndarray, w: dict, precision: str,
                   norms_mode: str) -> np.ndarray:
     """float64 length normalisation k1 * ((1 - b) + b * dl / avgdl) of
-    stored norms — the bound side of _bm25_scores (_block_ubs,
-    Searcher._term_global_ub)."""
+    stored norms — the bound side of _bm25_scores (_block_bounds)."""
     if norms_mode == "byte" and precision == "float32":
         return np.asarray(w["cache"], dtype=np.float64)[nbs & 0xFF]
     dl = LENGTH_TABLE[nbs & 0xFF] if norms_mode == "byte" else nbs
@@ -2524,32 +1793,29 @@ def _norm32(lengths: np.ndarray, avgdl32: float) -> np.ndarray:
     ).astype(np.float32)
 
 
-def _block_ubs(terms: np.ndarray, imp_tf_col: np.ndarray,
-               imp_nb_col: np.ndarray, info: dict, precision: str,
-               norms_mode: str) -> np.ndarray:
-    """Vectorized per-block upper-bound scores, grouped by term: the
-    max over each block's competitive impact frontier — REALIZED
-    (tf, norm) pairs, an exact block bound
-    (CompetitiveImpactAccumulator.java:30). Shared by the WAND
-    partition kernel and the aligned block-max metadata job so both
-    see identical bounds."""
-    ub = np.empty(len(terms), dtype=np.float64)
-    for t in pd.unique(terms):
-        idx = np.flatnonzero(terms == t)
-        wv_t = info["ub_wv"][t]
-        w = info["winfo"][f"{t}\x00{info['by_term'][t][0][1]}"]
-        lists_tf = imp_tf_col[idx]
-        lens = np.fromiter((len(x) for x in lists_tf), dtype=np.int64,
-                           count=len(idx))
-        ftf = np.concatenate([np.asarray(x, dtype=np.float64) for x in lists_tf])
-        fnb = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in imp_nb_col[idx]])
-        fnv = _impact_norms(fnb, w, precision, norms_mode)
-        pair_sc = wv_t * ftf / (ftf + fnv)
-        offs = np.zeros(len(idx), dtype=np.int64)
-        np.cumsum(lens[:-1], out=offs[1:])
-        ub[idx] = np.maximum.reduceat(pair_sc, offs)
-    return ub
+def _block_bounds(terms: np.ndarray, imp_tf, imp_nb, wv: Dict[str, float],
+                  w: Dict[str, dict], precision: str, norms_mode: str):
+    """Per block, (UB, LB) of its term t's summed clause weight wv[t]
+    (weight w[t]): UB is the max score over the block's competitive
+    impact frontier of realized (tf, norm) pairs, an exact bound on its
+    docs (CompetitiveImpactAccumulator.java:30); LB is the same max
+    without the last pair of a frontier cut at IMPACT_CAP pairs, which
+    may be the synthetic pair bounding the cut tail, so some doc of the
+    block scores LB. imp_tf, imp_nb: pyarrow list arrays, one frontier
+    per block."""
+    lens = imp_tf.value_lengths().to_numpy()
+    tf = imp_tf.flatten().to_numpy().astype(np.float64)
+    nb = imp_nb.flatten().to_numpy().astype(np.int64)
+    pterm = np.repeat(terms, lens)
+    sc = np.empty(len(tf))
+    for t in wv:
+        m = pterm == t
+        sc[m] = wv[t] * tf[m] / (tf[m] + _impact_norms(nb[m], w[t], precision,
+                                                       norms_mode))
+    starts = np.cumsum(lens) - lens
+    ub = np.maximum.reduceat(sc, starts)
+    sc[starts[lens == IMPACT_CAP] + IMPACT_CAP - 1] = -np.inf
+    return ub, np.maximum.reduceat(sc, starts)
 
 
 def _interval_union(lo: np.ndarray, hi: np.ndarray):

@@ -160,11 +160,10 @@ def main() -> None:
         timings[name] = round(median3(lambda: searcher.search(q, k=10)), 3)
     for name, q in (("bm25_term_wand", queries["bm25_term"]),
                     ("bm25_or_wand", queries["bm25_or"])):
-        # prune="auto": cost-gated plan choice (rank-identical either
-        # way). Times the CHOSEN plan; the decision + its estimates
-        # are recorded beside the decode fraction. A forced-WAND rep
-        # is run once, untimed, to log the decode fraction even when
-        # the gate (correctly) picks exhaustive.
+        # prune="auto" plans the block-max keep-set (rank-identical to
+        # exhaustive) and times the pruned plan; its plan is recorded
+        # beside the decode fraction (blocks kept / blocks total) of
+        # one untimed prune=True rep, the same plan.
         timings[name] = round(
             median3(lambda: searcher.search(q, k=10, prune="auto")), 3)
         plan = searcher.last_plan

@@ -22,22 +22,11 @@ def _spark_rows(reader, terms):
     from pyspark.sql import functions as F
 
     return reader.stats.where(F.col("term").isin(list(terms))).groupBy("term").agg(
-        F.sum("df").alias("df"), F.sum("ttf").alias("ttf"),
-        F.collect_list(F.struct("gimp_norm", "gimp_tf")).alias("gimps"),
-        F.collect_list(F.struct("gnblocks", "gq_tf", "gq_dl")).alias("gqs"),
-    ).collect()
+        F.sum("df").alias("df"), F.sum("ttf").alias("ttf")).collect()
 
 
 def _canon(rows):
-    """Rows as plain values, per-segment lists in a fixed order (Spark's
-    collect_list order follows its partitions)."""
-    def seg(x):
-        return tuple(tuple(v) if isinstance(v, list) else v for v in x)
-
-    return sorted(
-        (r["term"], int(r["df"]), int(r["ttf"]),
-         sorted(map(seg, r["gimps"]), key=repr), sorted(map(seg, r["gqs"]), key=repr))
-        for r in rows)
+    return sorted((r["term"], int(r["df"]), int(r["ttf"])) for r in rows)
 
 
 def _assert_same(spark_jobs, reader, terms=TERMS):
@@ -107,5 +96,52 @@ def test_driver_stats_equal_spark_multifield(spark, spark_jobs, tmp_path_factory
     keys = [r2["term"] for r2 in r.stats.select("term").limit(12).collect()]
     keys.append(term_key("title", "no_such_term"))
     _assert_same(spark_jobs, r, keys)
-    # multi-field segments write no cost sketch: the gate has no inputs
-    assert r.term_cost_stats(keys) is None
+
+
+def test_term_stats_with_dropped_columns_still_read(spark, spark_jobs,
+                                                   two_segment_index, tmp_path):
+    """Format-2 segments written before the term stats shrank to (term,
+    df, ttf) carry the per-term impact table and cost sketch columns
+    (gnblocks, gimp_norm, gimp_tf, gq_tf, gq_dl). Readers select columns
+    by name: an index with one such segment beside a current one reads
+    the same statistics and answers pruned and exhaustive searches as
+    before."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lucene_solr_spark.queryast import (BooleanClause, BooleanQuery, Occur,
+                                            TermQuery)
+    from lucene_solr_spark.search.executor import IndexReader, Searcher
+
+    idx = str(tmp_path / "old_stats")
+    shutil.copytree(two_segment_index, idx)
+    new = IndexReader(spark, two_segment_index)
+    old_seg = os.path.dirname(new._stats_dirs[0]).replace(two_segment_index, idx)
+    parts = glob.glob(os.path.join(old_seg, "term_stats.parquet", "part-*.parquet"))
+    assert parts, "fixture drift"
+    for f in parts:
+        t = pq.read_table(f)
+        n = t.num_rows
+        ints = pa.array([[1]] * n, type=pa.list_(pa.int32()))
+        t = (t.append_column("gnblocks", pa.array([1] * n, type=pa.int64()))
+             .append_column("gimp_norm", ints).append_column("gimp_tf", ints)
+             .append_column("gq_tf", pa.array([[1]] * n, type=pa.list_(pa.int64())))
+             .append_column("gq_dl", pa.array([[1.0]] * n, type=pa.list_(pa.float64()))))
+        pq.write_table(t, f)
+    r = IndexReader(spark, idx)
+    assert "gimp_tf" in r.stats.columns
+    _assert_same(spark_jobs, r)
+    assert _canon(r._term_stats_rows(tuple(sorted(TERMS)))) == _canon(
+        new._term_stats_rows(tuple(sorted(TERMS))))
+    s, s_new = Searcher(r), Searcher(new)
+    for q in (TermQuery(term="class"), BooleanQuery(clauses=tuple(
+            BooleanClause(Occur.SHOULD, TermQuery(term=t))
+            for t in ("import", "ident042")))):
+        want = s_new.search(q, k=10)
+        for prune in (False, True):
+            got = s.search(q, k=10, prune=prune)
+            assert list(got["doc_id"]) == list(want["doc_id"])
+            assert list(got["score"]) == list(want["score"])

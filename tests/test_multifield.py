@@ -187,9 +187,9 @@ def test_multifield_merge_preserves_field_stats(spark, mf_corpus, tmp_path):
 
 
 def test_term_stats_schema_matches_single_field(spark, mf_searcher, tiny_index):
-    """Multi-field segments write no cost sketch, as typed nulls: every
-    segment shares one term_stats schema, so readers never merge
-    schemas."""
+    """Multi-field and single-field segments write the same term_stats
+    columns: every segment shares one term_stats schema, so readers
+    never merge schemas."""
     from lucene_solr_spark.search.executor import IndexReader
 
     assert mf_searcher.reader.stats.schema == IndexReader(spark, tiny_index).stats.schema

@@ -1,6 +1,8 @@
-"""Block-max WAND pruning: shadow-verification against exhaustive
-scoring (SURVEY §7 risk 4 — WAND comes from the published algorithm,
-not the 7.7 reference, so every pruned path is checked rank-identical).
+"""Block-max pruning: shadow-verification against exhaustive scoring
+(SURVEY §7 risk 4 — block-max WAND comes from the published algorithm,
+not the 7.7 reference, so every pruned plan is checked rank-identical).
+The keep-set is planned on the driver from the skip data
+(Searcher.plan_pruned_or); prune=True and "auto" both run it.
 """
 
 from __future__ import annotations
@@ -14,6 +16,20 @@ from lucene_solr_spark.queryast import BooleanClause, BooleanQuery, Occur, TermQ
 def _assert_same(a: pd.DataFrame, b: pd.DataFrame, qname: str):
     assert list(a["doc_id"]) == list(b["doc_id"]), f"{qname}: doc order differs"
     assert list(a["score"]) == list(b["score"]), f"{qname}: scores differ"
+
+
+def _or(*terms):
+    return BooleanQuery(clauses=tuple(
+        BooleanClause(Occur.SHOULD, TermQuery(term=t)) for t in terms))
+
+
+def _assert_block_max_plan(s, expected_jobs: int):
+    plan = s.last_plan
+    assert plan["access_path"] == "skip-data" and plan["reason"] == "block-max"
+    assert 0 <= plan["blocks_kept"] <= plan["blocks_total"]
+    assert plan["expected_jobs"] == expected_jobs
+    assert s.last_wand_stats == {"blocks_total": plan["blocks_total"],
+                                 "blocks_decoded": plan["blocks_kept"]}
 
 
 @pytest.fixture(scope="module")
@@ -39,20 +55,23 @@ def test_single_term_pruned_rank_identical(searcher, term, k):
     ("import", "ident007"),
     ("class", "def", "ident042"),
     ("import", "the", "ident001", "ident099"),
+    # a common term with two >= 4x rarer ones: theta comes from the
+    # rare terms' blocks or the common term's, whichever is higher
+    ("import", "ident099", "ident042"),
 ])
 def test_or_pruned_rank_identical(searcher, terms):
-    q = BooleanQuery(clauses=tuple(
-        BooleanClause(Occur.SHOULD, TermQuery(term=t)) for t in terms
-    ))
+    q = _or(*terms)
     exhaustive = searcher.search(q, k=10)
     pruned = searcher.search(q, k=10, prune=True)
     _assert_same(pruned, exhaustive, f"or:{terms}")
+    _assert_block_max_plan(searcher, 2)
 
 
 def test_missing_term_pruned(searcher):
     q = TermQuery(term="zzz_not_in_corpus")
     pruned = searcher.search(q, k=10, prune=True)
     assert len(pruned) == 0
+    assert searcher.last_plan["blocks_total"] == 0
 
 
 def test_prune_falls_back_for_must(searcher):
@@ -70,8 +89,8 @@ def test_prune_falls_back_for_must(searcher):
 
 def test_same_term_multiple_boosts_pruned_rank_identical(searcher):
     """The same term in several SHOULD clauses with different boosts:
-    the block UB must bound the SUM of the clauses' contributions (one
-    UB row per block) — per-clause UB rows used to duplicate block
+    the block bounds must bound the SUM of the clauses' contributions
+    (one bound per block) — per-clause bounds used to duplicate block
     decodes and double the scores."""
     q = BooleanQuery(clauses=(
         BooleanClause(Occur.SHOULD, TermQuery(term="import", boost=2.0)),
@@ -83,19 +102,39 @@ def test_same_term_multiple_boosts_pruned_rank_identical(searcher):
     _assert_same(pruned, exhaustive, "dup-boost")
 
 
-def test_deletes_same_term_multiple_boosts(spark, tiny_index, tmp_path):
-    """On an index with deletes the pruned search (deleted docs dropped
-    in each decoded block) matches the exhaustive plan on the dup-boost
-    shape."""
+def test_negative_boost_keeps_every_block(searcher):
+    """A negative boost makes the frontier's best pair a doc's WORST
+    score, so the block bounds bound nothing: the plan keeps every
+    block and stays rank-identical."""
+    q = BooleanQuery(clauses=(
+        BooleanClause(Occur.SHOULD, TermQuery(term="import", boost=-1.0)),
+        BooleanClause(Occur.SHOULD, TermQuery(term="ident007")),
+    ))
+    exhaustive = searcher.search(q, k=10)
+    pruned = searcher.search(q, k=10, prune=True)
+    _assert_same(pruned, exhaustive, "negative-boost")
+    plan = searcher.last_plan
+    assert plan["theta"] is None and plan["blocks_kept"] == plan["blocks_total"]
+
+
+def _copy_with_deletes(spark, src, dst, terms):
     import shutil
 
     from lucene_solr_spark.indexing.deletes import delete_by_terms
     from lucene_solr_spark.search.executor import IndexReader, Searcher
 
-    idx = str(tmp_path / "del_idx")
-    shutil.copytree(tiny_index, idx)
-    assert delete_by_terms(spark, idx, ["ident007"]) >= 2, "fixture drift"
-    s = Searcher(IndexReader(spark, idx))
+    shutil.copytree(src, dst)
+    n = delete_by_terms(spark, dst, terms)
+    return Searcher(IndexReader(spark, dst)), n
+
+
+def test_deletes_same_term_multiple_boosts(spark, tiny_index, tmp_path):
+    """On an index with deletes the pruned search (deleted docs dropped
+    in each decoded block) matches the exhaustive plan on the dup-boost
+    shape."""
+    s, n = _copy_with_deletes(spark, tiny_index, str(tmp_path / "del_idx"),
+                              ["ident007"])
+    assert n >= 2, "fixture drift"
     q = BooleanQuery(clauses=(
         BooleanClause(Occur.SHOULD, TermQuery(term="class", boost=3.0)),
         BooleanClause(Occur.SHOULD, TermQuery(term="class", boost=0.25)),
@@ -106,80 +145,28 @@ def test_deletes_same_term_multiple_boosts(spark, tiny_index, tmp_path):
     _assert_same(pruned, exhaustive, "dup-boost-deletes")
 
 
-def test_rare_prefetch_engages_and_rank_identical(searcher):
-    """Mixed-idf OR (common + rare terms): the rare-term prefetch path
-    (exact rare partials broadcast, theta0 global threshold, per-block
-    doc-range slack) must engage and stay rank-identical. 'import' is
-    the high-df common term; identNNN terms are >=4x rarer."""
-    q = BooleanQuery(clauses=(
-        BooleanClause(Occur.SHOULD, TermQuery(term="import")),
-        BooleanClause(Occur.SHOULD, TermQuery(term="ident099")),
-        BooleanClause(Occur.SHOULD, TermQuery(term="ident042")),
-    ))
-    # confirm the df split actually makes the prefetch eligible
-    stats = searcher.reader.term_stats(["import", "ident099", "ident042"])
-    assert stats["import"][0] >= 4 * stats["ident042"][0], "fixture drift"
-    exhaustive = searcher.search(q, k=10)
-    # force the prefetch path on the tiny fixture (the production gate
-    # requires >=2M common postings before spending the extra job wave)
-    searcher.WAND_PREFETCH_MIN_COMMON_POSTINGS = 0
-    try:
-        pruned = searcher.search(q, k=10, prune=True)
-    finally:
-        del searcher.WAND_PREFETCH_MIN_COMMON_POSTINGS
-    _assert_same(pruned, exhaustive, "rare-prefetch-or")
-
-
-def test_rare_prefetch_summary_path_rank_identical(searcher):
-    """Beyond WAND_PREFETCH_EXACT_CAP aggregated rare docs the prefetch
-    degrades to a bounded summary (top-N partials for the theta fold +
-    bucketed range-max table for the slack bound) instead of disabling
-    pruning. Force the summary path on the tiny fixture (cap=1, small
-    buckets) and assert rank identity plus the stats flag."""
-    q = BooleanQuery(clauses=(
-        BooleanClause(Occur.SHOULD, TermQuery(term="import")),
-        BooleanClause(Occur.SHOULD, TermQuery(term="ident099")),
-        BooleanClause(Occur.SHOULD, TermQuery(term="ident042")),
-    ))
-    exhaustive = searcher.search(q, k=10)
-    searcher.WAND_PREFETCH_MIN_COMMON_POSTINGS = 0
-    searcher.WAND_PREFETCH_EXACT_CAP = 1
-    searcher.WAND_PREFETCH_TOPN = 16  # < rare doc count: fold is a subset
-    searcher.WAND_PREFETCH_BUCKET_DOCS = 8
-    try:
-        pruned = searcher.search(q, k=10, prune=True)
-        assert searcher.last_wand_stats["rare_prefetch"]
-        assert searcher.last_wand_stats["rare_summary"]
-    finally:
-        del searcher.WAND_PREFETCH_MIN_COMMON_POSTINGS
-        del searcher.WAND_PREFETCH_EXACT_CAP
-        del searcher.WAND_PREFETCH_TOPN
-        del searcher.WAND_PREFETCH_BUCKET_DOCS
-    _assert_same(pruned, exhaustive, "rare-prefetch-summary-or")
-
-
-def test_rare_prefetch_with_deletes(spark, tiny_index, tmp_path):
-    """Prefetch theta0 and partials must be computed over LIVE docs:
-    tombstone one rare term's entire doc set, then re-check rank
-    identity on a mixed-idf OR including that term (its exact partials
-    must vanish from the broadcast, not linger as stale slack)."""
-    import shutil
-
-    from lucene_solr_spark.indexing.deletes import delete_by_terms
-    from lucene_solr_spark.search.executor import IndexReader, Searcher
-
-    idx = str(tmp_path / "del_idx")
-    shutil.copytree(tiny_index, idx)
-    delete_by_terms(spark, idx, ["ident042"])
-    s = Searcher(IndexReader(spark, idx))
-    s.WAND_PREFETCH_MIN_COMMON_POSTINGS = 0  # force the path (tiny fixture)
-    q = BooleanQuery(clauses=(
-        BooleanClause(Occur.SHOULD, TermQuery(term="import")),
-        BooleanClause(Occur.SHOULD, TermQuery(term="ident099")),
-        BooleanClause(Occur.SHOULD, TermQuery(term="ident042")),
-    ))
+def test_or_pruned_rank_identical_with_deletes(spark, tiny_index, tmp_path):
+    """Delete one rare term's entire doc set, then re-check rank
+    identity on a mixed-idf OR including that term: blocks spanning a
+    deleted doc give no lower bound, so theta stays below the k-th
+    LIVE score."""
+    s, _ = _copy_with_deletes(spark, tiny_index, str(tmp_path / "del_idx"),
+                              ["ident042"])
+    q = _or("import", "ident099", "ident042")
     _assert_same(s.search(q, k=10, prune=True), s.search(q, k=10),
-                 "rare-prefetch-deletes")
+                 "or-deletes")
+
+
+def test_pruned_runs_the_exhaustive_jobs(searcher, spark_jobs):
+    """The keep-set is planned on the driver: a pruned term runs its
+    one scoring job and a pruned OR its two (scoring + shuffle), as the
+    exhaustive plans do."""
+    for q, jobs in ((TermQuery(term="import"), 1),
+                    (_or("import", "ident099", "ident042"), 2)):
+        _, n_exh = spark_jobs(lambda: searcher.search(q, k=10))
+        _, n = spark_jobs(lambda: searcher.search(q, k=10, prune=True))
+        assert n == n_exh == jobs, (q, n, n_exh)
+        _assert_block_max_plan(searcher, jobs)
 
 
 @pytest.fixture(scope="module")
@@ -197,15 +184,23 @@ def mid_index(spark, tmp_path_factory):
     return index_dir
 
 
+@pytest.fixture(scope="module")
+def mid_searcher(spark, mid_index):
+    from lucene_solr_spark.search.executor import IndexReader, Searcher
+
+    return Searcher(IndexReader(spark, mid_index), precision="float32")
+
+
 def test_impact_columns_persisted(spark, mid_index):
-    """New-format segments carry per-block competitive impacts and the
-    per-term global impact table (CompetitiveImpactAccumulator.java:30
-    analog) in their metadata."""
+    """Segments carry per-block competitive impacts
+    (CompetitiveImpactAccumulator.java:30 analog) in their block
+    metadata — the bounds the planner reads; term stats hold the
+    scoring statistics only."""
     from lucene_solr_spark.search.executor import IndexReader
 
     r = IndexReader(spark, mid_index)
     assert "imp_tf" in r.blocks.columns and "imp_norm" in r.blocks.columns
-    assert "gimp_tf" in r.stats.columns and "gimp_norm" in r.stats.columns
+    assert r.stats.columns == ["term", "df", "ttf"]
     row = (r.blocks.where(r.blocks["term"] == "import")
            .select("imp_tf", "imp_norm", "max_tf", "min_norm").first())
     assert row["imp_tf"] is not None and len(row["imp_tf"]) >= 1
@@ -213,99 +208,106 @@ def test_impact_columns_persisted(spark, mid_index):
     # decoupled (max_tf, min_norm) extremes
     assert max(row["imp_tf"]) <= row["max_tf"]
     assert min(row["imp_norm"]) >= row["min_norm"]
-    norms, tfs = r.term_wand_stats(["import"])["import"]
-    assert len(norms) == len(tfs) >= 1
 
 
-def test_pruned_search_skips_blocks(spark, mid_index):
-    """With impact bounds the descent must actually PRUNE on a Zipf
+def test_pruned_search_skips_blocks(mid_searcher):
+    """With impact bounds the keep-set must actually PRUNE on a Zipf
     corpus (the decoupled bound pruned <1% — the whole point of
     impacts), while staying rank-identical to exhaustive."""
-    from lucene_solr_spark.search.executor import IndexReader, Searcher
-
-    s = Searcher(IndexReader(spark, mid_index),
-                 precision="float32")
+    s = mid_searcher
     q = TermQuery(term="import")
     exhaustive = s.search(q, k=10)
     pruned = s.search(q, k=10, prune=True)
     _assert_same(pruned, exhaustive, "mid:import")
+    _assert_block_max_plan(s, 1)
     st = s.last_wand_stats
     assert st["blocks_total"] >= 100, "fixture drift: corpus too small"
     frac = st["blocks_decoded"] / st["blocks_total"]
     assert frac < 0.7, f"pruning ineffective: decoded {frac:.2%} of blocks"
 
 
+@pytest.mark.parametrize("term", ["class", "import"])
+@pytest.mark.parametrize("k", [1, 10])
+def test_mid_single_term_pruned_rank_identical(mid_searcher, term, k):
+    """theta seeds from realized frontier pairs only: a frontier cut at
+    codec.IMPACT_CAP pairs ends in a synthetic pair no doc may reach,
+    and a theta seeded from it returned a wrong top-10 for `class`."""
+    q = TermQuery(term=term)
+    exhaustive = mid_searcher.search(q, k=k)
+    pruned = mid_searcher.search(q, k=k, prune=True)
+    _assert_same(pruned, exhaustive, f"mid:{term}/k={k}")
+    assert mid_searcher.last_plan["blocks_kept"] < mid_searcher.last_plan["blocks_total"]
+
+
+def test_mid_deleted_top_docs_rank_identical(spark, mid_index, mid_searcher, tmp_path):
+    """Delete the exhaustive top-10 of `import`: the docs realizing the
+    best frontier pairs are gone, so the blocks holding them must give
+    no lower bound, or theta would exceed the k-th live score."""
+    import shutil
+
+    from lucene_solr_spark.indexing.deletes import delete_by_keys
+    from lucene_solr_spark.search.executor import IndexReader, Searcher
+
+    q = TermQuery(term="import")
+    top = mid_searcher.search(q, k=10)
+    idx = str(tmp_path / "mid_del")
+    shutil.copytree(mid_index, idx)
+    keys = (mid_searcher.reader.doc_meta
+            .where(mid_searcher.reader.doc_meta["doc_id"].isin(
+                [int(d) for d in top["doc_id"]]))
+            .select("repo", "path"))
+    assert delete_by_keys(spark, idx, keys) == 10
+    s = Searcher(IndexReader(spark, idx), precision="float32")
+    exhaustive = s.search(q, k=10)
+    assert not set(exhaustive["doc_id"]) & set(top["doc_id"])
+    _assert_same(s.search(q, k=10, prune=True), exhaustive, "mid-deleted-top")
+
+
 @pytest.mark.parametrize("terms", [
     ("import", "class"),
     ("class", "ident007", "ident123"),
     ("import", "the", "def"),
+    ("import", "class", "ident042"),
 ])
 def test_aligned_slack_rank_identical(searcher, terms):
-    """Doc-range-aligned block-max slack (the true BMW bound) forced on
-    via a zeroed gate must stay rank-identical to exhaustive."""
-    q = BooleanQuery(clauses=tuple(
-        BooleanClause(Occur.SHOULD, TermQuery(term=t)) for t in terms))
+    """The keep rule adds to a block's bound the other terms' best
+    bounds over the block's own doc range (the doc-range-aligned
+    block-max bound of Ding & Suel 2011 §4), not their global best:
+    rank-identical to exhaustive."""
+    q = _or(*terms)
     exhaustive = searcher.search(q, k=10)
-    searcher.WAND_ALIGNED_MIN_COMMON_POSTINGS = 0
-    try:
-        pruned = searcher.search(q, k=10, prune=True)
-        assert searcher.last_wand_stats["aligned_slack"], \
-            "aligned path did not engage with a zeroed gate"
-    finally:
-        del searcher.WAND_ALIGNED_MIN_COMMON_POSTINGS
+    pruned = searcher.search(q, k=10, prune=True)
+    _assert_block_max_plan(searcher, 2)
     _assert_same(pruned, exhaustive, f"aligned-or:{terms}")
 
 
-def test_aligned_slack_with_rare_prefetch(searcher):
-    """Aligned common-common slack composed with the rare-term exact
-    partial adds (both paths on at once) stays rank-identical."""
-    q = BooleanQuery(clauses=(
-        BooleanClause(Occur.SHOULD, TermQuery(term="import")),
-        BooleanClause(Occur.SHOULD, TermQuery(term="class")),
-        BooleanClause(Occur.SHOULD, TermQuery(term="ident042")),
-    ))
-    exhaustive = searcher.search(q, k=10)
-    searcher.WAND_PREFETCH_MIN_COMMON_POSTINGS = 0
-    searcher.WAND_ALIGNED_MIN_COMMON_POSTINGS = 0
-    try:
-        pruned = searcher.search(q, k=10, prune=True)
-        st = searcher.last_wand_stats
-        assert st["aligned_slack"] and st["rare_prefetch"]
-    finally:
-        del searcher.WAND_PREFETCH_MIN_COMMON_POSTINGS
-        del searcher.WAND_ALIGNED_MIN_COMMON_POSTINGS
-    _assert_same(pruned, exhaustive, "aligned+prefetch-or")
+def test_aligned_slack_prunes_on_mid_corpus(mid_searcher, monkeypatch):
+    """On the 20k-doc Zipf corpus a two-common-term OR keeps no MORE
+    blocks under the doc-range-aligned bound than under each other
+    term's global best bound (forced by a range max that returns the
+    table's max), and stays rank-identical both ways."""
+    import numpy as np
 
+    from lucene_solr_spark.search import executor
 
-def test_aligned_slack_prunes_on_mid_corpus(spark, mid_index):
-    """On the 20k-doc Zipf corpus a two-common-term OR must decode
-    FEWER blocks with aligned slack than with the global bound, and
-    stay rank-identical both ways."""
-    from lucene_solr_spark.search.executor import IndexReader, Searcher
-
-    s = Searcher(IndexReader(spark, mid_index),
-                 precision="float32")
-    q = BooleanQuery(clauses=(
-        BooleanClause(Occur.SHOULD, TermQuery(term="import")),
-        BooleanClause(Occur.SHOULD, TermQuery(term="class")),
-    ))
+    s = mid_searcher
+    q = _or("import", "class")
     exhaustive = s.search(q, k=10)
-    base = s.search(q, k=10, prune=True)
-    decoded_global = s.last_wand_stats["blocks_decoded"]
-    _assert_same(base, exhaustive, "mid-global")
-    s.WAND_ALIGNED_MIN_COMMON_POSTINGS = 0
     aligned = s.search(q, k=10, prune=True)
-    decoded_aligned = s.last_wand_stats["blocks_decoded"]
-    assert s.last_wand_stats["aligned_slack"]
+    kept_aligned = s.last_plan["blocks_kept"]
     _assert_same(aligned, exhaustive, "mid-aligned")
-    assert decoded_aligned <= decoded_global, (
-        f"aligned slack decoded MORE blocks: {decoded_aligned} vs "
-        f"{decoded_global}")
+    monkeypatch.setattr(executor, "_range_max",
+                        lambda st, lo, hi: np.full(len(lo), st[0].max()))
+    base = s.search(q, k=10, prune=True)
+    kept_global = s.last_plan["blocks_kept"]
+    _assert_same(base, exhaustive, "mid-global")
+    assert kept_aligned <= kept_global, (
+        f"aligned bound kept MORE blocks: {kept_aligned} vs {kept_global}")
 
 
 def test_sparse_table_range_max():
     """_sparse_table/_range_max agree with brute force on random
-    ranges (the aligned-slack lookup kernel)."""
+    ranges (the keep rule's other-term lookup kernel)."""
     import numpy as np
 
     from lucene_solr_spark.search.executor import _range_max, _sparse_table
@@ -320,75 +322,33 @@ def test_sparse_table_range_max():
     assert np.array_equal(got, want)
 
 
-# -- cost-based access-path gate (prune="auto") -----------------------------
-# Lucene's BooleanWeight.java:317 scorer-vs-BulkScorer /
-# IndexOrDocValuesQuery.java:52 access-path choice, applied to
-# WAND-vs-exhaustive: the planner reads the persisted per-term block-UB
-# quantile sketch (builder.compute_term_stats gq_tf/gq_dl) and runs the
-# pruned plan only when its modeled cost beats the exhaustive plan.
+# -- prune="auto": the same keep-set planner ---------------------------------
 
 
 def test_auto_rank_identical_and_plan_populated(searcher):
-    q = BooleanQuery(clauses=(
-        BooleanClause(Occur.SHOULD, TermQuery(term="import")),
-        BooleanClause(Occur.SHOULD, TermQuery(term="ident007")),
-    ))
+    q = _or("import", "ident007")
     exhaustive = searcher.search(q, k=10)
     auto = searcher.search(q, k=10, prune="auto")
-    plan = searcher.last_plan
     _assert_same(auto, exhaustive, "auto-or")
-    assert plan is not None and plan["reason"] == "cost-model"
-    for key in ("use_wand", "est_decode_fraction", "total_postings",
-                "cost_wand_s", "cost_exhaustive_s"):
-        assert key in plan, f"plan missing {key}"
-    assert 0.0 <= plan["est_decode_fraction"] <= 1.0
+    _assert_block_max_plan(searcher, 2)
+    assert searcher.last_plan["theta"] is None or searcher.last_plan["theta"] > 0
 
 
 def test_auto_single_term_rank_identical(searcher):
     q = TermQuery(term="import")
-    _assert_same(searcher.search(q, k=10, prune="auto"),
-                 searcher.search(q, k=10), "auto-term")
-    assert searcher.last_plan is None or True  # last_plan reset by 2nd call
-
-
-def test_auto_tiny_corpus_prefers_exhaustive(searcher):
-    """On a few-hundred-doc corpus every plan is overhead-dominated and
-    the decode fraction is ~1 — the model must not pick WAND."""
-    q = TermQuery(term="import")
-    searcher.search(q, k=10, prune="auto")
-    # captured before any further search resets it
-    plan_q = TermQuery(term="import")
-    plan = searcher.plan_pruned_or(
-        searcher._as_or_terms(searcher._with_default_field(plan_q)), 10)
-    assert plan["reason"] == "cost-model"
-    assert not plan["use_wand"]
-
-
-def test_auto_falls_back_to_wand_without_sketch(searcher, monkeypatch):
-    """Multi-field / no-sketch segments (null gq_tf sketch) give the
-    gate no cost inputs: prune='auto' still runs the (rank-safe) pruned
-    path."""
-    monkeypatch.setattr(type(searcher.reader), "term_cost_stats",
-                        lambda self, terms: None)
-    q = TermQuery(term="import")
-    exhaustive = searcher.search(q, k=10)
     auto = searcher.search(q, k=10, prune="auto")
-    assert searcher.last_plan == {"use_wand": True, "reason": "no-cost-stats"}
-    _assert_same(auto, exhaustive, "auto-no-sketch")
+    _assert_block_max_plan(searcher, 1)
+    _assert_same(auto, searcher.search(q, k=10), "auto-term")
 
 
-def test_mid_corpus_plan_estimates_sane(spark, mid_index):
-    """On the 20k Zipf corpus the sketch exists and the estimated
-    decode fraction must land in (0, 1] and the simulated machinery
-    flags must be booleans (plan introspection contract for bench)."""
-    from lucene_solr_spark.search.executor import IndexReader, Searcher
-
-    s = Searcher(IndexReader(spark, mid_index),
-                 precision="float32")
+def test_mid_corpus_plan_estimates_sane(mid_searcher):
+    """On the 20k Zipf corpus the plan's threshold is a positive score
+    and the keep-set it returns has the kept block count (plan
+    introspection contract for bench)."""
+    s = mid_searcher
     plan = s.plan_pruned_or([("import", 1.0)], 10)
-    assert plan["reason"] == "cost-model"
-    assert 0.0 < plan["est_decode_fraction"] <= 1.0
-    assert isinstance(plan["prefetch"], bool)
-    assert isinstance(plan["aligned"], bool)
+    assert plan["theta"] > 0
+    assert 0 < plan["blocks_kept"] < plan["blocks_total"]
+    assert sum(map(len, plan["keep"].values())) == plan["blocks_kept"]
     auto = s.search(TermQuery(term="import"), k=10, prune="auto")
     _assert_same(auto, s.search(TermQuery(term="import"), k=10), "mid-auto")
