@@ -29,8 +29,8 @@ import numpy as np
 import pandas as pd
 
 from ..codec import decode_block
-from .manifest import (ManifestStore, SegmentInfo, _atomic_write, _read_term_rows,
-                       commit_lock, doc_meta_path, postings_path)
+from .manifest import (ManifestStore, SegmentInfo, _atomic_write, _data_files,
+                       _read_term_rows, commit_lock, doc_meta_path, postings_path)
 
 _POPCOUNT = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
@@ -146,7 +146,7 @@ def delete_by_terms(spark, index_dir: str, terms: Sequence[str],
     def find(store, segments):
         out = {}
         for s in segments:
-            blobs = _read_term_rows([postings_path(store.segment_dir(s.name))],
+            blobs = _read_term_rows(_data_files(postings_path(store.segment_dir(s.name))),
                                    ["blob"], keys).column("blob").to_pylist()
             if blobs:
                 ids = np.concatenate([decode_block(b)[0] for b in blobs])

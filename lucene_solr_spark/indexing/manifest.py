@@ -228,22 +228,24 @@ def _data_files(root: str) -> List[str]:
                   if not f.startswith(("_", ".")))
 
 
-def _read_term_rows(roots: List[str], columns: List[str], terms):
-    """The rows of the given terms in the parquet files under roots,
-    read on the driver with pyarrow (a term `isin` filter)."""
+def _read_term_rows(files: List[str], columns: List[str], terms, min_docs=None):
+    """The rows of the given terms in the given parquet files, read on
+    the driver with pyarrow (a term `isin` filter). min_docs: only the
+    rows whose min_doc is one of these (a block keep-set's keys)."""
     import pyarrow.dataset as ds
 
-    files = [f for r in roots for f in _data_files(r)]
-    return ds.dataset(files, format="parquet").to_table(
-        columns=columns, filter=ds.field("term").isin(list(terms)))
+    cond = ds.field("term").isin(list(terms))
+    if min_docs is not None:
+        cond = cond & ds.field("min_doc").isin(list(min_docs))
+    return ds.dataset(files, format="parquet").to_table(columns=columns, filter=cond)
 
 
-def _footer_schema(roots: List[str]):
-    """Spark schema of the parquet files under roots: the first footer of
-    each root, unified."""
+def _footer_schema(file_groups: List[List[str]]):
+    """Spark schema of groups of parquet files (one group per written
+    directory): the first footer of each group, unified."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
     return from_arrow_schema(pa.unify_schemas(
-        [pq.read_schema(fs[0]) for fs in map(_data_files, roots) if fs]))
+        [pq.read_schema(fs[0]) for fs in file_groups if fs]))

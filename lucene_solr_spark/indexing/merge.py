@@ -259,7 +259,8 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
     # (docs, then sum and nonzero count of length and each fdl column), so
     # purged docs leave the field stats here, as Lucene's FieldInfos do
     meta_dirs = [doc_meta_path(d) for d in in_dirs]
-    meta = spark.read.schema(_footer_schema(meta_dirs)).parquet(*meta_dirs)
+    meta = spark.read.schema(_footer_schema(
+        [_data_files(d) for d in meta_dirs])).parquet(*meta_dirs)
     doc_arrow = to_arrow_schema(meta.schema)
     field_names = field_stats_from_meta_cols(doc_arrow.names)
     lens = ["length"] + [f"fdl_{fn}" for fn in field_names]

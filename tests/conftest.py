@@ -46,6 +46,22 @@ def spark_jobs(spark):
     return run
 
 
+@pytest.fixture
+def access_paths(monkeypatch):
+    """access_paths(): the access paths a search test runs on, in turn:
+    "driver" (the budget as set, which the test indexes' queries fit),
+    then "spark" (the budget at 0, so the Spark plan runs; it stays at 0
+    until the test ends)."""
+    from lucene_solr_spark.search import executor
+
+    def paths():
+        yield "driver"
+        monkeypatch.setattr(executor, "DRIVER_POSTINGS_BUDGET", 0)
+        yield "spark"
+
+    return paths
+
+
 @pytest.fixture(scope="session")
 def tiny_corpus_pdf():
     from lucene_solr_spark.corpus import gen_corpus_pdf

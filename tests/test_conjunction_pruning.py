@@ -92,12 +92,17 @@ def test_pruning_reduces_blocks_for_localized_term(chunked_searcher):
     ("markera", "markerc"),
     ("common", "markerc", "markerb"),
 ])
-def test_pruned_and_results_exact(chunked_searcher, terms, spark, chunked_index):
-    """Pruned conjunction == brute-force per-clause evaluation."""
+def test_pruned_and_results_exact(chunked_searcher, terms, spark, chunked_index,
+                                  access_paths):
+    """Pruned conjunction == brute-force per-clause evaluation, on the
+    driver and in the Spark plan (whose scan keeps the kept blocks only)."""
     from pyspark.sql import functions as F
 
     s = chunked_searcher
-    res = s.search(_and_query(*terms), k=50)
+    res = {path: s.search(_and_query(*terms), k=50) for path in access_paths()}
+    assert list(res["driver"]["doc_id"]) == list(res["spark"]["doc_id"])
+    assert list(res["driver"]["score"]) == list(res["spark"]["score"])
+    res = res["driver"]
     # independent check: intersect per-term doc sets, recompute sums
     sets = []
     for t in terms:
@@ -115,12 +120,12 @@ def test_pruned_and_results_exact(chunked_searcher, terms, spark, chunked_index)
     assert [d for _, d in expected] == list(res["doc_id"])
 
 
-def test_spark_jobs_per_query(spark, spark_jobs, chunked_index, tmp_path):
+def test_spark_jobs_per_query(spark, spark_jobs, chunked_index, tmp_path, access_paths):
     """Statistics, the conjunction's skip data and the live-docs bitsets
-    are read on the driver: opening a reader runs no job, a term query
-    runs only its scoring job, and AND, OR and phrase add at most their
-    shuffle — on an index with deletes too, whose delete_by_terms runs
-    no job."""
+    are read on the driver: opening a reader runs no job, and under the
+    budget no query runs one. With the budget at 0 a term query runs only
+    its scoring job, and AND, OR and phrase add their shuffle — on an
+    index with deletes too, whose delete_by_terms runs no job."""
     import shutil
 
     from lucene_solr_spark.indexing.deletes import delete_by_terms
@@ -133,38 +138,42 @@ def test_spark_jobs_per_query(spark, spark_jobs, chunked_index, tmp_path):
     assert n > 0 and jobs == 0
     or_q = BooleanQuery(clauses=tuple(
         BooleanClause(Occur.SHOULD, TermQuery(term=t)) for t in ("markera", "markerb")))
-    for idx in (chunked_index, with_deletes):
-        s, n = spark_jobs(lambda: Searcher(IndexReader(spark, idx)))
-        assert n == 0
-        assert s.reader.has_deletes == (idx == with_deletes)
-        _, n = spark_jobs(lambda: s.search(TermQuery(term="markera"), k=10))
-        assert n == 1
-        assert s.last_plan["expected_jobs"] == 1
-        for q in (_and_query("common", "markera"), or_q,
-                  PhraseQuery(terms=("common", "markerc"))):
-            _, n = spark_jobs(lambda: s.search(q, k=10))
-            assert n <= 2, (idx, q, n)
-            assert s.last_plan["expected_jobs"] == 2
+    for path in access_paths():
+        for idx in (chunked_index, with_deletes):
+            s, n = spark_jobs(lambda: Searcher(IndexReader(spark, idx)))
+            assert n == 0
+            assert s.reader.has_deletes == (idx == with_deletes)
+            _, n = spark_jobs(lambda: s.search(TermQuery(term="markera"), k=10))
+            want = 1 if path == "spark" else 0
+            assert n == s.last_plan["expected_jobs"] == want, (path, idx, n)
+            for q in (_and_query("common", "markera"), or_q,
+                      PhraseQuery(terms=("common", "markerc"))):
+                _, n = spark_jobs(lambda: s.search(q, k=10))
+                want = 2 if path == "spark" else 0
+                assert n == s.last_plan["expected_jobs"] == want, (path, idx, q, n)
 
 
 def test_every_query_explains_its_plan(chunked_searcher, caplog):
     """AND and phrase report the skip-data prefilter's blocks kept out
-    of blocks total; every plan is logged at DEBUG."""
+    of blocks total, and every plan its access path, planned postings
+    and budget; every plan is logged at DEBUG."""
     import logging
 
     from lucene_solr_spark.queryast import PhraseQuery
+    from lucene_solr_spark.search.executor import DRIVER_POSTINGS_BUDGET
 
     s = chunked_searcher
     with caplog.at_level(logging.DEBUG, logger="lucene_solr_spark.search"):
         s.search(_and_query("common", "markera"), k=10)
     plan = s.last_plan
-    assert plan["access_path"] == "skip-data" and plan["reason"] == "conjunction"
+    assert plan["access_path"] == "driver" and plan["reason"] == "conjunction"
     assert 0 < plan["blocks_kept"] < plan["blocks_total"]
     assert any("search plan" in r.getMessage() for r in caplog.records)
     s.search(PhraseQuery(terms=("common", "markerb")), k=10)
-    assert s.last_plan["access_path"] == "skip-data"
+    assert s.last_plan["access_path"] == "driver"
     assert s.last_plan["blocks_kept"] < s.last_plan["blocks_total"]
     s.search(TermQuery(term="common"), k=10)
-    assert s.last_plan == {"access_path": "exhaustive", "reason": "prune-off",
+    assert s.last_plan == {"access_path": "driver", "reason": "prune-off",
                            "blocks_kept": None, "blocks_total": None,
-                           "expected_jobs": 1}
+                           "expected_jobs": 0, "postings_planned": 30000,
+                           "budget": DRIVER_POSTINGS_BUDGET}

@@ -7,7 +7,8 @@ Composition mirrors lucene/benchmark/conf/query-terms.txt style:
 20 single-term (common/mid/rare + absent), 20 AND (2-4 clauses, incl.
 stopword clauses that analyze away), 10 OR, 5 mixed (a OR b) AND c,
 5 with MUST_NOT. k cycles {1, 10, 100}. Term/OR queries are also run
-through the block-max WAND path (prune=True) — same assertion.
+through the block-max WAND path (prune=True) — same assertion. Every
+query runs on both access paths: the driver and the Spark plan.
 """
 
 from __future__ import annotations
@@ -102,20 +103,26 @@ def _assert_identical(spark_top, oracle_top, label):
     assert list(spark_top["score"]) == list(oracle_top["score"]), label
 
 
+def _assert_path(searcher, path):
+    assert (searcher.last_plan["access_path"] == "driver") == (path == "driver"), \
+        searcher.last_plan
+
+
 @pytest.mark.parametrize("qstring,k", QUERY_SET,
                          ids=[f"{i:02d}_{q[:24]}" for i, (q, _) in enumerate(QUERY_SET)])
-def test_suite_rank_identity(small_searcher, small_oracle, qstring, k):
+def test_suite_rank_identity(small_searcher, small_oracle, qstring, k, access_paths):
     q = parse_query(qstring, analyzer=_analyzer)
-    _assert_identical(
-        small_searcher.search(q, k=k), small_oracle.top_k(q, k=k), qstring
-    )
+    want = small_oracle.top_k(q, k=k)
+    for path in access_paths():
+        _assert_identical(small_searcher.search(q, k=k), want, f"{path}: {qstring}")
+        _assert_path(small_searcher, path)
 
 
 @pytest.mark.parametrize("qstring", SINGLE[:6] + ORS[:4])
-def test_suite_wand_rank_identity(small_searcher, small_oracle, qstring):
+def test_suite_wand_rank_identity(small_searcher, small_oracle, qstring, access_paths):
     q = parse_query(qstring, analyzer=_analyzer)
-    _assert_identical(
-        small_searcher.search(q, k=10, prune=True),
-        small_oracle.top_k(q, k=10),
-        f"wand:{qstring}",
-    )
+    want = small_oracle.top_k(q, k=10)
+    for path in access_paths():
+        _assert_identical(small_searcher.search(q, k=10, prune=True), want,
+                          f"{path}: wand:{qstring}")
+        _assert_path(small_searcher, path)

@@ -150,7 +150,7 @@ def test_blk_row_groups_are_term_sorted_and_prune(monkeypatch, tmp_path):
     full = pq.read_table(path).to_pandas()
     cols = ["term", "n", "min_doc", "max_doc", "sum_tf"]
     for term in ("common", "w150", "no_such_term"):
-        got = _read_term_rows([postings_path(seg)], cols, [term]).to_pandas()
+        got = _read_term_rows([path], cols, [term]).to_pandas()
         want = full.loc[full["term"] == term, cols].reset_index(drop=True)
         pd.testing.assert_frame_equal(got, want)
 
