@@ -24,7 +24,8 @@ partitions playing segment leaves:
                                 IndexSearcher scores in the caller's
                                 process); any other query, or one over the
                                 budget, runs its Spark plan
-  per-leaf scoring           -> block filter (term + kept-block pushdown)
+  per-leaf scoring           -> block filter (term; on the driver also
+                                the kept block keys)
                                 -> Arrow decode+score (decode_score,
                                 vectorized numpy): in Spark a mapInPandas
                                 stage, the one job of a term query
@@ -60,8 +61,9 @@ Pruning (block metadata = the skip-list/WAND analog, SURVEY §4):
   theta from the k best lower bounds of one term, and a keep rule that
   drops every block whose bound plus the other terms' best bounds over
   its doc range stays below theta. The ordinary plan then decodes the
-  kept blocks only, on the same access path (the scan's filter admits
-  only kept block keys), so the top-k is exactly the exhaustive one
+  kept blocks only, on the same access path (the driver reads only
+  kept block keys; a Spark stage skips the others undecoded), so the
+  top-k is exactly the exhaustive one
   (checked in tests/test_wand.py).
 """
 
@@ -105,11 +107,12 @@ CHUNK_BITS = 13
 
 # A term, phrase or boolean-of-those top-k whose planned postings (the
 # summed df of its terms, plus the summed ttf of its phrases' terms) are
-# under this runs on the driver with no Spark job. From
-# scripts/driver_crossover.py on 4 cores (CHANGES.md): the driver won
-# every query measured, booleans up to 1.4M postings and phrases up to
-# 4.3M, and the AND's marginal costs put Spark ahead near 3.5M; 2M keeps
-# a margin for booleans and bounds the driver's decoded arrays to ~100 MB.
+# under this runs on the driver with no Spark job. It bounds driver
+# memory, not time: scripts/driver_crossover.py on 4 cores (CHANGES.md)
+# found no size where the Spark plan was faster (booleans up to 5.5M
+# planned postings, phrases up to 8.6M), and a driver boolean peaks at
+# ~90 traced bytes per planned posting, so 2M holds it near 180 MB;
+# bigger queries spread their decode over Spark's tasks.
 DRIVER_POSTINGS_BUDGET = 2_000_000
 
 _log = logging.getLogger("lucene_solr_spark.search")
@@ -489,23 +492,21 @@ class Searcher:
     def _blocks(self, terms: List[str], keep: Optional[Dict[str, set]],
                 positions: bool, local: bool):
         """The blk rows (term, min_doc, blob[, pblob]) of terms: a pandas
-        frame read on the driver (local) or the Spark scan. With a
-        keep-set, only the rows whose min_doc keys some kept block: a
-        superset of the kept blocks, made exact by _decoded_blocks'
-        per-term check, filtered before any blob is decoded or shipped
-        to Python."""
+        frame read on the driver (local) or the Spark scan. On the
+        driver a keep-set masks the read to the rows whose min_doc keys
+        some kept block (a superset of the kept blocks, made exact by
+        _decoded_blocks' per-term check), so no other blob is read. The
+        Spark scan takes no such filter: a `min_doc IN (...)` filter
+        measured slower than shipping the unkept blobs (CHANGES.md),
+        which the stage skips undecoded."""
         cols = ["term", "min_doc", "blob"] + (["pblob"] if positions else [])
-        mins = None if keep is None else sorted(set().union(*keep.values()))
         if local:
+            mins = None if keep is None else sorted(set().union(*keep.values()))
             return _read_term_rows(self.reader._block_files, cols, terms,
                                    mins).to_pandas()
         from pyspark.sql import functions as F
 
-        blocks = self.reader.blocks.where(F.col("term").isin(list(terms)))
-        if mins is not None:
-            blocks = blocks.where(
-                f"min_doc IN ({', '.join(map(str, mins))})" if mins else "false")
-        return blocks.select(*cols)
+        return self.reader.blocks.where(F.col("term").isin(list(terms))).select(*cols)
 
     def _score_terms(self, clause_terms: List[Tuple[int, str, float]],
                      keep: Optional[Dict[str, set]] = None, local: bool = False):
@@ -1016,7 +1017,7 @@ class Searcher:
         Score is the float32-exact (widened) or float64 node score.
         keep: a block keep-set for a term or boolean-of-terms q
         (_score_terms). local: evaluate a term, phrase or boolean of
-        those on the driver, as a pandas frame (_driver_leaves)."""
+        those on the driver, as a pandas frame (_driver_stages)."""
         from pyspark.sql import functions as F
 
         spark = self.reader.spark
@@ -1236,10 +1237,9 @@ class Searcher:
         wherever its other postings lie, so the top-k over the kept
         blocks is the exhaustive one, scores included.
 
-        Returns last_plan's keys (_routed: the driver runs the query
-        when its terms' summed df is under the budget) plus "keep":
-        {term: the kept blocks' min_doc values}, the keep-set
-        _score_terms reads."""
+        Returns the Spark plan's last_plan keys (search() adds the
+        access path, _routed) plus "keep": {term: the kept blocks'
+        min_doc values}, the keep-set _score_terms reads."""
         wv: Dict[str, float] = {}
         w: Dict[str, dict] = {}
         weights = self._weights(terms_with_boost)
@@ -1284,21 +1284,20 @@ class Searcher:
                 add[hit] = _range_max(_sparse_table(uub), a[hit], e[hit] - 1)
             bound[~mu] += add
         kept = bound >= theta - self.WAND_MARGIN
-        plan = self._routed({
+        return {
             "access_path": "skip-data", "reason": "block-max",
             "blocks_kept": int(kept.sum()), "blocks_total": len(term),
             "theta": float(theta) if np.isfinite(theta) else None,
             "expected_jobs": 1 + int(len(terms_with_boost) > 1),
-        }, sum(w[t]["df"] for t in wv))
-        plan["keep"] = {t: set(lo[kept & (term == t)].tolist()) for t in wv}
-        return plan
+            "keep": {t: set(lo[kept & (term == t)].tolist()) for t in wv},
+        }
 
     def _search_pruned_or(self, terms_with_boost: List[Tuple[str, float]],
-                          k: int) -> pd.DataFrame:
+                          k: int, local: bool = False) -> pd.DataFrame:
         """Term / OR-of-terms top-k over the block-max keep-set
         (plan_pruned_or): the exhaustive plan of the same query — on the
-        same access path, with the same summation order, so the same
-        scores — with every dropped block skipped undecoded."""
+        driver (local) or in Spark, with the same summation order, so the
+        same scores — with every dropped block skipped undecoded."""
         plan = self.plan_pruned_or(terms_with_boost, k)
         keep = plan.pop("keep")
         self.last_plan = plan
@@ -1307,7 +1306,7 @@ class Searcher:
         leaves = [TermQuery(term=t, boost=b) for t, b in terms_with_boost]
         q = leaves[0] if len(leaves) == 1 else BooleanQuery(clauses=tuple(
             BooleanClause(Occur.SHOULD, leaf) for leaf in leaves))
-        if plan["access_path"] == "driver":
+        if local:
             return self._top_k_local(self._eval(q, 1.0, keep, local=True), k)
         return self._top_k(self._eval(q, 1.0, keep), k)
 
@@ -1328,55 +1327,58 @@ class Searcher:
 
     # -- access path ----------------------------------------------------------
 
-    def _driver_leaves(self, q: Query) -> Optional[List[Tuple[str, bool]]]:
-        """(term key, positional) of every leaf of a query the driver
-        path runs — a term, a phrase, no docs (a query analyzed away),
-        or a boolean of those (a non-term FILTER clause only without a
-        query cache, whose doc sets are Spark frames); None for any
-        other rewritten query."""
+    def _driver_stages(self, q: Query) -> Optional[List[Tuple[set, bool]]]:
+        """(term keys, positional) of every leaf stage of a query the
+        driver path runs — a term, a phrase, no docs (a query analyzed
+        away), or a boolean of those (a non-term FILTER clause only
+        without a query cache, whose doc sets are Spark frames), whose
+        term clauses are one stage (_score_terms) and each other clause
+        its own; None for any other rewritten query."""
         if isinstance(q, MatchNoDocsQuery):
             return []
         if isinstance(q, TermQuery):
-            return [(term_key(q.field, q.term), False)]
+            return [({term_key(q.field, q.term)}, False)]
         if isinstance(q, PhraseQuery):
-            return [(term_key(q.field, t), True) for t in q.terms]
+            return [({term_key(q.field, t) for t in q.terms}, True)]
         if not isinstance(q, BooleanQuery) or not q.clauses:
             return None
-        out = []
+        terms, out = set(), []
         for c in q.clauses:
-            cached = (c.occur == Occur.FILTER and self.query_cache is not None
-                      and not isinstance(c.query, TermQuery))
-            sub = None if cached else self._driver_leaves(c.query)
+            if isinstance(c.query, TermQuery):
+                terms.add(term_key(c.query.field, c.query.term))
+                continue
+            cached = c.occur == Occur.FILTER and self.query_cache is not None
+            sub = None if cached else self._driver_stages(c.query)
             if sub is None:
                 return None
             out += sub
-        return out
+        return ([(terms, False)] if terms else []) + out
 
     def _planned_postings(self, q: Query) -> Optional[int]:
-        """The postings a driver run of q decodes at most: the summed df
-        of its terms plus the summed ttf of its phrases' terms, from the
-        term statistics, so known before any blob is read. None when the
-        driver path does not run q's shape (_driver_leaves)."""
-        leaves = self._driver_leaves(rewrite(q, None))
-        if leaves is None:
+        """The postings a driver run of q decodes at most: per leaf stage
+        (_driver_stages), the summed df of its terms, plus their summed
+        ttf in a phrase — a term read by two stages counts twice — from
+        the term statistics, so known before any blob is read. None when
+        the driver path does not run q's shape."""
+        stages = self._driver_stages(rewrite(q, None))
+        if stages is None:
             return None
-        stats = self.reader.term_stats(sorted({t for t, _ in leaves}))
-        positional = {t for t, p in leaves if p}
-        return sum(df + (ttf if t in positional else 0)
-                   for t, (df, ttf) in stats.items())
+        stats = self.reader.term_stats(sorted(set().union(*(t for t, _ in stages))))
+        total = 0
+        for terms, positional in stages:
+            for t in terms:
+                df, ttf = stats.get(t, (0, 0))
+                total += df + (ttf if positional else 0)
+        return total
 
     @staticmethod
-    def _on_driver(postings: Optional[int]) -> bool:
-        return postings is not None and postings < DRIVER_POSTINGS_BUDGET
-
-    def _routed(self, plan: dict, postings: Optional[int]) -> dict:
-        """A Spark plan description with its access path: "driver" (no
-        Spark job) when the planned postings are under
-        DRIVER_POSTINGS_BUDGET, else the plan's own, with reason
-        "over-budget" when only the budget kept the query off the
+    def _routed(plan: dict, postings: Optional[int], local: bool) -> dict:
+        """A Spark plan description with the access path that ran:
+        "driver" (no Spark job) when local, else the plan's own, with
+        reason "over-budget" when only the budget kept the query off the
         driver."""
         plan = dict(plan, postings_planned=postings, budget=DRIVER_POSTINGS_BUDGET)
-        if self._on_driver(postings):
+        if local:
             plan.update(access_path="driver", expected_jobs=0)
         elif postings is not None:
             plan["reason"] = "over-budget"
@@ -1402,14 +1404,15 @@ class Searcher:
         self.last_plan = None
         self._skips = []
         q = self._with_default_field(q)
+        postings = self._planned_postings(q)
+        local = postings is not None and postings < DRIVER_POSTINGS_BUDGET
         terms = self._as_or_terms(q) if prune and after is None else None
         if terms is not None:
-            top = self._search_pruned_or(terms, k)
+            top = self._search_pruned_or(terms, k, local)
         else:
-            postings = self._planned_postings(q)
-            top = self._search_exhaustive(q, k, after, self._on_driver(postings))
-            self.last_plan = self._routed(self._exhaustive_plan(q, prune, after),
-                                          postings)
+            top = self._search_exhaustive(q, k, after, local)
+            self.last_plan = self._exhaustive_plan(q, prune, after)
+        self.last_plan = self._routed(self.last_plan, postings, local)
         _log.debug("search plan: %s", self.last_plan)
         return top
 
@@ -1889,30 +1892,39 @@ def _boolean_local(u: pd.DataFrame, occur_by_cid: Dict[int, Occur], mm: int,
     (clause_id, doc_id, score) rows: per clause, the summed score from
     0.0 (Spark's sum) and a match flag; the MUST/FILTER/MUST_NOT and
     min-should-match predicate; clause sums added left to right in
-    clause order in double, cast to float32 in float32 mode."""
+    clause order in double, cast to float32 in float32 mode. Memory is
+    O(rows + docs) whatever the clause count: the rows are taken clause
+    by clause, each clause's per-doc sum is added into one running total
+    (an absent clause adds 0.0, as Spark's coalesce does) and its matches
+    into per-doc counters."""
     doc, inv = np.unique(u["doc_id"].to_numpy(np.int64), return_inverse=True)
-    cid = u["clause_id"].to_numpy(np.int64)
-    hit = np.zeros((len(occur_by_cid), len(doc)), dtype=bool)
-    hit[cid, inv] = True
-    sums = np.zeros(hit.shape)
-    np.add.at(sums, (cid, inv), u["score"].to_numpy(np.float64))
-    ok = np.ones(len(doc), dtype=bool)
+    # (clause, doc) keys in clause order; each key's scores summed from
+    # 0.0 in row order
+    key, at = np.unique(u["clause_id"].to_numpy(np.int64) * len(doc) + inv,
+                        return_inverse=True)
+    sums = np.bincount(at.ravel(), weights=u["score"].to_numpy(np.float64),
+                       minlength=len(key))
+    cut = np.searchsorted(key, np.arange(len(occur_by_cid) + 1) * len(doc))
+    total = np.zeros(len(doc))
+    n_req = np.zeros(len(doc), dtype=np.int64)  # MUST/FILTER clauses hit
+    n_not = np.zeros(len(doc), dtype=np.int64)
     n_should = np.zeros(len(doc), dtype=np.int64)
-    total, any_should = None, False
-    for i in sorted(occur_by_cid):
+    req = 0
+    for i, (a, b) in enumerate(zip(cut[:-1], cut[1:])):
         o = occur_by_cid[i]
+        d = key[a:b] - i * len(doc)
         if o in (Occur.MUST, Occur.SHOULD):
-            total = sums[i] if total is None else total + sums[i]
+            total[d] += sums[a:b]
         if o in (Occur.MUST, Occur.FILTER):
-            ok &= hit[i]
+            n_req[d] += 1
+            req += 1
         elif o == Occur.MUST_NOT:
-            ok &= ~hit[i]
+            n_not[d] += 1
         else:
-            n_should += hit[i]
-            any_should = True
-    if mm > 0 and any_should:
+            n_should[d] += 1
+    ok = (n_req == req) & (n_not == 0)
+    if mm > 0 and Occur.SHOULD in occur_by_cid.values():
         ok &= n_should >= mm
-    total = np.zeros(len(doc)) if total is None else total
     if precision == "float32":
         total = total.astype(np.float32).astype(np.float64)
     return pd.DataFrame({"doc_id": doc[ok], "score": total[ok]})

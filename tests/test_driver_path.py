@@ -47,6 +47,12 @@ SHAPES = {
     "dup_boost": _bq((S, _t("beta", 2.0)), (S, _t("beta", 0.5)), (S, _t("w9"))),
     "no_docs": MatchNoDocsQuery(),
     "and_no_docs": _bq((M, _t("alpha")), (M, MatchNoDocsQuery())),
+    # 60 term clauses, a nested boolean and a phrase: one running total
+    # over the clauses, not a clause x doc table
+    "many_clauses": _bq(*[(S, _t(f"w{i}", 1.0 + i / 8)) for i in range(56)],
+                        (N, _t("w57")), (M, _bq((S, _t("alpha")), (S, _t("w1")))),
+                        (S, PhraseQuery(terms=("end", "to", "end"))),
+                        (F, _t("w0")), msm=3),
 }
 
 
@@ -164,8 +170,7 @@ def test_jobs_equal_expected_on_both_paths(monkeypatch, spark_jobs, readers, sha
     """Under the budget a query runs no Spark job; over it, today's Spark
     plan runs, and its job count is the plan's expected_jobs. A query
     with no hits may run fewer: adaptive execution skips the stages after
-    an empty shuffle, and the optimizer drops a scan whose keep-set is
-    empty."""
+    an empty shuffle."""
     from lucene_solr_spark.search.executor import Searcher
 
     s = Searcher(readers["deletes"])
@@ -179,6 +184,22 @@ def test_jobs_equal_expected_on_both_paths(monkeypatch, spark_jobs, readers, sha
         assert n == s.last_plan["expected_jobs"] > 0, s.last_plan
     else:
         assert n <= s.last_plan["expected_jobs"], s.last_plan
+
+
+def test_planned_postings_count_each_leaf_stage(readers):
+    """A boolean's term clauses are one leaf stage and each other clause
+    its own: a term read by two stages counts twice, a phrase's terms
+    count their df and their ttf."""
+    from lucene_solr_spark.search.executor import Searcher
+
+    s = Searcher(readers["two_segments"])
+    q = _bq((M, _t("alpha")), (S, _t("alpha")),
+            (S, _bq((S, _t("alpha")), (S, _t("beta")))),
+            (S, PhraseQuery(terms=("end", "to", "end"))))
+    st = readers["two_segments"].term_stats(["alpha", "beta", "end", "to"])
+    s.search(q, k=10)
+    assert s.last_plan["postings_planned"] == (
+        2 * st["alpha"][0] + st["beta"][0] + sum(st[t][0] + st[t][1] for t in ("end", "to")))
 
 
 def test_out_of_scope_shapes_keep_their_spark_plan(spark_jobs, readers):
