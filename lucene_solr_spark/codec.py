@@ -25,6 +25,19 @@ import numpy as np
 
 BLOCK_SIZE = 128
 
+# The postings a driver-side decode may hold. A term, phrase or
+# boolean-of-those top-k whose planned postings (the summed df of its
+# terms, plus the summed ttf of its phrases' terms) are under it runs on
+# the driver with no Spark job (search.executor), and so does a merge
+# whose inputs' summed sum_dl (a bound on the postings and on the
+# positions it decodes) is under it (indexing.merge). It bounds driver
+# memory, not time: scripts/driver_crossover.py on 4 cores (CHANGES.md)
+# found no size where the Spark plan was faster (booleans up to 5.5M
+# planned postings, phrases up to 8.6M), and a driver boolean peaks at
+# ~90 traced bytes per planned posting, so 2M holds it near 180 MB;
+# bigger queries and merges spread their decode over Spark's tasks.
+DRIVER_POSTINGS_BUDGET = 2_000_000
+
 
 # ---------------------------------------------------------------------------
 # FOR (Frame of Reference) bit-packing of uint32 arrays
@@ -269,6 +282,113 @@ def decode_block_positions(
             "block positions live in the pblob column, which the caller "
             "did not select/pass")
     return doc_ids, tfs_i, norms, decode_pos_blob(pblob, tfs_i)
+
+
+def _binary_column(col) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(bytes, starts, valid) of a binary column — a pyarrow (chunked)
+    array, possibly sliced, or a sequence of bytes: the value buffer
+    followed by 16 zero bytes (so the 8-byte reads of _u64_at at any
+    header or value byte stay inside it), each value's start in it and
+    its validity."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = (col.combine_chunks() if col.num_chunks
+               else pa.array([], type=col.type))
+    elif not isinstance(col, pa.Array):
+        col = pa.array(col, type=pa.binary())
+    n = len(col)
+    bufs = col.buffers()
+    odt = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    offs = np.frombuffer(bufs[1], dtype=odt, count=n + 1,
+                         offset=col.offset * np.dtype(odt).itemsize).astype(np.int64)
+    raw = (np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None
+           else np.zeros(0, np.uint8))
+    data = np.zeros(len(raw) + 16, dtype=np.uint8)
+    data[: len(raw)] = raw
+    valid = (np.ones(n, bool) if not col.null_count
+             else col.is_valid().to_numpy(zero_copy_only=False))
+    return data, offs[:-1], valid
+
+
+def _u64_at(data: np.ndarray) -> np.ndarray:
+    """The little-endian uint64 starting at each byte of data (all but
+    its last 7 bytes): an unaligned strided view, no copy."""
+    return np.ndarray((len(data) - 7,), dtype="<u8", buffer=data, strides=(1,))
+
+
+def _for_sections(data: np.ndarray, start: np.ndarray):
+    """Headers of one FOR section per start (for_encode's [u8 width]
+    [u32 n] layout): (width, n, first data byte, end byte)."""
+    w = data[start].astype(np.int64)
+    n = (_u64_at(data)[start + 1] & np.uint64(0xFFFFFFFF)).astype(np.int64)
+    first = start + 5
+    return w, n, first, first + (n * w + 7) // 8
+
+
+def _for_gather(data: np.ndarray, w: np.ndarray, first: np.ndarray,
+                counts: np.ndarray, off: np.ndarray) -> np.ndarray:
+    """Every value of many FOR sections (width w, data at byte first,
+    counts values each; off: the exclusive cumsum of counts) in one
+    gather: value j of a section starts at bit first*8 + j*w, so one
+    unaligned 8-byte read, a shift and a mask decode it whatever the
+    width (w + 7 <= 39 bits)."""
+    j = np.arange(int(off[-1]), dtype=np.int64) - np.repeat(off[:-1], counts)
+    bit = np.repeat(first * 8, counts) + j * np.repeat(w, counts)
+    mask = np.repeat((np.uint64(1) << w.astype(np.uint64)) - np.uint64(1), counts)
+    return (_u64_at(data)[bit >> 3] >> (bit & 7).astype(np.uint64)) & mask
+
+
+def decode_blocks_batch(blobs, pblobs=None):
+    """Decode many blocks at once: the inverse of split_blocks_batch,
+    bit-identical to decode_block / decode_block_positions per block.
+
+    blobs, pblobs: the blob and pblob columns of block rows (pyarrow
+    arrays or sequences of bytes); pblobs None decodes no positions.
+    Returns (doc_ids, tfs, norms, positions, off, pos_off): flat int64
+    arrays over every block in row order, block i's postings at
+    [off[i], off[i+1]) and its positions at [pos_off[i], pos_off[i+1])
+    (none for a block written without positions).
+
+    The blob buffers are read in place: a vectorized header parse gives
+    each block's base and the width, count and data offset of its three
+    FOR sections; one gather per section decodes the values of every
+    block (_for_gather); a segmented cumsum turns the doc deltas into
+    ids and _decode_pos_deltas the position deltas into positions."""
+    data, start, valid = _binary_column(blobs)
+    if not valid.all():
+        raise ValueError("a block row has no blob")
+    nb = len(start)
+    base = _u64_at(data)[start].view(np.int64)
+    w_doc, n, d_doc, end = _for_sections(data, start + 9)
+    w_tf, _, d_tf, end = _for_sections(data, end)
+    w_nb, _, d_nb, _ = _for_sections(data, end)
+    off = np.zeros(nb + 1, dtype=np.int64)
+    np.cumsum(n, out=off[1:])
+    deltas = _for_gather(data, w_doc, d_doc, n, off).astype(np.int64)
+    tfs = _for_gather(data, w_tf, d_tf, n, off).astype(np.int64)
+    norms = _for_gather(data, w_nb, d_nb, n, off).astype(np.int64)
+    g = np.cumsum(deltas)
+    first = off[:-1][n > 0]
+    doc_ids = g + np.repeat(base[n > 0] - (g[first] - deltas[first]), n[n > 0])
+    pos_off = np.zeros(nb + 1, dtype=np.int64)
+    positions = np.zeros(0, dtype=np.int64)
+    if pblobs is not None and nb:
+        pdata, pstart, pvalid = _binary_column(pblobs)
+        split = data[start + 8] == POS_SPLIT
+        if (split & ~pvalid).any():
+            raise ValueError(
+                "block positions live in the pblob column, which the caller "
+                "did not select/pass")
+        w_pos, n_pos, d_pos, _ = _for_sections(pdata, np.where(split, pstart, 0))
+        n_pos = np.where(split, n_pos, 0)
+        np.cumsum(n_pos, out=pos_off[1:])
+        tfs_pos = tfs[np.repeat(split, n)]
+        if int(tfs_pos.sum()) != int(pos_off[-1]):
+            raise ValueError("block position counts do not match their tfs")
+        pd_ = _for_gather(pdata, w_pos, d_pos, n_pos, pos_off).astype(np.int64)
+        positions = _decode_pos_deltas(pd_, tfs_pos)
+    return doc_ids, tfs, norms, positions, off, pos_off
 
 
 def _bit_width_u64(v: np.ndarray) -> np.ndarray:

@@ -583,15 +583,10 @@ def build_segment(
     if mismatches:
         raise RuntimeError(f"content sha256 mismatch on {mismatches} rows")
 
-    size_bytes = sum(
-        os.path.getsize(os.path.join(dp, fn))
-        for dp, _, fns in os.walk(seg_dir)
-        for fn in fns
-    )
     out = {
         "doc_count": doc_count,
         "sum_dl": sum_dl,
-        "size_bytes": size_bytes,
+        "size_bytes": dir_bytes(seg_dir),
         "wall_s": time.time() - t0,
         "sha_mismatches": int(mismatches),
         "phases": phases,
@@ -606,6 +601,28 @@ def build_segment(
             for fs in field_specs
         }
     return out
+
+
+def dir_bytes(path: str) -> int:
+    """Bytes of every file under path."""
+    return sum(os.path.getsize(os.path.join(dp, fn))
+               for dp, _, fns in os.walk(path) for fn in fns)
+
+
+def add_segment(manifest: Manifest, name: str, batch_id: str, doc_base: int,
+                counters: dict) -> dict:
+    """Append the segment a build wrote (build_segment's counters) to
+    manifest and advance next_doc_id past its ids; the caller commits.
+    Returns the build's lineage fields."""
+    manifest.next_doc_id = max(manifest.next_doc_id, doc_base + counters["doc_count"])
+    manifest.segments.append(SegmentInfo(
+        name=name, doc_base=doc_base, doc_count=counters["doc_count"],
+        doc_span=counters["doc_count"], sum_dl=counters["sum_dl"],
+        size_bytes=counters["size_bytes"], source_batch=batch_id,
+        field_stats=counters.get("field_stats"),
+        format_version=manifest_mod.FORMAT_VERSION))
+    return {"batch": batch_id, **{k: counters[k] for k in (
+        "doc_count", "sum_dl", "wall_s", "sha_mismatches", "partitions")}}
 
 
 def build_index(
@@ -676,30 +693,9 @@ def build_index(
             manifest = mstore.load()
             manifest.index_sort = effective_sort
             manifest.norms = norms
-            manifest.next_doc_id = max(
-                manifest.next_doc_id, doc_base + counters["doc_count"])
-            manifest.segments.append(
-                SegmentInfo(
-                    name=seg_name,
-                    doc_base=doc_base,
-                    doc_count=counters["doc_count"],
-                    doc_span=counters["doc_count"],
-                    sum_dl=counters["sum_dl"],
-                    size_bytes=counters["size_bytes"],
-                    source_batch=batch_id,
-                    field_stats=counters.get("field_stats"),
-                    format_version=manifest_mod.FORMAT_VERSION,
-                )
-            )
-            manifest = mstore.commit(
-                manifest,
-                lineage_entry={
-                    "kind": "build",
-                    "batch": batch_id,
-                    **{k: counters[k] for k in ("doc_count", "sum_dl", "wall_s",
-                                                "sha_mismatches", "partitions")},
-                },
-            )
+            manifest = mstore.commit(manifest, lineage_entry={
+                "kind": "build",
+                **add_segment(manifest, seg_name, batch_id, doc_base, counters)})
         if fail_after_batch is not None and i + 1 >= fail_after_batch:
             raise KeyboardInterrupt(f"simulated crash after batch {batch_id}")
     with lock:

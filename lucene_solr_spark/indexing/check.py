@@ -27,12 +27,13 @@ Returns a report dict; raises CheckIndexFailure when `raise_on_error`.
 from __future__ import annotations
 
 import os
+import struct
 from typing import Iterator, List
 
 import numpy as np
 import pandas as pd
 
-from ..codec import POS_NONE, POS_SPLIT, decode_block, decode_block_positions
+from ..codec import POS_NONE, POS_SPLIT, decode_blocks_batch
 from .deletes import live_path, popcount, read_bits
 from .manifest import ManifestStore, doc_meta_path, postings_path
 
@@ -134,35 +135,8 @@ def check_index(spark, index_dir: str, decode_blocks: bool = True,
                 n_bad = 0
                 n_seen = 0
                 for pdf in batches:
-                    for nrow, lo, hi, mn, blob, pb in zip(
-                        pdf["n"], pdf["min_doc"], pdf["max_doc"],
-                        pdf["min_norm"], pdf["blob"], pdf["pblob"],
-                    ):
-                        n_seen += 1
-                        d, f, nb = decode_block(bytes(blob))
-                        ok = (
-                            len(d) == nrow
-                            and (len(d) == 0 or (
-                                d[0] == lo and d[-1] == hi
-                                and bool(np.all(np.diff(d) > 0))
-                                and int(nb.min()) == mn
-                                and bool(np.all(f >= 1))
-                            ))
-                        )
-                        # position-column consistency: flag POS_SPLIT
-                        # requires a pblob whose decoded occurrence count
-                        # equals sum(tf); POS_NONE must not carry one
-                        # (CheckIndex's term/postings cross-check
-                        # extended to the .pos analog)
-                        hp = bytes(blob)[8]
-                        if hp == POS_SPLIT and pb is not None:
-                            _, _, _, pos = decode_block_positions(
-                                bytes(blob), bytes(pb))
-                            ok = ok and len(pos) == int(f.sum())
-                        else:
-                            ok = ok and hp == POS_NONE and pb is None
-                        if not ok:
-                            n_bad += 1
+                    n_seen += len(pdf)
+                    n_bad += int((~_blocks_ok(pdf)).sum())
                 yield pd.DataFrame({"n_seen": [n_seen], "n_bad": [n_bad]})
 
             res = (
@@ -194,3 +168,35 @@ def check_index(spark, index_dir: str, decode_blocks: bool = True,
     if errors and raise_on_error:
         raise CheckIndexFailure("; ".join(errors))
     return report
+
+
+def _blocks_ok(pdf: pd.DataFrame) -> np.ndarray:
+    """Per block row (n, min_doc, max_doc, min_norm, blob, pblob),
+    whether it decodes to n postings with ascending docs from min_doc to
+    max_doc, tfs >= 1 and min_norm as the smallest norm, and whether its
+    position column matches its flag: POS_SPLIT requires a pblob whose
+    occurrence count equals sum(tf), POS_NONE must not carry one
+    (CheckIndex's term/postings cross-check extended to the .pos
+    analog). One decode_blocks_batch call decodes the batch."""
+    blobs, pblobs = pdf["blob"].to_numpy(), pdf["pblob"].to_numpy()
+    d, f, nb, _, off, _ = decode_blocks_batch(blobs)
+    cnt = np.diff(off)
+    ok = cnt == pdf["n"].to_numpy(np.int64)
+    full = np.flatnonzero(cnt > 0)
+    lo, hi = off[:-1][full], off[1:][full] - 1
+    step = np.ones(len(d), dtype=bool)
+    step[1:] = d[1:] > d[:-1]
+    step[lo] = True
+    ok[full] &= (
+        (d[lo] == pdf["min_doc"].to_numpy(np.int64)[full])
+        & (d[hi] == pdf["max_doc"].to_numpy(np.int64)[full])
+        & np.logical_and.reduceat(step & (f >= 1), lo)
+        & (np.minimum.reduceat(nb, lo) == pdf["min_norm"].to_numpy(np.int64)[full]))
+    sum_tf = np.zeros(len(cnt), dtype=np.int64)
+    sum_tf[full] = np.add.reduceat(f, lo)
+    for i, (blob, pb) in enumerate(zip(blobs, pblobs)):
+        if bytes(blob)[8] == POS_SPLIT and pb is not None:
+            ok[i] &= struct.unpack_from("<I", bytes(pb), 1)[0] == sum_tf[i]
+        else:
+            ok[i] &= bytes(blob)[8] == POS_NONE and pb is None
+    return ok

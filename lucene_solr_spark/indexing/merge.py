@@ -4,8 +4,12 @@ Policy is a faithful port of the reference's scoring math
 (lucene/core/.../index/TieredMergePolicy.java:96-103 defaults,
 score():566-610: skew × totAfterMergeBytes^0.05 × nonDelRatio², lower
 is better; allowed-segment budget per tier) — the mechanism is ours:
-the driver picks candidate sets and runs each merge as a Spark job that
-unions the segments' postings blocks, decodes, re-sorts and re-packs.
+the driver picks candidate sets and runs each merge's three stage bodies
+— unpack (decode the inputs' blocks, drop deleted docs), repack (re-block
+the (term, doc_id)-sorted postings) and write-docs — over flat arrays.
+A merge whose inputs' summed sum_dl is under codec.DRIVER_POSTINGS_BUDGET
+runs them on the driver with no Spark job (merge_plan); a bigger one runs
+them as mapInArrow stages around a shuffle.
 
 Because docIDs are GLOBAL in this engine (assigned once at build from
 the canonical (repo, path) order and never remapped), a merge is a pure
@@ -18,6 +22,7 @@ byte-identical before and after any merge.
 from __future__ import annotations
 
 import hashlib
+import logging
 import math
 import os
 import shutil
@@ -27,8 +32,9 @@ from typing import Iterator, List, Optional
 import numpy as np
 import pandas as pd
 
-from ..codec import BLOCK_SIZE, POS_SPLIT, decode_block_positions, split_blocks_batch
-from .builder import POSTINGS_SCHEMA, SegmentPartWriter, _PartFile, _task_pid
+from .. import codec
+from ..codec import BLOCK_SIZE, POS_SPLIT, decode_blocks_batch, split_blocks_batch
+from .builder import POSTINGS_SCHEMA, SegmentPartWriter, _PartFile, _task_pid, dir_bytes
 from .manifest import (FORMAT_VERSION, Manifest, ManifestStore, SegmentInfo,
                        _data_files, _footer_schema, doc_meta_path,
                        postings_path)
@@ -41,6 +47,8 @@ FLOOR_SEGMENT_BYTES = 2 * 1024**2
 # repack flush threshold (rows buffered before encoding complete terms);
 # module constant so tests can shrink it to exercise the mid-term path
 REPACK_FLUSH_ROWS = 2_000_000
+
+_log = logging.getLogger("lucene_solr_spark.indexing")
 
 
 def _floor_size(bytes_: int) -> int:
@@ -111,16 +119,34 @@ def merged_segment_name(inputs: List[SegmentInfo]) -> str:
     return f"seg_m_{h}"
 
 
+def merge_plan(inputs: List[SegmentInfo]) -> dict:
+    """How a merge of inputs runs, decided before any data is read: on
+    the driver when the inputs' summed sum_dl — the tokens they hold, a
+    bound on the postings and positions the merge decodes — is under
+    codec.DRIVER_POSTINGS_BUDGET (0 Spark jobs), else as Spark jobs (the
+    postings repack's shuffle map and result stages, then the doc
+    metadata pass)."""
+    tokens = sum(s.sum_dl for s in inputs)
+    budget = codec.DRIVER_POSTINGS_BUDGET
+    driver = tokens < budget
+    return {"access_path": "driver" if driver else "spark",
+            "tokens_planned": tokens, "budget": budget,
+            "expected_jobs": 0 if driver else 3}
+
+
 def run_merge(spark, store: ManifestStore, manifest: Manifest,
               inputs: List[SegmentInfo], num_partitions: Optional[int] = None) -> Manifest:
-    """Execute one merge as a Spark job + manifest swap. Idempotent: the
-    output dir name is deterministic, data writes are overwrite-by-name,
-    and the manifest commit is the only visibility point — a crash at
-    any moment leaves the old generation live (kill/resume test relies
-    on this). The swap commits onto the live manifest (_swap)."""
+    """Execute one merge (its data phase, on the driver or as Spark
+    jobs: merge_plan) + manifest swap. Idempotent: the output dir name is
+    deterministic, data writes are overwrite-by-name, and the manifest
+    commit is the only visibility point — a crash at any moment leaves
+    the old generation live (kill/resume test relies on this). The swap
+    commits onto the live manifest (_swap)."""
     t0 = time.time()
-    merged_info = _merge_data(spark, store, inputs, num_partitions)
-    out = _swap(store, inputs, merged_info, {"wall_s": time.time() - t0})
+    plan = merge_plan(inputs)
+    merged_info = _merge_data(spark, store, inputs, num_partitions,
+                              plan["access_path"] == "driver")
+    out = _swap(store, inputs, merged_info, {"wall_s": time.time() - t0, **plan})
     if out is None:
         raise RuntimeError(f"merge inputs no longer live: {[s.name for s in inputs]}")
     return out
@@ -130,15 +156,17 @@ def run_merge_concurrent(spark, store: ManifestStore,
                          inputs: List[SegmentInfo],
                          num_partitions: Optional[int] = None) -> Optional[Manifest]:
     """Background-thread merge (ConcurrentMergeScheduler's OneMerge):
-    the heavy Spark work runs WITHOUT any lock against the inputs'
-    immutable segment dirs; the swap (_swap) re-validates the inputs
-    against the live manifest — if another merge claimed one, the output
-    is abandoned (garbage, never corruption). Returns the committed
+    the data phase runs WITHOUT any lock against the inputs' immutable
+    segment dirs; the swap (_swap) re-validates the inputs against the
+    live manifest — if another merge claimed one, the output is
+    abandoned (garbage, never corruption). Returns the committed
     manifest, or None if abandoned."""
     t0 = time.time()
-    merged_info = _merge_data(spark, store, inputs, num_partitions)
+    plan = merge_plan(inputs)
+    merged_info = _merge_data(spark, store, inputs, num_partitions,
+                              plan["access_path"] == "driver")
     return _swap(store, inputs, merged_info,
-                 {"concurrent": True, "wall_s": time.time() - t0})
+                 {"concurrent": True, "wall_s": time.time() - t0, **plan})
 
 
 def _swap(store: ManifestStore, inputs: List[SegmentInfo], merged: SegmentInfo,
@@ -150,6 +178,7 @@ def _swap(store: ManifestStore, inputs: List[SegmentInfo], merged: SegmentInfo,
     from .deletes import pack, read_bits, set_ids, write_bits
     from .manifest import commit_lock
 
+    _log.debug("merge plan: %s", lineage)
     with commit_lock(store.index_dir):
         manifest = store.load()
         live = {s.name: s for s in manifest.segments}
@@ -176,121 +205,107 @@ def _swap(store: ManifestStore, inputs: List[SegmentInfo], merged: SegmentInfo,
 
 
 def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
-                num_partitions: Optional[int] = None) -> SegmentInfo:
+                num_partitions: Optional[int] = None,
+                driver: bool = False) -> SegmentInfo:
     """The merge's data phase: read + purge + re-pack + write the merged
     segment dir. Touches NO manifest state — inputs are immutable once
     committed (a delete adds a live-docs generation beside the one the
-    inputs name), so this is safe off-thread."""
-    from pyspark.sql import functions as F
+    inputs name), so this is safe off-thread.
+
+    Three stage bodies run on either access path: _unpack (blocks ->
+    live postings), _repack_aggregated (sorted postings -> blocks,
+    written by SegmentPartWriter) and _write_docs (live doc metadata).
+    driver: pyarrow reads every input file, a (term, doc_id) sort
+    replaces the shuffle, and one part file of each kind is written,
+    with no Spark job; else mapInArrow stages (positions ride as an
+    Arrow list column) around the builder's chunk-salted shuffle."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from ..fields import field_stats_from_meta_cols
     from .deletes import dead_docs
 
-    parts = num_partitions or spark.sparkContext.defaultParallelism
     name = merged_segment_name(inputs)
     out_dir = store.segment_dir(name)
     in_dirs = [store.segment_dir(s.name) for s in inputs]
-
-    blocks = spark.read.schema(POSTINGS_SCHEMA).parquet(
-        *[postings_path(d) for d in in_dirs])
     has_positions = _segment_has_positions(in_dirs[0])
     # physical purge: deleted docs drop out of the rewrite
     # (SegmentMerger skips liveDocs=false rows)
     dead = dead_docs(store, inputs)
-
-    def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {"term": [], "doc_id": [], "norm": [], "tf": [], "pos_blob": []}
-            for term, blob, pb in zip(pdf["term"], pdf["blob"], pdf["pblob"]):
-                d, f, nb, pos = decode_block_positions(bytes(blob), pb)
-                keep = np.ones(len(d), bool) if dead is None else ~dead.probe(d)
-                if not keep.any():
-                    continue
-                cols["term"].append(np.full(int(keep.sum()), term, dtype=object))
-                cols["doc_id"].append(d[keep])
-                cols["norm"].append(nb[keep])
-                cols["tf"].append(f[keep])
-                if has_positions:
-                    off = np.concatenate([[0], np.cumsum(f)])
-                    cols["pos_blob"].append(
-                        [pos[off[i]:off[i + 1]].tolist() for i in np.flatnonzero(keep)]
-                    )
-            if cols["doc_id"]:
-                out = {
-                    "term": np.concatenate(cols["term"]),
-                    "doc_id": np.concatenate(cols["doc_id"]),
-                    "norm": np.concatenate(cols["norm"]),
-                    "tf": np.concatenate(cols["tf"]),
-                }
-                if has_positions:
-                    out["positions"] = [p for sub in cols["pos_blob"] for p in sub]
-                yield pd.DataFrame(out)
-
-    schema = "term string, doc_id long, norm int, tf long"
-    if has_positions:
-        schema += ", positions array<int>"
-    postings = blocks.select("term", "blob", "pblob").mapInPandas(unpack, schema=schema)
-
-    # same chunk-salted shuffle + sorted pack as the builder
-    shuffled = (
-        postings.withColumn("chunk", F.shiftright("doc_id", 13))
-        .repartition(parts, "term", "chunk")
-        .sortWithinPartitions("term", "doc_id")
-        .drop("chunk")
-    )
-    def repack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # the builder's writer: term-sorted blk and term-stats part files
-        out = SegmentPartWriter(out_dir, _task_pid())
-        for blk in _repack_aggregated(batches, has_positions):
-            out.add_blocks(blk)
-        yield pd.DataFrame([out.close()])
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    rows = shuffled.mapInPandas(
-        repack, schema="blocks long, bytes long, stats_s double").collect()
-    if not any(r["blocks"] for r in rows):
-        # every input doc was purged: no task wrote a file, but readers
-        # need one of each kind
-        SegmentPartWriter(out_dir, 0, keep_empty=True).close()
-
-    # the doc metadata: one pass drops deleted docs, writes the task's part
-    # file as the builder's invert task does and returns the live counters
-    # (docs, then sum and nonzero count of length and each fdl column), so
-    # purged docs leave the field stats here, as Lucene's FieldInfos do
+    blk_files = [f for d in in_dirs for f in _data_files(postings_path(d))]
+    cols = ["term", "blob"] + (["pblob"] if has_positions else [])
     meta_dirs = [doc_meta_path(d) for d in in_dirs]
-    meta = spark.read.schema(_footer_schema(
-        [_data_files(d) for d in meta_dirs])).parquet(*meta_dirs)
-    doc_arrow = to_arrow_schema(meta.schema)
+    meta_schema = _footer_schema([_data_files(d) for d in meta_dirs])
+    doc_arrow = to_arrow_schema(meta_schema)
     field_names = field_stats_from_meta_cols(doc_arrow.names)
     lens = ["length"] + [f"fdl_{fn}" for fn in field_names]
     names = ["n"] + [f"sum_{c}" for c in lens] + [f"nz_{c}" for c in lens]
+    shutil.rmtree(out_dir, ignore_errors=True)
 
-    def write_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = _PartFile(os.path.join(doc_meta_path(out_dir),
-                                     f"part-{_task_pid():05d}.parquet"), doc_arrow)
-        c = np.zeros(len(names), np.int64)
-        for pdf in batches:
-            if dead is not None:
-                pdf = pdf[~dead.probe(pdf["doc_id"].to_numpy(np.int64))]
-            if len(pdf):
-                out.write(pdf)
-                v = pdf[lens].to_numpy(np.int64)
-                c += np.concatenate(([len(v)], v.sum(0), (v > 0).sum(0)))
+    if driver:
+        post = _unpack(ds.dataset(blk_files, format="parquet").to_table(columns=cols),
+                       dead, has_positions)
+        post = post.take(pc.sort_indices(
+            post, sort_keys=[("term", "ascending"), ("doc_id", "ascending")]))
+        out = SegmentPartWriter(out_dir, 0, keep_empty=True)
+        for blk in _repack_aggregated([post], has_positions):
+            out.add_blocks(blk)
         out.close()
-        yield pd.DataFrame([c], columns=names)
+        meta = ds.dataset([f for d in meta_dirs for f in _data_files(d)],
+                          schema=doc_arrow, format="parquet").to_table()
+        total = _write_docs([meta], doc_meta_path(out_dir), 0, doc_arrow, dead, lens,
+                            keep_empty=True)
+    else:
+        from pyspark.sql import functions as F
 
-    rows = meta.mapInPandas(write_docs, ", ".join(f"`{n}` long" for n in names)).collect()
-    total = dict(zip(names, np.sum(rows, axis=0) if rows else np.zeros(len(names))))
-    if not total["n"]:
-        _PartFile(os.path.join(doc_meta_path(out_dir), "part-00000.parquet"),
-                  doc_arrow).close(keep_empty=True)
+        parts = num_partitions or spark.sparkContext.defaultParallelism
 
-    size_bytes = sum(
-        os.path.getsize(os.path.join(dp, fn))
-        for dp, _, fns in os.walk(out_dir)
-        for fn in fns
-    )
+        def unpack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for b in batches:
+                yield from _unpack(b, dead, has_positions).to_batches()
+
+        schema = "term string, doc_id long, norm int, tf long"
+        if has_positions:
+            schema += ", positions array<int>"
+        postings = (spark.read.schema(POSTINGS_SCHEMA).parquet(
+            *[postings_path(d) for d in in_dirs]).select(*cols).mapInArrow(unpack, schema))
+        # same chunk-salted shuffle + sorted pack as the builder
+        shuffled = (
+            postings.withColumn("chunk", F.shiftright("doc_id", 13))
+            .repartition(parts, "term", "chunk")
+            .sortWithinPartitions("term", "doc_id")
+            .drop("chunk")
+        )
+
+        def repack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            # the builder's writer: term-sorted blk and term-stats part files
+            out = SegmentPartWriter(out_dir, _task_pid())
+            for blk in _repack_aggregated(batches, has_positions):
+                out.add_blocks(blk)
+            yield pa.RecordBatch.from_pylist([out.close()])
+
+        rows = shuffled.mapInArrow(
+            repack, "blocks long, bytes long, stats_s double").collect()
+        if not any(r["blocks"] for r in rows):
+            # every input doc was purged: no task wrote a file, but readers
+            # need one of each kind
+            SegmentPartWriter(out_dir, 0, keep_empty=True).close()
+
+        def write_docs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            c = _write_docs(batches, doc_meta_path(out_dir), _task_pid(),
+                            doc_arrow, dead, lens)
+            yield pa.RecordBatch.from_arrays([pa.array([v]) for v in c], names=names)
+
+        meta = spark.read.schema(meta_schema).parquet(*meta_dirs)
+        rows = meta.mapInArrow(write_docs, ", ".join(f"`{n}` long" for n in names)).collect()
+        total = np.sum(rows, axis=0) if rows else np.zeros(len(names), np.int64)
+        if not total[0]:
+            _PartFile(os.path.join(doc_meta_path(out_dir), "part-00000.parquet"),
+                      doc_arrow).close(keep_empty=True)
+    total = dict(zip(names, total))
+
     doc_base = min(s.doc_base for s in inputs)
     return SegmentInfo(
         name=name,
@@ -298,7 +313,7 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
         doc_count=int(total["n"]),
         doc_span=max(s.doc_base + s.doc_span for s in inputs) - doc_base,
         sum_dl=int(total["sum_length"]),
-        size_bytes=size_bytes,
+        size_bytes=dir_bytes(out_dir),
         source_batch=f"merge:{'+'.join(s.source_batch for s in inputs)}",
         field_stats={fn: [int(total[f"nz_fdl_{fn}"]), int(total[f"sum_fdl_{fn}"])]
                      for fn in field_names} or None,
@@ -306,11 +321,63 @@ def _merge_data(spark, store: ManifestStore, inputs: List[SegmentInfo],
     )
 
 
-def _repack_aggregated(batches: Iterator[pd.DataFrame], with_positions: bool) -> Iterator[pd.DataFrame]:
+def _unpack(blocks, dead, with_positions: bool):
+    """The merge's decode stage: blk rows (term, blob[, pblob]; a pyarrow
+    table or record batch) -> one row per live posting (term, doc_id,
+    norm, tf[, positions]), a pyarrow table whose positions are a list
+    column built from the decoded offsets. One decode_blocks_batch call;
+    deleted docs drop out with their positions."""
+    import pyarrow as pa
+
+    d, f, nb, pos, off, _ = decode_blocks_batch(
+        blocks.column("blob"), blocks.column("pblob") if with_positions else None)
+    blk = np.repeat(np.arange(len(off) - 1), np.diff(off))
+    if dead is not None:
+        keep = ~dead.probe(d)
+        if with_positions:
+            pos = pos[np.repeat(keep, f)]
+        blk, d, f, nb = blk[keep], d[keep], f[keep], nb[keep]
+    cols = {"term": blocks.column("term").take(pa.array(blk)), "doc_id": pa.array(d),
+            "norm": pa.array(nb.astype(np.int32)), "tf": pa.array(f)}
+    if with_positions:
+        po = np.zeros(len(f) + 1, dtype=np.int32)
+        np.cumsum(f, out=po[1:])
+        cols["positions"] = pa.ListArray.from_arrays(pa.array(po), pa.array(pos.astype(np.int32)))
+    return pa.table(cols)
+
+
+def _write_docs(batches, meta_dir: str, pid: int, doc_arrow, dead, lens: List[str],
+                keep_empty: bool = False) -> np.ndarray:
+    """The merge's doc-metadata stage: drop deleted docs from batches of
+    doc metadata (pyarrow), write the rest as part file pid of meta_dir,
+    as the builder's invert task does (a file without rows only when
+    keep_empty), and return the live counters: docs, then the sum and
+    nonzero count of each lens column — purged docs leave the field
+    stats here, as Lucene's FieldInfos do."""
+    import pyarrow as pa
+
+    out = _PartFile(os.path.join(meta_dir, f"part-{pid:05d}.parquet"), doc_arrow)
+    c = np.zeros(1 + 2 * len(lens), np.int64)
+    for b in batches:
+        t = b if isinstance(b, pa.Table) else pa.Table.from_batches([b])
+        if dead is not None:
+            t = t.filter(pa.array(~dead.probe(t.column("doc_id").to_numpy())))
+        if t.num_rows:
+            out.write(t.cast(doc_arrow))
+            v = np.column_stack([t.column(x).to_numpy() for x in lens]).astype(np.int64)
+            c += np.concatenate(([len(v)], v.sum(0), (v > 0).sum(0)))
+    out.close(keep_empty)
+    return c
+
+
+def _repack_aggregated(batches, with_positions: bool) -> Iterator[pd.DataFrame]:
     """Re-block already-aggregated (term, doc_id, norm, tf[, positions])
-    rows — sorted by (term, doc_id) within the partition — via the batch
-    block encoder. Unlike the builder's raw-token packer, (term, doc)
-    pairs are unique here (each doc lived in exactly one input segment).
+    rows — pyarrow tables or record batches, sorted by (term, doc_id) —
+    via the batch block encoder. Unlike the builder's raw-token packer,
+    (term, doc) pairs are unique here (each doc lived in exactly one
+    input segment). Term changes are found by an Arrow compare and the
+    positions flattened from their list column: no Python object per
+    posting.
 
     Memory is bounded: rows buffer up to ~2M and COMPLETE terms are
     encoded per round, the (possibly batch-straddling) final term
@@ -319,65 +386,62 @@ def _repack_aggregated(batches: Iterator[pd.DataFrame], with_positions: bool) ->
     mid-term at a BLOCK_SIZE multiple — all emitted blocks are full,
     so the codec invariant (a tail block only at true term end) holds,
     and the carried remainder stays < BLOCK_SIZE + one input batch."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    def encode(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        terms = pdf["term"].to_numpy()
-        n = len(terms)
-        tc = np.empty(n, dtype=bool)
-        tc[0] = True
-        tc[1:] = terms[1:] != terms[:-1]
-        term_first = np.flatnonzero(tc)
-        term_last = np.append(term_first[1:], n)
+    def heads(terms) -> np.ndarray:
+        tc = np.ones(len(terms), dtype=bool)
+        if len(terms) > 1:
+            tc[1:] = pc.not_equal(terms[1:], terms[:-1]).to_numpy(zero_copy_only=False)
+        return np.flatnonzero(tc)
+
+    def encode(tbl) -> Iterator[pd.DataFrame]:
+        terms = tbl.column("term").combine_chunks()
+        term_first = heads(terms)
+        term_last = np.append(term_first[1:], len(terms))
         P = None
         if with_positions:
-            plists = pdf["positions"].to_numpy()
-            P = (np.concatenate([np.asarray(x, dtype=np.int64) for x in plists])
-                 if n else np.array([], dtype=np.int64))
+            P = pc.list_flatten(tbl.column("positions").combine_chunks()).to_numpy(
+                zero_copy_only=False).astype(np.int64)
         res = split_blocks_batch(
-            pdf["doc_id"].to_numpy(dtype=np.int64),
-            pdf["tf"].to_numpy(dtype=np.int64),
-            pdf["norm"].to_numpy(dtype=np.int64),
+            tbl.column("doc_id").to_numpy().astype(np.int64),
+            tbl.column("tf").to_numpy().astype(np.int64),
+            tbl.column("norm").to_numpy().astype(np.int64),
             term_first, term_last, positions=P)
         nblocks = len(res["n"])
         if not nblocks:
             return
-        cols = {"term": terms[term_first][res["term_idx"]],
+        cols = {"term": terms.take(pa.array(term_first)).to_numpy(
+                    zero_copy_only=False)[res["term_idx"]],
                 **{k: res[k] for k in ("n", "min_doc", "max_doc", "max_tf",
                                        "sum_tf", "min_norm", "imp_tf",
                                        "imp_norm", "blob", "pblob")}}
         for lo in range(0, nblocks, 65536):
             yield pd.DataFrame({k: v[lo:lo + 65536] for k, v in cols.items()})
 
-    pending: List[pd.DataFrame] = []
+    pending: list = []
     n_pending = 0
-    for pdf in batches:
-        if not len(pdf):
+    for b in batches:
+        if not b.num_rows:
             continue
-        pending.append(pdf)
-        n_pending += len(pdf)
+        pending.append(b if isinstance(b, pa.Table) else pa.Table.from_batches([b]))
+        n_pending += b.num_rows
         if n_pending >= REPACK_FLUSH_ROWS:
-            buf = (pending[0] if len(pending) == 1
-                   else pd.concat(pending, ignore_index=True))
-            terms = buf["term"].to_numpy()
-            heads = np.flatnonzero(
-                np.concatenate(([True], terms[1:] != terms[:-1])))
-            cut = int(heads[-1])
+            buf = pa.concat_tables(pending)
+            cut = int(heads(buf.column("term").combine_chunks())[-1])
             if cut == 0:
                 # ONE term fills the whole buffer: encode full blocks
                 # mid-term (cut at a BLOCK_SIZE multiple — no tail
                 # block is emitted, so the term can continue in later
                 # rounds) instead of growing the buffer without bound
-                cut = (len(buf) // BLOCK_SIZE) * BLOCK_SIZE
+                cut = (buf.num_rows // BLOCK_SIZE) * BLOCK_SIZE
             if cut > 0:
-                yield from encode(buf.iloc[:cut])
-                buf = buf.iloc[cut:].reset_index(drop=True)
+                yield from encode(buf.slice(0, cut))
+                buf = buf.slice(cut)
             pending = [buf]
-            n_pending = len(buf)
+            n_pending = buf.num_rows
     if n_pending:
-        buf = (pending[0] if len(pending) == 1
-               else pd.concat(pending, ignore_index=True))
-        if len(buf):
-            yield from encode(buf)
+        yield from encode(pa.concat_tables(pending))
 
 
 def _segment_has_positions(seg_dir: str) -> bool:

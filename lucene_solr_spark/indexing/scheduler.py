@@ -5,7 +5,8 @@ selected by the merge policy run on background threads CONCURRENTLY
 with continued indexing; each merge claims its input segments so two
 merges never share an input; the commit point is serialized.
 
-Spark-first mechanism: merge "threads" are driver threads submitting
+Spark-first mechanism: merge "threads" are driver threads that run a
+small merge themselves (merge.merge_plan) and submit a big one's
 independent Spark jobs (the cluster interleaves their stages with the
 build's — that IS the merge/indexing overlap; Spark's scheduler plays
 the role of Lucene's IO-throttled merge threads). Safety comes from

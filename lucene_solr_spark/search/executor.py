@@ -18,7 +18,7 @@ partitions playing segment leaves:
   access path                -> a term, phrase or boolean-of-those top-k
                                 whose planned postings (summed df, plus
                                 ttf for phrase terms) are under
-                                DRIVER_POSTINGS_BUDGET runs on the driver:
+                                codec.DRIVER_POSTINGS_BUDGET runs on the driver:
                                 one pyarrow read of its blocks, the same
                                 stage functions, no Spark job (Lucene's
                                 IndexSearcher scores in the caller's
@@ -72,14 +72,13 @@ from __future__ import annotations
 import logging
 import math
 import os
-from itertools import repeat
 from typing import Dict, Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
 
-from .. import bm25
-from ..codec import IMPACT_CAP, decode_block, decode_block_positions
+from .. import bm25, codec
+from ..codec import IMPACT_CAP, decode_blocks_batch
 from ..fields import FIELD_SEP, split_term_key, term_key
 from ..smallfloat import LENGTH_TABLE
 from ..indexing.builder import POSTINGS_SCHEMA
@@ -104,16 +103,6 @@ from ..queryast import (
 )
 
 CHUNK_BITS = 13
-
-# A term, phrase or boolean-of-those top-k whose planned postings (the
-# summed df of its terms, plus the summed ttf of its phrases' terms) are
-# under this runs on the driver with no Spark job. It bounds driver
-# memory, not time: scripts/driver_crossover.py on 4 cores (CHANGES.md)
-# found no size where the Spark plan was faster (booleans up to 5.5M
-# planned postings, phrases up to 8.6M), and a driver boolean peaks at
-# ~90 traced bytes per planned posting, so 2M holds it near 180 MB;
-# bigger queries spread their decode over Spark's tasks.
-DRIVER_POSTINGS_BUDGET = 2_000_000
 
 _log = logging.getLogger("lucene_solr_spark.search")
 
@@ -1377,7 +1366,7 @@ class Searcher:
         "driver" (no Spark job) when local, else the plan's own, with
         reason "over-budget" when only the budget kept the query off the
         driver."""
-        plan = dict(plan, postings_planned=postings, budget=DRIVER_POSTINGS_BUDGET)
+        plan = dict(plan, postings_planned=postings, budget=codec.DRIVER_POSTINGS_BUDGET)
         if local:
             plan.update(access_path="driver", expected_jobs=0)
         elif postings is not None:
@@ -1396,7 +1385,7 @@ class Searcher:
         exhaustive top-k as result (other shapes and paging run
         exhaustive; prune=False is the exhaustive reference).
         A term, phrase or boolean of those whose planned postings
-        (_planned_postings) are under DRIVER_POSTINGS_BUDGET runs on the
+        (_planned_postings) are under codec.DRIVER_POSTINGS_BUDGET runs on the
         driver with the Spark stages' own functions and no Spark job;
         any other query runs its Spark plan. The plan and its reason
         land on self.last_plan (_exhaustive_plan when nothing is pruned)
@@ -1405,7 +1394,7 @@ class Searcher:
         self._skips = []
         q = self._with_default_field(q)
         postings = self._planned_postings(q)
-        local = postings is not None and postings < DRIVER_POSTINGS_BUDGET
+        local = postings is not None and postings < codec.DRIVER_POSTINGS_BUDGET
         terms = self._as_or_terms(q) if prune and after is None else None
         if terms is not None:
             top = self._search_pruned_or(terms, k, local)
@@ -1721,28 +1710,33 @@ def _decoded_blocks(pdf, positions: bool = False, keep=None, dels=None):
     tfs, norms[, pos]) per row of a batch of blocks (term, blob, plus
     min_doc with keep, pblob with positions). keep: {term: set of
     min_doc}, the conjunction prefilter's kept blocks — other rows are
-    skipped undecoded. dels: the reader's DeadDocs; deleted docs drop
-    out of each block with their positions (one bitset gather per
-    block), and a block left empty is skipped."""
-    mins = pdf["min_doc"] if keep is not None else repeat(None)
-    pblobs = pdf["pblob"] if positions else repeat(None)
-    for term, md, blob, pb in zip(pdf["term"], mins, pdf["blob"], pblobs):
-        if keep is not None and md not in keep[term]:
-            continue
-        if positions:
-            doc_ids, tfs, norms, pos = decode_block_positions(bytes(blob), pb)
-        else:
-            doc_ids, tfs, norms = decode_block(bytes(blob))
-        if dels is not None:
-            live = ~dels.probe(doc_ids)
-            if not live.all():
-                if positions and len(pos):
-                    pos = pos[np.repeat(live, tfs)]
-                doc_ids, tfs, norms = doc_ids[live], tfs[live], norms[live]
-                if not len(doc_ids):
-                    continue
-        yield ((term, doc_ids, tfs, norms, pos) if positions
-               else (term, doc_ids, tfs, norms))
+    skipped undecoded. The kept rows decode in one
+    codec.decode_blocks_batch call; each row yields slices of its flat
+    arrays. dels: the reader's DeadDocs; deleted docs drop out of each
+    block with their positions (one bitset gather per batch), and a
+    block left empty is skipped."""
+    terms = pdf["term"].to_numpy()
+    rows = np.arange(len(terms))
+    if keep is not None:
+        rows = np.flatnonzero([md in keep[t] for t, md in zip(terms, pdf["min_doc"])])
+    if not len(rows):
+        return
+    doc_ids, tfs, norms, pos, off, poff = decode_blocks_batch(
+        pdf["blob"].to_numpy()[rows],
+        pdf["pblob"].to_numpy()[rows] if positions else None)
+    live = None if dels is None else ~dels.probe(doc_ids)
+    for i, term in enumerate(terms[rows]):
+        a, b = off[i], off[i + 1]
+        d, f, nb = doc_ids[a:b], tfs[a:b], norms[a:b]
+        p = pos[poff[i]:poff[i + 1]]
+        if live is not None and not live[a:b].all():
+            keep_i = live[a:b]
+            if positions and len(p):
+                p = p[np.repeat(keep_i, f)]
+            d, f, nb = d[keep_i], f[keep_i], nb[keep_i]
+            if not len(d):
+                continue
+        yield (term, d, f, nb, p) if positions else (term, d, f, nb)
 
 
 def decode_score(batches: Iterator[pd.DataFrame], info: dict) -> Iterator[pd.DataFrame]:

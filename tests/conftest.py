@@ -52,14 +52,27 @@ def access_paths(monkeypatch):
     "driver" (the budget as set, which the test indexes' queries fit),
     then "spark" (the budget at 0, so the Spark plan runs; it stays at 0
     until the test ends)."""
-    from lucene_solr_spark.search import executor
+    from lucene_solr_spark import codec
 
     def paths():
         yield "driver"
-        monkeypatch.setattr(executor, "DRIVER_POSTINGS_BUDGET", 0)
+        monkeypatch.setattr(codec, "DRIVER_POSTINGS_BUDGET", 0)
         yield "spark"
 
     return paths
+
+
+@pytest.fixture
+def spark_commits(monkeypatch):
+    """Merges and upserts run their Spark jobs: the postings budget and
+    the upsert cap at 0 (the test indexes fit both as set, so without
+    this fixture every merge and upsert runs on the driver). Queries
+    follow the budget onto their Spark plans too."""
+    from lucene_solr_spark import codec
+    from lucene_solr_spark.indexing import deletes
+
+    monkeypatch.setattr(codec, "DRIVER_POSTINGS_BUDGET", 0)
+    monkeypatch.setattr(deletes, "DRIVER_UPSERT_ROWS", 0)
 
 
 @pytest.fixture(scope="session")

@@ -184,6 +184,7 @@ def test_repack_mega_term_bounded_midterm_flush(monkeypatch):
     posting list — tail block only at true term end."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     from lucene_solr_spark.codec import BLOCK_SIZE, decode_block
     from lucene_solr_spark.indexing import merge as m
@@ -192,12 +193,12 @@ def test_repack_mega_term_bounded_midterm_flush(monkeypatch):
     n = 3210  # > 3 flush rounds, non-multiple of BLOCK_SIZE
     docs = np.arange(1, n + 1, dtype=np.int64) * 3
     batches = [
-        pd.DataFrame({
+        pa.Table.from_pandas(pd.DataFrame({
             "term": np.array(["mega"] * len(chunk), dtype=object),
             "doc_id": chunk,
             "tf": np.ones(len(chunk), dtype=np.int64),
             "norm": np.full(len(chunk), 7, dtype=np.int64),
-        })
+        }))
         for chunk in np.array_split(docs, 9)
     ]
     blocks = pd.concat(

@@ -160,7 +160,7 @@ def test_every_query_explains_its_plan(chunked_searcher, caplog):
     import logging
 
     from lucene_solr_spark.queryast import PhraseQuery
-    from lucene_solr_spark.search.executor import DRIVER_POSTINGS_BUDGET
+    from lucene_solr_spark.codec import DRIVER_POSTINGS_BUDGET
 
     s = chunked_searcher
     with caplog.at_level(logging.DEBUG, logger="lucene_solr_spark.search"):

@@ -79,6 +79,11 @@ def test_update_documents(spark, fresh_index, tiny_corpus_pdf):
     assert hits["doc_id"][0] >= before_total  # fresh docID appended
 
 
+def test_update_documents_spark(spark, fresh_index, tiny_corpus_pdf, spark_commits):
+    """The upsert above (on the driver) as a Spark build and key scan."""
+    test_update_documents(spark, fresh_index, tiny_corpus_pdf)
+
+
 def test_merge_purges_deletes(spark, fresh_index):
     from lucene_solr_spark.indexing import deletes
     from lucene_solr_spark.indexing.merge import force_merge

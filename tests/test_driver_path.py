@@ -12,6 +12,7 @@ import pytest
 
 from lucene_solr_spark.queryast import (BooleanClause, BooleanQuery, MatchNoDocsQuery,
                                         Occur, PhraseQuery, TermQuery)
+from lucene_solr_spark import codec
 from lucene_solr_spark.search import executor
 
 pytestmark = pytest.mark.spark
@@ -107,7 +108,7 @@ def _both(monkeypatch, s, run):
     got = run(s)
     driver_plan = s.last_plan
     with monkeypatch.context() as m:
-        m.setattr(executor, "DRIVER_POSTINGS_BUDGET", 0)
+        m.setattr(codec, "DRIVER_POSTINGS_BUDGET", 0)
         want = run(s)
     return got, driver_plan, want, s.last_plan
 
@@ -177,7 +178,7 @@ def test_jobs_equal_expected_on_both_paths(monkeypatch, spark_jobs, readers, sha
     q = SHAPES[shape]
     top, n = spark_jobs(lambda: s.search(q, k=10, prune=prune))
     assert n == 0 and s.last_plan["expected_jobs"] == 0, s.last_plan
-    monkeypatch.setattr(executor, "DRIVER_POSTINGS_BUDGET", 0)
+    monkeypatch.setattr(codec, "DRIVER_POSTINGS_BUDGET", 0)
     _, n = spark_jobs(lambda: s.search(q, k=10, prune=prune))
     assert s.last_plan["reason"] == "over-budget"
     if len(top):

@@ -147,6 +147,28 @@ def test_delete_during_merge_is_carried_over(spark, tiny_corpus_pdf, tmp_path,
     assert check_index(spark, idx)["clean"]
 
 
+# the tests above merge on the driver (the test indexes fit the postings
+# budget); their twins below run the same checks on the Spark jobs
+
+
+def test_concurrent_merge_overlaps_build_spark(spark, tiny_corpus_pdf, tmp_path,
+                                               monkeypatch, spark_commits):
+    test_concurrent_merge_overlaps_build(spark, tiny_corpus_pdf, tmp_path, monkeypatch)
+
+
+def test_abandoned_merge_is_garbage_not_corruption_spark(spark, tiny_corpus_pdf, tmp_path,
+                                                         monkeypatch, spark_commits):
+    test_abandoned_merge_is_garbage_not_corruption(spark, tiny_corpus_pdf, tmp_path,
+                                                   monkeypatch)
+
+
+@pytest.mark.parametrize("concurrent", [False, True])
+def test_delete_during_merge_is_carried_over_spark(spark, tiny_corpus_pdf, tmp_path,
+                                                   monkeypatch, concurrent, spark_commits):
+    test_delete_during_merge_is_carried_over(spark, tiny_corpus_pdf, tmp_path,
+                                             monkeypatch, concurrent)
+
+
 def test_merge_score_weighs_deletes():
     """TieredMergePolicy's nonDelRatio²: of two equal-sized candidates,
     the one whose segments carry deletes scores lower (merges first);

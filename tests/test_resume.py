@@ -101,6 +101,12 @@ def test_merge_crash_before_commit_resumes(spark, tiny_corpus_pdf, tmp_path,
     assert _top(spark, idx) == before  # merge never changes results
 
 
+def test_merge_crash_before_commit_resumes_spark(spark, tiny_corpus_pdf, tmp_path,
+                                                 monkeypatch, spark_commits):
+    """The merge kill/resume above (a driver merge) on the Spark jobs."""
+    test_merge_crash_before_commit_resumes(spark, tiny_corpus_pdf, tmp_path, monkeypatch)
+
+
 def test_lineage_records_all_operations(spark, tiny_corpus_pdf, tmp_path):
     from lucene_solr_spark.indexing import deletes
     from lucene_solr_spark.indexing.builder import build_index
