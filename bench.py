@@ -239,12 +239,10 @@ def main() -> None:
     ]
     headliners += ["seg_span_near", "seg_lm_dirichlet", "seg_passage_highlight"]
     reg = entry_queries.queries()
-    # build the live index behind ft() and the gate segment index the
-    # seg_* headliners read once, untimed, so ft_* and seg_* timings
-    # measure the query (building an index is the index_build metric,
-    # not a query cost)
+    # build the live index behind ft(), which the ft_* and seg_*
+    # headliners read, once, untimed, so their timings measure the query
+    # (building an index is the index_build metric, not a query cost)
     entry_queries.ft(spark, SF_DIR).stats
-    entry_queries._segment_index(spark, SF_DIR)
     for name in headliners:
         t0 = time.time()
         df = reg[name](spark, SF_DIR)

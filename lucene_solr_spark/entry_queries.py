@@ -2622,14 +2622,14 @@ def set_intersect_except(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# SEGMENT-ENGINE path under the SQL gate: these build (once per sf_dir,
-# cached in /tmp) a real persisted segment index over `documents` with
-# the SQL-replicable simple_stop analyzer + exact norms, query it
-# through search/executor.py in float64, and compare against the same
-# BM25 SQL as the ft_* twins. This puts the codec, manifest, chamber
-# build and executor under the DuckDB oracle with the index paths
-# spelled out; the ft_* entries reach the same engine through
-# FulltextIndex.
+# SEGMENT-ENGINE path under the SQL gate: the seg_* entries query ft()'s
+# live segment index over `documents` (the SQL-replicable simple_stop
+# analyzer + exact norms, stored content) through search/executor.py in
+# float64 and compare against the same BM25 SQL as the ft_* twins. This
+# puts the codec, manifest, chamber build and executor under the DuckDB
+# oracle with the Searcher calls spelled out; the ft_* entries reach the
+# same index through FulltextIndex. Gate indexes of other builds
+# (multi-field, sorted, stemmed) are built once per sf_dir, cached in /tmp.
 # ---------------------------------------------------------------------------
 
 import hashlib as _hl  # noqa: E402
@@ -2687,13 +2687,6 @@ def _build_gate_index(spark, sf_dir: str, tag: str, **build_kwargs) -> str:
     return idx
 
 
-def _segment_index(spark, sf_dir: str) -> str:
-    # v4: stored fields on (content column in doc_meta) — feeds
-    # seg_highlight; tag bump invalidates the cached v3 gate index
-    return _build_gate_index(spark, sf_dir, "v4", analyzer="simple_stop",
-                             store=True)
-
-
 def _segment_index_mf(spark, sf_dir: str) -> str:
     """Multi-field gate index: body = analyzed text (simple_stop — the
     SQL-replicable chain, so body stats equal the single-field stats the
@@ -2707,10 +2700,10 @@ def _segment_index_mf(spark, sf_dir: str) -> str:
 
 
 def _seg_searcher(spark, sf_dir):
-    from .search.executor import IndexReader, Searcher
-
-    return Searcher(IndexReader(spark, _segment_index(spark, sf_dir)),
-                    precision="float64")
+    """The float64 Searcher of ft()'s live index: the seg_* entries and
+    the ft_* entries read one build of `documents` (simple_stop, exact
+    norms, stored content)."""
+    return ft(spark, sf_dir).searcher
 
 
 def _seg_topk(spark, pdf, k: int = 10):
@@ -4271,8 +4264,7 @@ def sql_over_index(spark, sf_dir):
     Spark SQL (Catalyst plays Calcite; term-dict pushdown for free)."""
     from .sql import register_index_views
 
-    idx = _segment_index(spark, sf_dir)
-    register_index_views(spark, idx, prefix="idx")
+    register_index_views(spark, ft(spark, sf_dir).reader.index_dir, prefix="idx")
     return spark.sql("""
         SELECT term, df, ttf FROM idx_term_stats
         WHERE term LIKE 'sp%' ORDER BY df DESC, term ASC LIMIT 10

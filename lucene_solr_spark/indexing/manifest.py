@@ -228,15 +228,19 @@ def _data_files(root: str) -> List[str]:
                   if not f.startswith(("_", ".")))
 
 
-def _read_term_rows(files: List[str], columns: List[str], terms, min_docs=None):
-    """The rows of the given terms in the given parquet files, read on
-    the driver with pyarrow (a term `isin` filter). min_docs: only the
-    rows whose min_doc is one of these (a block keep-set's keys)."""
+def _read_term_rows(files: List[str], columns: List[str], terms, min_docs=None,
+                    span=None):
+    """The rows of the given terms in the given parquet files, read with
+    pyarrow (a term `isin` filter). min_docs: only the rows whose min_doc
+    is one of these (a block keep-set's keys). span: only the blk rows
+    whose [min_doc, max_doc] overlaps the doc-id range [lo, hi)."""
     import pyarrow.dataset as ds
 
     cond = ds.field("term").isin(list(terms))
     if min_docs is not None:
         cond = cond & ds.field("min_doc").isin(list(min_docs))
+    if span is not None:
+        cond = cond & (ds.field("max_doc") >= span[0]) & (ds.field("min_doc") < span[1])
     return ds.dataset(files, format="parquet").to_table(columns=columns, filter=cond)
 
 

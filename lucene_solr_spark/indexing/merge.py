@@ -445,15 +445,21 @@ def _repack_aggregated(batches, with_positions: bool) -> Iterator[pd.DataFrame]:
 
 
 def _segment_has_positions(seg_dir: str) -> bool:
-    """Whether the segment's blocks carry positions: the flag byte of its
-    first block, read with pyarrow on the driver (no Spark job)."""
+    """Whether the segment's blocks carry positions (_blocks_have_positions)."""
+    return bool(_blocks_have_positions(_data_files(postings_path(seg_dir))))
+
+
+def _blocks_have_positions(files: List[str]) -> Optional[bool]:
+    """Whether the blk rows of these files carry positions: the flag byte
+    of their first block, read with pyarrow on the driver (no Spark job);
+    None when they hold no block."""
     import pyarrow.parquet as pq
 
-    for f in _data_files(postings_path(seg_dir)):
+    for f in files:
         for batch in pq.ParquetFile(f).iter_batches(batch_size=1, columns=["blob"]):
             if batch.num_rows:
                 return batch.column(0)[0].as_py()[8] == POS_SPLIT
-    return False
+    return None
 
 
 def maybe_merge(spark, index_dir: str, max_rounds: int = 100) -> Manifest:

@@ -1,51 +1,57 @@
-"""Query executor: Query AST -> DataFrame plan -> top-k.
+"""Query executor: Query AST -> Weight -> per-range Scorer -> top-k.
 
-Execution mirrors the reference's search lifecycle (SURVEY §3.1) with
-partitions playing segment leaves:
+Execution mirrors the reference's search lifecycle (SURVEY §3.1):
 
-  rewrite fixpoint           -> queryast.rewrite + Spark-side term-dict
-                                expansion (MultiTermQuery.java:94-116)
+  rewrite fixpoint           -> queryast.rewrite + term-dict expansion of
+                                multi-term nodes, one Spark collect each
+                                (MultiTermQuery.java:94-116)
   weight creation / stats    -> a driver-side pyarrow read of the query
                                 terms' rows of every segment's term_stats,
-                                summed, broadcast (TermQuery.java:65-66;
-                                the in-heap terms index and ExactStatsCache
-                                analogs — stats are GLOBAL, never
-                                per-partition, and cost no Spark job)
+                                summed (TermQuery.java:65-66; the in-heap
+                                terms index and ExactStatsCache analogs —
+                                stats are GLOBAL, never per-slice, and cost
+                                no Spark job)
   conjunction skip data      -> the MUST terms' block (min_doc, max_doc)
                                 read the same way; numpy keeps the blocks
                                 overlapping every MUST term's coverage
                                 (ConjunctionDISI.java:185)
-  access path                -> a term, phrase or boolean-of-those top-k
-                                whose planned postings (summed df, plus
-                                ttf for phrase terms) are under
-                                codec.DRIVER_POSTINGS_BUDGET runs on the driver:
-                                one pyarrow read of its blocks, the same
-                                stage functions, no Spark job (Lucene's
-                                IndexSearcher scores in the caller's
-                                process); any other query, or one over the
-                                budget, runs its Spark plan
-  per-leaf scoring           -> block filter (term; on the driver also
-                                the kept block keys)
-                                -> Arrow decode+score (decode_score,
-                                vectorized numpy): in Spark a mapInPandas
-                                stage, the one job of a term query
-  boolean composition        -> ONE hash aggregation per boolean node:
-                                conditional per-clause sums + match
-                                counters (Boolean2ScorerSupplier.java:92-113
-                                occur buckets; BooleanScorer.java windowed
-                                accumulation == Spark hash agg), one more
-                                job; on the driver its numpy twin
-                                (_boolean_local)
-  collector / merge          -> orderBy(score desc, doc_id asc).limit(k)
-                                == TakeOrderedAndProject (per-partition
-                                heaps + driver merge; TopDocs.merge); on
-                                the driver a numpy partition + lexsort
+  Weight                     -> Searcher.weigh: the rewritten query as a
+                                tree of picklable nodes holding its term,
+                                phrase and synonym weights, the
+                                conjunction / block-max keep-sets and the
+                                doc ids of cached FILTER clauses, plus the
+                                reader's files and deleted docs — all a
+                                scorer needs, with no Searcher or
+                                SparkSession (IndexSearcher.createWeight)
+  per-slice scorer           -> score_range(weight, span): module numpy
+                                functions score every node over the doc-id
+                                range [lo, hi): a pyarrow read of the
+                                query terms' blk rows overlapping it (and
+                                the kept blocks only), one batch decode
+                                (_decoded_blocks drops deleted docs and
+                                docs outside the range), BM25
+                                (_bm25_scores), the phrase's sorted-array
+                                match, and per boolean node one
+                                aggregation of its clauses' rows
+                                (Boolean2ScorerSupplier.java:92-113 occur
+                                buckets)
+  access path                -> planned postings (summed df, plus ttf for
+                                phrase terms, doc count for match-all)
+                                under codec.DRIVER_POSTINGS_BUDGET: one
+                                range covering the index, scored on the
+                                driver, no Spark job (IndexSearcher scores
+                                in the caller's thread); over it: one
+                                Spark job of defaultParallelism tasks, each
+                                scoring one equal-width doc-id slice with
+                                the same functions (IndexSearcher.slices
+                                with an executor, IndexSearcher.java:233)
+  collector / merge          -> per range a numpy partition + lexsort
+                                (_top_k_local: score desc, doc_id asc, the
+                                `after` cursor); the slices' top-k merged
+                                on the driver by the same function
+                                (TopDocs.merge, TopDocs.java:209-260)
 
-Every stage body is one module function that mapInPandas/applyInPandas
-and the driver path both call (decode_score; the phrase's decode_pos,
-match_chunk and score_rows). Every Python stage decodes blocks with one
-function (_decoded_blocks) and scores postings with one BM25 kernel
-(_bm25_scores), in one of two precisions:
+Scores come in one of two precisions (_bm25_scores):
   float32  — bit-parity with Lucene (BM25Similarity float math); per-term
              score float32, clause sums accumulate float64 -> cast float32.
   float64  — all-double arithmetic with a fixed operation order, used by
@@ -60,18 +66,21 @@ Pruning (block metadata = the skip-list/WAND analog, SURVEY §4):
   bounds from each block's competitive impact frontier, a threshold
   theta from the k best lower bounds of one term, and a keep rule that
   drops every block whose bound plus the other terms' best bounds over
-  its doc range stays below theta. The ordinary plan then decodes the
-  kept blocks only, on the same access path (the driver reads only
-  kept block keys; a Spark stage skips the others undecoded), so the
-  top-k is exactly the exhaustive one
-  (checked in tests/test_wand.py).
+  its doc range stays below theta. The Weight carries the keep-set, so
+  every scorer reads only the kept blocks, and the top-k is exactly the
+  exhaustive one (checked in tests/test_wand.py).
+
+Span, sloppy-phrase, similarity and highlight operators still build
+Spark column expressions over the decoded postings (IndexReader.postings).
 """
 
 from __future__ import annotations
 
+import functools
 import logging
 import math
 import os
+from dataclasses import dataclass
 from typing import Dict, Iterator, List, Optional, Tuple
 
 import numpy as np
@@ -83,6 +92,7 @@ from ..fields import FIELD_SEP, split_term_key, term_key
 from ..smallfloat import LENGTH_TABLE
 from ..indexing.builder import POSTINGS_SCHEMA
 from ..indexing.deletes import DeadDocs, dead_docs
+from ..indexing.merge import _blocks_have_positions
 from ..indexing.manifest import (ManifestStore, _data_files, _footer_schema,
                                  _read_term_rows, doc_meta_path, postings_path)
 from ..queryast import (
@@ -98,11 +108,8 @@ from ..queryast import (
     SynonymQuery,
     TermInSetQuery,
     TermQuery,
-    query_terms,
     rewrite,
 )
-
-CHUNK_BITS = 13
 
 _log = logging.getLogger("lucene_solr_spark.search")
 
@@ -125,11 +132,14 @@ class IndexReader:
         self._block_dirs = [postings_path(d) for d in segs]
         self._stats_dirs = [os.path.join(d, "term_stats.parquet") for d in segs]
         doc_dirs = [doc_meta_path(d) for d in segs]
-        # the data files, listed once at open: every driver-side read
-        # (statistics, skip data, blobs) opens exactly these
+        # the data files, listed once at open: every pyarrow read of a
+        # query (statistics, skip data, blobs, doc ids) opens exactly these
         stats_groups = [_data_files(d) for d in self._stats_dirs]
         self._stats_files = [f for g in stats_groups for f in g]
-        self._block_files = [f for d in self._block_dirs for f in _data_files(d)]
+        self._block_groups = [_data_files(d) for d in self._block_dirs]
+        self._block_files = [f for g in self._block_groups for f in g]
+        doc_groups = [_data_files(d) for d in doc_dirs]
+        self._doc_files = [f for g in doc_groups for f in g]
         # pinned schemas, so no read infers one (an inference is a Spark
         # job): blocks take the writers' POSTINGS_SCHEMA; term stats and
         # doc meta (whose columns vary with fields and stored content)
@@ -137,8 +147,7 @@ class IndexReader:
         self.blocks = spark.read.schema(POSTINGS_SCHEMA).parquet(*self._block_dirs)
         self.stats = spark.read.schema(
             _footer_schema(stats_groups)).parquet(*self._stats_dirs)
-        self.doc_meta = spark.read.schema(_footer_schema(
-            [_data_files(d) for d in doc_dirs])).parquet(*doc_dirs)
+        self.doc_meta = spark.read.schema(_footer_schema(doc_groups)).parquet(*doc_dirs)
         # liveDocs: the deleted-docs bitsets, read on the driver; every
         # Python stage drops deleted docs as it decodes them. Stats still
         # count them ("docFreq ignores deletions") until a merge purges
@@ -154,6 +163,19 @@ class IndexReader:
             for f, v in (s.field_stats or {}).items():
                 dc, dl = self.field_stats.get(f, (0, 0))
                 self.field_stats[f] = (dc + int(v[0]), dl + int(v[1]))
+
+    @property
+    def doc_range(self) -> Tuple[int, int]:
+        """[lo, hi): the doc ids the live segments span."""
+        segs = self.manifest.segments
+        return (min(s.doc_base for s in segs),
+                max(s.doc_base + s.doc_span for s in segs))
+
+    @functools.cached_property
+    def has_positions(self) -> bool:
+        """Whether every segment's blocks carry positions: one flag byte
+        per segment (merge._blocks_have_positions), read on first use."""
+        return all(_blocks_have_positions(g) is not False for g in self._block_groups)
 
     def drop_deleted(self, df):
         """df without its deleted docs: a bitset probe in a mapInPandas
@@ -292,12 +314,14 @@ class IndexReader:
                                               F.sum("ttf").alias("ttf"))
 
     def expand(self, q: MultiTermQuery, max_terms: int = 4096) -> List[str]:
-        """Expand a multi-term query against the distinct-terms table
-        with the predicate pushed into Spark (BlockTree intersect analog:
-        the scan prunes on the term column's parquet min/max stats).
-        Field-scoped queries pre-filter to the field's key-prefix range
-        (still parquet-prunable — keys sort by field first) and match
-        the pattern against the bare-term suffix; returns BARE terms."""
+        """Expand a multi-term query against the term dictionary with
+        the predicate pushed into Spark (BlockTree intersect analog: the
+        scan prunes on the term column's parquet min/max stats): one
+        Spark job, a collect of the matching rows, deduplicated on the
+        driver. Field-scoped queries pre-filter to the field's key-prefix
+        range (still parquet-prunable — keys sort by field first) and
+        match the pattern against the bare-term suffix; returns the first
+        max_terms matching BARE terms in term order."""
         from pyspark.sql import functions as F
 
         pre = "" if q.field is None else q.field + FIELD_SEP
@@ -329,11 +353,8 @@ class IndexReader:
             ) & (F.levenshtein(t, F.lit(q.pattern)) <= q.max_edits)
         else:
             raise ValueError(q.kind)
-        rows = (
-            src.where(cond).select(t.alias("term")).distinct()
-            .limit(max_terms).collect()
-        )
-        return sorted(r["term"] for r in rows)
+        rows = src.where(cond).select(t.alias("term")).collect()
+        return sorted({r["term"] for r in rows})[:max_terms]
 
 
 class MultiReader:
@@ -377,6 +398,7 @@ class MultiReader:
         self.doc_meta = _union_all([r.doc_meta for r in readers])
         self._block_files = [f for r in readers for f in r._block_files]
         self._stats_files = [f for r in readers for f in r._stats_files]
+        self._doc_files = [f for r in readers for f in r._doc_files]
         dead = [p for r in readers if r.dead is not None for p in r.dead.parts]
         self.dead = DeadDocs(dead) if dead else None
         self.has_deletes = self.dead is not None
@@ -391,6 +413,12 @@ class MultiReader:
             segments = [s for r in readers for s in r.manifest.segments]
 
         self.manifest = _Segs()
+
+    doc_range = IndexReader.doc_range
+
+    @property
+    def has_positions(self) -> bool:
+        return all(r.has_positions for r in self.readers)
 
     drop_deleted = IndexReader.drop_deleted
     _term_stats_rows = IndexReader._term_stats_rows
@@ -415,19 +443,20 @@ class Searcher:
         (QueryParser's default-field argument, QueryParser.jj:289) —
         required for natural syntax against multi-field indexes.
         query_cache: optional search.cache.QueryCache — non-term FILTER
-        clause doc sets are persisted and reused across searches
+        clause doc-id arrays are kept and reused across searches
         (LRUQueryCache.java:60 semantics: DocIdSets, never Scorers)."""
         self.reader = reader
         self.precision = precision
         self.default_field = default_field
         self.query_cache = query_cache
-        # the plan of the last search() call, for bench/test
-        # introspection: plan_pruned_or's for a pruned term / OR query,
-        # else _exhaustive_plan's description
+        # the plan of the last search()/scored()/count() call, for
+        # bench/test introspection (_explain)
         self.last_plan = None
         # (blocks kept, blocks total) of each skip-data prefilter run
-        # since the last search() began
+        # since the last query began, and the Spark jobs run before its
+        # scoring (multi-term expansions, cached FILTER sets over budget)
         self._skips: List[Tuple[int, int]] = []
+        self._jobs = 0
 
     def _with_default_field(self, q: Query) -> Query:
         if self.default_field is None:
@@ -476,119 +505,143 @@ class Searcher:
                 self._weight(fld, boost, _idf(df, n)), df=df)
         return out
 
-    # -- leaf scoring: decode blocks -> (clause_id, doc_id, score) ----------
+    # -- Weight: the query weighed on the driver -------------------------------
 
-    def _blocks(self, terms: List[str], keep: Optional[Dict[str, set]],
-                positions: bool, local: bool):
-        """The blk rows (term, min_doc, blob[, pblob]) of terms: a pandas
-        frame read on the driver (local) or the Spark scan. On the
-        driver a keep-set masks the read to the rows whose min_doc keys
-        some kept block (a superset of the kept blocks, made exact by
-        _decoded_blocks' per-term check), so no other blob is read. The
-        Spark scan takes no such filter: a `min_doc IN (...)` filter
-        measured slower than shipping the unkept blobs (CHANGES.md),
-        which the stage skips undecoded."""
-        cols = ["term", "min_doc", "blob"] + (["pblob"] if positions else [])
-        if local:
-            mins = None if keep is None else sorted(set().union(*keep.values()))
-            return _read_term_rows(self.reader._block_files, cols, terms,
-                                   mins).to_pandas()
-        from pyspark.sql import functions as F
+    def weigh(self, q: Query, keep: Optional[Dict[str, set]] = None) -> Weight:
+        """The Weight of a rewritten query (_prepare): its term
+        statistics read, its weights computed and its keep-sets planned,
+        here on the driver, so any scorer (score_range) can run it.
+        keep: the block keep-set of a term or OR-of-terms query
+        (plan_pruned_or)."""
+        r = self.reader
+        root = self._weigh(q, 1.0, keep)
+        return Weight(q, root, _planned(root), r._block_files, r._doc_files, r.dead,
+                      self.precision, r.norms)
 
-        return self.reader.blocks.where(F.col("term").isin(list(terms))).select(*cols)
+    def _const(self, boost: float) -> float:
+        return float(np.float32(boost)) if self.precision == "float32" else float(boost)
 
-    def _score_terms(self, clause_terms: List[Tuple[int, str, float]],
-                     keep: Optional[Dict[str, set]] = None, local: bool = False):
-        """clause_terms: (clause_id, term, boost). Returns a Spark
-        DataFrame, or on the driver (local) a pandas frame, of
-        (clause_id int, doc_id long, score double). Scores are exact
-        float32 values widened to double (float32 mode) or pure doubles
-        (float64 mode) — downstream sums happen in double either way.
-        keep: kept block keys per term, {term: min_doc values} (the
-        conjunction prefilter's, _conjunction_blocks, or the block-max
-        planner's, plan_pruned_or); other blocks are never decoded."""
+    def _weigh(self, q: Query, boost: float, keep=None) -> dict:
+        """The node of q (score_range lists the kinds); "postings" is
+        what its scorer decodes at most: the summed df of its terms,
+        their ttf too in a phrase, the doc count for match-all."""
+        b = boost * q.boost
+        if isinstance(q, MatchNoDocsQuery):
+            return {"kind": "none"}
+        if isinstance(q, MatchAllDocsQuery):
+            return {"kind": "all", "score": self._const(b), "postings": self.reader.doc_count}
+        if isinstance(q, TermQuery):
+            return self._weigh_terms([(0, term_key(q.field, q.term), b)], keep)
+        if isinstance(q, TermInSetQuery):
+            keys = sorted({term_key(q.field, t) for t in q.terms})
+            stats = self.reader.term_stats(keys)
+            return {"kind": "termset", "terms": keys, "score": self._const(b),
+                    "postings": sum(stats.get(t, (0, 0))[0] for t in keys)}
+        if isinstance(q, SynonymQuery):
+            return self._weigh_synonym(q, b)
+        if isinstance(q, PhraseQuery):
+            return self._weigh_phrase(q, b)
+        if isinstance(q, DisjunctionMaxQuery):
+            return {"kind": "dismax", "tie": float(q.tie_breaker),
+                    "subs": [self._weigh(d, b) for d in q.disjuncts]}
+        if isinstance(q, BooleanQuery):
+            return self._weigh_boolean(q, b, keep)
+        raise TypeError(f"unsupported query node: {q!r}")
+
+    def _weigh_terms(self, clause_terms: List[Tuple[int, str, float]],
+                     keep: Optional[Dict[str, set]]) -> dict:
+        """Term clauses scored together: clause_terms are (clause_id,
+        term, boost). keep: kept block keys per term, {term: min_doc
+        values} (the conjunction prefilter's, _conjunction_blocks, or the
+        block-max planner's, plan_pruned_or); other blocks are never
+        read."""
         by_term: Dict[str, List[Tuple[int, float]]] = {}
         for cid, t, b in clause_terms:
             by_term.setdefault(t, []).append((cid, b))
-        info = {
-            "by_term": by_term,
-            "weights": self._weights([(t, b) for _, t, b in clause_terms]),
-            "keep": keep,
-            "dels": self.reader.dead,
-            "precision": self.precision,
-            "norms": self.reader.norms,
-        }
-        rows = self._blocks(list(by_term), keep, False, local)
-        if local:
-            return _frame(decode_score([rows], info), _SCORED)
-        bc = self.reader.spark.sparkContext.broadcast(info)
-        return rows.mapInPandas(lambda it: decode_score(it, bc.value),
-                                schema="clause_id int, doc_id long, score double")
+        weights = self._weights([(t, b) for _, t, b in clause_terms])
+        return {"kind": "terms", "by_term": by_term, "weights": weights, "keep": keep,
+                "postings": sum(weights[f"{t}\x00{cb[0][1]}"]["df"]
+                                for t, cb in by_term.items())}
 
-    # -- phrase leaf ---------------------------------------------------------
+    def _weigh_synonym(self, q: SynonymQuery, boost: float) -> dict:
+        """Blended stats: df = max over terms; tf summed per doc
+        (SynonymQuery.java:47)."""
+        keys = sorted({term_key(q.field, t) for t in q.terms})
+        stats = self.reader.term_stats(keys)
+        dfs = [stats.get(t, (0, 0))[0] for t in keys]
+        n, _ = self.reader.collection_stats(q.field)
+        if max(dfs, default=0) == 0 or n <= 0:
+            return {"kind": "none"}
+        return {"kind": "synonym", "terms": keys, "postings": sum(dfs),
+                "weight": self._weight(q.field, boost, _idf(max(dfs), n))}
 
-    def _score_phrase(self, cid: int, q: PhraseQuery, boost: float,
-                      local: bool = False):
-        """Exact phrase (slop=0, ExactPhraseMatcher): vectorized block
-        decode to chunk pieces of (doc, tf, norm, positions) per term slot
-        (decode_pos), grouped by 8192-doc chunk — one shuffle in Spark, a
-        pandas groupby on the driver — then a numpy phrase match per
-        chunk (match_chunk) counts occurrences, and the (doc, tf, norm)
-        rows score like a term with idf = sum of per-term idfs
-        (BM25Similarity idfExplain array; score_rows). Returns
-        (clause_id, doc_id, score), as _score_terms."""
-        from pyspark.sql import functions as F
-
+    def _weigh_phrase(self, q: PhraseQuery, boost: float) -> dict:
+        """Exact phrase (slop=0, ExactPhraseMatcher): the (doc, tf,
+        norm) of each match scores like a term with idf = the terms'
+        idfs summed (BM25Similarity idfExplain array). A phrase match is
+        a conjunction match: the skip-data keep-set applies. Refused on
+        an index built without positions, before any blob is read."""
+        if not self.reader.has_positions:
+            raise ValueError("phrase query on an index built with positions=False")
         terms = [term_key(q.field, t) for t in q.terms]
         n, _ = self.reader.collection_stats(q.field)
         stats = self.reader.term_stats(terms) if n > 0 else {}
         if n <= 0 or any(stats.get(t, (0, 0))[0] == 0 for t in terms):
-            return (_frame([], _SCORED) if local else self.reader.spark.createDataFrame(
-                [], "clause_id int, doc_id long, score double"))
-        # idf = the terms' idfs summed (BM25Similarity idfExplain array);
+            return {"kind": "none"}
         # float32 sums the float32 idfs in double, then rounds once
         idfs = [_idf(stats[t][0], n) for t in terms]
         idf32 = np.float32(float(np.sum(np.array(
             [float(np.float32(i)) for i in idfs], dtype=np.float64))))
-        weight = self._weight(q.field, boost, sum(idfs), idf32)
-        # a phrase may repeat a term ("end to end"): each occurrence row
-        # must be emitted once PER SLOT the term occupies, or the slot's
-        # position join is empty and the phrase silently matches nothing
-        slots_by_term: Dict[str, List[int]] = {}
+        # a phrase may repeat a term ("end to end"): the term fills each
+        # slot it occupies
+        slots: Dict[str, List[int]] = {}
         for i, t in enumerate(terms):
-            slots_by_term.setdefault(t, []).append(i)
-        # a phrase match is a conjunction match: the exact skip-data
-        # prefilter applies, so only blocks overlapping every term's
-        # block coverage decode
-        distinct_terms = sorted(set(terms))
-        keep = (self._conjunction_blocks(distinct_terms, distinct_terms)[0]
-                if len(distinct_terms) >= 2 else None)
-        dead, nslots = self.reader.dead, len(terms)
-        rows = self._blocks(distinct_terms, keep, True, local)
-        if local:
-            occ = _frame(decode_pos([rows], keep, dead, slots_by_term), _PIECES)
-            freq = _frame((match_chunk(g, nslots) for _, g in occ.groupby("chunk")),
-                          _FREQS)
-            scored = _frame(score_rows([freq], weight, self.precision,
-                                       self.reader.norms), _SCORED)
-            return scored.assign(clause_id=np.int32(cid))
-        bc = self.reader.spark.sparkContext.broadcast(keep)
-        occ = rows.mapInPandas(
-            lambda it: decode_pos(it, bc.value, dead, slots_by_term),
-            "chunk long, tidx int, docs array<long>, tfs array<int>, "
-            "norms array<int>, pos array<int>")
-        freq = occ.groupBy("chunk").applyInPandas(
-            lambda pdf: match_chunk(pdf, nslots), "doc_id long, tf long, norm int")
-        return self._score_freqs(freq, weight).select(
-            F.lit(cid).cast("int").alias("clause_id"), "doc_id", "score")
+            slots.setdefault(t, []).append(i)
+        distinct = sorted(slots)
+        keep = (self._conjunction_blocks(distinct, distinct)[0]
+                if len(distinct) >= 2 else None)
+        return {"kind": "phrase", "slots": slots, "nslots": len(terms), "keep": keep,
+                "weight": self._weight(q.field, boost, sum(idfs), idf32),
+                "postings": sum(stats[t][0] + stats[t][1] for t in distinct)}
 
-    def _score_freqs(self, freq_df, weight: dict):
-        """BM25-score a (doc_id, tf, norm) frame with one weight
-        (score_rows): the phrase and synonym scoring stage."""
-        precision, norms_mode = self.precision, self.reader.norms
-        return freq_df.mapInPandas(
-            lambda it: score_rows(it, weight, precision, norms_mode),
-            "doc_id long, score double")
+    def _weigh_boolean(self, q: BooleanQuery, boost: float, keep=None) -> dict:
+        """Term clauses become one "terms" node, every other clause its
+        own sub-node; a non-term FILTER clause with a query cache becomes
+        its cached doc ids (LRUQueryCache: FILTER doc sets are
+        constant-score and stats-free). Conjunctions whose clauses are all
+        terms, >= 2 of them MUST/FILTER, skip every block outside the MUST
+        terms' common doc ranges (exact; _conjunction_blocks). keep: the
+        term clauses' keep-set, planned by the caller (plan_pruned_or)."""
+        occur = {i: c.occur for i, c in enumerate(q.clauses)}
+        flat: List[Tuple[int, str, float]] = []
+        subs, cids = [], []
+        for i, c in enumerate(q.clauses):
+            if isinstance(c.query, TermQuery):
+                flat.append((i, term_key(c.query.field, c.query.term),
+                             boost * c.query.boost if c.occur != Occur.FILTER else 1.0))
+                continue
+            if c.occur == Occur.FILTER and self.query_cache is not None:
+                ids = self.query_cache.get_or_eval(
+                    c.query, lambda q=c.query: self._matches(q),
+                    scope=getattr(self.reader, "cache_scope", ""))
+                subs.append({"kind": "docs", "ids": ids})
+            else:
+                subs.append(self._weigh(c.query, boost if c.occur != Occur.FILTER else 1.0))
+            cids.append(i)
+        terms = None
+        if flat:
+            must = sorted({t for cid, t, _ in flat if occur[cid] in (Occur.MUST, Occur.FILTER)})
+            # prune only when every clause is a flat term: a non-term MUST
+            # clause (e.g. a phrase) is not in the common region, and its
+            # matches would be cut by the pruned SHOULD/NOT decodes
+            if keep is None and len(must) >= 2 and len(flat) == len(q.clauses):
+                keep = self._conjunction_blocks(must, sorted({t for _, t, _ in flat}))[0]
+            terms = self._weigh_terms(flat, keep)
+        mm = q.min_should_match
+        if Occur.SHOULD in occur.values() and not {Occur.MUST, Occur.FILTER} & set(occur.values()):
+            mm = max(mm, 1)
+        return {"kind": "bool", "terms": terms, "subs": subs, "cids": cids, "occur": occur,
+                "mm": mm, "postings": terms["postings"] if terms else 0}
 
     # -- segment-native positions / similarities / spans ---------------------
     #
@@ -999,73 +1052,7 @@ class Searcher:
             .where(F.col("pos") > 0)
         )
 
-    # -- boolean composition --------------------------------------------------
-
-    def _eval(self, q: Query, boost: float, keep=None, local: bool = False):
-        """Returns DataFrame (doc_id long, score double) of matching docs.
-        Score is the float32-exact (widened) or float64 node score.
-        keep: a block keep-set for a term or boolean-of-terms q
-        (_score_terms). local: evaluate a term, phrase or boolean of
-        those on the driver, as a pandas frame (_driver_stages)."""
-        from pyspark.sql import functions as F
-
-        spark = self.reader.spark
-        b = boost * q.boost
-        if isinstance(q, MatchNoDocsQuery):
-            return _frame([], _SCORED) if local else spark.createDataFrame(
-                [], "doc_id long, score double")
-        if isinstance(q, MatchAllDocsQuery):
-            return self.reader.drop_deleted(self.reader.doc_meta.select(
-                "doc_id", F.lit(float(np.float32(b)) if self.precision == "float32" else float(b)).alias("score")
-            ))
-        if isinstance(q, TermQuery):
-            df = self._score_terms([(0, term_key(q.field, q.term), b)], keep, local)
-            return df if local else df.select("doc_id", "score")
-        if isinstance(q, TermInSetQuery):
-            const = float(np.float32(b)) if self.precision == "float32" else float(b)
-            df = self._score_terms([(0, term_key(q.field, t), 1.0) for t in q.terms])
-            return df.select("doc_id").distinct().select(
-                "doc_id", F.lit(const).alias("score")
-            )
-        if isinstance(q, SynonymQuery):
-            return self._eval_synonym(q, b)
-        if isinstance(q, PhraseQuery):
-            df = self._score_phrase(0, q, b, local)
-            return df if local else df.select("doc_id", "score")
-        if isinstance(q, DisjunctionMaxQuery):
-            parts = []
-            for i, d in enumerate(q.disjuncts):
-                parts.append(self._eval(d, b).select("doc_id", F.col("score"), F.lit(i).alias("cid")))
-            u = parts[0]
-            for p in parts[1:]:
-                u = u.unionByName(p)
-            tb = float(q.tie_breaker)
-            agg = u.groupBy("doc_id").agg(
-                F.max("score").alias("mx"), F.sum("score").alias("sm")
-            )
-            expr = F.col("mx") + F.lit(tb) * (F.col("sm") - F.col("mx"))
-            if self.precision == "float32":
-                expr = expr.cast("float").cast("double")
-            return agg.select("doc_id", expr.alias("score"))
-        if isinstance(q, BooleanQuery):
-            return self._eval_boolean(q, b, keep, local)
-        raise TypeError(f"unsupported query node: {q!r}")
-
-    def _eval_synonym(self, q: SynonymQuery, boost: float):
-        """Blended stats: df = max over terms; tf summed per doc
-        (SynonymQuery.java:47)."""
-        from pyspark.sql import functions as F
-
-        keys = [term_key(q.field, t) for t in q.terms]
-        stats = self.reader.term_stats(keys)
-        df_blend = max((stats.get(t, (0, 0))[0] for t in keys), default=0)
-        n, _ = self.reader.collection_stats(q.field)
-        if df_blend == 0 or n <= 0:
-            return self._empty_scored()
-        per_doc = self._tf_dl_df(keys).groupBy("doc_id").agg(
-            F.sum("tf").alias("tf"), F.first("norm").alias("norm"))
-        return self._score_freqs(
-            per_doc, self._weight(q.field, boost, _idf(df_blend, n)))
+    # -- skip data -----------------------------------------------------------
 
     def _conjunction_blocks(self, must_terms: List[str], all_terms: List[str]):
         """Leapfrog/skip-list analog (ConjunctionDISI.java:185,
@@ -1112,95 +1099,6 @@ class Searcher:
         self._skips.append((sum(map(len, keep.values())), sum(totals.values())))
         return keep, totals
 
-    def _eval_boolean(self, q: BooleanQuery, boost: float, keep=None,
-                      local: bool = False):
-        """One hash aggregation: per-clause conditional sums (fixed
-        summation order across clause ids — bit-reproducible) + occur
-        counters, then the MUST/SHOULD/MUST_NOT/FILTER predicate; on the
-        driver (local) its numpy twin, _boolean_local.
-        Conjunctions with >=2 MUST/FILTER term clauses skip every block
-        outside the MUST terms' common doc ranges (exact; planned on the
-        driver from the skip data, _conjunction_blocks). keep: the term
-        clauses' keep-set, planned by the caller (plan_pruned_or)."""
-        from pyspark.sql import functions as F
-
-        parts = []
-        occur_by_cid: Dict[int, Occur] = {}
-        flat_terms: List[Tuple[int, str, float]] = []
-        for i, c in enumerate(q.clauses):
-            occur_by_cid[i] = c.occur
-            if isinstance(c.query, TermQuery):
-                flat_terms.append((i, term_key(c.query.field, c.query.term),
-                                   boost * c.query.boost if c.occur != Occur.FILTER else 1.0))
-            elif c.occur == Occur.FILTER and self.query_cache is not None:
-                # LRUQueryCache: FILTER doc sets are constant-score and
-                # stats-free, so the persisted doc-id frame is reusable
-                cached = self.query_cache.get_or_eval(
-                    c.query, lambda q=c.query: self._eval(q, 1.0),
-                    scope=getattr(self.reader, "cache_scope", ""),
-                )
-                parts.append(
-                    cached.select(
-                        F.lit(i).cast("int").alias("clause_id"), "doc_id",
-                        F.lit(0.0).alias("score"),
-                    )
-                )
-            else:
-                sub = self._eval(c.query, boost if c.occur != Occur.FILTER else 1.0,
-                                 local=local)
-                parts.append(sub.assign(clause_id=np.int32(i)) if local else sub.select(
-                    F.lit(i).cast("int").alias("clause_id"), "doc_id", "score"))
-        if flat_terms:
-            must_terms = sorted({
-                t for cid, t, _ in flat_terms
-                if occur_by_cid[cid] in (Occur.MUST, Occur.FILTER)
-            })
-            # prune only when every clause of the query is a flat term:
-            # a non-term MUST sub-clause (e.g. phrase) isn't represented
-            # in the common region, and its matches would be truncated
-            # by the pruned SHOULD/NOT decodes
-            if keep is None and len(must_terms) >= 2 and len(flat_terms) == len(q.clauses):
-                keep = self._conjunction_blocks(
-                    must_terms, sorted({t for _, t, _ in flat_terms}))[0]
-            parts.insert(0, self._score_terms(flat_terms, keep, local))
-        n_must = sum(1 for o in occur_by_cid.values() if o == Occur.MUST)
-        n_filter = sum(1 for o in occur_by_cid.values() if o == Occur.FILTER)
-        n_should_total = sum(1 for o in occur_by_cid.values() if o == Occur.SHOULD)
-        mm = q.min_should_match
-        if n_must == 0 and n_filter == 0 and n_should_total > 0:
-            mm = max(mm, 1)
-        if local:
-            return _boolean_local(_frame(parts, _SCORED), occur_by_cid, mm,
-                                  self.precision)
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-
-        # SQL strings, not Column trees: each Column operator is a py4j
-        # round trip, and a 3-clause node built ~70 of them per query
-        aggs, score_cols, cond, should = [], [], ["true"], []
-        for i in sorted(occur_by_cid):
-            o = occur_by_cid[i]
-            aggs.append(f"max(CASE WHEN clause_id = {i} THEN 1 ELSE 0 END) AS m{i}")
-            if o in (Occur.MUST, Occur.SHOULD):
-                aggs.append(f"sum(CASE WHEN clause_id = {i} THEN score END) AS s{i}")
-                score_cols.append(f"coalesce(s{i}, 0D)")
-            if o in (Occur.MUST, Occur.FILTER):
-                cond.append(f"m{i} = 1")
-            elif o == Occur.MUST_NOT:
-                cond.append(f"m{i} = 0")
-            else:
-                should.append(f"m{i}")
-        if mm > 0 and should:
-            cond.append(f"{' + '.join(should)} >= {mm}")
-        # clause sums added left to right in clause order: a fixed
-        # summation order keeps scores bit-reproducible
-        total = " + ".join(score_cols) or "0D"
-        if self.precision == "float32":
-            total = f"CAST(CAST({total} AS FLOAT) AS DOUBLE)"
-        g = u.groupBy("doc_id").agg(*[F.expr(a) for a in aggs])
-        return g.where(" AND ".join(cond)).selectExpr("doc_id", f"{total} AS score")
-
     # -- block-max pruning (Ding & Suel 2011; Broder et al. 2003) -----------
 
     WAND_MARGIN = 1e-4  # float32 rounding slack (CheckHits tolerance scale)
@@ -1226,9 +1124,9 @@ class Searcher:
         wherever its other postings lie, so the top-k over the kept
         blocks is the exhaustive one, scores included.
 
-        Returns the Spark plan's last_plan keys (search() adds the
-        access path, _routed) plus "keep": {term: the kept blocks'
-        min_doc values}, the keep-set _score_terms reads."""
+        Returns the plan's last_plan keys (_explain adds the access path
+        that ran) plus "keep": {term: the kept blocks' min_doc values},
+        the keep-set the Weight carries (_weigh_terms)."""
         wv: Dict[str, float] = {}
         w: Dict[str, dict] = {}
         weights = self._weights(terms_with_boost)
@@ -1277,27 +1175,26 @@ class Searcher:
             "access_path": "skip-data", "reason": "block-max",
             "blocks_kept": int(kept.sum()), "blocks_total": len(term),
             "theta": float(theta) if np.isfinite(theta) else None,
-            "expected_jobs": 1 + int(len(terms_with_boost) > 1),
             "keep": {t: set(lo[kept & (term == t)].tolist()) for t in wv},
         }
 
     def _search_pruned_or(self, terms_with_boost: List[Tuple[str, float]],
-                          k: int, local: bool = False) -> pd.DataFrame:
+                          k: int) -> pd.DataFrame:
         """Term / OR-of-terms top-k over the block-max keep-set
-        (plan_pruned_or): the exhaustive plan of the same query — on the
-        driver (local) or in Spark, with the same summation order, so the
-        same scores — with every dropped block skipped undecoded."""
+        (plan_pruned_or): the exhaustive Weight of the same query — so
+        the same summation order and the same scores — with every dropped
+        block left unread."""
         plan = self.plan_pruned_or(terms_with_boost, k)
         keep = plan.pop("keep")
-        self.last_plan = plan
         self.last_wand_stats = {"blocks_total": plan["blocks_total"],
                                 "blocks_decoded": plan["blocks_kept"]}
         leaves = [TermQuery(term=t, boost=b) for t, b in terms_with_boost]
         q = leaves[0] if len(leaves) == 1 else BooleanQuery(clauses=tuple(
             BooleanClause(Occur.SHOULD, leaf) for leaf in leaves))
-        if local:
-            return self._top_k_local(self._eval(q, 1.0, keep, local=True), k)
-        return self._top_k(self._eval(q, 1.0, keep), k)
+        w = self.weigh(q, keep)
+        top = self._top(w, k)
+        self._explain(plan, w)
+        return top
 
     def _as_or_terms(self, q: Query) -> Optional[List[Tuple[str, float]]]:
         """Terms of a pure term/OR-of-terms scoring query, else None."""
@@ -1314,66 +1211,72 @@ class Searcher:
             return out
         return None
 
-    # -- access path ----------------------------------------------------------
+    # -- access path: the driver, or the slice job ---------------------------
 
-    def _driver_stages(self, q: Query) -> Optional[List[Tuple[set, bool]]]:
-        """(term keys, positional) of every leaf stage of a query the
-        driver path runs — a term, a phrase, no docs (a query analyzed
-        away), or a boolean of those (a non-term FILTER clause only
-        without a query cache, whose doc sets are Spark frames), whose
-        term clauses are one stage (_score_terms) and each other clause
-        its own; None for any other rewritten query."""
-        if isinstance(q, MatchNoDocsQuery):
-            return []
-        if isinstance(q, TermQuery):
-            return [({term_key(q.field, q.term)}, False)]
-        if isinstance(q, PhraseQuery):
-            return [({term_key(q.field, t) for t in q.terms}, True)]
-        if not isinstance(q, BooleanQuery) or not q.clauses:
-            return None
-        terms, out = set(), []
-        for c in q.clauses:
-            if isinstance(c.query, TermQuery):
-                terms.add(term_key(c.query.field, c.query.term))
-                continue
-            cached = c.occur == Occur.FILTER and self.query_cache is not None
-            sub = None if cached else self._driver_stages(c.query)
-            if sub is None:
-                return None
-            out += sub
-        return ([(terms, False)] if terms else []) + out
+    def _on_driver(self, w: Weight) -> bool:
+        return w.postings < codec.DRIVER_POSTINGS_BUDGET
 
-    def _planned_postings(self, q: Query) -> Optional[int]:
-        """The postings a driver run of q decodes at most: per leaf stage
-        (_driver_stages), the summed df of its terms, plus their summed
-        ttf in a phrase — a term read by two stages counts twice — from
-        the term statistics, so known before any blob is read. None when
-        the driver path does not run q's shape."""
-        stages = self._driver_stages(rewrite(q, None))
-        if stages is None:
-            return None
-        stats = self.reader.term_stats(sorted(set().union(*(t for t, _ in stages))))
-        total = 0
-        for terms, positional in stages:
-            for t in terms:
-                df, ttf = stats.get(t, (0, 0))
-                total += df + (ttf if positional else 0)
-        return total
+    def _slices(self) -> int:
+        return self.reader.spark.sparkContext.defaultParallelism
 
-    @staticmethod
-    def _routed(plan: dict, postings: Optional[int], local: bool) -> dict:
-        """A Spark plan description with the access path that ran:
-        "driver" (no Spark job) when local, else the plan's own, with
-        reason "over-budget" when only the budget kept the query off the
-        driver."""
-        plan = dict(plan, postings_planned=postings, budget=codec.DRIVER_POSTINGS_BUDGET)
-        if local:
-            plan.update(access_path="driver", expected_jobs=0)
-        elif postings is not None:
-            plan["reason"] = "over-budget"
-        return plan
+    def _slice_job(self, w: Weight, body, schema: str = "doc_id long, score double"):
+        """The Spark job of a query over the budget (IndexSearcher.slices
+        with an executor): defaultParallelism tasks, task i yielding
+        body(doc_ids, scores) of score_range over the i-th equal-width
+        slice of the reader's doc-id range, as a DataFrame of schema. The
+        tasks run the driver's scorer on the shipped Weight."""
+        n = self._slices()
+        lo, hi = self.reader.doc_range
+        bounds = [lo + (hi - lo) * i // n for i in range(n + 1)]
+
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                for i in pdf["id"]:
+                    yield body(*score_range(w, (bounds[i], bounds[i + 1])))
+
+        return self.reader.spark.range(0, n, 1, n).mapInPandas(run, schema)
+
+    def _gather(self, w: Weight, body, schema: str = "doc_id long, score double"):
+        """body(doc_ids, scores) of w's matches as a pandas frame: on the
+        driver over one range covering the index when w's planned
+        postings are under the budget, else the slice tasks' frames,
+        concatenated (one Spark job)."""
+        if self._on_driver(w):
+            return body(*score_range(w))
+        return self._slice_job(w, body, schema).toArrow().to_pandas()
+
+    def _matches(self, q: Query) -> np.ndarray:
+        """The sorted doc ids q matches: a cached FILTER clause's doc set
+        (_weigh_boolean), one more Spark job over the budget."""
+        w = self.weigh(q)
+        self._jobs += int(not self._on_driver(w))
+        return np.sort(self._gather(w, _scored_frame)["doc_id"].to_numpy(np.int64))
+
+    def _explain(self, plan: dict, w: Weight) -> None:
+        """last_plan: plan with the planned postings, the budget and the
+        access path that ran: "driver" (no Spark job but a multi-term
+        expansion's), else the plan's own with reason "over-budget", its
+        slice count and one job more. Logged at DEBUG on
+        "lucene_solr_spark.search"."""
+        plan = dict(plan, postings_planned=w.postings, budget=codec.DRIVER_POSTINGS_BUDGET)
+        if self._on_driver(w):
+            plan.update(access_path="driver", expected_jobs=self._jobs)
+        else:
+            plan.update(reason="over-budget", slices=self._slices(),
+                        expected_jobs=self._jobs + 1)
+        self.last_plan = plan
+        _log.debug("search plan: %s", plan)
 
     # -- public API -----------------------------------------------------------
+
+    def _prepare(self, q: Query) -> Query:
+        """q with the default field, rewritten, its multi-term nodes
+        expanded (one Spark job each) and rewritten again; resets the
+        per-query plan state."""
+        self.last_plan = None
+        self._skips, self._jobs = [], 0
+        q = rewrite(self._with_default_field(q), None)
+        return rewrite(self._expand_multiterm(q), None)
 
     def search(self, q: Query, k: int = 10, after: Optional[Tuple[float, int]] = None,
                prune=False) -> pd.DataFrame:
@@ -1384,34 +1287,21 @@ class Searcher:
         (plan_pruned_or) and decodes only the kept blocks, with the
         exhaustive top-k as result (other shapes and paging run
         exhaustive; prune=False is the exhaustive reference).
-        A term, phrase or boolean of those whose planned postings
-        (_planned_postings) are under codec.DRIVER_POSTINGS_BUDGET runs on the
-        driver with the Spark stages' own functions and no Spark job;
-        any other query runs its Spark plan. The plan and its reason
-        land on self.last_plan (_exhaustive_plan when nothing is pruned)
-        and are logged at DEBUG on "lucene_solr_spark.search"."""
-        self.last_plan = None
-        self._skips = []
-        q = self._with_default_field(q)
-        postings = self._planned_postings(q)
-        local = postings is not None and postings < codec.DRIVER_POSTINGS_BUDGET
+        The Weight is scored on the driver under codec.DRIVER_POSTINGS_BUDGET,
+        else by the slice job, whose tasks' top-k merge here (_top). The
+        plan and its reason land on self.last_plan (_explain)."""
+        q = self._prepare(q)
         terms = self._as_or_terms(q) if prune and after is None else None
         if terms is not None:
-            top = self._search_pruned_or(terms, k, local)
-        else:
-            top = self._search_exhaustive(q, k, after, local)
-            self.last_plan = self._exhaustive_plan(q, prune, after)
-        self.last_plan = self._routed(self.last_plan, postings, local)
-        _log.debug("search plan: %s", self.last_plan)
+            return self._search_pruned_or(terms, k)
+        w = self.weigh(q)
+        top = self._top(w, k, after)
+        self._explain(self._exhaustive_plan(q, prune, after), w)
         return top
 
     def _exhaustive_plan(self, q: Query, prune, after) -> dict:
-        """last_plan of a search that ran the exhaustive plan: the
-        access path and why, the skip-data prefilter's blocks kept out
-        of blocks total, and the Spark jobs the plan runs under adaptive
-        execution — one for the top-k and one more per aggregating node
-        (boolean, phrase, dismax, synonym, term set), each a shuffle
-        stage; deletes add none (each decode drops its deleted docs)."""
+        """The plan of an exhaustive Weight: the skip-data prefilter's
+        blocks kept out of blocks total, or why none ran."""
         if self._skips:
             path, reason = "skip-data", "conjunction"
         elif self._as_or_terms(q) is None:
@@ -1423,57 +1313,15 @@ class Searcher:
             "access_path": path, "reason": reason,
             "blocks_kept": sum(k for k, _ in self._skips) if self._skips else None,
             "blocks_total": sum(t for _, t in self._skips) if self._skips else None,
-            "expected_jobs": 1 + _shuffles(rewrite(q, None)),
         }
 
-    def scored(self, q: Query):
-        """DataFrame (doc_id long, score double) of every doc q matches,
-        unranked: the plan that search() ranks and count() counts
-        (rewrite, dictionary expansion, rewrite, evaluation)."""
-        q = rewrite(self._with_default_field(q), None)
-        return self._eval(rewrite(self._expand_multiterm(q), None), 1.0)
-
-    def _search_exhaustive(self, q: Query, k: int, after: Optional[Tuple[float, int]],
-                           local: bool = False) -> pd.DataFrame:
-        from pyspark.sql import functions as F
-
-        if local:
-            return self._top_k_local(self._eval(rewrite(q, None), 1.0, local=True),
-                                     k, after)
-        scored = self.scored(q)
-        if after is not None:
-            s, d = after
-            scored = scored.where(
-                (F.col("score") < float(s))
-                | ((F.col("score") == float(s)) & (F.col("doc_id") > int(d)))
-            )
-        return self._top_k(scored, k)
-
-    def _top_k(self, scored, k: int) -> pd.DataFrame:
-        """The k best rows of a (doc_id, score) frame as (rank, doc_id,
-        score): one TakeOrdered (per-partition heaps + driver merge)."""
-        from pyspark.sql import functions as F
-
-        rows = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-        return self._hits(np.array([r["doc_id"] for r in rows], dtype=np.int64),
-                          np.array([r["score"] for r in rows], dtype=np.float64))
-
-    def _top_k_local(self, scored: pd.DataFrame, k: int,
-                     after: Optional[Tuple[float, int]] = None) -> pd.DataFrame:
-        """The driver twin of _top_k (and of the `after` cursor filter):
-        the k best (score desc, doc_id asc) rows of a pandas (doc_id,
-        score) frame, sorting only the rows that reach the k-th score."""
-        doc = scored["doc_id"].to_numpy(np.int64)
-        sc = scored["score"].to_numpy(np.float64)
-        if after is not None:
-            s, d = float(after[0]), int(after[1])
-            m = (sc < s) | ((sc == s) & (doc > d))
-            doc, sc = doc[m], sc[m]
-        if 0 < k < len(sc):
-            m = sc >= np.partition(sc, len(sc) - k)[len(sc) - k]
-            doc, sc = doc[m], sc[m]
-        top = np.lexsort((doc, -sc))[:max(k, 0)]
-        return self._hits(doc[top], sc[top])
+    def _top(self, w: Weight, k: int,
+             after: Optional[Tuple[float, int]] = None) -> pd.DataFrame:
+        """The k best hits of w after the cursor: each range's top-k
+        (_top_k_local), merged by the same function (TopDocs.merge)."""
+        tops = self._gather(w, lambda d, s: _scored_frame(*_top_k_local(d, s, k, after)))
+        return self._hits(*_top_k_local(tops["doc_id"].to_numpy(np.int64),
+                                        tops["score"].to_numpy(np.float64), k))
 
     def _hits(self, doc: np.ndarray, score: np.ndarray) -> pd.DataFrame:
         return pd.DataFrame({
@@ -1482,8 +1330,30 @@ class Searcher:
             "score": score.astype(np.float32) if self.precision == "float32" else score,
         })
 
+    def _weighed(self, q: Query) -> Weight:
+        q = self._prepare(q)
+        w = self.weigh(q)
+        self._explain(self._exhaustive_plan(q, False, None), w)
+        return w
+
+    def scored(self, q: Query):
+        """DataFrame (doc_id long, score double) of every doc q matches,
+        unranked: under the budget scored on the driver and handed to
+        Spark, over it the slice job's rows (run when the frame is)."""
+        import pyarrow as pa
+
+        w = self._weighed(q)
+        if self._on_driver(w):
+            doc, score = score_range(w)
+            return self.reader.spark.createDataFrame(
+                pa.table({"doc_id": doc, "score": score}), "doc_id long, score double")
+        return self._slice_job(w, _scored_frame)
+
     def count(self, q: Query) -> int:
-        return self.scored(q).count()
+        """The number of docs q matches (each slice task counts its own)."""
+        w = self._weighed(q)
+        return int(self._gather(w, lambda d, s: pd.DataFrame({"n": [len(d)]}),
+                                "n long")["n"].sum())
 
     def suggest(self, prefix: str, n: int = 10):
         """Index-resident prefix suggester (AnalyzingSuggester.java:121
@@ -1626,14 +1496,15 @@ class Searcher:
         )
 
     def _expand_multiterm(self, q: Query) -> Query:
-        """Replace MultiTermQuery nodes via Spark-side dictionary scans
-        (MultiTermQuery.java rewrite methods):
+        """Replace MultiTermQuery nodes via Spark-side dictionary scans,
+        one job each (MultiTermQuery.java rewrite methods):
         constant_score -> TermInSetQuery; scoring_boolean -> SHOULD
         TermQuery per term, each with its own idf (fuzzy terms carry the
         similarity boost); top_terms_N -> scoring_boolean capped to the
         N most competitive terms (boost desc, term asc)."""
         if isinstance(q, MultiTermQuery):
             terms = self.reader.expand(q)
+            self._jobs += 1
             if not terms:
                 return MatchNoDocsQuery(boost=q.boost)
             method = q.rewrite_method
@@ -1682,17 +1553,6 @@ class Searcher:
         return q
 
 
-def _shuffles(q: Query) -> int:
-    """The aggregating nodes of a rewritten query: each is one shuffle
-    stage, so one Spark job, of its plan."""
-    if isinstance(q, BooleanQuery):
-        return 1 + sum(_shuffles(c.query) for c in q.clauses)
-    if isinstance(q, DisjunctionMaxQuery):
-        return 1 + sum(_shuffles(d) for d in q.disjuncts)
-    return int(isinstance(q, (PhraseQuery, SynonymQuery, TermInSetQuery,
-                              MultiTermQuery)))
-
-
 def _re_escape(c: str) -> str:
     import re
 
@@ -1705,16 +1565,16 @@ def _idf(df: int, n: int) -> float:
     return math.log(1 + (n - df + 0.5) / (df + 0.5)) if df > 0 else 0.0
 
 
-def _decoded_blocks(pdf, positions: bool = False, keep=None, dels=None):
-    """The one block decoder of the Python stages: yields (term, doc_ids,
-    tfs, norms[, pos]) per row of a batch of blocks (term, blob, plus
-    min_doc with keep, pblob with positions). keep: {term: set of
-    min_doc}, the conjunction prefilter's kept blocks — other rows are
-    skipped undecoded. The kept rows decode in one
+def _decoded_blocks(pdf, positions: bool = False, keep=None, dels=None, span=None):
+    """The one block decoder: yields (term, doc_ids, tfs, norms[, pos])
+    per row of a batch of blocks (term, blob, plus min_doc with keep,
+    pblob with positions). keep: {term: set of min_doc}, the kept blocks
+    — other rows are skipped undecoded. The kept rows decode in one
     codec.decode_blocks_batch call; each row yields slices of its flat
-    arrays. dels: the reader's DeadDocs; deleted docs drop out of each
-    block with their positions (one bitset gather per batch), and a
-    block left empty is skipped."""
+    arrays. dels: the reader's DeadDocs; span: a doc-id range [lo, hi).
+    Deleted docs and docs outside span drop out of each block with their
+    positions (one gather per batch), and a block left empty is
+    skipped."""
     terms = pdf["term"].to_numpy()
     rows = np.arange(len(terms))
     if keep is not None:
@@ -1725,6 +1585,9 @@ def _decoded_blocks(pdf, positions: bool = False, keep=None, dels=None):
         pdf["blob"].to_numpy()[rows],
         pdf["pblob"].to_numpy()[rows] if positions else None)
     live = None if dels is None else ~dels.probe(doc_ids)
+    if span is not None:
+        inside = (doc_ids >= span[0]) & (doc_ids < span[1])
+        live = inside if live is None else live & inside
     for i, term in enumerate(terms[rows]):
         a, b = off[i], off[i + 1]
         d, f, nb = doc_ids[a:b], tfs[a:b], norms[a:b]
@@ -1739,164 +1602,182 @@ def _decoded_blocks(pdf, positions: bool = False, keep=None, dels=None):
         yield (term, d, f, nb, p) if positions else (term, d, f, nb)
 
 
-def decode_score(batches: Iterator[pd.DataFrame], info: dict) -> Iterator[pd.DataFrame]:
-    """The term scoring stage: per batch of blk rows (term, min_doc,
-    blob), (clause_id, doc_id, score) of every live posting of the kept
-    blocks, once per clause its term serves. info (Searcher._score_terms):
-    by_term {term: [(clause_id, boost)]}, weights, keep, dels, precision
-    and norms."""
-    for pdf in batches:
-        out_cid, out_doc, out_score = [], [], []
-        for term, doc_ids, tfs, norms in _decoded_blocks(
-                pdf, keep=info["keep"], dels=info["dels"]):
-            for cid, boost in info["by_term"][term]:
-                out_cid.append(np.full(len(doc_ids), cid, dtype=np.int32))
-                out_doc.append(doc_ids)
-                out_score.append(_bm25_scores(
-                    tfs, norms, info["weights"][f"{term}\x00{boost}"],
-                    info["precision"], info["norms"]))
-        if out_doc:
-            yield pd.DataFrame({"clause_id": np.concatenate(out_cid),
-                                "doc_id": np.concatenate(out_doc),
-                                "score": np.concatenate(out_score)})
+@dataclass
+class Weight:
+    """A query weighed on the driver (Searcher.weigh): the rewritten
+    query, its node tree (score_range lists the kinds) holding the term,
+    phrase and synonym weights, keep-sets and cached doc ids, the
+    postings it plans, and the reader's side of scoring: blk and
+    doc-meta files, deleted docs, norm encoding, plus the precision.
+    Picklable: a Spark task scores it without a Searcher or SparkSession."""
+
+    query: Query
+    root: dict
+    postings: int
+    files: List[str]
+    doc_files: List[str]
+    dels: Optional[DeadDocs]
+    precision: str
+    norms: str
 
 
-def decode_pos(batches: Iterator[pd.DataFrame], keep, dels,
-               slots_by_term: Dict[str, List[int]]) -> Iterator[pd.DataFrame]:
-    """The phrase's decode stage: per batch of blk rows (term, min_doc,
-    blob, pblob), ONE ROW PER (BLOCK x CHUNK-PIECE x SLOT) with packed
-    array columns (chunk, tidx, docs, tfs, norms, pos). Blocks split at
-    8192-doc chunk boundaries (most have one piece), so match_chunk sees
-    every term's postings of a doc range under ONE group key. Shipping
-    block-sized array rows instead of per-doc rows cuts the shuffled ROW
-    count by ~128x (same bytes) and — measured at 2M docs — removes the
-    3M-small-python-object Arrow serialization that dominated the former
-    per-doc-array stage (+1.2s of a 4.9s wall)."""
-    for pdf in batches:
-        rows_ch, rows_ti, rows_d, rows_tf, rows_nb, rows_p = [], [], [], [], [], []
-        for term, doc_ids, tfs, norms, pos in _decoded_blocks(
-                pdf, positions=True, keep=keep, dels=dels):
-            tfs = tfs.astype(np.int32, copy=False)
-            chunks = doc_ids >> CHUNK_BITS
-            cut = np.flatnonzero(np.diff(chunks)) + 1
-            bounds = np.concatenate(([0], cut, [len(doc_ids)]))
-            poff = np.concatenate(([0], np.cumsum(tfs)))
-            for a, b in zip(bounds[:-1], bounds[1:]):
-                p_piece = pos[poff[a]:poff[b]].astype(np.int32, copy=False)
-                for ti in slots_by_term[term]:
-                    rows_ch.append(int(chunks[a]))
-                    rows_ti.append(ti)
-                    rows_d.append(doc_ids[a:b])
-                    rows_tf.append(tfs[a:b])
-                    rows_nb.append(norms[a:b])
-                    rows_p.append(p_piece)
-        if rows_ch:
-            yield pd.DataFrame({
-                "chunk": np.asarray(rows_ch, dtype=np.int64),
-                "tidx": np.asarray(rows_ti, dtype=np.int32),
-                "docs": pd.Series(rows_d, dtype=object),
-                "tfs": pd.Series(rows_tf, dtype=object),
-                "norms": pd.Series(rows_nb, dtype=object),
-                "pos": pd.Series(rows_p, dtype=object),
-            })
+def _planned(node: dict) -> int:
+    """The postings a node's scorer decodes at most, sub-nodes included:
+    a term read by two nodes counts twice."""
+    return node.get("postings", 0) + sum(_planned(s) for s in node.get("subs", ()))
+
+
+def score_range(w: Weight, span: Optional[Tuple[int, int]] = None):
+    """The Scorer: (doc_ids, scores) of every live doc in the doc-id
+    range span = [lo, hi) (None: the whole index) that w's query
+    matches, scores float32-exact widened (float32) or float64. Node
+    kinds: terms (one or more term clauses, read together), phrase,
+    synonym, termset and all (constant score), docs (a cached FILTER
+    set, score 0), dismax, bool, none."""
+    return _score(w.root, w, span)
+
+
+def _score(node: dict, w: Weight, span) -> Tuple[np.ndarray, np.ndarray]:
+    kind = node["kind"]
+    if kind == "terms":
+        return _score_terms(node, w, span)[1:]
+    if kind == "bool":
+        parts = [_score_terms(node["terms"], w, span)] if node["terms"] else []
+        for cid, sub in zip(node["cids"], node["subs"]):
+            d, sc = _score(sub, w, span)
+            parts.append((np.full(len(d), cid, np.int32), d, sc))
+        return _boolean_scores(parts, node["occur"], node["mm"], w.precision)
+    if kind == "phrase":
+        doc, tf, nb = _phrase_freqs(node, w, span)
+        return doc, _bm25_scores(tf, nb, node["weight"], w.precision, w.norms)
+    if kind == "synonym":
+        blocks = list(_postings(w, node["terms"], span))
+        d, f, nb = (_cat([b[i] for b in blocks]) for i in (1, 2, 3))
+        doc, first, inv = np.unique(d, return_index=True, return_inverse=True)
+        tf = np.bincount(inv.ravel(), weights=f, minlength=len(doc)).astype(np.int64)
+        return doc, _bm25_scores(tf, nb[first], node["weight"], w.precision, w.norms)
+    if kind == "dismax":
+        # max + tie * (sum - max) per doc, summed in disjunct order
+        parts = [_score(sub, w, span) for sub in node["subs"]]
+        d, sc = _cat([p[0] for p in parts]), _cat([p[1] for p in parts], np.float64)
+        if not len(d):
+            return d, sc
+        order = np.argsort(d, kind="stable")
+        d, sc = d[order], sc[order]
+        first = np.flatnonzero(np.r_[True, d[1:] != d[:-1]])
+        mx = np.maximum.reduceat(sc, first)
+        total = mx + node["tie"] * (np.add.reduceat(sc, first) - mx)
+        if w.precision == "float32":
+            total = total.astype(np.float32).astype(np.float64)
+        return d[first], total
+    if kind == "termset":
+        doc = np.unique(_cat([b[1] for b in _postings(w, node["terms"], span)]))
+    elif kind == "all":
+        doc = _live_docs(w, span)
+    elif kind == "docs":
+        doc = node["ids"]
+        if span is not None:
+            doc = doc[(doc >= span[0]) & (doc < span[1])]
+    else:
+        doc = np.empty(0, np.int64)
+    return doc, np.full(len(doc), node.get("score", 0.0))
+
+
+def _cat(arrays: list, dtype=np.int64) -> np.ndarray:
+    return np.concatenate(arrays) if arrays else np.empty(0, dtype)
+
+
+def _blocks(w: Weight, terms: List[str], keep, span, positions: bool) -> pd.DataFrame:
+    """The blk rows (term, min_doc, blob[, pblob]) of terms whose
+    [min_doc, max_doc] overlaps span, read with pyarrow. A keep-set
+    masks the read to the rows whose min_doc keys some kept block (a
+    superset of the kept blocks, made exact by _decoded_blocks' per-term
+    check), so no other blob is read."""
+    cols = ["term", "min_doc", "blob"] + (["pblob"] if positions else [])
+    mins = None if keep is None else sorted(set().union(*keep.values()))
+    return _read_term_rows(w.files, cols, terms, mins, span).to_pandas()
+
+
+def _postings(w: Weight, terms: List[str], span, keep=None, positions: bool = False):
+    """(term, doc_ids, tfs, norms[, pos]) of each read block's live
+    postings in span (_blocks, _decoded_blocks)."""
+    return _decoded_blocks(_blocks(w, terms, keep, span, positions), positions, keep,
+                           w.dels, span)
+
+
+def _score_terms(node: dict, w: Weight, span):
+    """(clause_id, doc_id, score) of every live posting of the kept
+    blocks of a "terms" node, once per clause its term serves."""
+    cid, doc, score = [], [], []
+    for term, d, f, nb in _postings(w, list(node["by_term"]), span, node["keep"]):
+        for c, boost in node["by_term"][term]:
+            cid.append(np.full(len(d), c, dtype=np.int32))
+            doc.append(d)
+            score.append(_bm25_scores(f, nb, node["weights"][f"{term}\x00{boost}"],
+                                      w.precision, w.norms))
+    return _cat(cid, np.int32), _cat(doc), _cat(score, np.float64)
+
+
+def _phrase_freqs(node: dict, w: Weight, span):
+    """(doc_id, tf, norm) of the docs in span holding the phrase:
+    ExactPhraseMatcher's advance loop, batched in numpy. Each slot takes
+    its term's blocks in doc order (a term's blocks own disjoint doc
+    ranges); the docs holding every term are the intersection of the
+    slots' sorted doc lists; an occurrence is a composite int64 key (the
+    doc's rank among those docs << 32 | position - slot + nslots) that
+    survives every slot's key set, as term i matches at p0 + i."""
+    slots, n = node["slots"], node["nslots"]
+    blocks: Dict[str, list] = {}
+    for term, d, f, nb, p in _postings(w, sorted(slots), span, node["keep"], positions=True):
+        blocks.setdefault(term, []).append((d, f, nb, p))
+    empty = (np.empty(0, np.int64),) * 3
+    if len(blocks) < len(slots):
+        return empty
+    post = {t: [np.concatenate(a).astype(np.int64) for a in
+                zip(*sorted(bl, key=lambda b: b[0][0]))] for t, bl in blocks.items()}
+    common = None
+    for d, _, _, _ in post.values():
+        common = d if common is None else common[_isin_sorted(common, d)]
+    if not len(common):
+        return empty
+    slot_term = {i: t for t, idx in slots.items() for i in idx}
+    keys = norms = None
+    for i in range(n):
+        d, f, nb, p = post[slot_term[i]]
+        m = _isin_sorted(d, common)
+        k = (np.repeat(np.searchsorted(common, d[m]), f[m]) << 32) | (
+            p[np.repeat(m, f)] - i + n)
+        keys = k if keys is None else keys[_isin_sorted(keys, k)]
+        if norms is None:
+            norms = nb[m]
+    rank, tf = np.unique(keys >> 32, return_counts=True)
+    return common[rank], tf.astype(np.int64), norms[rank]
 
 
 def _isin_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Membership of sorted-unique a in sorted-unique b."""
+    """Membership of a in sorted-unique b."""
     if len(b) == 0 or len(a) == 0:
         return np.zeros(len(a), dtype=bool)
     j = np.searchsorted(b, a).clip(0, len(b) - 1)
     return b[j] == a
 
 
-def match_chunk(pdf: pd.DataFrame, nslots: int) -> pd.DataFrame:
-    """The phrase match of one 8192-doc chunk's pieces (decode_pos rows
-    of one chunk) as (doc_id, tf, norm) of the docs holding the phrase:
-    ExactPhraseMatcher's advance loop, batched in numpy — conjunction by
-    sorted-array intersection of each slot's doc lists, then occurrence
-    counting by intersecting composite int64 keys (local_doc << 50 |
-    shifted position): term i matches at p0 + i, so slot i's keys use
-    pos - i and an occurrence survives every slot's key set. All
-    O(postings log) sorted operations; no per-doc python."""
-    empty = _frame([], _FREQS)
-    chunk = int(pdf["chunk"].iloc[0])
-    base = np.int64(chunk) << CHUNK_BITS
-    slot_docs, slot_tfs, slot_nbs, slot_pos = [], [], [], []
-    for i in range(nslots):
-        g = pdf[pdf["tidx"] == i]
-        if not len(g):
-            return empty
-        # pieces of one term within a chunk own disjoint doc ranges (a
-        # posting list is sorted and blocks partition it): ordering
-        # pieces by first doc yields globally sorted docs and keeps
-        # positions aligned — no big sort
-        order = sorted(range(len(g)), key=lambda j: g["docs"].iloc[j][0])
-        slot_docs.append(np.concatenate(
-            [np.asarray(g["docs"].iloc[j], np.int64) for j in order]))
-        slot_tfs.append(np.concatenate(
-            [np.asarray(g["tfs"].iloc[j], np.int64) for j in order]))
-        slot_nbs.append(np.concatenate(
-            [np.asarray(g["norms"].iloc[j], np.int64) for j in order]))
-        slot_pos.append(np.concatenate(
-            [np.asarray(g["pos"].iloc[j], np.int64) for j in order]))
-    common = slot_docs[0]
-    for i in range(1, nslots):
-        common = common[_isin_sorted(common, slot_docs[i])]
-        if not len(common):
-            return empty
-    keys = None
-    norm0 = None
-    for i in range(nslots):
-        mask = _isin_sorted(slot_docs[i], common)
-        ld = (slot_docs[i][mask] - base)
-        tf_r = slot_tfs[i][mask]
-        pos_r = slot_pos[i][np.repeat(mask, slot_tfs[i])]
-        # local doc (13 bits) << 50 leaves 50 bits for the shifted
-        # position — doc ids stay exact at any corpus size because only
-        # the in-chunk offset is encoded
-        k = (np.repeat(ld, tf_r) << 50) | (pos_r - i + nslots)
-        if i == 0:
-            keys = k
-            norm0 = (ld, slot_nbs[i][mask])
-        else:
-            keys = keys[_isin_sorted(keys, k)]
-        if not len(keys):
-            return empty
-    ld_match = keys >> 50
-    uld, tf = np.unique(ld_match, return_counts=True)
-    nb = norm0[1][np.searchsorted(norm0[0], uld)]
-    return pd.DataFrame({"doc_id": base + uld, "tf": tf.astype(np.int64),
-                         "norm": nb.astype(np.int32)})
-
-
-def score_rows(batches: Iterator[pd.DataFrame], weight: dict, precision: str,
-               norms_mode: str) -> Iterator[pd.DataFrame]:
-    """BM25 (_bm25_scores) of (doc_id, tf, norm) batches with one weight:
-    the phrase and synonym scoring stage."""
-    for pdf in batches:
-        sc = _bm25_scores(pdf["tf"].to_numpy(dtype=np.int64),
-                          pdf["norm"].to_numpy(dtype=np.int64),
-                          weight, precision, norms_mode)
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "score": sc})
-
-
-def _boolean_local(u: pd.DataFrame, occur_by_cid: Dict[int, Occur], mm: int,
-                   precision: str) -> pd.DataFrame:
-    """The driver twin of _eval_boolean's aggregate over its clauses'
-    (clause_id, doc_id, score) rows: per clause, the summed score from
-    0.0 (Spark's sum) and a match flag; the MUST/FILTER/MUST_NOT and
-    min-should-match predicate; clause sums added left to right in
-    clause order in double, cast to float32 in float32 mode. Memory is
-    O(rows + docs) whatever the clause count: the rows are taken clause
-    by clause, each clause's per-doc sum is added into one running total
-    (an absent clause adds 0.0, as Spark's coalesce does) and its matches
-    into per-doc counters."""
-    doc, inv = np.unique(u["doc_id"].to_numpy(np.int64), return_inverse=True)
+def _boolean_scores(parts: list, occur_by_cid: Dict[int, Occur], mm: int,
+                    precision: str) -> Tuple[np.ndarray, np.ndarray]:
+    """A boolean node over its clauses' (clause_id, doc_id, score) rows:
+    per clause, the summed score from 0.0 and a match flag; the
+    MUST/FILTER/MUST_NOT and min-should-match predicate; clause sums
+    added left to right in clause order in double, cast to float32 in
+    float32 mode. Memory is O(rows + docs) whatever the clause count:
+    the rows are taken clause by clause, each clause's per-doc sum is
+    added into one running total (an absent clause adds 0.0) and its
+    matches into per-doc counters."""
+    cid = _cat([p[0] for p in parts]).astype(np.int64)
+    doc, inv = np.unique(_cat([p[1] for p in parts]), return_inverse=True)
     # (clause, doc) keys in clause order; each key's scores summed from
     # 0.0 in row order
-    key, at = np.unique(u["clause_id"].to_numpy(np.int64) * len(doc) + inv,
-                        return_inverse=True)
-    sums = np.bincount(at.ravel(), weights=u["score"].to_numpy(np.float64),
+    key, at = np.unique(cid * len(doc) + inv.ravel(), return_inverse=True)
+    sums = np.bincount(at.ravel(), weights=_cat([p[2] for p in parts], np.float64),
                        minlength=len(key))
     cut = np.searchsorted(key, np.arange(len(occur_by_cid) + 1) * len(doc))
     total = np.zeros(len(doc))
@@ -1921,23 +1802,38 @@ def _boolean_local(u: pd.DataFrame, occur_by_cid: Dict[int, Occur], mm: int,
         ok &= n_should >= mm
     if precision == "float32":
         total = total.astype(np.float32).astype(np.float64)
-    return pd.DataFrame({"doc_id": doc[ok], "score": total[ok]})
+    return doc[ok], total[ok]
 
 
-# column dtypes of the stages' pandas frames, for the empty ones
-_SCORED = {"clause_id": np.int32, "doc_id": np.int64, "score": np.float64}
-_FREQS = {"doc_id": np.int64, "tf": np.int64, "norm": np.int32}
-_PIECES = {"chunk": np.int64, "tidx": np.int32, "docs": object, "tfs": object,
-           "norms": object, "pos": object}
+def _live_docs(w: Weight, span) -> np.ndarray:
+    """The live doc ids in span, read from the doc metadata with pyarrow."""
+    import pyarrow.dataset as ds
+
+    cond = None if span is None else (
+        (ds.field("doc_id") >= span[0]) & (ds.field("doc_id") < span[1]))
+    doc = ds.dataset(w.doc_files, format="parquet").to_table(
+        columns=["doc_id"], filter=cond).column("doc_id").to_numpy().astype(np.int64)
+    return doc if w.dels is None else doc[~w.dels.probe(doc)]
 
 
-def _frame(parts, cols: Dict[str, type]) -> pd.DataFrame:
-    """The frames a stage yielded, concatenated; an empty frame of cols
-    when it yielded none."""
-    parts = list(parts)
-    if parts:
-        return pd.concat(parts, ignore_index=True)
-    return pd.DataFrame({c: np.empty(0, dtype=t) for c, t in cols.items()})
+def _top_k_local(doc: np.ndarray, sc: np.ndarray, k: int,
+                 after: Optional[Tuple[float, int]] = None):
+    """The k best (score desc, doc_id asc) of (doc_ids, scores) after the
+    `after` cursor, sorting only the rows that reach the k-th score: a
+    range's collector, and the merge of the slices' top-k."""
+    if after is not None:
+        s, d = float(after[0]), int(after[1])
+        m = (sc < s) | ((sc == s) & (doc > d))
+        doc, sc = doc[m], sc[m]
+    if 0 < k < len(sc):
+        m = sc >= np.partition(sc, len(sc) - k)[len(sc) - k]
+        doc, sc = doc[m], sc[m]
+    top = np.lexsort((doc, -sc))[:max(k, 0)]
+    return doc[top], sc[top]
+
+
+def _scored_frame(doc: np.ndarray, score: np.ndarray) -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": doc, "score": score})
 
 
 def _repeat_terms(terms, docs) -> np.ndarray:

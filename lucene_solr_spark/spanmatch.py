@@ -2,8 +2,7 @@
 
 The matcher both query paths share (live fulltext.py and the segment
 executor): gather each query term's positions per doc into arrays (ONE
-shuffle — the exact-phrase matcher's gather pattern,
-search/executor.py:_score_phrase), then evaluate the proximity weight
+shuffle, Searcher._gather_positions), then evaluate the proximity weight
 with a nested Catalyst higher-order-function expression that runs
 inside WholeStageCodegen — no join explosion, no Python.
 

@@ -6,7 +6,7 @@ the driver path holds in memory, for queries, upserts and merges.
 and times Searcher.search for a term, AND, OR and phrase query
 (prune="auto", as perfbench queries) with codec.DRIVER_POSTINGS_BUDGET at
 its maximum (every query runs on the driver) and at 0 (every query runs
-its Spark plan). Prints, per query, the planned postings, the median
+its Spark job: the slice tasks, at --cores slices). Prints, per query, the planned postings, the median
 wall of each path, each path's postings per ms and the driver run's peak
 traced memory, then the smallest planned postings at which the Spark
 path won: the basis of the budget's value.

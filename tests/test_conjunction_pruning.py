@@ -123,9 +123,9 @@ def test_pruned_and_results_exact(chunked_searcher, terms, spark, chunked_index,
 def test_spark_jobs_per_query(spark, spark_jobs, chunked_index, tmp_path, access_paths):
     """Statistics, the conjunction's skip data and the live-docs bitsets
     are read on the driver: opening a reader runs no job, and under the
-    budget no query runs one. With the budget at 0 a term query runs only
-    its scoring job, and AND, OR and phrase add their shuffle — on an
-    index with deletes too, whose delete_by_terms runs no job."""
+    budget no query runs one. With the budget at 0 a term, AND, OR and
+    phrase query each run only their slice job — on an index with
+    deletes too, whose delete_by_terms runs no job."""
     import shutil
 
     from lucene_solr_spark.indexing.deletes import delete_by_terms
@@ -149,7 +149,7 @@ def test_spark_jobs_per_query(spark, spark_jobs, chunked_index, tmp_path, access
             for q in (_and_query("common", "markera"), or_q,
                       PhraseQuery(terms=("common", "markerc"))):
                 _, n = spark_jobs(lambda: s.search(q, k=10))
-                want = 2 if path == "spark" else 0
+                want = 1 if path == "spark" else 0
                 assert n == s.last_plan["expected_jobs"] == want, (path, idx, q, n)
 
 

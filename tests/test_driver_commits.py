@@ -123,14 +123,16 @@ QUERIES = [TermQuery(term="import"), TermQuery(term="ident007"),
 
 
 def _top_bits(spark, idx):
-    """Doc ids and score bits of QUERIES (no phrase on an index without
-    positions)."""
+    """Doc ids and score bits of QUERIES; on an index without positions a
+    phrase is refused, on whichever placement the budget picks."""
     from lucene_solr_spark.search.executor import IndexReader, Searcher
 
     s = Searcher(IndexReader(spark, idx))
     out = []
     for q in QUERIES:
         if isinstance(q, PhraseQuery) and "nopos" in idx:
+            with pytest.raises(ValueError, match="positions=False"):
+                s.search(q, k=30)
             continue
         r = s.search(q, k=30)
         out.append((list(r["doc_id"]), r["score"].to_numpy().tobytes()))

@@ -1,8 +1,10 @@
-"""The driver access path: a term, phrase or boolean-of-those top-k under
-DRIVER_POSTINGS_BUDGET runs on the driver with no Spark job, through the
-Spark stages' own functions. Every shape returns the same doc ids and the
-same score bits on both paths (the Spark path forced with the budget at
-0), and each path runs exactly the jobs its plan expects."""
+"""The two placements of one scorer: a query whose planned postings are
+under DRIVER_POSTINGS_BUDGET is scored on the driver over one range
+covering the index, with no Spark job; over it, one Spark job scores
+equal-width doc-id slices with the same functions and the driver merges
+their top-k. Every shape returns the same doc ids and the same score bits
+on both placements (the slices forced with the budget at 0), and each
+runs exactly the jobs its plan expects."""
 
 from __future__ import annotations
 
@@ -10,10 +12,13 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from lucene_solr_spark.queryast import (BooleanClause, BooleanQuery, MatchNoDocsQuery,
-                                        Occur, PhraseQuery, TermQuery)
+from lucene_solr_spark.queryast import (BooleanClause, BooleanQuery, DisjunctionMaxQuery,
+                                        MatchAllDocsQuery, MatchNoDocsQuery,
+                                        MultiTermQuery, Occur, PhraseQuery, SynonymQuery,
+                                        TermInSetQuery, TermQuery)
 from lucene_solr_spark import codec
 from lucene_solr_spark.search import executor
+from lucene_solr_spark.search.cache import QueryCache
 
 pytestmark = pytest.mark.spark
 
@@ -54,7 +59,25 @@ SHAPES = {
                         (N, _t("w57")), (M, _bq((S, _t("alpha")), (S, _t("w1")))),
                         (S, PhraseQuery(terms=("end", "to", "end"))),
                         (F, _t("w0")), msm=3),
+    "dismax": DisjunctionMaxQuery(disjuncts=(_t("alpha"), _t("beta"), _t("w3", 1.5)),
+                                  tie_breaker=0.1),
+    "synonym": SynonymQuery(terms=("alpha", "w3")),
+    "term_in_set": TermInSetQuery(terms=("beta", "w40", "zzmissing"), boost=1.5),
+    "all_not": _bq((M, MatchAllDocsQuery()), (N, _t("alpha"))),
+    # a non-term FILTER clause, cached by the searcher's QueryCache
+    "cached_filter": _bq((S, _t("gamma")), (S, _t("w1")),
+                         (F, _bq((S, _t("alpha")), (S, _t("w2"))))),
+    "prefix": _bq((M, MultiTermQuery(kind="prefix", pattern="w1")), (S, _t("beta"))),
 }
+# shapes whose dictionary expansion runs one Spark job on either placement
+EXPANDED = {"prefix": 1}
+
+
+def _searcher(reader, shape, precision="float32"):
+    from lucene_solr_spark.search.executor import Searcher
+
+    cache = QueryCache() if shape == "cached_filter" else None
+    return Searcher(reader, precision=precision, query_cache=cache)
 
 
 @pytest.fixture(scope="module")
@@ -75,8 +98,8 @@ def corpus_pdf():
 
 @pytest.fixture(scope="module")
 def readers(spark, corpus_pdf, tmp_path_factory):
-    """A two-segment index, a copy of it with deletes, and a MultiReader
-    over two shards."""
+    """A two-segment index (500 + 700 docs), a copy of it with deletes,
+    and a MultiReader over two shards."""
     import shutil
 
     from lucene_solr_spark.indexing.builder import build_index
@@ -84,7 +107,10 @@ def readers(spark, corpus_pdf, tmp_path_factory):
     from lucene_solr_spark.search.executor import IndexReader, MultiReader
 
     base = tmp_path_factory.mktemp("driver_path")
-    h = len(corpus_pdf) // 2
+    # unequal segments: a build writes a term's blocks per input
+    # partition, and halves would put every partition edge on a slice
+    # bound, so no block would straddle one
+    h = 500
     halves = [spark.createDataFrame(corpus_pdf.iloc[:h]),
               spark.createDataFrame(corpus_pdf.iloc[h:])]
     two = str(base / "two")
@@ -124,22 +150,20 @@ def _assert_same(got, want, label):
 @pytest.mark.parametrize("reader", ["two_segments", "deletes", "multireader"])
 @pytest.mark.parametrize("shape", sorted(SHAPES))
 def test_driver_equals_spark(monkeypatch, readers, reader, precision, shape):
-    from lucene_solr_spark.search.executor import Searcher
-
-    s = Searcher(readers[reader], precision=precision)
+    s = _searcher(readers[reader], shape, precision)
     got, dplan, want, splan = _both(monkeypatch, s,
                                     lambda s: s.search(SHAPES[shape], k=50))
-    assert dplan["access_path"] == "driver" and dplan["expected_jobs"] == 0
+    assert dplan["access_path"] == "driver"
+    assert dplan["expected_jobs"] == EXPANDED.get(shape, 0)
     assert 0 <= dplan["postings_planned"] < dplan["budget"]
     assert splan["access_path"] != "driver" and splan["reason"] == "over-budget"
+    assert splan["slices"] == readers[reader].spark.sparkContext.defaultParallelism
     _assert_same(got, want, f"{reader}/{precision}/{shape}")
 
 
 @pytest.mark.parametrize("shape", ["term", "or", "and", "phrase", "nested"])
 def test_driver_equals_spark_after_paging(monkeypatch, readers, shape):
-    from lucene_solr_spark.search.executor import Searcher
-
-    s = Searcher(readers["deletes"])
+    s = _searcher(readers["deletes"], shape)
     first = s.search(SHAPES[shape], k=7)
     assert len(first) == 7, "fixture drift: too few hits to page"
     after = (float(first["score"].iloc[-1]), int(first["doc_id"].iloc[-1]))
@@ -168,23 +192,19 @@ def test_driver_equals_spark_pruned(monkeypatch, readers, precision, shape):
 @pytest.mark.parametrize("prune", [False, True])
 @pytest.mark.parametrize("shape", sorted(SHAPES))
 def test_jobs_equal_expected_on_both_paths(monkeypatch, spark_jobs, readers, shape, prune):
-    """Under the budget a query runs no Spark job; over it, today's Spark
-    plan runs, and its job count is the plan's expected_jobs. A query
-    with no hits may run fewer: adaptive execution skips the stages after
-    an empty shuffle."""
-    from lucene_solr_spark.search.executor import Searcher
-
-    s = Searcher(readers["deletes"])
+    """Under the budget a query runs no Spark job but its dictionary
+    expansion's; over it, the scoring is one more job (the slice job),
+    hits or none, and the job count is the plan's expected_jobs. The
+    cached FILTER set, computed by the first search, is a cache hit in
+    the second."""
+    s = _searcher(readers["deletes"], shape)
     q = SHAPES[shape]
-    top, n = spark_jobs(lambda: s.search(q, k=10, prune=prune))
-    assert n == 0 and s.last_plan["expected_jobs"] == 0, s.last_plan
+    _, n = spark_jobs(lambda: s.search(q, k=10, prune=prune))
+    assert n == s.last_plan["expected_jobs"] == EXPANDED.get(shape, 0), s.last_plan
     monkeypatch.setattr(codec, "DRIVER_POSTINGS_BUDGET", 0)
     _, n = spark_jobs(lambda: s.search(q, k=10, prune=prune))
     assert s.last_plan["reason"] == "over-budget"
-    if len(top):
-        assert n == s.last_plan["expected_jobs"] > 0, s.last_plan
-    else:
-        assert n <= s.last_plan["expected_jobs"], s.last_plan
+    assert n == s.last_plan["expected_jobs"] == EXPANDED.get(shape, 0) + 1, s.last_plan
 
 
 def test_planned_postings_count_each_leaf_stage(readers):
@@ -203,18 +223,72 @@ def test_planned_postings_count_each_leaf_stage(readers):
         2 * st["alpha"][0] + st["beta"][0] + sum(st[t][0] + st[t][1] for t in ("end", "to")))
 
 
-def test_out_of_scope_shapes_keep_their_spark_plan(spark_jobs, readers):
-    """A query the driver path does not run (here a dismax) runs its
-    Spark plan whatever the budget, with no over-budget reason."""
-    from lucene_solr_spark.queryast import DisjunctionMaxQuery
-    from lucene_solr_spark.search.executor import Searcher
+def test_cached_filter_over_budget_runs_one_more_job(monkeypatch, spark_jobs, readers):
+    """A FILTER set missing from the cache is computed by its own slice
+    job over the budget, then reused: 2 jobs, then 1."""
+    s = _searcher(readers["deletes"], "cached_filter")
+    monkeypatch.setattr(codec, "DRIVER_POSTINGS_BUDGET", 0)
+    first, n = spark_jobs(lambda: s.search(SHAPES["cached_filter"], k=10))
+    assert n == s.last_plan["expected_jobs"] == 2
+    again, n = spark_jobs(lambda: s.search(SHAPES["cached_filter"], k=10))
+    assert n == s.last_plan["expected_jobs"] == 1
+    assert s.query_cache.misses == 1 and s.query_cache.hits == 1
+    _assert_same(first, again, "cached_filter")
 
-    s = Searcher(readers["two_segments"])
-    q = DisjunctionMaxQuery(disjuncts=(_t("alpha"), _t("beta")), tie_breaker=0.1)
-    _, n = spark_jobs(lambda: s.search(q, k=10))
-    assert s.last_plan["access_path"] == "exhaustive"
-    assert s.last_plan["postings_planned"] is None
-    assert n == s.last_plan["expected_jobs"] > 0
+
+def _straddled(reader, term):
+    """The slice bounds of reader that some block of term straddles."""
+    from lucene_solr_spark.indexing.manifest import _read_term_rows
+
+    n = reader.spark.sparkContext.defaultParallelism
+    lo, hi = reader.doc_range
+    bounds = [lo + (hi - lo) * i // n for i in range(1, n)]
+    t = _read_term_rows(reader._block_files, ["min_doc", "max_doc"], [term])
+    return [b for b in bounds
+            if any(a < b <= z for a, z in zip(t.column("min_doc").to_pylist(),
+                                                t.column("max_doc").to_pylist()))]
+
+
+def test_slices_merge_to_the_driver_top_k(monkeypatch, readers):
+    """On the deletes reader, split into defaultParallelism (>= 2)
+    slices: a head term whose blocks straddle slice bounds, k above any
+    one slice's hits, and an `after` page that crosses a bound, give the
+    driver's doc ids and score bits."""
+    reader = readers["deletes"]
+    s = _searcher(reader, "term")
+    assert s._slices() >= 2
+    assert _straddled(reader, "alpha"), "fixture drift: no block straddles a bound"
+    q = SHAPES["term"]
+    lo, hi = reader.doc_range
+    width = -(-(hi - lo) // s._slices())
+    full, _, sliced, plan = _both(monkeypatch, s, lambda s: s.search(q, k=hi - lo))
+    assert plan["slices"] >= 2 and len(full) > width
+    _assert_same(full, sliced, "k above a slice")
+    cut = 20
+    after = (float(full["score"].iloc[cut - 1]), int(full["doc_id"].iloc[cut - 1]))
+    got, _, want, _ = _both(monkeypatch, s, lambda s: s.search(q, k=40, after=after))
+    _assert_same(got, want, "after")
+    assert list(got["doc_id"]) == list(full["doc_id"].iloc[cut:cut + 40])
+    slice_of = (got["doc_id"].to_numpy() - lo) // width
+    assert len(set(slice_of.tolist())) >= 2, "the page crosses no slice bound"
+
+
+@pytest.mark.parametrize("shape", ["or", "phrase", "dismax", "all_not", "prefix"])
+def test_scored_and_count_on_both_placements(monkeypatch, readers, shape):
+    """scored() and count() run the same Weight: a driver-built frame
+    under the budget, the slice job's rows over it."""
+    s = _searcher(readers["multireader"], shape)
+    q = SHAPES[shape]
+
+    def run(s):
+        rows = s.scored(q).toPandas().sort_values("doc_id", ignore_index=True)
+        return rows, s.count(q)
+
+    (got, n), _, (want, m), plan = _both(monkeypatch, s, run)
+    assert plan["reason"] == "over-budget"
+    assert n == m == len(got) > 0
+    assert list(got["doc_id"]) == list(want["doc_id"])
+    assert got["score"].to_numpy().tobytes() == want["score"].to_numpy().tobytes()
 
 
 def test_reader_lists_its_files_once(monkeypatch, readers):

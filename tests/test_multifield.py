@@ -113,7 +113,7 @@ def test_keyword_field_scoring(mf_searcher, mf_corpus):
 def test_cross_field_boolean(mf_searcher, mf_corpus):
     """title:X AND body:Y: intersection of the field hits; score = sum
     of the two independent field scores (float64 add, float32 cast —
-    _eval_boolean order)."""
+    _boolean_scores order)."""
     t_oracle = _field_oracle(mf_corpus, "title")
     b_oracle = _field_oracle(mf_corpus, "body")
     q = BooleanQuery(clauses=(

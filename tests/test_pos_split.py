@@ -87,16 +87,27 @@ def test_split_blocks_batch_rejects_inline_positions():
                            positions=pos, split_pos=False)
 
 
-def test_scan_prunes_pblob_for_term_query(spark, tiny_index):
-    """Plan-shape check on the pruning claim: a term query's physical
-    plan must not read the pblob column; the phrase path must."""
+def test_scan_prunes_pblob_for_term_query(spark, tiny_index, monkeypatch):
+    """Read-shape check on the pruning claim: a term query's pyarrow
+    block reads must not ask for the pblob column; the phrase's must."""
     from lucene_solr_spark.queryast import parse_query
-    from lucene_solr_spark.search.executor import IndexReader, Searcher
+    from lucene_solr_spark.search import executor
 
-    s = Searcher(IndexReader(spark, tiny_index))
-    term_plan = s._eval(parse_query("import"), 1.0)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "pblob" not in term_plan
-    phrase_plan = s._eval(parse_query('"public static"'), 1.0)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "pblob" in phrase_plan
+    reads = []
+    read = executor._read_term_rows
+
+    def spy(files, columns, *args, **kw):
+        reads.append(columns)
+        return read(files, columns, *args, **kw)
+
+    monkeypatch.setattr(executor, "_read_term_rows", spy)
+    s = executor.Searcher(executor.IndexReader(spark, tiny_index))
+
+    def blob_reads(q):
+        reads.clear()
+        assert len(s.search(parse_query(q), k=10)) > 0
+        return [c for c in reads if "blob" in c]
+
+    term = blob_reads("import")
+    assert term and not any("pblob" in c for c in term)
+    assert any("pblob" in c for c in blob_reads('"public static"'))

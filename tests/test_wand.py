@@ -26,10 +26,9 @@ def _or(*terms):
         BooleanClause(Occur.SHOULD, TermQuery(term=t)) for t in terms))
 
 
-def _assert_block_max_plan(s, path: str, spark_jobs: int):
+def _assert_block_max_plan(s, path: str):
     """A block-max plan (theta planned) on access path `path`: the
-    driver runs no job; the Spark plan, over the budget, runs
-    spark_jobs."""
+    driver runs no job; over the budget, the slice job is the one job."""
     plan = s.last_plan
     assert "theta" in plan
     if path == "driver":
@@ -37,7 +36,7 @@ def _assert_block_max_plan(s, path: str, spark_jobs: int):
         assert plan["expected_jobs"] == 0
     else:
         assert plan["access_path"] == "skip-data" and plan["reason"] == "over-budget"
-        assert plan["expected_jobs"] == spark_jobs
+        assert plan["expected_jobs"] == 1
     assert 0 <= plan["blocks_kept"] <= plan["blocks_total"]
     assert s.last_wand_stats == {"blocks_total": plan["blocks_total"],
                                  "blocks_decoded": plan["blocks_kept"]}
@@ -77,7 +76,7 @@ def test_or_pruned_rank_identical(searcher, terms, access_paths):
         exhaustive = searcher.search(q, k=10)
         pruned = searcher.search(q, k=10, prune=True)
         _assert_same(pruned, exhaustive, f"{path}: or:{terms}")
-        _assert_block_max_plan(searcher, path, 2)
+        _assert_block_max_plan(searcher, path)
 
 
 def test_missing_term_pruned(searcher, access_paths):
@@ -179,16 +178,15 @@ def test_or_pruned_rank_identical_with_deletes(spark, tiny_index, tmp_path, acce
 def test_pruned_runs_the_exhaustive_jobs(searcher, spark_jobs, access_paths):
     """The keep-set is planned on the driver. Under the budget a pruned
     query runs no Spark job, as the exhaustive one does; with the budget
-    at 0 a pruned term runs its one scoring job and a pruned OR its two
-    (scoring + shuffle), as the exhaustive plans do."""
+    at 0 a pruned term or OR runs its one slice job, as the exhaustive
+    ones do."""
     for path in access_paths():
-        for q, jobs in ((TermQuery(term="import"), 1),
-                        (_or("import", "ident099", "ident042"), 2)):
-            want = jobs if path == "spark" else 0
+        for q in (TermQuery(term="import"), _or("import", "ident099", "ident042")):
+            want = 1 if path == "spark" else 0
             _, n_exh = spark_jobs(lambda: searcher.search(q, k=10))
             _, n = spark_jobs(lambda: searcher.search(q, k=10, prune=True))
             assert n == n_exh == want, (path, q, n, n_exh)
-            _assert_block_max_plan(searcher, path, jobs)
+            _assert_block_max_plan(searcher, path)
 
 
 @pytest.fixture(scope="module")
@@ -242,7 +240,7 @@ def test_pruned_search_skips_blocks(mid_searcher, access_paths):
         exhaustive = s.search(q, k=10)
         pruned = s.search(q, k=10, prune=True)
         _assert_same(pruned, exhaustive, f"{path}: mid:import")
-        _assert_block_max_plan(s, path, 1)
+        _assert_block_max_plan(s, path)
         st = s.last_wand_stats
         assert st["blocks_total"] >= 100, "fixture drift: corpus too small"
         frac = st["blocks_decoded"] / st["blocks_total"]
@@ -306,7 +304,7 @@ def test_aligned_slack_rank_identical(searcher, terms, access_paths):
     for path in access_paths():
         exhaustive = searcher.search(q, k=10)
         pruned = searcher.search(q, k=10, prune=True)
-        _assert_block_max_plan(searcher, path, 2)
+        _assert_block_max_plan(searcher, path)
         _assert_same(pruned, exhaustive, f"{path}: aligned-or:{terms}")
 
 
@@ -361,7 +359,7 @@ def test_auto_rank_identical_and_plan_populated(searcher, access_paths):
         exhaustive = searcher.search(q, k=10)
         auto = searcher.search(q, k=10, prune="auto")
         _assert_same(auto, exhaustive, f"{path}: auto-or")
-        _assert_block_max_plan(searcher, path, 2)
+        _assert_block_max_plan(searcher, path)
         assert searcher.last_plan["theta"] is None or searcher.last_plan["theta"] > 0
 
 
@@ -369,7 +367,7 @@ def test_auto_single_term_rank_identical(searcher, access_paths):
     q = TermQuery(term="import")
     for path in access_paths():
         auto = searcher.search(q, k=10, prune="auto")
-        _assert_block_max_plan(searcher, path, 1)
+        _assert_block_max_plan(searcher, path)
         _assert_same(auto, searcher.search(q, k=10), f"{path}: auto-term")
 
 
