@@ -32,10 +32,17 @@ Scale design (north rule) — NO token-level shuffle at all:
 One pass, one job: each chamber writes its partition's files itself
 with pyarrow (SegmentPartWriter):
   inverted.parquet/kind=blk/part-<pid>.parquet   blocks, POSTINGS_SCHEMA,
-      term-sorted, in row groups of ROW_GROUP_ROWS (term min/max prune)
-  inverted.parquet/kind=doc/part-<pid>.parquet   doc metadata only
+      term-sorted, in row groups of ROW_GROUP_ROWS (2048): readers keep
+      each group's term min/max as the terms index and read only the
+      groups that can hold a query term
+  inverted.parquet/kind=doc/part-<pid>.parquet   doc metadata only, in
+      row groups of DOC_ROW_GROUP_ROWS (16384): never looked up by term
   term_stats.parquet/part-<pid>.parquet          the partition's term
-      stats (term_stats_table over its block metadata)
+      stats (term_stats_table over its block metadata), row groups as blk
+The term-sorted files carry min/max statistics on `term` alone (no
+reader prunes them on another column) and write min_doc/max_doc
+DELTA_BINARY_PACKED without a dictionary; these savings pay for the
+finer row groups (ROW_GROUP_ROWS has the measured sizes).
 and returns one counters row; a task without rows writes no files (a
 scan pays a task per file). A partition is a sub-segment for
 statistics: term_stats holds one row per term per partition, and every
@@ -77,13 +84,22 @@ DOC_SCHEMA = (
 
 TERM_STATS_SCHEMA = "term string, df long, ttf long"
 
-# rows per parquet row group of the blk and term-stats files: the rows
-# are term-sorted, so a term lookup (the driver's pyarrow isin read, a
-# Spark `term IN` scan) skips row groups on their term min/max. Smaller
-# groups prune finer but repeat each column chunk's dictionary and
-# headers: 4096-row groups made a 7,500-doc partition's files 2.5%
-# larger than 16384-row ones
-ROW_GROUP_ROWS = 16384
+# rows per parquet row group of the blk and term-stats files. The rows
+# are term-sorted, so a term lookup (manifest._read_term_rows, a Spark
+# `term IN` scan) reads only the row groups whose term min/max holds the
+# term: a smaller group decompresses less blob per lookup. The encoding
+# pays for the extra groups (_PartFile): min/max statistics on `term`
+# only, and min_doc/max_doc delta-encoded without a dictionary. On the
+# 30k-doc perfbench index these rules cost +1.3% (2048) or +0.6% (4096)
+# in total bytes, where 2048-row groups alone cost +3.9% (bulk_build)
+# and +5% (ingest_merge); scripts/term_read_bench.py holds the read side
+ROW_GROUP_ROWS = 2048
+# doc metadata is read whole or by doc-id range (sorted_head), never by
+# term: it keeps large row groups and statistics on every scalar column
+DOC_ROW_GROUP_ROWS = 16384
+# the blk columns written DELTA_BINARY_PACKED: ascending doc ids within a
+# term, whose dictionary never pays
+DELTA_COLUMNS = ("min_doc", "max_doc")
 
 
 def doc_schema(field_specs: Optional[List[FieldSpec]],
@@ -118,11 +134,16 @@ def arrow_schema(ddl: str):
 class _PartFile:
     """One parquet file of a task, written under a '.'-prefixed temp
     name (readers skip '.'-names, as Spark does) and renamed into place
-    by close(). Every write appends row groups of ROW_GROUP_ROWS."""
+    by close(). by_term: a term-sorted blk or term-stats file, in row
+    groups of ROW_GROUP_ROWS with statistics on `term` only and
+    DELTA_COLUMNS delta-encoded; else row groups of DOC_ROW_GROUP_ROWS
+    with statistics on every scalar column. Every write appends whole
+    row groups."""
 
-    def __init__(self, path: str, schema):
+    def __init__(self, path: str, schema, by_term: bool = False):
         self.path = path
         self.schema = schema
+        self.by_term = by_term
         self.writer = None
 
     def write(self, data) -> None:
@@ -133,16 +154,24 @@ class _PartFile:
             d, name = os.path.split(self.path)
             os.makedirs(d, exist_ok=True)
             self.tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
-            # min/max statistics on the scalar columns only: blobs and
-            # impact lists never prune anything
-            self.writer = pq.ParquetWriter(
-                self.tmp, self.schema, write_statistics=[
+            if self.by_term:
+                delta = [f.name for f in self.schema if f.name in DELTA_COLUMNS]
+                kw = dict(write_statistics=["term"],
+                          use_dictionary=[f.name for f in self.schema
+                                          if f.name not in delta],
+                          column_encoding=dict.fromkeys(delta, "DELTA_BINARY_PACKED")
+                          or None)
+            else:
+                # blobs and lists never prune anything
+                kw = dict(write_statistics=[
                     f.name for f in self.schema if f.type.num_fields == 0
                     and not pa.types.is_binary(f.type)])
+            self.writer = pq.ParquetWriter(self.tmp, self.schema, **kw)
         if isinstance(data, pd.DataFrame):
             data = pa.Table.from_pandas(data, schema=self.schema,
                                         preserve_index=False)
-        self.writer.write_table(data, row_group_size=ROW_GROUP_ROWS)
+        self.writer.write_table(data, row_group_size=(
+            ROW_GROUP_ROWS if self.by_term else DOC_ROW_GROUP_ROWS))
 
     def close(self, keep_empty: bool = False) -> int:
         """Rename into place; returns the file's size in bytes. A file
@@ -177,7 +206,7 @@ class SegmentPartWriter:
         self.seg_dir = seg_dir
         self.blk = _PartFile(
             os.path.join(manifest_mod.postings_path(seg_dir), self.name),
-            arrow_schema(POSTINGS_SCHEMA))
+            arrow_schema(POSTINGS_SCHEMA), by_term=True)
         self.meta: List[pd.DataFrame] = []
 
     def add_blocks(self, blocks: pd.DataFrame) -> None:
@@ -194,7 +223,7 @@ class SegmentPartWriter:
         stats_s = time.perf_counter() - t0
         sf = _PartFile(os.path.join(self.seg_dir, "term_stats.parquet",
                                     self.name),
-                       arrow_schema(TERM_STATS_SCHEMA))
+                       arrow_schema(TERM_STATS_SCHEMA), by_term=True)
         if len(stats):
             sf.write(stats)
         return {"blocks": len(meta),

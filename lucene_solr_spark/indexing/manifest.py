@@ -40,13 +40,14 @@ formats the writers no longer produce.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import tempfile
 import threading
 import time
 from dataclasses import asdict, dataclass, field
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Tuple
 
 # Per-index commit serialization (the IndexWriter commitLock analog,
 # index/IndexWriter.java commitLock): concurrent driver threads — a
@@ -228,20 +229,87 @@ def _data_files(root: str) -> List[str]:
                   if not f.startswith(("_", ".")))
 
 
-def _read_term_rows(files: List[str], columns: List[str], terms, min_docs=None,
-                    span=None):
-    """The rows of the given terms in the given parquet files, read with
-    pyarrow (a term `isin` filter). min_docs: only the rows whose min_doc
-    is one of these (a block keep-set's keys). span: only the blk rows
-    whose [min_doc, max_doc] overlaps the doc-id range [lo, hi)."""
-    import pyarrow.dataset as ds
+@dataclass(frozen=True)
+class Footer:
+    """A part file's entry in the terms index: its parsed parquet footer
+    and each row group's term range (the BlockTree terms index analog,
+    BlockTreeTermsWriter.java:196, over term-sorted row groups). lo[i],
+    hi[i]: row group i's term min and max, None when it has no term
+    statistics. Picklable, so a Weight ships its blk files' footers to
+    the slice tasks."""
 
-    cond = ds.field("term").isin(list(terms))
-    if min_docs is not None:
-        cond = cond & ds.field("min_doc").isin(list(min_docs))
-    if span is not None:
-        cond = cond & (ds.field("max_doc") >= span[0]) & (ds.field("min_doc") < span[1])
-    return ds.dataset(files, format="parquet").to_table(columns=columns, filter=cond)
+    path: str
+    meta: object  # pyarrow.parquet.FileMetaData
+    lo: Tuple[Optional[str], ...]
+    hi: Tuple[Optional[str], ...]
+
+    def groups(self, terms: List[str]) -> List[int]:
+        """The row groups whose [lo, hi] term range holds one of the
+        sorted terms, plus every row group without term statistics."""
+        out = []
+        for i, (lo, hi) in enumerate(zip(self.lo, self.hi)):
+            j = bisect.bisect_left(terms, lo) if lo is not None else 0
+            if lo is None or (j < len(terms) and terms[j] <= hi):
+                out.append(i)
+        return out
+
+
+def read_footer(path: str) -> Footer:
+    """The Footer of a part file with a term column: one footer parse."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    col = md.schema.names.index("term")
+    lo, hi = [], []
+    for i in range(md.num_row_groups):
+        st = md.row_group(i).column(col).statistics
+        ok = st is not None and st.has_min_max and isinstance(st.min, str)
+        lo.append(st.min if ok else None)
+        hi.append(st.max if ok else None)
+    return Footer(path, md, tuple(lo), tuple(hi))
+
+
+def _read_term_rows(files: list, columns: List[str], terms, min_docs=None,
+                    span=None):
+    """The rows of the given terms in the given parquet files, in file
+    and row order: a terms-index seek. files: Footers (read_footer), or
+    paths, whose footers are parsed here. Each file reads only the row
+    groups whose term range holds a query term (Footer.groups), then
+    masks them with pyarrow.compute: the term, min_docs (only the rows
+    whose min_doc is one of these, a block keep-set's keys) and span
+    (only the blk rows whose [min_doc, max_doc] overlaps the doc-id
+    range [lo, hi))."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    want = sorted(set(terms))
+    need = list(dict.fromkeys(
+        [*columns, "term"] + (["min_doc"] if min_docs is not None or span else [])
+        + (["max_doc"] if span else [])))
+    values = pa.array(want, pa.string())
+    mins = None if min_docs is None else pa.array(sorted(min_docs), pa.int64())
+    parts, first = [], None
+    for f in files:
+        f = f if isinstance(f, Footer) else read_footer(f)
+        first = first or f
+        groups = f.groups(want)
+        if not groups:
+            continue
+        t = pq.ParquetFile(f.path, metadata=f.meta).read_row_groups(groups, columns=need)
+        mask = pc.is_in(t.column("term"), value_set=values)
+        if mins is not None:
+            mask = pc.and_(mask, pc.is_in(t.column("min_doc"), value_set=mins))
+        if span is not None:
+            mask = pc.and_(mask, pc.and_(pc.greater_equal(t.column("max_doc"), span[0]),
+                                         pc.less(t.column("min_doc"), span[1])))
+        parts.append(t.filter(mask).select(columns))
+    if parts:
+        return pa.concat_tables(parts)
+    if first is None:
+        return pa.table({c: pa.array([]) for c in columns})
+    schema = first.meta.schema.to_arrow_schema()
+    return pa.schema([schema.field(c) for c in columns]).empty_table()
 
 
 def _footer_schema(file_groups: List[List[str]]):

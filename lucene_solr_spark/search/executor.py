@@ -5,12 +5,18 @@ Execution mirrors the reference's search lifecycle (SURVEY §3.1):
   rewrite fixpoint           -> queryast.rewrite + term-dict expansion of
                                 multi-term nodes, one Spark collect each
                                 (MultiTermQuery.java:94-116)
+  terms index                -> the blk and term_stats part files'
+                                footers, parsed once at reader open
+                                (manifest.Footer): each row group's term
+                                min/max, so a term lookup reads only the
+                                row groups that can hold the term
+                                (BlockTreeTermsWriter.java:196, the in-heap
+                                index over small on-disk term blocks)
   weight creation / stats    -> a driver-side pyarrow read of the query
                                 terms' rows of every segment's term_stats,
-                                summed (TermQuery.java:65-66; the in-heap
-                                terms index and ExactStatsCache analogs —
-                                stats are GLOBAL, never per-slice, and cost
-                                no Spark job)
+                                summed (TermQuery.java:65-66; the
+                                ExactStatsCache analog — stats are GLOBAL,
+                                never per-slice, and cost no Spark job)
   conjunction skip data      -> the MUST terms' block (min_doc, max_doc)
                                 read the same way; numpy keeps the blocks
                                 overlapping every MUST term's coverage
@@ -20,16 +26,18 @@ Execution mirrors the reference's search lifecycle (SURVEY §3.1):
                                 phrase and synonym weights, the
                                 conjunction / block-max keep-sets and the
                                 doc ids of cached FILTER clauses, plus the
-                                reader's files and deleted docs — all a
+                                reader's blk footers, doc files and deleted
+                                docs — all a
                                 scorer needs, with no Searcher or
                                 SparkSession (IndexSearcher.createWeight)
   per-slice scorer           -> score_range(weight, span): module numpy
                                 functions score every node over the doc-id
                                 range [lo, hi): a pyarrow read of the
                                 query terms' blk rows overlapping it (and
-                                the kept blocks only), one batch decode
-                                (_decoded_blocks drops deleted docs and
-                                docs outside the range), BM25
+                                the kept blocks only), one batch decode to
+                                flat per-term runs (_decoded_blocks drops
+                                deleted docs and docs outside the range),
+                                BM25 once per (term, clause)
                                 (_bm25_scores), the phrase's sorted-array
                                 match, and per boolean node one
                                 aggregation of its clauses' rows
@@ -42,9 +50,10 @@ Execution mirrors the reference's search lifecycle (SURVEY §3.1):
                                 driver, no Spark job (IndexSearcher scores
                                 in the caller's thread); over it: one
                                 Spark job of defaultParallelism tasks, each
-                                scoring one equal-width doc-id slice with
-                                the same functions (IndexSearcher.slices
-                                with an executor, IndexSearcher.java:233)
+                                scoring one doc-id slice of about equal doc
+                                count with the same functions
+                                (IndexSearcher.slices with an executor,
+                                IndexSearcher.java:233)
   collector / merge          -> per range a numpy partition + lexsort
                                 (_top_k_local: score desc, doc_id asc, the
                                 `after` cursor); the slices' top-k merged
@@ -81,7 +90,7 @@ import logging
 import math
 import os
 from dataclasses import dataclass
-from typing import Dict, Iterator, List, Optional, Tuple
+from typing import Dict, Iterator, List, NamedTuple, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -94,7 +103,8 @@ from ..indexing.builder import POSTINGS_SCHEMA
 from ..indexing.deletes import DeadDocs, dead_docs
 from ..indexing.merge import _blocks_have_positions
 from ..indexing.manifest import (ManifestStore, _data_files, _footer_schema,
-                                 _read_term_rows, doc_meta_path, postings_path)
+                                 _read_term_rows, doc_meta_path, postings_path,
+                                 read_footer)
 from ..queryast import (
     BooleanQuery,
     BooleanClause,
@@ -132,12 +142,14 @@ class IndexReader:
         self._block_dirs = [postings_path(d) for d in segs]
         self._stats_dirs = [os.path.join(d, "term_stats.parquet") for d in segs]
         doc_dirs = [doc_meta_path(d) for d in segs]
-        # the data files, listed once at open: every pyarrow read of a
-        # query (statistics, skip data, blobs, doc ids) opens exactly these
+        # the data files, listed once at open, and the term-sorted ones'
+        # footers, parsed once (the terms index, manifest.Footer): every
+        # pyarrow read of a query (statistics, skip data, blobs, doc ids)
+        # opens exactly these, and no term lookup parses a footer
         stats_groups = [_data_files(d) for d in self._stats_dirs]
-        self._stats_files = [f for g in stats_groups for f in g]
+        self._stats_footers = [read_footer(f) for g in stats_groups for f in g]
         self._block_groups = [_data_files(d) for d in self._block_dirs]
-        self._block_files = [f for g in self._block_groups for f in g]
+        self._block_footers = [read_footer(f) for g in self._block_groups for f in g]
         doc_groups = [_data_files(d) for d in doc_dirs]
         self._doc_files = [f for g in doc_groups for f in g]
         # pinned schemas, so no read infers one (an inference is a Spark
@@ -258,7 +270,7 @@ class IndexReader:
         cached = getattr(self, "_stats_rows_cache", None)
         if cached is not None and set(terms) <= cached[0]:
             return [r for r in cached[1] if r["term"] in terms]
-        tbl = _read_term_rows(self._stats_files, ["term", "df", "ttf"], terms)
+        tbl = _read_term_rows(self._stats_footers, ["term", "df", "ttf"], terms)
         acc: Dict[str, List[int]] = {}
         for t, df, ttf in zip(*(tbl.column(c).to_pylist()
                                 for c in ("term", "df", "ttf"))):
@@ -287,19 +299,17 @@ class IndexReader:
 
         def rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                blocks = list(_decoded_blocks(pdf, positions=positions, dels=dead))
-                if not blocks:
+                p = _decoded_blocks(pdf, positions=positions, dels=dead)
+                if not len(p.doc):
                     continue
-                terms, docs, tfs, norms = ([b[i] for b in blocks] for i in range(4))
-                doc, tf = np.concatenate(docs), np.concatenate(tfs)
-                term = _repeat_terms(terms, docs)
+                term = p.terms[p.ti]
                 if positions:
                     yield pd.DataFrame({
-                        "doc_id": np.repeat(doc, tf), "term": np.repeat(term, tf),
-                        "pos": np.concatenate([b[4] for b in blocks]) + 1})
+                        "doc_id": np.repeat(p.doc, p.tf), "term": np.repeat(term, p.tf),
+                        "pos": p.pos + 1})
                 else:
-                    yield pd.DataFrame({"doc_id": doc, "term": term, "tf": tf,
-                                        "norm": np.concatenate(norms)})
+                    yield pd.DataFrame({"doc_id": p.doc, "term": term, "tf": p.tf,
+                                        "norm": p.norm})
 
         blocks = self.blocks if where is None else self.blocks.where(where)
         return blocks.select("term", "blob", *(["pblob"] if positions else [])).mapInPandas(
@@ -396,8 +406,8 @@ class MultiReader:
         self.blocks = _union_all([r.blocks for r in readers])
         self.stats = _union_all([r.stats for r in readers])
         self.doc_meta = _union_all([r.doc_meta for r in readers])
-        self._block_files = [f for r in readers for f in r._block_files]
-        self._stats_files = [f for r in readers for f in r._stats_files]
+        self._block_footers = [f for r in readers for f in r._block_footers]
+        self._stats_footers = [f for r in readers for f in r._stats_footers]
         self._doc_files = [f for r in readers for f in r._doc_files]
         dead = [p for r in readers if r.dead is not None for p in r.dead.parts]
         self.dead = DeadDocs(dead) if dead else None
@@ -515,7 +525,7 @@ class Searcher:
         (plan_pruned_or)."""
         r = self.reader
         root = self._weigh(q, 1.0, keep)
-        return Weight(q, root, _planned(root), r._block_files, r._doc_files, r.dead,
+        return Weight(q, root, _planned(root), r._block_footers, r._doc_files, r.dead,
                       self.precision, r.norms)
 
     def _const(self, boost: float) -> float:
@@ -677,15 +687,13 @@ class Searcher:
 
         def decode_pos(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
-                blocks = list(_decoded_blocks(pdf, positions=True, dels=dead))
-                if blocks:
-                    terms, docs, tfs, norms, pos = zip(*blocks)
+                p = _decoded_blocks(pdf, positions=True, dels=dead)
+                if len(p.doc):
                     yield pd.DataFrame({
-                        "doc_id": np.concatenate(docs),
-                        "term": _repeat_terms(terms, docs),
-                        "norm": np.concatenate(norms),
-                        "parr": pd.Series([a for p, f in zip(pos, tfs) for a in
-                                           np.split(p + 1, np.cumsum(f)[:-1])],
+                        "doc_id": p.doc,
+                        "term": p.terms[p.ti],
+                        "norm": p.norm,
+                        "parr": pd.Series(np.split(p.pos + 1, np.cumsum(p.tf)[:-1]),
                                           dtype=object),
                     })
 
@@ -987,7 +995,7 @@ class Searcher:
                                            "dels": self.reader.dead})
 
         def decode_passages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # map-side passage combine: per block, bucket positions by
+            # map-side passage combine: per term, bucket positions by
             # floor(pos/window) and emit ONE row per (doc, passage)
             # with the idf-weighted partial sum — the shuffle carries
             # ~positions/window rows instead of one row per position
@@ -997,7 +1005,7 @@ class Searcher:
             for pdf in batches:
                 out_doc, out_pass, out_w = [], [], []
                 for term, doc_ids, tfs, _, pos in _decoded_blocks(
-                        pdf, positions=True, dels=info["dels"]):
+                        pdf, positions=True, dels=info["dels"]).by_term():
                     widf = info["idf"].get(term, 0.0)
                     docs_exp = np.repeat(doc_ids, tfs)
                     pas = pos.astype(np.int64) // win  # 0-based positions
@@ -1067,7 +1075,7 @@ class Searcher:
         Returns (keep, totals): keep[t] = the (term, min_doc) block keys
         of t that overlap the common region, as a set of min_doc values;
         totals[t] = t's block count."""
-        tbl = _read_term_rows(self.reader._block_files,
+        tbl = _read_term_rows(self.reader._block_footers,
                               ["term", "min_doc", "max_doc"], all_terms)
         term = np.asarray(tbl.column("term").to_pylist(), dtype=object)
         lo = tbl.column("min_doc").to_numpy()
@@ -1135,7 +1143,7 @@ class Searcher:
             # doc: bound the sum (the norm constants are the same)
             w[t] = weights[f"{t}\x00{b}"]
             wv[t] = wv.get(t, 0.0) + float(w[t]["wv"])
-        tbl = _read_term_rows(self.reader._block_files, [
+        tbl = _read_term_rows(self.reader._block_footers, [
             "term", "min_doc", "max_doc", "imp_tf", "imp_norm"], sorted(wv))
         term = np.asarray(tbl.column("term").to_pylist(), dtype=object)
         lo = tbl.column("min_doc").to_numpy()
@@ -1219,15 +1227,33 @@ class Searcher:
     def _slices(self) -> int:
         return self.reader.spark.sparkContext.defaultParallelism
 
+    def _slice_bounds(self) -> List[int]:
+        """The _slices() + 1 doc-id bounds of the slice tasks, cut so each
+        slice holds about the same number of docs (IndexSearcher.slices
+        groups leaves by doc count): each live segment spreads its
+        doc_count evenly over [doc_base, doc_base + doc_span), so an id
+        range that no segment spans (a MultiReader's gap between shards)
+        holds none and widens no task's share."""
+        n = self._slices()
+        segs = self.reader.manifest.segments
+        lo, hi = self.reader.doc_range
+        # docs below x, piecewise linear between the segments' edges
+        edges = np.unique([e for s in segs for e in (s.doc_base, s.doc_base + s.doc_span)])
+        below = np.zeros(len(edges))
+        for s in segs:
+            if s.doc_span > 0:
+                below += s.doc_count * np.clip((edges - s.doc_base) / s.doc_span, 0, 1)
+        cuts = np.ceil(np.interp(below[-1] * np.arange(1, n) / n, below, edges))
+        return [lo, *np.clip(cuts, lo, hi).astype(np.int64).tolist(), hi]
+
     def _slice_job(self, w: Weight, body, schema: str = "doc_id long, score double"):
         """The Spark job of a query over the budget (IndexSearcher.slices
         with an executor): defaultParallelism tasks, task i yielding
-        body(doc_ids, scores) of score_range over the i-th equal-width
-        slice of the reader's doc-id range, as a DataFrame of schema. The
-        tasks run the driver's scorer on the shipped Weight."""
+        body(doc_ids, scores) of score_range over the i-th slice
+        (_slice_bounds) of the reader's doc-id range, as a DataFrame of
+        schema. The tasks run the driver's scorer on the shipped Weight."""
         n = self._slices()
-        lo, hi = self.reader.doc_range
-        bounds = [lo + (hi - lo) * i // n for i in range(n + 1)]
+        bounds = self._slice_bounds()
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -1565,41 +1591,70 @@ def _idf(df: int, n: int) -> float:
     return math.log(1 + (n - df + 0.5) / (df + 0.5)) if df > 0 else 0.0
 
 
-def _decoded_blocks(pdf, positions: bool = False, keep=None, dels=None, span=None):
-    """The one block decoder: yields (term, doc_ids, tfs, norms[, pos])
-    per row of a batch of blocks (term, blob, plus min_doc with keep,
-    pblob with positions). keep: {term: set of min_doc}, the kept blocks
-    — other rows are skipped undecoded. The kept rows decode in one
-    codec.decode_blocks_batch call; each row yields slices of its flat
-    arrays. dels: the reader's DeadDocs; span: a doc-id range [lo, hi).
-    Deleted docs and docs outside span drop out of each block with their
-    positions (one gather per batch), and a block left empty is
-    skipped."""
+class _Postings(NamedTuple):
+    """Decoded postings grouped by term (_decoded_blocks): terms, the
+    batch's distinct terms in order; per posting, ti (its term's index
+    into terms, ascending), doc, tf and norm; pos, every posting's tf
+    positions in turn (None when not decoded)."""
+
+    terms: np.ndarray
+    ti: np.ndarray
+    doc: np.ndarray
+    tf: np.ndarray
+    norm: np.ndarray
+    pos: Optional[np.ndarray]
+
+    def by_term(self):
+        """(term, doc, tf, norm, pos) slices of each term with postings
+        (pos None when not decoded)."""
+        cut = np.searchsorted(self.ti, np.arange(len(self.terms) + 1))
+        pcut = None if self.pos is None else np.r_[0, np.cumsum(self.tf)][cut]
+        for j, term in enumerate(self.terms):
+            a, b = cut[j], cut[j + 1]
+            if a < b:
+                yield (term, self.doc[a:b], self.tf[a:b], self.norm[a:b],
+                       None if pcut is None else self.pos[pcut[j]:pcut[j + 1]])
+
+
+def _decoded_blocks(pdf, positions: bool = False, keep=None, dels=None,
+                    span=None) -> _Postings:
+    """The one block decoder: the live postings of a batch of blocks
+    (term, blob, plus min_doc with keep, pblob with positions) as flat
+    arrays with a per-posting term index (_Postings). keep: {term: set of
+    min_doc}, the kept blocks — other rows are skipped undecoded. The kept
+    rows, ordered by (term, min_doc) (by term, stably, without a min_doc
+    column), decode in one codec.decode_blocks_batch call, so each term's
+    postings are one run, in doc order when the term's blocks own
+    disjoint doc ranges (as a segment's and disjoint segments' do).
+    dels: the reader's DeadDocs; span: a doc-id range [lo, hi). Deleted
+    docs and docs outside span drop out with their positions (one
+    gather)."""
     terms = pdf["term"].to_numpy()
+    code, uniq = pd.factorize(terms, sort=True)
     rows = np.arange(len(terms))
     if keep is not None:
         rows = np.flatnonzero([md in keep[t] for t, md in zip(terms, pdf["min_doc"])])
+    if "min_doc" in pdf:
+        rows = rows[np.lexsort((pdf["min_doc"].to_numpy()[rows], code[rows]))]
+    else:
+        rows = rows[np.argsort(code[rows], kind="stable")]
+    uniq = np.asarray(uniq, dtype=object)
     if not len(rows):
-        return
-    doc_ids, tfs, norms, pos, off, poff = decode_blocks_batch(
+        e = np.empty(0, np.int64)
+        return _Postings(uniq, e, e, e, e, e if positions else None)
+    doc, tf, nb, pos, off, _ = decode_blocks_batch(
         pdf["blob"].to_numpy()[rows],
         pdf["pblob"].to_numpy()[rows] if positions else None)
-    live = None if dels is None else ~dels.probe(doc_ids)
+    ti = np.repeat(code[rows], np.diff(off))
+    live = None if dels is None else ~dels.probe(doc)
     if span is not None:
-        inside = (doc_ids >= span[0]) & (doc_ids < span[1])
+        inside = (doc >= span[0]) & (doc < span[1])
         live = inside if live is None else live & inside
-    for i, term in enumerate(terms[rows]):
-        a, b = off[i], off[i + 1]
-        d, f, nb = doc_ids[a:b], tfs[a:b], norms[a:b]
-        p = pos[poff[i]:poff[i + 1]]
-        if live is not None and not live[a:b].all():
-            keep_i = live[a:b]
-            if positions and len(p):
-                p = p[np.repeat(keep_i, f)]
-            d, f, nb = d[keep_i], f[keep_i], nb[keep_i]
-            if not len(d):
-                continue
-        yield (term, d, f, nb, p) if positions else (term, d, f, nb)
+    if live is not None and not live.all():
+        if positions and len(pos):
+            pos = pos[np.repeat(live, tf)]
+        doc, tf, nb, ti = doc[live], tf[live], nb[live], ti[live]
+    return _Postings(uniq, ti, doc, tf, nb, pos if positions else None)
 
 
 @dataclass
@@ -1607,14 +1662,15 @@ class Weight:
     """A query weighed on the driver (Searcher.weigh): the rewritten
     query, its node tree (score_range lists the kinds) holding the term,
     phrase and synonym weights, keep-sets and cached doc ids, the
-    postings it plans, and the reader's side of scoring: blk and
+    postings it plans, and the reader's side of scoring: the blk files'
+    footers (the terms index, so a slice task parses no footer), the
     doc-meta files, deleted docs, norm encoding, plus the precision.
     Picklable: a Spark task scores it without a Searcher or SparkSession."""
 
     query: Query
     root: dict
     postings: int
-    files: List[str]
+    files: list
     doc_files: List[str]
     dels: Optional[DeadDocs]
     precision: str
@@ -1651,11 +1707,10 @@ def _score(node: dict, w: Weight, span) -> Tuple[np.ndarray, np.ndarray]:
         doc, tf, nb = _phrase_freqs(node, w, span)
         return doc, _bm25_scores(tf, nb, node["weight"], w.precision, w.norms)
     if kind == "synonym":
-        blocks = list(_postings(w, node["terms"], span))
-        d, f, nb = (_cat([b[i] for b in blocks]) for i in (1, 2, 3))
-        doc, first, inv = np.unique(d, return_index=True, return_inverse=True)
-        tf = np.bincount(inv.ravel(), weights=f, minlength=len(doc)).astype(np.int64)
-        return doc, _bm25_scores(tf, nb[first], node["weight"], w.precision, w.norms)
+        p = _postings(w, node["terms"], span)
+        doc, first, inv = np.unique(p.doc, return_index=True, return_inverse=True)
+        tf = np.bincount(inv.ravel(), weights=p.tf, minlength=len(doc)).astype(np.int64)
+        return doc, _bm25_scores(tf, p.norm[first], node["weight"], w.precision, w.norms)
     if kind == "dismax":
         # max + tie * (sum - max) per doc, summed in disjunct order
         parts = [_score(sub, w, span) for sub in node["subs"]]
@@ -1671,7 +1726,7 @@ def _score(node: dict, w: Weight, span) -> Tuple[np.ndarray, np.ndarray]:
             total = total.astype(np.float32).astype(np.float64)
         return d[first], total
     if kind == "termset":
-        doc = np.unique(_cat([b[1] for b in _postings(w, node["terms"], span)]))
+        doc = np.unique(_postings(w, node["terms"], span).doc)
     elif kind == "all":
         doc = _live_docs(w, span)
     elif kind == "docs":
@@ -1698,18 +1753,21 @@ def _blocks(w: Weight, terms: List[str], keep, span, positions: bool) -> pd.Data
     return _read_term_rows(w.files, cols, terms, mins, span).to_pandas()
 
 
-def _postings(w: Weight, terms: List[str], span, keep=None, positions: bool = False):
-    """(term, doc_ids, tfs, norms[, pos]) of each read block's live
-    postings in span (_blocks, _decoded_blocks)."""
+def _postings(w: Weight, terms: List[str], span, keep=None,
+              positions: bool = False) -> _Postings:
+    """The live postings in span of terms' read blocks (_blocks,
+    _decoded_blocks)."""
     return _decoded_blocks(_blocks(w, terms, keep, span, positions), positions, keep,
                            w.dels, span)
 
 
 def _score_terms(node: dict, w: Weight, span):
     """(clause_id, doc_id, score) of every live posting of the kept
-    blocks of a "terms" node, once per clause its term serves."""
+    blocks of a "terms" node, once per clause its term serves: one BM25
+    pass per (term, clause) over all the term's postings."""
     cid, doc, score = [], [], []
-    for term, d, f, nb in _postings(w, list(node["by_term"]), span, node["keep"]):
+    p = _postings(w, list(node["by_term"]), span, node["keep"])
+    for term, d, f, nb, _ in p.by_term():
         for c, boost in node["by_term"][term]:
             cid.append(np.full(len(d), c, dtype=np.int32))
             doc.append(d)
@@ -1721,20 +1779,17 @@ def _score_terms(node: dict, w: Weight, span):
 def _phrase_freqs(node: dict, w: Weight, span):
     """(doc_id, tf, norm) of the docs in span holding the phrase:
     ExactPhraseMatcher's advance loop, batched in numpy. Each slot takes
-    its term's blocks in doc order (a term's blocks own disjoint doc
-    ranges); the docs holding every term are the intersection of the
-    slots' sorted doc lists; an occurrence is a composite int64 key (the
-    doc's rank among those docs << 32 | position - slot + nslots) that
+    its term's postings as whole arrays, in doc order (_decoded_blocks);
+    the docs holding every term are the intersection of the slots'
+    sorted doc lists; an occurrence is a composite int64 key (the doc's
+    rank among those docs << 32 | position - slot + nslots) that
     survives every slot's key set, as term i matches at p0 + i."""
     slots, n = node["slots"], node["nslots"]
-    blocks: Dict[str, list] = {}
-    for term, d, f, nb, p in _postings(w, sorted(slots), span, node["keep"], positions=True):
-        blocks.setdefault(term, []).append((d, f, nb, p))
+    post = {t: (d, f, nb, p) for t, d, f, nb, p in
+            _postings(w, sorted(slots), span, node["keep"], positions=True).by_term()}
     empty = (np.empty(0, np.int64),) * 3
-    if len(blocks) < len(slots):
+    if len(post) < len(slots):
         return empty
-    post = {t: [np.concatenate(a).astype(np.int64) for a in
-                zip(*sorted(bl, key=lambda b: b[0][0]))] for t, bl in blocks.items()}
     common = None
     for d, _, _, _ in post.values():
         common = d if common is None else common[_isin_sorted(common, d)]
@@ -1807,12 +1862,12 @@ def _boolean_scores(parts: list, occur_by_cid: Dict[int, Occur], mm: int,
 
 def _live_docs(w: Weight, span) -> np.ndarray:
     """The live doc ids in span, read from the doc metadata with pyarrow."""
-    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
 
-    cond = None if span is None else (
-        (ds.field("doc_id") >= span[0]) & (ds.field("doc_id") < span[1]))
-    doc = ds.dataset(w.doc_files, format="parquet").to_table(
-        columns=["doc_id"], filter=cond).column("doc_id").to_numpy().astype(np.int64)
+    doc = _cat([pq.read_table(f, columns=["doc_id"]).column("doc_id").to_numpy()
+                for f in w.doc_files]).astype(np.int64)
+    if span is not None:
+        doc = doc[(doc >= span[0]) & (doc < span[1])]
     return doc if w.dels is None else doc[~w.dels.probe(doc)]
 
 
@@ -1834,11 +1889,6 @@ def _top_k_local(doc: np.ndarray, sc: np.ndarray, k: int,
 
 def _scored_frame(doc: np.ndarray, score: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame({"doc_id": doc, "score": score})
-
-
-def _repeat_terms(terms, docs) -> np.ndarray:
-    """Each block's term repeated once per decoded doc."""
-    return np.repeat(np.asarray(terms, dtype=object), [len(d) for d in docs])
 
 
 def _bm25_scores(tfs: np.ndarray, norms: np.ndarray, w: dict,

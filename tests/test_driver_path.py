@@ -1,7 +1,8 @@
 """The two placements of one scorer: a query whose planned postings are
 under DRIVER_POSTINGS_BUDGET is scored on the driver over one range
 covering the index, with no Spark job; over it, one Spark job scores
-equal-width doc-id slices with the same functions and the driver merges
+doc-id slices of about equal doc counts with the same functions and the
+driver merges
 their top-k. Every shape returns the same doc ids and the same score bits
 on both placements (the slices forced with the budget at 0), and each
 runs exactly the jobs its plan expects."""
@@ -10,6 +11,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 
 from lucene_solr_spark.queryast import (BooleanClause, BooleanQuery, DisjunctionMaxQuery,
@@ -236,15 +238,13 @@ def test_cached_filter_over_budget_runs_one_more_job(monkeypatch, spark_jobs, re
     _assert_same(first, again, "cached_filter")
 
 
-def _straddled(reader, term):
-    """The slice bounds of reader that some block of term straddles."""
+def _straddled(s, term):
+    """The inner slice bounds of searcher s that some block of term
+    straddles."""
     from lucene_solr_spark.indexing.manifest import _read_term_rows
 
-    n = reader.spark.sparkContext.defaultParallelism
-    lo, hi = reader.doc_range
-    bounds = [lo + (hi - lo) * i // n for i in range(1, n)]
-    t = _read_term_rows(reader._block_files, ["min_doc", "max_doc"], [term])
-    return [b for b in bounds
+    t = _read_term_rows(s.reader._block_footers, ["min_doc", "max_doc"], [term])
+    return [b for b in s._slice_bounds()[1:-1]
             if any(a < b <= z for a, z in zip(t.column("min_doc").to_pylist(),
                                                 t.column("max_doc").to_pylist()))]
 
@@ -257,20 +257,41 @@ def test_slices_merge_to_the_driver_top_k(monkeypatch, readers):
     reader = readers["deletes"]
     s = _searcher(reader, "term")
     assert s._slices() >= 2
-    assert _straddled(reader, "alpha"), "fixture drift: no block straddles a bound"
+    assert _straddled(s, "alpha"), "fixture drift: no block straddles a bound"
     q = SHAPES["term"]
     lo, hi = reader.doc_range
-    width = -(-(hi - lo) // s._slices())
+    bounds = s._slice_bounds()
     full, _, sliced, plan = _both(monkeypatch, s, lambda s: s.search(q, k=hi - lo))
-    assert plan["slices"] >= 2 and len(full) > width
+    assert plan["slices"] >= 2 and len(full) > max(np.diff(bounds))
     _assert_same(full, sliced, "k above a slice")
     cut = 20
     after = (float(full["score"].iloc[cut - 1]), int(full["doc_id"].iloc[cut - 1]))
     got, _, want, _ = _both(monkeypatch, s, lambda s: s.search(q, k=40, after=after))
     _assert_same(got, want, "after")
     assert list(got["doc_id"]) == list(full["doc_id"].iloc[cut:cut + 40])
-    slice_of = (got["doc_id"].to_numpy() - lo) // width
+    slice_of = np.searchsorted(bounds, got["doc_id"].to_numpy(), "right")
     assert len(set(slice_of.tolist())) >= 2, "the page crosses no slice bound"
+
+
+def test_slices_split_the_docs_not_the_id_range(monkeypatch, readers):
+    """The multireader's shards leave an id gap ([0, 500) and [100000,
+    100700)): its slices hold about equal doc counts, every slice task
+    scores docs, and the merged top-k is the driver's."""
+    s = _searcher(readers["multireader"], "term")
+    bounds = s._slice_bounds()
+    assert len(bounds) == s._slices() + 1 >= 3
+    docs = np.concatenate([pq.read_table(f, columns=["doc_id"])["doc_id"].to_numpy()
+                           for f in readers["multireader"]._doc_files])
+    per_slice = np.bincount(np.searchsorted(bounds, docs, "right") - 1,
+                            minlength=len(bounds) - 1)
+    assert per_slice.min() > 0 and per_slice.max() - per_slice.min() <= 1, per_slice
+    q = SHAPES["all_not"]
+    w = s._weighed(q)
+    hits = [len(executor.score_range(w, (a, b))[0]) for a, b in zip(bounds, bounds[1:])]
+    assert min(hits) > 0, hits
+    got, _, want, plan = _both(monkeypatch, s, lambda s: s.search(q, k=50))
+    assert plan["slices"] == len(hits)
+    _assert_same(got, want, "multireader slices")
 
 
 @pytest.mark.parametrize("shape", ["or", "phrase", "dismax", "all_not", "prefix"])

@@ -122,26 +122,49 @@ def _encoded_batch():
     return pd.DataFrame(rows), want
 
 
+def _per_term(want, live=None):
+    """The encoder's arrays of each term, its blocks concatenated in doc
+    order; live(docs) masks the postings kept."""
+    out = {}
+    for term, docs, tfs, norms, pos in want:
+        m = np.ones(len(docs), bool) if live is None else live(docs)
+        acc = out.setdefault(term, [[], [], [], []])
+        for a, v in zip(acc, (docs[m], tfs[m], norms[m], pos[np.repeat(m, tfs)])):
+            a.append(v)
+    return {t: [np.concatenate(a) for a in acc] for t, acc in out.items()}
+
+
+def _assert_postings(p, want, positions=True):
+    got = list(p.by_term())
+    assert [g[0] for g in got] == sorted(want)
+    for term, d, f, nb, pos in got:
+        w = want[term]
+        for a, b in zip((d, f, nb) + ((pos,) if positions else ()), w):
+            assert np.array_equal(a, b), term
+        if not positions:
+            assert pos is None
+    # the flat arrays: ti names each posting's term, terms in order
+    assert np.array_equal(p.terms[p.ti], np.repeat([g[0] for g in got],
+                                                   [len(g[1]) for g in got]))
+
+
 def test_decoded_blocks_return_the_encoder_arrays():
+    """Flat arrays, one run per term in doc order, whatever the row order
+    of the batch: shuffled rows (a read across flush runs and files)
+    decode to the same arrays as term-sorted ones."""
     pdf, want = _encoded_batch()
     assert [w[0] for w in want] == ["aa"] * 3 + ["bb"] * 2
-    got = list(_decoded_blocks(pdf, positions=True))
-    assert len(got) == len(want)
-    for g, w in zip(got, want):
-        assert g[0] == w[0]
-        for a, b in zip(g[1:], w[1:]):
-            assert np.array_equal(a, b)
-    plain = list(_decoded_blocks(pdf[["term", "blob"]]))
-    assert [len(b) for b in plain] == [4] * len(want)
-    for g, w in zip(plain, want):
-        for a, b in zip(g[1:], w[1:4]):
-            assert np.array_equal(a, b)
+    per_term = _per_term(want)
+    _assert_postings(_decoded_blocks(pdf, positions=True), per_term)
+    shuffled = pdf.iloc[[4, 1, 3, 0, 2]].reset_index(drop=True)
+    _assert_postings(_decoded_blocks(shuffled, positions=True), per_term)
+    _assert_postings(_decoded_blocks(pdf[["term", "blob"]]), per_term, positions=False)
 
 
 def test_decoded_blocks_skip_blocks_outside_keep_set():
     pdf, want = _encoded_batch()
     keep = {"aa": {int(want[1][1][0])}, "bb": set()}
-    got = list(_decoded_blocks(pdf, keep=keep))
+    got = list(_decoded_blocks(pdf, keep=keep).by_term())
     assert len(got) == 1
     assert got[0][0] == "aa" and np.array_equal(got[0][1], want[1][1])
 
@@ -151,15 +174,10 @@ def test_decoded_blocks_drop_tombstoned_docs():
     # every doc of the first block, and every other doc of the last one
     dels = np.sort(np.concatenate([want[0][1], want[4][1][::2]]))
     span = int(max(w[1].max() for w in want)) + 1
-    got = list(_decoded_blocks(pdf, positions=True,
-                               dels=DeadDocs([(0, span, pack(dels, 0, span))])))
-    assert [g[0] for g in got] == ["aa", "aa", "bb", "bb"]
-    for g, (term, docs, tfs, norms, pos) in zip(got, want[1:]):
-        live = ~np.isin(docs, dels)
-        assert np.array_equal(g[1], docs[live])
-        assert np.array_equal(g[2], tfs[live])
-        assert np.array_equal(g[3], norms[live])
-        assert np.array_equal(g[4], pos[np.repeat(live, tfs)])
+    p = _decoded_blocks(pdf, positions=True,
+                        dels=DeadDocs([(0, span, pack(dels, 0, span))]))
+    _assert_postings(p, _per_term(want, lambda d: ~np.isin(d, dels)))
+    assert not np.isin(p.doc, dels).any()
 
 
 # -- float64 scoring on a byte-norm index (Spark) ---------------------------
